@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.functions.vector import dot, l2_sq
+from cnc_visionsearch_spark.memo import LRU, file_fingerprint
 from cnc_visionsearch_spark.operators.mutex import single_writer
 
 __all__ = [
@@ -974,38 +975,32 @@ def ivf_probe(
     )
 
 
-_ARTIFACT_MEMO: dict[str, tuple[str, list[dict]]] = {}
+_ARTIFACT_ROWS = LRU(256)
 
 
 def _metadata_rows(dir_path: str) -> list[dict]:
     """Driver-side read of a metadata-sized layout artifact (codebook,
     cell_radii: n_cells rows) via pyarrow — no Spark job. Memoized per
-    directory, keyed on a content fingerprint (file name/size/mtime of
-    every parquet part), so an append/rebuild that refreshes the
-    artifact invalidates the cache while steady-state probes pay zero
-    I/O. This is the planner-side role these artifacts play at 100 TB:
-    the coarse quantizer lives with the query planner (exactly where
-    FAISS keeps it), and ranking nprobe cells must not cost a cluster
-    job.
+    directory, keyed on its :func:`file_fingerprint`, so an
+    append/rebuild that refreshes the artifact invalidates the cache
+    while steady-state probes pay zero I/O. This is the planner-side
+    role these artifacts play at 100 TB: the coarse quantizer lives
+    with the query planner (exactly where FAISS keeps it), and ranking
+    nprobe cells must not cost a cluster job.
     """
-    d = dir_path[5:] if dir_path.startswith("file:") else dir_path
-    parts = sorted(
-        f for f in os.listdir(d) if f.endswith(".parquet")
-    )
-    fp = ";".join(
-        f"{f}:{os.stat(os.path.join(d, f)).st_size}:"
-        f"{os.stat(os.path.join(d, f)).st_mtime_ns}"
-        for f in parts
-    )
-    hit = _ARTIFACT_MEMO.get(d)
+    fp = file_fingerprint([dir_path])
+    if fp is None:
+        raise FileNotFoundError(f"layout artifact {dir_path} is unreadable")
+    hit = _ARTIFACT_ROWS.get(dir_path)
     if hit is not None and hit[0] == fp:
         return hit[1]
     import pyarrow.parquet as pap
 
     rows: list[dict] = []
-    for f in parts:
-        rows.extend(pap.read_table(os.path.join(d, f)).to_pylist())
-    _ARTIFACT_MEMO[d] = (fp, rows)
+    for name, _, _ in fp:
+        if name.endswith(".parquet"):
+            rows.extend(pap.read_table(name).to_pylist())
+    _ARTIFACT_ROWS.put(dir_path, (fp, rows))
     return rows
 
 

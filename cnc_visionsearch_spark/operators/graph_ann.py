@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.functions.vector import l2_sq
+from cnc_visionsearch_spark.memo import file_fingerprint
 from cnc_visionsearch_spark.operators.ann import _metadata_rows, _seq_l2_sq
 from cnc_visionsearch_spark.operators.mutex import single_writer
 
@@ -829,29 +830,25 @@ def _hnsw_upper_bytes(path: str):
     """Total live bytes of layers >= 1, from the file layout only (no
     Spark job); None when unknowable (assume big — keep per-hop scans)."""
     t = _nsw_tlog(path)
-    total = 0
-    try:
-        if t is None:
-            base = os.path.join(path, "graph")
-            for name in os.listdir(base):
-                if not name.startswith("layer="):
-                    continue
-                try:
-                    if int(name.split("=", 1)[1]) < 1:
-                        continue
-                except ValueError:
-                    return None
-                for root, _dirs, files in os.walk(os.path.join(base, name)):
-                    for f in files:
-                        if not f.startswith((".", "_")):
-                            total += os.stat(os.path.join(root, f)).st_size
-            return total
-        for p, b in t.snapshot().files:
-            if b is not None and b >= TLOG_HNSW_LAYER_STRIDE:
-                total += os.stat(os.path.join(t.root, p)).st_size
-        return total
-    except OSError:
-        return None
+    if t is None:
+        base = os.path.join(path, "graph")
+        try:
+            levels = {
+                n: int(n.split("=", 1)[1])
+                for n in os.listdir(base)
+                if n.startswith("layer=")
+            }
+        except (OSError, ValueError):
+            return None
+        dirs = [os.path.join(base, n) for n, lv in levels.items() if lv >= 1]
+    else:
+        dirs = [
+            os.path.join(t.root, p)
+            for p, b in t.snapshot().files
+            if b is not None and b >= TLOG_HNSW_LAYER_STRIDE
+        ]
+    fp = file_fingerprint(dirs)
+    return None if fp is None else sum(size for _, size, _ in fp)
 
 
 def _collect_upper_adjacency(read, start_layer: int):

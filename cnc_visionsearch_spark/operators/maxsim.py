@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.functions.text import hex_to_long
 from cnc_visionsearch_spark.functions.vector import l2_sq
+from cnc_visionsearch_spark.memo import LRU
 
 __all__ = [
     "LI_DIM",
@@ -123,30 +124,25 @@ def _maybe_broadcast(df: DataFrame, n_rows: int, max_rows: int) -> DataFrame:
 # frame| is an UPPER BOUND on any candidate set's vocabulary, and it
 # is a property of the IMMUTABLE corpus input, not of the query batch
 # — so maxsim_multi_probe's chunk/hint decisions can reuse one
-# session-scoped measurement instead of re-counting the candidate
-# vocabulary on every call (one exchange + count job per serving
-# request). Keyed exactly like the rank-kernel memo: analyzed-plan
-# semantic hash + (path, size, mtime) digest of the scanned files, so
+# measurement instead of re-counting the candidate vocabulary on every
+# call (one exchange + count job per serving request). Keyed like the
+# rank-kernel memo (rank._input_key: plan hash + file fingerprint), so
 # overwriting the corpus auto-invalidates; unfingerprintable inputs
-# (remote storage, no file sources + non-JVM session) fall back to the
-# per-call exact count. Bounded LRU.
-_VOCAB_BOUND_MEMO: "dict[tuple, int]" = {}
-_VOCAB_BOUND_SEEN: "set[tuple]" = set()
-_VOCAB_BOUND_CAP = 32
+# fall back to the per-call exact count.
+_VOCAB_BOUNDS = LRU(32)
+# corpora seen once — the lazy-seeding gate below
+_VOCAB_SIGHTINGS = LRU(128)
 
 
 def _corpus_vocab_bound(docs: DataFrame, text_col: str = "text"):
-    from cnc_visionsearch_spark.operators.rank import (
-        _input_fingerprint,
-        _plan_hash,
-    )
+    from cnc_visionsearch_spark.operators.rank import _input_key
 
-    ph = _plan_hash(docs)
-    fp = _input_fingerprint(docs)
-    if ph is None or fp is None:
+    ik = _input_key(docs)
+    if ik is None:
         return None
-    key = (ph, fp, text_col)
-    if key not in _VOCAB_BOUND_MEMO:
+    key = (ik, text_col)
+    n = _VOCAB_BOUNDS.get(key)
+    if n is None:
         # lazy seeding (r12, advisor): the cold full-corpus distinct
         # count is strictly MORE work than the per-call candidate count
         # it replaces (candidates ⊆ corpus), so a corpus seen only once
@@ -154,12 +150,10 @@ def _corpus_vocab_bound(docs: DataFrame, text_col: str = "text"):
         # not pay it. First sighting returns None (caller falls back to
         # the candidate count); the second sighting of the SAME corpus
         # proves reuse and seeds the memo, so every later call is free.
-        if key not in _VOCAB_BOUND_SEEN:
-            _VOCAB_BOUND_SEEN.add(key)
-            while len(_VOCAB_BOUND_SEEN) > 4 * _VOCAB_BOUND_CAP:
-                _VOCAB_BOUND_SEEN.pop()
+        if _VOCAB_SIGHTINGS.get(key) is None:
+            _VOCAB_SIGHTINGS.put(key, True)
             return None
-        n = (
+        n = int(
             docs.select(
                 F.explode(
                     F.array_distinct(F.split(F.col(text_col), " "))
@@ -169,10 +163,9 @@ def _corpus_vocab_bound(docs: DataFrame, text_col: str = "text"):
             .distinct()
             .count()
         )
-        _VOCAB_BOUND_MEMO[key] = int(n)
-        while len(_VOCAB_BOUND_MEMO) > _VOCAB_BOUND_CAP:
-            _VOCAB_BOUND_MEMO.pop(next(iter(_VOCAB_BOUND_MEMO)))
-    return _VOCAB_BOUND_MEMO[key]
+        _VOCAB_BOUNDS.put(key, n)
+    return n
+
 
 # tlog conflict-domain tags for transactional token-IVF layouts:
 # doc_cells files carry their cell_id; the auxiliary subtables get
@@ -827,14 +820,18 @@ def maxsim_multi_probe(
             # branch always did; one shuffle less in the candidate
             # subtree the construction barrier executes)
             # r12 (guide §2.4): count(*) replaces count_distinct(term)
-            # — `matched` rows are (qid, term, doc_id)-unique (above),
-            # so the counts are EQUAL, and the distinct-aggregate's
-            # extra dedup exchange disappears from the candidate
-            # subtree (plan: 2 Exchange -> 1 in the barrier's first
-            # job; interleaved A/B 3 blocks, all faster: 2.42->2.32
-            # quiet-window min). The token_ivf branch below KEEPS
-            # count_distinct — one qt_idx legitimately reaches a doc
-            # through several probed cells there.
+            # — `matched` rows are (qid, term, doc_id)-unique (above;
+            # pinned on both layouts and after an append by
+            # tests/test_maxsim.py::test_postings_unique_per_term_and_doc
+            # — a replayed append on a legacy layout, which has no txn
+            # idempotence, would break it), so the counts are EQUAL,
+            # and the distinct-aggregate's extra dedup exchange
+            # disappears from the candidate subtree (plan: 2 Exchange
+            # -> 1 in the barrier's first job; interleaved A/B 3
+            # blocks, all faster: 2.42->2.32 quiet-window min). The
+            # token_ivf branch below KEEPS count_distinct — one qt_idx
+            # legitimately reaches a doc through several probed cells
+            # there.
             need = (
                 F.col("_qn")
                 if min_token_hits == "all"

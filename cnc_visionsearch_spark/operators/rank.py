@@ -64,12 +64,13 @@ from typing import Iterable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cnc_visionsearch_spark.memo import LRU, file_fingerprint
+
 __all__ = [
     "global_topn",
     "distributed_cumsum",
     "exact_ntile",
     "exact_ntile_multi",
-    "clear_kernel_memo",
 ]
 
 _BAND = "_rk_band"
@@ -87,91 +88,29 @@ _SAMPLE_PER_BAND = 32
 # execute at query CONSTRUCTION. Serving paths construct the same
 # query repeatedly over immutable inputs (bench passes, chained
 # registry calls), re-paying both jobs each time; this memo keys the
-# collected literals on (canonicalized-plan semantic hash, INPUT-FILE
-# fingerprint, order spec, sums spec, bands) so identical
-# constructions reuse them. SAFETY: boundary placement never affects
-# VALUES (only balance), but band totals do — so the key carries a
-# (path, size, mtime) digest of the plan's scanned files
-# (_input_fingerprint, r10): overwriting the files under an unchanged
-# plan auto-invalidates, no memo=False or clear_kernel_memo() needed.
-# Those escape hatches remain for non-file mutation (e.g. a mutated
-# temp view behind an unchanged semantic hash).
-# Bounded: LRU, <= _MEMO_CAP entries of <= bands rows each.
-_MEMO_CAP = 64
-_KERNEL_MEMO: "dict[tuple, tuple]" = {}
+# collected literals on (_input_key, order spec, sums spec, bands) so
+# identical constructions reuse them. SAFETY: boundary placement never
+# affects VALUES (only balance), but band totals do — so the key
+# carries the scanned files' fingerprint (r10): overwriting the files
+# under an unchanged plan auto-invalidates (memo.py contract).
+# Bounded: LRU, <= 64 entries of <= bands rows each.
+_KERNELS = LRU(64)
 
 
-def clear_kernel_memo() -> None:
-    """Drop every memoized (boundaries, band-totals) entry — call after
-    mutating data under a plan that was already ranked this session."""
-    _KERNEL_MEMO.clear()
-
-
-def _plan_hash(df: DataFrame):
-    """Semantic hash of the analyzed plan (Spark's own cache-lookup
-    key), or None when the JVM handle is unavailable (Connect) — the
-    caller then skips memoization."""
+def _input_key(df: DataFrame):
+    """(analyzed-plan semantic hash, file fingerprint) of ``df`` — the
+    memo key of anything computed from ``df``'s CONTENT. A plan with no
+    file sources fingerprints as empty (its inputs are per-plan
+    literals, immutable under an unchanged semantic hash). None when
+    the JVM handle is unavailable (Connect) or a file cannot be
+    stat'd — the caller then skips memoization."""
     try:
-        return df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        return None
-
-
-def _input_fingerprint(df: DataFrame):
-    """(path, size, mtime) digest of the plan's scanned FILES — the
-    memo's auto-invalidation key (r9 verdict #4 hardening): a caller
-    that overwrites the underlying files and reconstructs the same
-    plan now MISSES the memo (the file set / sizes / mtimes changed)
-    instead of replaying stale literals, with no memo=False or
-    clear_kernel_memo() required. Driver-side O(files) listing + stat
-    — the same order of work the scan's own file index already does
-    at planning. A plan with no file sources digests the empty list
-    (its inputs are in-memory per-plan literals: genuinely immutable
-    under an unchanged semantic hash). Returns None when the file set
-    cannot be determined OR when any listed file cannot be stat'd
-    locally (hdfs://, s3a://, a concurrently-vacuumed file) — a
-    path-only fallback signature would make an in-place remote
-    overwrite keeping the same file names fingerprint-identical,
-    silently reviving the stale-memo replay this key exists to
-    prevent (r10 advice); skipping memoization is never the unsafe
-    direction."""
-    import hashlib
-    import os
-
-    try:
+        ph = df._jdf.queryExecution().analyzed().semanticHash()
         files = df.inputFiles()
     except Exception:
         return None
-    h = hashlib.md5()
-    for uri in sorted(files):
-        p = uri
-        if p.startswith("file://"):
-            p = p[len("file://") :]
-        elif p.startswith("file:"):
-            p = p[len("file:") :]
-        try:
-            st = os.stat(p)
-        except OSError:
-            return None
-        h.update(f"{uri}|{st.st_size}|{st.st_mtime_ns}".encode())
-    return (len(files), h.hexdigest())
-
-
-def _memo_get(key):
-    if key is None:
-        return None
-    v = _KERNEL_MEMO.pop(key, None)
-    if v is not None:
-        _KERNEL_MEMO[key] = v  # re-insert: insertion order == LRU order
-    return v
-
-
-def _memo_put(key, value) -> None:
-    if key is None:
-        return
-    _KERNEL_MEMO[key] = value
-    while len(_KERNEL_MEMO) > _MEMO_CAP:
-        _KERNEL_MEMO.pop(next(iter(_KERNEL_MEMO)))
+    fp = file_fingerprint(files)
+    return None if fp is None else (ph, fp)
 
 
 def _cols(order_cols: Sequence) -> list[Column]:
@@ -441,7 +380,6 @@ def distributed_cumsum(
     bands: int = DEFAULT_BANDS,
     total_col: str | None = None,
     cache_input: bool = False,
-    memo: bool = True,
     sum_total_cols: Sequence[str | None] = (),
 ) -> DataFrame:
     """df + exact global running totals over a total order, no global
@@ -461,30 +399,24 @@ def distributed_cumsum(
     ``sum_total_cols`` (aligned with ``sums``, None to skip one) adds
     each sum's GRAND total as a literal column — it falls out of the
     same band-totals collect, so a Pareto-style caller gets SUM(x)
-    without a second scan of the input in its final job. ``memo``
-    (default on) replays both collects' literals when the identical
-    (input plan, spec) was already constructed this session — see the
-    module-level memo notes for the immutable-input assumption."""
+    without a second scan of the input in its final job. Both
+    collects' literals are replayed when the identical (input plan,
+    spec) was already constructed — see the module-level memo notes."""
     sums = list(sums)
     keys = _norm_order(order_cols)
     # memo lookup: identical (input plan, specs) constructions reuse
     # the collected literals — zero jobs at re-construction (see the
     # module-level memo notes on the immutable-input assumption)
-    memo_key = None
-    if memo:
-        ph = _plan_hash(df)
-        fp = _input_fingerprint(df)
-        if ph is not None and fp is not None:
-            memo_key = (
-                "cumsum",
-                ph,
-                fp,
-                df.schema.simpleString(),
-                tuple((str(e), asc) for e, asc in keys),
-                tuple(str(e) for e, _ in sums),
-                bands,
-            )
-    hit = _memo_get(memo_key)
+    ik = _input_key(df)
+    memo_key = None if ik is None else (
+        "cumsum",
+        ik,
+        df.schema.simpleString(),
+        tuple((str(e), asc) for e, asc in keys),
+        tuple(str(e) for e, _ in sums),
+        bands,
+    )
+    hit = _KERNELS.get(memo_key)
     if hit is not None:
         # replay the collected literals — ZERO jobs at construction.
         # (A memo entry is stored only after the desc-NULL guard
@@ -537,7 +469,7 @@ def distributed_cumsum(
                 sum(r[2 + len(sums)] or 0 for r in btot), keys
             )
         total = sum(r[1] for r in btot)
-        _memo_put(memo_key, (bnds, btot, btot_schema, total))
+        _KERNELS.put(memo_key, (bnds, btot, btot_schema, total))
     t = df.withColumn(_BAND, _band_expr(keys, bnds))
     order = [e.asc() if asc else e.desc() for e, asc in keys]
     wp = Window.partitionBy(_BAND).orderBy(*order)
@@ -734,22 +666,18 @@ def exact_ntile_multi(
     # memo (same contract as distributed_cumsum's): identical
     # (input plan, specs) constructions replay the sample boundaries
     # and per-band totals with zero jobs
-    memo_key = None
-    ph = _plan_hash(df)
-    fp = _input_fingerprint(df)
-    if ph is not None and fp is not None:
-        memo_key = (
-            "ntile_multi",
-            ph,
-            fp,
-            df.schema.simpleString(),
-            tuple(
-                (tuple((str(e), asc) for e, asc in keys), n, out)
-                for keys, n, out in norm
-            ),
-            bands,
-        )
-    hit = _memo_get(memo_key)
+    ik = _input_key(df)
+    memo_key = None if ik is None else (
+        "ntile_multi",
+        ik,
+        df.schema.simpleString(),
+        tuple(
+            (tuple((str(e), asc) for e, asc in keys), n, out)
+            for keys, n, out in norm
+        ),
+        bands,
+    )
+    hit = _KERNELS.get(memo_key)
     if hit is not None:
         bnds_list, per_spec = hit
         t = df
@@ -814,7 +742,7 @@ def exact_ntile_multi(
                     break
         for si, nn in null_counts.items():
             _raise_if_null_desc_keys(nn, norm[si][0])
-        _memo_put(memo_key, (bnds_list, per_spec))
+        _KERNELS.put(memo_key, (bnds_list, per_spec))
     # ---- every spec's local row number in one select (one WindowExec
     # per spec in the consumer's single job)
     lrn_cols = [f"_rk_lrn{si}" for si in range(len(norm))]

@@ -11,6 +11,7 @@ import collections as _collections
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cnc_visionsearch_spark.memo import LRU, file_fingerprint
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
 
@@ -1128,17 +1129,15 @@ def doc_bpe_train_merges(
     )
 
 
-# session memo for the trained merge table (r10 verdict #5): training
-# is a rounds-long driver loop over the vocabulary, and THREE registry
+# memo for the trained merge table: training is a
+# rounds-long driver loop over the vocabulary, and THREE registry
 # entries run it (the train query itself + apply_stats + fertility) —
 # one full-surface replay paid it three times. Keyed by the documents
-# table's file fingerprint (path/size/mtime digest, the rank-kernel
-# memo's auto-invalidation key) + rounds, so an overwritten corpus
-# misses and retrains; an un-fingerprint-able input (remote URI,
-# vanished file) disables memoization — never the unsafe direction.
-# Storage is rank.py's CAPPED LRU (_memo_get/_memo_put, namespaced
-# key), not a module-global dict: a long session repeatedly
-# overwriting the corpus must not accrete unbounded merge lists.
+# table's file fingerprint + rounds, so an overwritten corpus misses
+# and retrains; an un-fingerprint-able input (remote URI, vanished
+# file) disables memoization.
+_BPE_MERGES = LRU(64)
+
 
 _BpeMerge = _collections.namedtuple(
     "_BpeMerge", "merge_rank lhs rhs merged pair_count"
@@ -1151,19 +1150,14 @@ def bpe_train_merge_rows(
     """The trained merge rules as driver-side rows — the shared model
     artifact behind doc_bpe_train_merges / doc_bpe_apply_stats /
     doc_bpe_fertility_by_lang. One training job per (corpus
-    fingerprint, rounds) per session."""
+    fingerprint, rounds) per process."""
     from cnc_visionsearch_spark.iterative import check_rounds
-    from cnc_visionsearch_spark.operators.rank import (
-        _input_fingerprint,
-        _memo_get,
-        _memo_put,
-    )
 
     check_rounds(rounds, "doc_bpe_train_merges")
     docs = load_table(spark, sf_dir, "documents")
-    fp = _input_fingerprint(docs)
-    key = None if fp is None else ("bpe_merges", fp, int(rounds))
-    hit = _memo_get(key)
+    fp = file_fingerprint(docs.inputFiles())
+    key = None if fp is None else (fp, int(rounds))
+    hit = _BPE_MERGES.get(key)
     if hit is not None:
         return hit
     vocab = (
@@ -1206,7 +1200,7 @@ def bpe_train_merge_rows(
                 F.lit(f" {best.lhs}{best.rhs}"),
             ),
         ).localCheckpoint(eager=True)
-    _memo_put(key, merges)
+    _BPE_MERGES.put(key, merges)
     return merges
 
 

@@ -25,6 +25,7 @@ from cnc_visionsearch_spark.operators.ann import (
     sharded_topk_persisted,
 )
 from cnc_visionsearch_spark.functions.vector import fixed_point_q
+from cnc_visionsearch_spark.memo import file_fingerprint
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
@@ -52,16 +53,9 @@ def _corpus_tag(sf_dir: str, table: str = "embeddings") -> str:
     import hashlib
 
     src = os.path.join(sf_dir, f"{table}.parquet")
-    h = hashlib.md5()
-    if os.path.isdir(src):
-        for root, _dirs, files in sorted(os.walk(src)):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                rel = os.path.relpath(os.path.join(root, f), src)
-                h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode())
-    elif os.path.exists(src):
-        st = os.stat(src)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
+    fp = file_fingerprint([src]) or ()
+    rel = [(os.path.relpath(n, src), size, mt) for n, size, mt in fp]
+    h = hashlib.md5(repr(rel).encode())
     base = os.path.basename(sf_dir.rstrip("/")) or "corpus"
     return f"{base}-{h.hexdigest()[:12]}"
 

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cnc_visionsearch_spark.memo import LRU, file_fingerprint
 from cnc_visionsearch_spark.schemas import ALL_TABLES
 
 __all__ = [
@@ -36,20 +37,19 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Session-scoped handle memo for fixture-table reads (r11): every
-# load_table used to pay a fresh spark.read.parquet — footer/schema
-# read + InMemoryFileIndex build + the dtype-normalization py4j chatter
-# — per QUERY CONSTRUCTION (~0.1-0.2s each, 1-3 tables per query,
-# every bench pass). A DataFrame is an immutable lazy plan, so handing
-# every caller the same handle changes nothing about execution: each
-# action still scans the parquet. Keyed on the session's
-# applicationId (r12, verdict #7 — id(spark) could be REUSED by a new
-# session after GC, silently serving a plan bound to a dead JVM) so a
-# restarted session re-reads schemas; fixture dirs are immutable
-# within a round (the memoized_point_value contract below), and
-# `load_table.cache_clear()` is the hatch for anything that rewrites
-# a previously-read path in-process.
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+# Handle memo for fixture-table reads (r11): every load_table used to
+# pay a fresh spark.read.parquet — footer/schema read +
+# InMemoryFileIndex build + the dtype-normalization py4j chatter — per
+# QUERY CONSTRUCTION (~0.1-0.2s each, 1-3 tables per query). A
+# DataFrame is an immutable lazy plan, so handing every caller the
+# same handle changes nothing about execution: each action still
+# scans the parquet. Keyed on the session (memo.py contract): the
+# applicationId, so a restarted application re-reads schemas, and
+# id(spark), so a sibling newSession() gets a handle bound to ITSELF.
+# id() cannot be reused while the entry lives — the memoized
+# DataFrame holds its session. Fixture dirs are immutable within a
+# process; the hit path adds no stat and no py4j call.
+_TABLES = LRU(256)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -65,10 +65,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     key = (
         spark.sparkContext.applicationId,
+        id(spark),
         os.path.abspath(sf_dir),
         name,
     )
-    hit = _TABLE_MEMO.get(key)
+    hit = _TABLES.get(key)
     if hit is not None:
         return hit
     df = spark.read.parquet(table_path(sf_dir, name))
@@ -84,19 +85,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
-    _TABLE_MEMO[key] = df
-    if len(_TABLE_MEMO) > 256:
-        _TABLE_MEMO.pop(next(iter(_TABLE_MEMO)))
+    _TABLES.put(key, df)
     return df
-
-
-def _load_table_cache_clear() -> None:
-    """Drop every memoized table handle (call after rewriting a fixture
-    path in-process — e.g. a test that overwrites its tmp sf_dir)."""
-    _TABLE_MEMO.clear()
-
-
-load_table.cache_clear = _load_table_cache_clear
 
 
 def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
@@ -137,6 +127,13 @@ def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
         files = df.inputFiles()
     except Exception:
         return df
+    # every file is at least one split: enough files parallelize alone
+    if not files or len(files) >= p:
+        return df
+    fp = file_fingerprint(files)
+    if fp is None:
+        # remote/unstattable storage: assume a production layout
+        return df
     raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
     try:
         max_split = int("".join(ch for ch in raw if ch.isdigit()) or "134217728")
@@ -148,32 +145,15 @@ def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
             max_split *= 1024 * 1024 * 1024
     except ValueError:
         max_split = 134217728
-    if not files:
+    splits = sum(max(1, math.ceil(size / max_split)) for _, size, _ in fp)
+    if splits >= p:
         return df
-    splits = 0
-    for uri in files:
-        path = uri
-        if path.startswith("file://"):
-            path = path[len("file://") :]
-        elif path.startswith("file:"):
-            path = path[len("file:") :]
-        try:
-            size = os.stat(path).st_size
-        except OSError:
-            # remote/unstattable storage: assume a production layout
-            return df
-        splits += max(1, math.ceil(size / max_split))
-        if splits >= p:
-            return df
     return df.repartition(p, *[F.col(c) for c in key_cols])
 
 
-# One process-wide memo for query PARAMETERS fetched from fixture tables
-# (a query vector / query text picked by id). Safe because the driver's
-# fixture dirs are immutable within a round; call
-# ``memoized_point_value.cache_clear_path(path)`` (or clear the dict)
-# after rewriting data at a previously-read path in the same process.
-_POINT_MEMO: dict[tuple[str, str, str, object, str], object] = {}
+# Query PARAMETERS fetched from fixture tables (a query vector / query
+# text picked by id): plain values, immutable with the fixture dirs.
+_POINTS = LRU(256)
 
 
 def memoized_point_value(
@@ -184,26 +164,17 @@ def memoized_point_value(
     derives its parameter (query vector, query text) from a fixture
     row, so repeat invocations don't pay the lookup job again."""
     memo_key = (sf_dir, table, key_col, key, value_col)
-    if memo_key not in _POINT_MEMO:
-        _POINT_MEMO[memo_key] = (
+    miss = object()
+    v = _POINTS.get(memo_key, miss)
+    if v is miss:
+        v = (
             load_table(spark, sf_dir, table)
             .filter(F.col(key_col) == key)
             .select(value_col)
             .first()[0]
         )
-    return _POINT_MEMO[memo_key]
-
-
-def _clear_point_memo(path_prefix: str | None = None) -> None:
-    """Invalidate memoized point lookups (all, or those under a path)."""
-    if path_prefix is None:
-        _POINT_MEMO.clear()
-        return
-    for k in [k for k in _POINT_MEMO if k[0].startswith(path_prefix)]:
-        del _POINT_MEMO[k]
-
-
-memoized_point_value.cache_clear_path = _clear_point_memo
+        _POINTS.put(memo_key, v)
+    return v
 
 
 def load_tables(

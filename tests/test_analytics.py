@@ -335,19 +335,17 @@ def test_bpe_merge_table_memoized_per_corpus_fingerprint(spark):
     full-surface replay must pay training ONCE. A memo hit returns the
     identical list object (no retraining jobs); the DataFrame twin
     serves the same rows, so every oracle hash is unchanged."""
-    from cnc_visionsearch_spark.operators.rank import (
-        _KERNEL_MEMO,
-        clear_kernel_memo,
-    )
+    from cnc_visionsearch_spark import memo
     from cnc_visionsearch_spark.queries_analytics import (
+        _BPE_MERGES,
         bpe_train_merge_rows,
         doc_bpe_train_merges,
     )
 
     def bpe_keys():
-        return [k for k in _KERNEL_MEMO if k[0] == "bpe_merges"]
+        return list(_BPE_MERGES)
 
-    clear_kernel_memo()
+    memo.clear()
     first = bpe_train_merge_rows(spark, SF)
     assert len(bpe_keys()) == 1 and first
     second = bpe_train_merge_rows(spark, SF)
@@ -355,7 +353,7 @@ def test_bpe_merge_table_memoized_per_corpus_fingerprint(spark):
     via_df = doc_bpe_train_merges(spark, SF).collect()
     assert [tuple(r) for r in via_df] == [tuple(m) for m in first]
     # a different rounds budget is a different model -> trains fresh;
-    # storage is the CAPPED shared LRU (no unbounded module dict)
+    # storage is a CAPPED LRU (no unbounded module dict)
     shorter = bpe_train_merge_rows(spark, SF, rounds=2)
     assert len(shorter) == 2 and len(bpe_keys()) == 2
     assert [tuple(m) for m in shorter] == [tuple(m) for m in first[:2]]

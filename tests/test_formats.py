@@ -156,24 +156,37 @@ def test_spread_scan_guard_and_pushdown(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
-def test_load_table_memo_keyed_on_application_id(spark):
+def test_load_table_memo_keyed_on_application_id(spark, sf_dir):
     """r12 (verdict #7): the table-handle memo must key on the session's
-    applicationId, never on id(spark) — a GC'd session's id() can be
-    REUSED by a replacement session, which would silently serve a plan
-    bound to a dead JVM. Pin the keying mechanism: every live entry is
-    keyed by this session's applicationId string (globally unique per
-    SparkContext), so a stopped-and-replaced session can only miss."""
+    applicationId — a GC'd session's id() alone can be REUSED by a
+    replacement session, which would silently serve a plan bound to a
+    dead JVM. Pin the keying mechanism: every live entry is keyed by
+    (applicationId, id(session), abs sf_dir, table), so a
+    stopped-and-replaced session can only miss."""
+    from cnc_visionsearch_spark import memo
     from cnc_visionsearch_spark.sources import catalog
 
-    catalog.load_table.cache_clear()
-    df = load_table(spark, "/root/testdata/sf0.01", "nation")
+    memo.clear()
+    df = load_table(spark, sf_dir, "nation")
     app = spark.sparkContext.applicationId
-    keys = list(catalog._TABLE_MEMO)
-    assert keys and all(k[0] == app for k in keys), keys
+    keys = list(catalog._TABLES)
+    assert keys == [(app, id(spark), os.path.abspath(sf_dir), "nation")]
     assert isinstance(app, str) and app  # not a reusable CPython id()
     # a different applicationId (a replaced session) cannot alias in
-    assert ("application_dead_0000", keys[0][1], keys[0][2]) not in (
-        catalog._TABLE_MEMO
-    )
+    dead = ("application_dead_0000",) + keys[0][1:]
+    assert catalog._TABLES.get(dead) is None
     # memo hit: same immutable handle for the same session
-    assert load_table(spark, "/root/testdata/sf0.01", "nation") is df
+    assert load_table(spark, sf_dir, "nation") is df
+
+
+def test_load_table_memo_separates_sibling_sessions(spark, sf_dir):
+    """newSession() shares the SparkContext (and so the
+    applicationId) but not the session state. A sibling must get a
+    handle bound to ITSELF, never the first session's handle."""
+    s2 = spark.newSession()
+    df1 = load_table(spark, sf_dir, "nation")
+    df2 = load_table(s2, sf_dir, "nation")
+    assert df2 is not df1
+    assert df1.sparkSession is spark and df2.sparkSession is s2
+    assert load_table(s2, sf_dir, "nation") is df2
+    assert df2.count() == df1.count()

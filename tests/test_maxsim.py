@@ -512,3 +512,31 @@ def test_maxsim_multi_probe_empty_token_lists(spark, tmp_path):
     )
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["qid", "doc_id", "score_q"]
+
+
+@pytest.mark.parametrize("use_tlog", [False, True])
+def test_postings_unique_per_term_and_doc(spark, tmp_path, use_tlog):
+    """maxsim_multi_probe's lexical candidate count is a count(*) over
+    (qid, term, doc_id) rows, which equals the distinct-term count only
+    while postings are (term, doc_id)-unique. Pin that on both layouts,
+    after the build and after an append of new documents."""
+    from cnc_visionsearch_spark.operators.text_index import (
+        inverted_append,
+        inverted_build,
+        read_postings,
+    )
+
+    docs = load_table(spark, SF, "documents")
+    path = str(tmp_path / "inv")
+
+    def rows_and_pairs():
+        p = read_postings(spark, path)
+        return p.count(), p.select("term", "doc_id").distinct().count()
+
+    even = F.col("doc_id") % 2 == 0
+    inverted_build(docs.filter(even), path, n_buckets=8, use_tlog=use_tlog)
+    n_built, pairs = rows_and_pairs()
+    assert n_built == pairs > 0
+    inverted_append(docs.filter(~even), path, n_buckets=8)
+    n_all, pairs = rows_and_pairs()
+    assert n_all == pairs > n_built

@@ -400,12 +400,10 @@ def test_kernel_memo_skips_construction_jobs_and_keeps_values(spark):
     sample jobs and the values are identical; a DIFFERENT input plan
     misses the memo."""
     import cnc_visionsearch_spark.operators.rank as rank_mod
-    from cnc_visionsearch_spark.operators.rank import (
-        clear_kernel_memo,
-        distributed_cumsum,
-    )
+    from cnc_visionsearch_spark import memo
+    from cnc_visionsearch_spark.operators.rank import distributed_cumsum
 
-    clear_kernel_memo()
+    memo.clear()
     d = spark.range(500).select(
         F.col("id"), (F.col("id") % 7).alias("v")
     )
@@ -434,12 +432,10 @@ def test_kernel_memo_skips_construction_jobs_and_keeps_values(spark):
             sums=[(F.col("v"), "cum_v")],
         )
         assert calls["n"] == 2
-        # memo=False bypasses
-        distributed_cumsum(d, ["id"], rn_col="rn", memo=False)
-        assert calls["n"] == 3
-        clear_kernel_memo()
+        # the one clear drops the entry
+        memo.clear()
         distributed_cumsum(d, ["id"], rn_col="rn")
-        assert calls["n"] == 4
+        assert calls["n"] == 3
     finally:
         rank_mod._band_boundaries = real
 
@@ -448,8 +444,7 @@ def test_kernel_memo_auto_invalidates_on_file_mutation(spark, tmp_path):
     """r9 verdict #4 hardening: the memo key carries the scanned
     files' (path, size, mtime) fingerprint — overwriting the input
     parquet and reconstructing the SAME plan yields FRESH literals
-    (the total reflects the new data) with NO memo=False and NO
-    clear_kernel_memo() call."""
+    (the total reflects the new data) with NO memo clear."""
     from cnc_visionsearch_spark.operators.rank import distributed_cumsum
 
     p = str(tmp_path / "t")
@@ -489,12 +484,10 @@ def test_exact_ntile_multi_memo_replays_identically(spark):
     """The multi-spec kernel's shared-sample + grouping-sets collects
     memoize the same way: a second identical construction is job-free
     and value-identical."""
-    from cnc_visionsearch_spark.operators.rank import (
-        clear_kernel_memo,
-        exact_ntile_multi,
-    )
+    from cnc_visionsearch_spark import memo
+    from cnc_visionsearch_spark.operators.rank import exact_ntile_multi
 
-    clear_kernel_memo()
+    memo.clear()
     d = spark.range(300).select(
         F.col("id"), (F.col("id") * 13 % 97).alias("v")
     )
