@@ -4,15 +4,16 @@ in their correct order. None of this runs on the query path — probes
 and sinks stay O(batch)/O(probe); this job bounds the costs that
 accrete between runs:
 
-1. **Vacuum** (:func:`operators.ann.ivf_vacuum`): apply tombstones
-   physically — rewrites only touched cell partitions, restores
-   tombstone-free probe plans.
-2. **Compact** (:func:`sources.formats.compact_layout` over cells/ and
-   pq_codes/ + pq_trained_codes/, the inverted index's postings/ and
-   the NSW graph/ when their paths are passed;
-   :func:`streaming.pipelines.compact_id_mapping` for the
-   upsert state): bound the one-file-per-partition-per-batch accretion
-   of the append/upsert paths.
+1. **Vacuum** (:func:`operators.ann.ivf_vacuum`,
+   :func:`operators.text_index.inverted_vacuum`): apply tombstones
+   physically — one rewrite commit over the touched cells/buckets,
+   restoring tombstone-free probe plans.
+2. **Compact** (:func:`sources.tlog.compact_domains` over the IVF cells
+   and both PQ code tables; :func:`operators.text_index.inverted_compact`
+   and :func:`operators.graph_ann.nsw_compact` when their paths are
+   passed; :func:`streaming.pipelines.compact_id_mapping` for the
+   upsert state): bound the one-file-per-domain-per-batch accretion of
+   the append/upsert paths, each as one rewrite commit.
 3. **Audit** (cell-population skew, the ann_ivf_cell_skew measure):
    report whether append drift against the frozen codebook warrants an
    ``ivf_build`` re-train — the one maintenance action this job does
@@ -34,6 +35,29 @@ from pyspark.sql import functions as F
 __all__ = ["run_index_maintenance", "forget_vectors"]
 
 
+def _n_files(t, tag_pred) -> int:
+    """Live parquet files of the log's domains satisfying ``tag_pred``."""
+    from cnc_visionsearch_spark.memo import file_fingerprint
+
+    snap = t.snapshot()
+    dirs = [
+        os.path.join(t.root, p)
+        for p, b in snap.files
+        if b is not None and tag_pred(b)
+    ]
+    fp = file_fingerprint(dirs) or ()
+    return sum(1 for name, _, _ in fp if name.endswith(".parquet"))
+
+
+def _compacted(spark, t, tag_pred, bucket_expr, schema=None) -> dict:
+    """Compact the domains satisfying ``tag_pred``; report live files."""
+    from cnc_visionsearch_spark.sources.tlog import compact_domains
+
+    before = _n_files(t, tag_pred)
+    compact_domains(spark, t, tag_pred, bucket_expr, schema)
+    return {"before": before, "after": _n_files(t, tag_pred)}
+
+
 def run_index_maintenance(
     spark: SparkSession,
     index_path: str | None = None,
@@ -42,42 +66,35 @@ def run_index_maintenance(
     nsw_path: str | None = None,
     skew_retrain_threshold: float = 3.0,
 ) -> dict:
-    """Run the maintenance pass; return a report dict (counts before/
-    after, skew audit, retrain recommendation). Idempotent — a second
-    run on a settled layout changes nothing."""
-    from cnc_visionsearch_spark.operators.ann import ivf_vacuum
-    from cnc_visionsearch_spark.sources.formats import compact_layout
+    """Run the maintenance pass; return a report dict (live file counts
+    before/after, skew audit, retrain recommendation). Idempotent — a
+    second run on a settled layout commits nothing."""
+    from cnc_visionsearch_spark.operators import ann
+    from cnc_visionsearch_spark.sources.tlog import open_layout
     from cnc_visionsearch_spark.streaming.pipelines import compact_id_mapping
-
-    def n_files(root: str) -> int:
-        return sum(
-            1
-            for dp, _d, fs in os.walk(root)
-            for f in fs
-            if f.endswith(".parquet")
-        )
 
     report: dict = {}
     if index_path is not None:
-        had_tombstones = os.path.exists(f"{index_path}/tombstones")
-        ivf_vacuum(spark, index_path)
-        report["vacuum_applied"] = had_tombstones
-        for sub in ("cells", "pq_codes", "pq_trained_codes"):
-            root = f"{index_path}/{sub}"
-            if not os.path.exists(root):
+        t = open_layout(index_path)
+        had = bool(t.snapshot().files_in([ann.TLOG_IVF_TOMBS_TAG]))
+        ann.ivf_vacuum(spark, index_path)
+        report["vacuum_applied"] = had
+        gap = ann.TLOG_TAG_STRIDE_GAP
+        for sub, base in (
+            ("cells", 0),
+            ("pq_codes", ann.TLOG_PQ_CODES_STRIDE),
+            ("pq_trained_codes", ann.TLOG_PQ_TRAINED_CODES_STRIDE),
+        ):
+            if not ann._family(t.snapshot(), base):
                 continue
-            before = n_files(root)
-            n_parts = sum(
-                1 for d in os.listdir(root) if d.startswith("cell_id=")
+            report[f"{sub}_files"] = _compacted(
+                spark,
+                t,
+                lambda b, base=base: base <= b < base + gap,
+                (F.lit(base) + F.col("cell_id")).cast("int"),
             )
-            # already-settled layout (<= 1 file per partition): skip the
-            # rewrite entirely — this is what makes a second maintenance
-            # run a true no-op instead of a same-content file churn
-            if before > n_parts:
-                compact_layout(spark, root, partition_by=["cell_id"])
-            report[f"{sub}_files"] = {"before": before, "after": n_files(root)}
         per_cell = (
-            spark.read.parquet(f"{index_path}/cells")
+            ann.read_cells(spark, index_path)
             .groupBy("cell_id")
             .agg(F.count(F.lit(1)).alias("n"))
         )
@@ -91,60 +108,53 @@ def run_index_maintenance(
         report["recommend_retrain"] = skew >= skew_retrain_threshold
     # the inverted layout's delete lifecycle: apply tombstones
     # physically BEFORE compaction (vacuum rewrites touched buckets;
-    # compacting first would churn files the vacuum rewrites again)
+    # compacting first would churn files the vacuum rewrites again);
+    # physical removal of unreferenced files rides the table's
+    # retention-gated tlog vacuum
     if inverted_path is not None:
         from cnc_visionsearch_spark.operators.text_index import (
             TLOG_TOMBS_TAG,
-            _tlog_of,
             inverted_compact,
             inverted_vacuum,
         )
 
-        t = _tlog_of(inverted_path)
-        if t is not None:
-            # transactional layout: vacuum is one rewrite commit,
-            # compaction its own (inverted_compact); physical removal
-            # of unreferenced files rides the table's tlog vacuum
-            # (retention-gated), all under conflict arbitration
-            had = bool(t.snapshot().files_in([TLOG_TOMBS_TAG]))
-            inverted_vacuum(spark, inverted_path)
-            inverted_compact(spark, inverted_path)
-            t.vacuum()
-            report["inverted_vacuum_applied"] = had
-            inverted_path = None  # the legacy dir compaction below n/a
-        else:
-            had = os.path.exists(f"{inverted_path}/tombstones")
-            inverted_vacuum(spark, inverted_path)
-            report["inverted_vacuum_applied"] = had
-    # append-accreting auxiliary layouts: same settled-skip compaction
-    # discipline as the cell tables (inverted postings per term bucket,
-    # NSW edges per src bucket)
-    for label, root_dir, part_col in (
-        ("postings", inverted_path and f"{inverted_path}/postings", "bucket"),
-        ("doclens", inverted_path and f"{inverted_path}/doclens", None),
-        ("nsw_graph", nsw_path and f"{nsw_path}/graph", "src_bucket"),
-    ):
-        if not root_dir or not os.path.exists(root_dir):
-            continue
-        before = n_files(root_dir)
-        n_parts = (
-            sum(
-                1
-                for d in os.listdir(root_dir)
-                if d.startswith(f"{part_col}=")
-            )
-            if part_col
-            else 1
+        t = open_layout(inverted_path)
+        had = bool(t.snapshot().files_in([TLOG_TOMBS_TAG]))
+        inverted_vacuum(spark, inverted_path)
+        n_buckets = int(t.snapshot().meta["n_buckets"])
+        before = _n_files(t, lambda b: b < n_buckets)
+        inverted_compact(spark, inverted_path)
+        t.vacuum()
+        report["inverted_vacuum_applied"] = had
+        report["postings_files"] = {
+            "before": before,
+            "after": _n_files(t, lambda b: b < n_buckets),
+        }
+    if nsw_path is not None:
+        from cnc_visionsearch_spark.operators.graph_ann import (
+            _GRAPH_SCHEMA,
+            _meta,
         )
-        if before > n_parts:
-            compact_layout(
-                spark,
-                root_dir,
-                partition_by=[part_col] if part_col else None,
-            )
-        report[f"{label}_files"] = {"before": before, "after": n_files(root_dir)}
+
+        n_buckets = int(_meta(nsw_path)["n_buckets"])
+        report["nsw_graph_files"] = _compacted(
+            spark,
+            open_layout(nsw_path),
+            lambda b: b < n_buckets,
+            F.col("src_bucket"),
+            _GRAPH_SCHEMA,
+        )
     if state_dir is not None:
         root = os.path.join(state_dir, "id_mapping")
+
+        def n_files(root: str) -> int:
+            return sum(
+                1
+                for _dp, _d, fs in os.walk(root)
+                for f in fs
+                if f.endswith(".parquet")
+            )
+
         before = n_files(root) if os.path.exists(root) else 0
         compact_id_mapping(spark, state_dir)
         report["id_mapping_files"] = {

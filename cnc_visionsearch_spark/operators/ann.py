@@ -19,8 +19,9 @@ candidates. Three tiers, increasing specialization:
    by id is a centroid — at real scale you'd train k-means once and
    broadcast it, the query path is identical). Vectors live in the cell
    of their nearest centroid; a query probes the `nprobe` nearest
-   cells. The 100 TB layout: embeddings table PARTITIONED BY cell_id —
-   probing = partition pruning, reading nprobe/C of the data.
+   cells. The 100 TB layout: the embeddings table as a transaction log
+   (sources/tlog.py) with one conflict domain per cell_id — probing =
+   log-level file pruning, reading nprobe/C of the data.
 
 3. **Sharded local index** (:func:`sharded_topk`): the
    BASELINE.json "batch FAISS index build" pattern — hash-shard the
@@ -46,7 +47,13 @@ from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.functions.vector import dot, l2_sq
 from cnc_visionsearch_spark.memo import LRU, file_fingerprint
-from cnc_visionsearch_spark.operators.mutex import single_writer
+from cnc_visionsearch_spark.sources.tlog import (
+    TLog,
+    compact_domains,
+    open_layout,
+    read_tags,
+    retag,
+)
 
 __all__ = [
     "hyperplanes",
@@ -84,7 +91,6 @@ __all__ = [
     "pq_trained_build",
     "pq_trained_append",
     "ivf_cell_radii",
-    "write_cell_radii",
     "ivf_range_search",
     "ivf_knn_join_probe",
 ]
@@ -275,17 +281,17 @@ def ivf_topk(
 # reads them — paying scan-of-nprobe-cells, never rebuild.
 
 
-# tlog conflict-domain tags for transactional IVF layouts: cells files
-# carry their cell_id (0..n_cells-1); the auxiliary subtables get
-# reserved tags far above any real cell count
+# Layout conflict-domain tags (the log's per-file bucket field): cells
+# files carry their cell_id (0..TLOG_TAG_STRIDE_GAP-1, split children
+# included); the auxiliary subtables get reserved tags far above any
+# real cell count.
 TLOG_CODEBOOK_TAG = 100_000
 TLOG_RADII_TAG = 100_001
 TLOG_IVF_TOMBS_TAG = 100_002
-# r11 (closing the last tlog scope exclusion): composed-codec code
-# tables join the commit log. Code files tag their conflict domains as
-# STRIDE + partition-key so a vacuum rewriting cell c's vectors and
-# its PQ codes declares BOTH domains; strides are spaced 10_000 apart
-# and builds validate n_cells below the gap (same aliasing guard as
+# Composed-codec code tables tag their conflict domains as STRIDE +
+# partition-key, so a vacuum rewriting cell c's vectors and its PQ
+# codes declares BOTH domains; strides are spaced 10_000 apart and
+# builds validate n_cells below the gap (same aliasing guard as
 # TLOG_HNSW_LAYER_STRIDE).
 TLOG_PQ_CODES_STRIDE = 200_000  # + cell_id (stride-codebook codes)
 TLOG_PQ_TRAINED_CODES_STRIDE = 210_000  # + cell_id (trained codes)
@@ -296,79 +302,60 @@ TLOG_RQ_MODEL_L1_TAG = 100_004  # coarse codebook (k1 rows)
 TLOG_RQ_MODEL_L2_TAG = 100_005  # residual codebook (k2 rows)
 
 
-def _ivf_tlog(path: str):
-    from cnc_visionsearch_spark.sources.tlog import tlog_of
-
-    return tlog_of(path)
-
-
-def _retag(adds: list[dict], tag: int) -> list[dict]:
-    """Stamp untagged add-actions with a reserved domain tag (the
-    text_index._retag twin)."""
-    for a in adds:
-        a["bucket"] = tag
-    return adds
-
-
-def _tlog_read_tags(spark, t, snap, tags, schema=None):
-    paths = snap.files_in(tags)
-    if not paths:
-        if schema is None:
-            return None
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(*[os.path.join(t.root, p) for p in paths])
+def _family(snap, base: int) -> list[int]:
+    """Partition keys of the live files tagged ``base + key`` (key below
+    the stride gap): base 0 lists the layout's cell ids — including a
+    rebalance's split children — base TLOG_PQ_CODES_STRIDE the cells
+    holding stride-PQ codes, and so on."""
+    return sorted(
+        {
+            b - base
+            for _p, b in snap.files
+            if b is not None and base <= b < base + TLOG_TAG_STRIDE_GAP
+        }
+    )
 
 
 def read_codebook(spark, path: str) -> DataFrame:
-    """The layout's coarse quantizer as a DataFrame — dispatches on the
-    layout mode (transactional: the snapshot's codebook-tagged files;
-    legacy: the ``codebook/`` dir)."""
-    t = _ivf_tlog(path)
-    if t is None:
-        return spark.read.parquet(f"{path}/codebook")
-    return _tlog_read_tags(spark, t, t.snapshot(), [TLOG_CODEBOOK_TAG])
+    """The layout's coarse quantizer (the snapshot's codebook-tagged
+    files) as a DataFrame."""
+    t = open_layout(path)
+    return read_tags(spark, t, t.snapshot(), [TLOG_CODEBOOK_TAG])
 
 
 def read_cells(spark, path: str, cell_ids=None) -> DataFrame:
     """The layout's cell table (RAW — callers apply the tombstone
-    filter via :func:`_without_tombstones`, same contract as the
-    legacy dir read). ``cell_ids`` prunes at the LOG level on
-    transactional layouts; legacy layouts rely on the caller's
-    ``cell_id`` partition filter (kept in both modes)."""
-    t = _ivf_tlog(path)
-    if t is None:
-        return spark.read.parquet(f"{path}/cells")
+    filter via :func:`_without_tombstones`). ``cell_ids`` prunes at the
+    LOG level: only those cells' files enter the scan. Cells with no
+    live file (emptied by a vacuum) read as an empty frame with the
+    table's columns."""
+    t = open_layout(path)
     snap = t.snapshot()
-    tags = (
-        sorted(cell_ids)
-        if cell_ids is not None
-        else list(range(int(snap.meta["n_cells"])))
+    every = _family(snap, 0)
+    out = read_tags(
+        spark, t, snap, sorted(cell_ids) if cell_ids is not None else every
     )
-    return _tlog_read_tags(spark, t, snap, tags)
+    if out is None and every:
+        out = read_tags(spark, t, snap, every).limit(0)
+    return out
 
 
 def read_pq_codes(
     spark, path: str, cell_ids=None, trained: bool = False
 ) -> DataFrame:
     """The layout's PQ code table (RAW — callers tombstone-filter),
-    dispatching like :func:`read_cells`: legacy reads the partitioned
-    dir, transactional layouts prune at the LOG level via the
-    stride-tagged live files."""
-    sub = "pq_trained_codes" if trained else "pq_codes"
-    t = _ivf_tlog(path)
-    if t is None:
-        return spark.read.parquet(f"{path}/{sub}")
+    pruned at the LOG level to ``cell_ids`` via the stride-tagged live
+    files."""
     stride = (
         TLOG_PQ_TRAINED_CODES_STRIDE if trained else TLOG_PQ_CODES_STRIDE
     )
+    t = open_layout(path)
     snap = t.snapshot()
     cells = (
-        sorted(cell_ids)
-        if cell_ids is not None
-        else list(range(int(snap.meta["n_cells"])))
+        sorted(cell_ids) if cell_ids is not None else _family(snap, stride)
     )
     id_col = snap.meta.get("id_col", "vec_id")
-    return _tlog_read_tags(
+    return read_tags(
         spark,
         t,
         snap,
@@ -378,49 +365,38 @@ def read_pq_codes(
 
 
 def read_pq_trained_codebook(spark, path: str) -> DataFrame:
-    """The trained PQ model (m*k* rows) across both layout modes."""
-    t = _ivf_tlog(path)
-    if t is None:
-        return spark.read.parquet(f"{path}/pq_trained_codebook")
-    return _tlog_read_tags(
-        spark, t, t.snapshot(), [TLOG_PQ_TRAINED_MODEL_TAG]
-    )
+    """The trained PQ model (m*k* rows)."""
+    t = open_layout(path)
+    return read_tags(spark, t, t.snapshot(), [TLOG_PQ_TRAINED_MODEL_TAG])
 
 
-def _codebook_rows(path: str) -> list[dict]:
-    """Driver-side codebook rows for probe planning — footer-reads the
-    snapshot's codebook files on transactional layouts, the dir on
-    legacy ones (both via the memoized :func:`_metadata_rows`)."""
-    t = _ivf_tlog(path)
-    if t is None:
-        return _metadata_rows(f"{path}/codebook")
-    snap = t.snapshot()
+def _tag_rows(path: str, tag: int) -> list[dict]:
+    """Driver-side rows of a metadata-sized subtable (codebook, radii)
+    — footer-reads the snapshot's files tagged ``tag`` via the memoized
+    :func:`_metadata_rows`; no Spark job."""
+    t = open_layout(path)
     rows: list[dict] = []
-    for p in snap.files_in([TLOG_CODEBOOK_TAG]):
+    for p in t.snapshot().files_in([tag]):
         rows.extend(_metadata_rows(os.path.join(path, p)))
     return rows
 
 
-def _radii_rows(path: str) -> "list[dict] | None":
-    """Driver-side cell_radii rows (possibly several partial-maxima
-    files on a transactional layout — callers max-merge per cell), or
-    None when the layout carries no radii artifact."""
-    t = _ivf_tlog(path)
-    if t is None:
-        if not os.path.exists(f"{path}/cell_radii"):
-            return None
-        return _metadata_rows(f"{path}/cell_radii")
-    rows: list[dict] = []
-    for p in t.snapshot().files_in([TLOG_RADII_TAG]):
-        rows.extend(_metadata_rows(os.path.join(path, p)))
-    return rows or None
+def _codebook_rows(path: str) -> list[dict]:
+    """Driver-side codebook rows for probe planning."""
+    return _tag_rows(path, TLOG_CODEBOOK_TAG)
+
+
+def _radii_rows(path: str) -> list[dict]:
+    """Driver-side cell_radii rows: possibly several partial-maxima
+    files (build + appends) — callers max-merge per cell."""
+    return _tag_rows(path, TLOG_RADII_TAG)
 
 
 def _write_geometry(path: str, **geometry) -> None:
     """Sidecar recording the layout's build parameters (local-FS JSON;
-    a cluster deployment writes it through the Hadoop FS API next to
-    _SUCCESS). Appends read it back so a caller cannot silently append
-    with mismatched geometry."""
+    a cluster deployment writes it through the Hadoop FS API). Appends
+    read it back so a caller cannot silently append with mismatched
+    geometry."""
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, "_GEOMETRY.json.tmp")
     with open(tmp, "w") as f:
@@ -433,6 +409,39 @@ def read_geometry(path: str) -> dict:
         return json.load(f)
 
 
+def _new_layout(path: str, n_domains: int, what: str) -> TLog:
+    """An empty log at ``path`` for a build: ``n_domains`` partition
+    keys must stay below the tag stride gap (larger values alias into
+    the reserved and code-table tag ranges), and a log that already
+    holds commits is refused — a second init would append a duplicate
+    index."""
+    if n_domains >= TLOG_TAG_STRIDE_GAP:
+        raise ValueError(
+            f"{what}={n_domains} must stay below the reserved tag stride "
+            f"gap ({TLOG_TAG_STRIDE_GAP}) — larger values alias its "
+            "conflict domains into reserved tag ranges"
+        )
+    t = TLog(path)
+    if t.latest_version() != 0:
+        raise ValueError(
+            f"layout {path} already holds {t.latest_version()} "
+            "commit(s); wipe to rebuild"
+        )
+    return t
+
+
+def _member_radii(assigned: DataFrame, cents: DataFrame, vec_col: str):
+    """(cell_id, radius): max member-to-centroid L2 distance per cell."""
+    return (
+        assigned.join(F.broadcast(cents), "cell_id")
+        .select(
+            "cell_id", F.sqrt(l2_sq(vec_col, "centroid")).alias("member_d")
+        )
+        .groupBy("cell_id")
+        .agg(F.max("member_d").alias("radius"))
+    )
+
+
 def ivf_build(
     emb: DataFrame,
     path: str,
@@ -440,15 +449,16 @@ def ivf_build(
     id_col: str = "vec_id",
     vec_col: str = "nvec",
     centroids: DataFrame | None = None,
-    use_tlog: bool = False,
 ) -> None:
-    """Materialize the IVF index at ``path``: ``codebook/`` (n_cells
-    rows) + ``cells/`` (the full embeddings table written PARTITIONED BY
-    cell_id). Run once per corpus version — the S2 index-save step for
-    the ANN tier. At 100 TB this is the one full shuffle-free scan +
-    partitioned write; every later probe reads nprobe/n_cells of the
-    files via partition pruning. Later batches extend the layout with
-    :func:`ivf_append` — no rebuild.
+    """Materialize the IVF index at ``path`` as ONE atomic init commit:
+    the codebook (n_cells rows), the cells (the full embeddings table,
+    one conflict domain per cell_id) and the per-cell radii. Run once
+    per corpus version — the S2 index-save step for the ANN tier. At
+    100 TB this is the one shuffle-free scan + bucketed write; every
+    later probe reads nprobe/n_cells of the files via log-level file
+    pruning. Later batches extend the layout with :func:`ivf_append`
+    (blind commits) — no rebuild; vacuum/rebalance are rewrite commits
+    declaring the cell domains they touch.
 
     ``centroids`` (cell_id INT, centroid ARRAY<DOUBLE>) plugs in a
     TRAINED codebook — e.g. the k-means iterate from
@@ -464,67 +474,31 @@ def ivf_build(
         if centroids is not None
         else ivf_centroids(emb, n_cells, id_col, vec_col)
     )
-    if use_tlog:
-        # TRANSACTIONAL layout (r8 verdict #1; module/tlog docstrings):
-        # codebook + cells + radii land as ONE atomic init commit,
-        # geometry rides commit meta (and the sidecar, for the shared
-        # read_geometry seam); every later mutation is a commit with
-        # cell-id conflict domains — appends blind, vacuum a rewrite.
-        from cnc_visionsearch_spark.sources.tlog import TLog
-
-        if n_cells >= TLOG_TAG_STRIDE_GAP:
-            raise ValueError(
-                f"ivf_build(use_tlog=True): n_cells={n_cells} must stay "
-                f"below the code-table tag stride gap "
-                f"({TLOG_TAG_STRIDE_GAP}) — larger values alias cell "
-                "domains into the PQ/RQ code-table tag ranges"
-            )
-        t = TLog(path)
-        if t.latest_version() != 0:
-            raise ValueError(
-                f"ivf_build: tlog layout {path} already holds "
-                f"{t.latest_version()} commit(s); wipe to rebuild"
-            )
-        adds = _retag(t.write_data(cents.coalesce(1)), TLOG_CODEBOOK_TAG)
-        # freeze the centroids by reading back the WRITTEN (not yet
-        # committed) codebook files — assignment must not recompute a
-        # nondeterministic centroid job, and the whole build must land
-        # as ONE commit (a reader may never see a codebook-only table)
-        cents = spark.read.parquet(
-            *[os.path.join(path, a["path"]) for a in adds]
-        )
-        assigned = ivf_assign(emb, cents, id_col, vec_col)
-        adds += t.write_data(assigned, bucket_expr=F.col("cell_id"))
-        radii = (
-            assigned.join(F.broadcast(cents), "cell_id")
-            .select(
-                "cell_id",
-                F.sqrt(l2_sq(vec_col, "centroid")).alias("member_d"),
-            )
-            .groupBy("cell_id")
-            .agg(F.max("member_d").alias("radius"))
-        )
-        adds += _retag(t.write_data(radii.coalesce(1)), TLOG_RADII_TAG)
-        t.commit(
-            adds=adds,
-            op="append",
-            meta={
-                "kind": "ivf",
-                "n_cells": n_cells,
-                "id_col": id_col,
-                "vec_col": vec_col,
-            },
-            base_version=0,
-        )
-        _write_geometry(path, n_cells=n_cells, id_col=id_col, vec_col=vec_col)
-        return
-    cents.write.mode("overwrite").parquet(f"{path}/codebook")
-    cents = spark.read.parquet(f"{path}/codebook")
+    t = _new_layout(path, n_cells, "ivf_build: n_cells")
+    adds = retag(t.write_data(cents.coalesce(1)), TLOG_CODEBOOK_TAG)
+    # freeze the centroids by reading back the WRITTEN (not yet
+    # committed) codebook files — assignment must not recompute a
+    # nondeterministic centroid job, and the whole build must land as
+    # ONE commit (a reader may never see a codebook-only table)
+    cents = spark.read.parquet(*[os.path.join(path, a["path"]) for a in adds])
     assigned = ivf_assign(emb, cents, id_col, vec_col)
-    assigned.write.mode("overwrite").partitionBy("cell_id").parquet(f"{path}/cells")
+    adds += t.write_data(assigned, bucket_expr=F.col("cell_id"))
+    adds += retag(
+        t.write_data(_member_radii(assigned, cents, vec_col).coalesce(1)),
+        TLOG_RADII_TAG,
+    )
+    t.commit(
+        adds=adds,
+        op="append",
+        meta={
+            "kind": "ivf",
+            "n_cells": n_cells,
+            "id_col": id_col,
+            "vec_col": vec_col,
+        },
+        base_version=0,
+    )
     _write_geometry(path, n_cells=n_cells, id_col=id_col, vec_col=vec_col)
-    # metadata-sized range-search pruning bounds, kept current by appends
-    write_cell_radii(emb.sparkSession, path, vec_col)
 
 
 def ivf_append(
@@ -539,88 +513,55 @@ def ivf_append(
     ``index.add_with_ids`` (main.py:134), and the piece that makes a
     living 100 TB corpus affordable: daily ingest assigns only the NEW
     vectors against the persisted codebook (broadcast, one batch-sized
-    scan) and appends files into their cell partitions. Untouched cell
-    partitions keep their existing files byte-identical; probes see the
-    union with unchanged semantics (same codebook -> same probe order).
+    scan) and adds files into their cell domains. Existing files stay
+    byte-identical; probes see the union with unchanged semantics (same
+    codebook -> same probe order).
+
+    ONE blind append commit: cell adds (tagged by cell_id) + the
+    BATCH's radii rows under the radii tag — readers aggregate
+    max(radius) per cell across files (appended vectors can only GROW a
+    radius, so per-file partial maxima merge losslessly), which keeps
+    concurrent appends conflict-free: nothing is read-modify-written.
 
     The codebook is frozen at build time — appends never move it, so
     cell boundaries (and therefore every previously written file) stay
     valid. When drift accumulates (cell-size skew growing), re-run
-    :func:`ivf_build` as the periodic re-train, exactly like a FAISS
-    deployment periodically re-trains its coarse quantizer.
+    :func:`ivf_build` as the periodic re-train (or split hot cells with
+    :func:`ivf_rebalance`), exactly like a FAISS deployment
+    periodically re-trains its coarse quantizer.
     """
-    t = _ivf_tlog(path)
-    if t is not None:
-        # ONE blind append commit: cell adds (tagged by cell_id) + the
-        # BATCH's radii rows under the radii tag — readers aggregate
-        # max(radius) per cell across files (appended vectors can only
-        # GROW a radius, so per-file partial maxima merge losslessly),
-        # which keeps concurrent appends conflict-free: nothing is
-        # read-modify-written
-        cents = read_codebook(spark, path)
-        assigned = ivf_assign(new_emb, cents, id_col, vec_col)
-        adds = t.write_data(assigned, bucket_expr=F.col("cell_id"))
-        batch_radii = (
-            assigned.join(F.broadcast(cents), "cell_id")
-            .select(
-                "cell_id", F.sqrt(l2_sq(vec_col, "centroid")).alias("member_d")
-            )
-            .groupBy("cell_id")
-            .agg(F.max("member_d").alias("radius"))
-        )
-        adds += _retag(t.write_data(batch_radii.coalesce(1)), TLOG_RADII_TAG)
-        t.commit(adds=adds, op="append")
-        return
-    cents = spark.read.parquet(f"{path}/codebook")
+    t = open_layout(path)
+    cents = read_codebook(spark, path)
     assigned = ivf_assign(new_emb, cents, id_col, vec_col)
-    assigned.write.mode("append").partitionBy("cell_id").parquet(f"{path}/cells")
-    # appended vectors can only GROW a cell radius: merge-update the
-    # persisted bounds from the BATCH alone (O(batch) + metadata —
-    # recomputing from the full layout would break append's O(batch)
-    # contract)
-    if os.path.exists(f"{path}/cell_radii"):
-        batch_radii = (
-            assigned.join(F.broadcast(cents), "cell_id")
-            .select(
-                "cell_id", F.sqrt(l2_sq(vec_col, "centroid")).alias("member_d")
-            )
-            .groupBy("cell_id")
-            .agg(F.max("member_d").alias("radius"))
-        )
-        merged = (
-            spark.read.parquet(f"{path}/cell_radii")
-            .unionByName(batch_radii)
-            .groupBy("cell_id")
-            .agg(F.max("radius").alias("radius"))
-            .collect()
-        )  # bounded: n_cells rows
-        spark.createDataFrame(merged).write.mode("overwrite").parquet(
-            f"{path}/cell_radii"
-        )
+    adds = t.write_data(assigned, bucket_expr=F.col("cell_id"))
+    adds += retag(
+        t.write_data(_member_radii(assigned, cents, vec_col).coalesce(1)),
+        TLOG_RADII_TAG,
+    )
+    t.commit(adds=adds, op="append")
+
+
+def _delete_ids(spark, path: str, ids: list[int], id_col: str) -> None:
+    """Blind tombstone commit under the vector layouts' shared
+    tombstone tag (IVF and shard layouts filter identically)."""
+    t = open_layout(path)
+    df = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} bigint")
+    t.commit(adds=retag(t.write_data(df), TLOG_IVF_TOMBS_TAG), op="append")
 
 
 def ivf_delete(spark, path: str, ids: list[int], id_col: str = "vec_id") -> None:
     """Tombstone delete from an :func:`ivf_build` layout — the operation
     the REFERENCE CANNOT perform (HNSW has no delete: re-ingesting an
     existing id updates text only and leaves the stale vector resident
-    forever, main.py:119-126). Here a delete appends the ids to
-    ``{path}/tombstones``; every probe anti-joins the (broadcast-small)
+    forever, main.py:119-126). A delete commits the ids blind under the
+    reserved tombstone tag; every probe anti-joins the (broadcast-small)
     tombstone set, so deleted vectors disappear from results
     immediately while resident data files stay untouched — O(batch)
     like the appends. Physical removal is deferred to
     :func:`ivf_vacuum` (or the next full rebuild). The codebook is NOT
     edited: it is a quantizer, not data — a deleted vector that served
-    as a stride centroid keeps partitioning space perfectly well.
-    Transactional layouts commit the tombstone file blind under the
-    reserved tombstone domain tag."""
-    df = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} bigint")
-    t = _ivf_tlog(path)
-    if t is not None:
-        t.commit(
-            adds=_retag(t.write_data(df), TLOG_IVF_TOMBS_TAG), op="append"
-        )
-        return
-    df.write.mode("append").parquet(f"{path}/tombstones")
+    as a stride centroid keeps partitioning space perfectly well."""
+    _delete_ids(spark, path, ids, id_col)
 
 
 def _without_tombstones(spark, path: str, cells: DataFrame, id_col: str) -> DataFrame:
@@ -628,202 +569,104 @@ def _without_tombstones(spark, path: str, cells: DataFrame, id_col: str) -> Data
     batch-scale, never corpus-scale; a corpus-scale tombstone set means
     it is time to vacuum). No-op when the layout has no tombstones, so
     delete-free layouts keep their exact plan shape."""
-    t = _ivf_tlog(path)
-    if t is not None:
-        tf = _tlog_read_tags(spark, t, t.snapshot(), [TLOG_IVF_TOMBS_TAG])
-        if tf is None:
-            return cells
-        return cells.join(
-            F.broadcast(tf.select(id_col).distinct()), id_col, "left_anti"
-        )
-    if not os.path.exists(f"{path}/tombstones"):
+    t = open_layout(path)
+    tf = read_tags(spark, t, t.snapshot(), [TLOG_IVF_TOMBS_TAG])
+    if tf is None:
         return cells
-    tombs = spark.read.parquet(f"{path}/tombstones").select(id_col).distinct()
-    return cells.join(F.broadcast(tombs), id_col, "left_anti")
-
-
-@single_writer("vacuum")
-def _vacuum_layout(
-    spark,
-    path: str,
-    subs: tuple[str, ...],
-    part_col: str,
-    id_col: str,
-    drop_tombstones: bool = True,
-) -> None:
-    """Shared vacuum: rewrite ONLY the partitions of each ``subs``
-    table that contain tombstoned rows (touched set resolved from the
-    first table — bounded by the tombstone set's partition spread, not
-    the corpus), then drop the tombstone dir. Untouched partitions keep
-    their files byte-identical; results are unchanged by construction
-    (the probe anti-join already hid the rows). Each rewritten
-    partition swaps in crash-safely (live -> .bak, tmp -> live, drop
-    .bak — a rmtree-then-rename order loses the partition forever if
-    the process dies between the calls; same discipline as
-    :func:`_swap_artifact_dir` and text_index's vacuum) with
-    self-heal-on-entry for leftovers of an earlier crash.
-    ``drop_tombstones=False`` lets a caller vacuum SEVERAL tables with
-    different partition columns against one tombstone set before
-    retiring it."""
-    import shutil
-
-    tdir = f"{path}/tombstones"
-    if not os.path.exists(tdir):
-        return
-    for sub in subs:
-        base = f"{path}/{sub}"
-        if not os.path.isdir(base):
-            continue
-        for name in os.listdir(base):
-            full = os.path.join(base, name)
-            if name.endswith(".vacuum_bak"):
-                live = full[: -len(".vacuum_bak")]
-                if not os.path.exists(live):
-                    os.rename(full, live)
-                else:
-                    shutil.rmtree(full)
-            elif name.endswith(".vacuum_tmp"):
-                shutil.rmtree(full)
-    subs = tuple(s2 for s2 in subs if os.path.exists(f"{path}/{s2}"))
-    if not subs:
-        if drop_tombstones:
-            shutil.rmtree(tdir)
-        return
-    tombs = spark.read.parquet(tdir).select(id_col).distinct()
-    first = spark.read.parquet(f"{path}/{subs[0]}")
-    touched = [
-        r[0]
-        for r in first.join(F.broadcast(tombs), id_col)
-        .select(part_col)
-        .distinct()
-        .collect()
-    ]
-    for sub in subs:
-        for pv in touched:
-            part = f"{path}/{sub}/{part_col}={pv}"
-            if not os.path.exists(part):
-                continue
-            kept = spark.read.parquet(part).join(
-                F.broadcast(tombs), id_col, "left_anti"
-            )
-            kept.write.mode("overwrite").parquet(part + ".vacuum_tmp")
-            os.rename(part, part + ".vacuum_bak")
-            os.rename(part + ".vacuum_tmp", part)
-            shutil.rmtree(part + ".vacuum_bak")
-    if drop_tombstones:
-        shutil.rmtree(tdir)
+    return cells.join(
+        F.broadcast(tf.select(id_col).distinct()), id_col, "left_anti"
+    )
 
 
 def ivf_vacuum(spark, path: str, id_col: str = "vec_id") -> None:
-    """Apply accumulated tombstones physically: rewrite ONLY the cell
-    partitions that contain deleted rows, then drop the tombstone dir
-    (see :func:`_vacuum_layout`). Also rewrites ``pq_codes`` partitions
-    when the layout carries them (both the stride and the trained code
-    tables — a vacuum that skipped one would resurrect deleted ids on
-    that probe path the moment the tombstone set is dropped); restores
-    tombstone-free probe plans. An ``rq_codes`` table (the residual-
-    quantizer tier, partitioned by its own coarse cell ``c1``) vacuums
-    against the SAME tombstone set first, for the same
-    no-resurrection reason.
+    """Apply accumulated tombstones physically as ONE rewrite commit:
+    the cells holding deleted rows are rewritten without them and the
+    tombstone files are dropped; untouched cells keep their files, and
+    results are unchanged by construction (the probe anti-join already
+    hid the rows). The commit declares the touched cell domains + the
+    tombstone tag: a racing append into OTHER cells serializes cleanly
+    (disjoint domains), a racing append into a touched cell or a racing
+    delete conflicts and the vacuum recomputes (``run_transaction``).
 
-    On a TRANSACTIONAL layout the vacuum is one rewrite commit
-    (touched cells rewritten, tombstone files dropped) declaring the
-    touched cell domains + the tombstone tag: a racing append into
-    OTHER cells serializes cleanly (disjoint domains), a racing
-    append into a touched cell or a racing delete conflicts and the
-    vacuum recomputes (``run_transaction``). When the layout carries
-    transactional code tables (r11: pq/pq_trained/rq under their
-    stride-tagged domains) the SAME commit rewrites their touched
-    code files too — the no-resurrection rule the legacy vacuum has,
-    now atomic with the vector rewrite.
+    The code tables (stride PQ, trained PQ — partitioned by cell_id —
+    and RQ, partitioned by its own coarse cell ``c1``) ride the SAME
+    commit: their touched code files are rewritten too, so dropping the
+    tombstones can never resurrect a deleted id on any probe path.
     """
-    t = _ivf_tlog(path)
-    if t is not None:
-        snap = t.snapshot()
-        spark_ = spark
-        tomb_files = snap.files_in([TLOG_IVF_TOMBS_TAG])
-        if not tomb_files:
-            return
-        tombs = (
-            _tlog_read_tags(spark_, t, snap, [TLOG_IVF_TOMBS_TAG])
-            .select(id_col)
-            .distinct()
-        )
-        n_cells = int(snap.meta["n_cells"])
-        cells = _tlog_read_tags(spark_, t, snap, list(range(n_cells)))
-        touched = sorted(
+    t = open_layout(path)
+    snap = t.snapshot()
+    tomb_files = snap.files_in([TLOG_IVF_TOMBS_TAG])
+    if not tomb_files:
+        return
+    tombs = (
+        read_tags(spark, t, snap, [TLOG_IVF_TOMBS_TAG])
+        .select(id_col)
+        .distinct()
+    )
+    cell_ids = _family(snap, 0)  # none on an RQ-only layout
+    touched = (
+        sorted(
             r[0]
-            for r in cells.join(F.broadcast(tombs), id_col)
+            for r in read_tags(spark, t, snap, cell_ids)
+            .join(F.broadcast(tombs), id_col)
             .select("cell_id")
             .distinct()
             .collect()
         )  # bounded: <= n_cells
-        adds = []
-        removes = set(snap.files_in(touched) if touched else [])
-        if touched:
-            kept = _tlog_read_tags(spark_, t, snap, touched).join(
-                F.broadcast(tombs), id_col, "left_anti"
-            )
-            adds += t.write_data(kept, bucket_expr=F.col("cell_id"))
-        domains = list(touched)
-        # code tables ride the same commit: the cell-partitioned ones
-        # share the touched cell set (same axis); the RQ table's c1
-        # axis is resolved by joining its codes against the tombstones
-        live_tags = {b for _p, b in snap.files if b is not None}
-        for stride, part_col in (
-            (TLOG_PQ_CODES_STRIDE, "cell_id"),
-            (TLOG_PQ_TRAINED_CODES_STRIDE, "cell_id"),
-            (TLOG_RQ_CODES_STRIDE, "c1"),
-        ):
-            fam = sorted(
-                b - stride
-                for b in live_tags
-                if stride <= b < stride + TLOG_TAG_STRIDE_GAP
-            )
-            if not fam:
-                continue
-            if part_col == "cell_id":
-                fam_touched = [c for c in touched if c in set(fam)]
-            else:
-                allc = _tlog_read_tags(
-                    spark_, t, snap, [stride + c for c in fam]
-                )
-                fam_touched = sorted(
-                    r[0]
-                    for r in allc.join(F.broadcast(tombs), id_col)
-                    .select(part_col)
-                    .distinct()
-                    .collect()
-                )  # bounded: <= k1 coarse cells
-            if not fam_touched:
-                continue
-            fam_tags = [stride + c for c in fam_touched]
-            kept_codes = _tlog_read_tags(spark_, t, snap, fam_tags).join(
-                F.broadcast(tombs), id_col, "left_anti"
-            )
-            adds += t.write_data(
-                kept_codes,
-                bucket_expr=(F.lit(stride) + F.col(part_col)).cast("int"),
-            )
-            removes |= set(snap.files_in(fam_tags))
-            domains += fam_tags
-        removes = sorted(removes | set(tomb_files))
-        # cell radii stay valid: they are UPPER bounds and deletes can
-        # only shrink true radii — a rebuild re-tightens them
-        t.commit(
-            adds=adds,
-            removes=removes,
-            read_version=snap.version,
-            op="rewrite",
-            domains=domains + [TLOG_IVF_TOMBS_TAG],
+        if cell_ids
+        else []
+    )
+    adds = []
+    removes = set(snap.files_in(touched) if touched else [])
+    if touched:
+        kept = read_tags(spark, t, snap, touched).join(
+            F.broadcast(tombs), id_col, "left_anti"
         )
-        return
-    if os.path.exists(f"{path}/rq_codes"):
-        _vacuum_layout(
-            spark, path, ("rq_codes",), "c1", id_col, drop_tombstones=False
+        adds += t.write_data(kept, bucket_expr=F.col("cell_id"))
+    domains = list(touched)
+    # code tables ride the same commit: the cell-partitioned ones share
+    # the touched cell set (same axis); the RQ table's c1 axis is
+    # resolved by joining its codes against the tombstones
+    for stride, part_col in (
+        (TLOG_PQ_CODES_STRIDE, "cell_id"),
+        (TLOG_PQ_TRAINED_CODES_STRIDE, "cell_id"),
+        (TLOG_RQ_CODES_STRIDE, "c1"),
+    ):
+        fam = _family(snap, stride)
+        if not fam:
+            continue
+        if part_col == "cell_id":
+            fam_touched = [c for c in touched if c in set(fam)]
+        else:
+            allc = read_tags(spark, t, snap, [stride + c for c in fam])
+            fam_touched = sorted(
+                r[0]
+                for r in allc.join(F.broadcast(tombs), id_col)
+                .select(part_col)
+                .distinct()
+                .collect()
+            )  # bounded: <= k1 coarse cells
+        if not fam_touched:
+            continue
+        fam_tags = [stride + c for c in fam_touched]
+        kept_codes = read_tags(spark, t, snap, fam_tags).join(
+            F.broadcast(tombs), id_col, "left_anti"
         )
-    _vacuum_layout(
-        spark, path, ("cells", "pq_codes", "pq_trained_codes"), "cell_id", id_col
+        adds += t.write_data(
+            kept_codes,
+            bucket_expr=(F.lit(stride) + F.col(part_col)).cast("int"),
+        )
+        removes |= set(snap.files_in(fam_tags))
+        domains += fam_tags
+    removes = sorted(removes | set(tomb_files))
+    # cell radii stay valid: they are UPPER bounds and deletes can only
+    # shrink true radii — a rebuild re-tightens them
+    t.commit(
+        adds=adds,
+        removes=removes,
+        read_version=snap.version,
+        op="rewrite",
+        domains=domains + [TLOG_IVF_TOMBS_TAG],
     )
 
 
@@ -831,117 +674,71 @@ def shard_delete(
     spark, path: str, ids: list[int], id_col: str = "vec_id"
 ) -> None:
     """Tombstone delete from a :func:`shard_build` layout — same
-    contract as :func:`ivf_delete`: O(batch) tombstone append, resident
-    files untouched, probes exclude the ids immediately
+    contract as :func:`ivf_delete`: O(batch) blind tombstone commit,
+    resident files untouched, probes exclude the ids immediately
     (:func:`sharded_topk_persisted` filters tombstones BEFORE the
     per-shard local search, so per-shard candidate sets are computed
-    over surviving rows and the exact-merge guarantee holds). With
-    faiss installed, the touched shards' serialized artifacts are
-    rebuilt from the surviving rows so artifact search never nominates
-    deleted ids. Physical removal: :func:`shard_vacuum`.
+    over surviving rows and the exact-merge guarantee holds). Physical
+    removal: :func:`shard_vacuum`.
     """
-    df = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} bigint")
-    t = _ivf_tlog(path)
-    if t is not None:
-        # blind tombstone commit under the shared vector-layout
-        # tombstone tag — _without_tombstones dispatches identically
-        # for IVF and shard layouts
-        t.commit(
-            adds=_retag(t.write_data(df), TLOG_IVF_TOMBS_TAG), op="append"
-        )
-        return
-    df.write.mode("append").parquet(f"{path}/tombstones")
-    if _try_faiss() is not None and os.path.exists(f"{path}/faiss_idx"):  # pragma: no cover
-        geo = read_geometry(path)
-        num_shards = int(geo["num_shards"])
-        touched = sorted({int(i) % num_shards for i in ids})
-        _write_faiss_shard_artifacts(
-            spark, path, touched, id_col, geo.get("vec_col", "nvec")
-        )
+    _delete_ids(spark, path, ids, id_col)
 
 
 def shard_vacuum(spark, path: str, id_col: str = "vec_id") -> None:
-    """Apply a shard layout's tombstones physically (touched shard
-    partitions only); see :func:`_vacuum_layout`. Transactional
-    layouts do it as ONE rewrite commit declaring the touched shard
-    domains plus the tombstone domain — shard membership is id mod
-    num_shards, so the touched set comes from the tombstone ids
-    ALONE (no data scan needed to resolve it)."""
-    t = _ivf_tlog(path)
-    if t is not None:
-        snap = t.snapshot()
-        tomb_files = snap.files_in([TLOG_IVF_TOMBS_TAG])
-        if not tomb_files:
-            return
-        tombs = (
-            _tlog_read_tags(spark, t, snap, [TLOG_IVF_TOMBS_TAG])
-            .select(id_col)
-            .distinct()
-        )
-        num_shards = int(snap.meta["num_shards"])
-        # bounded collect: tombstones are batch-scale by contract
-        # (_without_tombstones broadcasts the same set). Python % with
-        # a positive modulus == the layout's pmod shard assignment, so
-        # negative ids resolve to the same domain their rows live in.
-        # Domains with no live files (already emptied by an earlier
-        # vacuum, or a tombstone for a never-present id) have nothing
-        # to rewrite — their tombstone rows just retire with the rest.
-        touched = [
-            s
-            for s in sorted({int(r[0]) % num_shards for r in tombs.collect()})
-            if snap.files_in([s])
-        ]
-        adds = []
-        if touched:
-            live = _tlog_read_tags(spark, t, snap, touched)
-            kept = live.join(F.broadcast(tombs), id_col, "left_anti")
-            adds = t.write_data(kept, bucket_expr=F.col("shard"))
-        removes = sorted(
-            set(snap.files_in(touched) if touched else []) | set(tomb_files)
-        )
-        t.commit(
-            adds=adds,
-            removes=removes,
-            read_version=snap.version,
-            op="rewrite",
-            domains=list(touched) + [TLOG_IVF_TOMBS_TAG],
-        )
+    """Apply a shard layout's tombstones physically as ONE rewrite
+    commit declaring the touched shard domains plus the tombstone
+    domain — shard membership is id mod num_shards, so the touched set
+    comes from the tombstone ids ALONE (no data scan needed to resolve
+    it)."""
+    t = open_layout(path)
+    snap = t.snapshot()
+    tomb_files = snap.files_in([TLOG_IVF_TOMBS_TAG])
+    if not tomb_files:
         return
-    _vacuum_layout(spark, path, ("shards",), "shard", id_col)
+    tombs = (
+        read_tags(spark, t, snap, [TLOG_IVF_TOMBS_TAG])
+        .select(id_col)
+        .distinct()
+    )
+    num_shards = int(snap.meta["num_shards"])
+    # bounded collect: tombstones are batch-scale by contract
+    # (_without_tombstones broadcasts the same set). Python % with a
+    # positive modulus == the layout's pmod shard assignment, so
+    # negative ids resolve to the same domain their rows live in.
+    # Domains with no live files (already emptied by an earlier vacuum,
+    # or a tombstone for a never-present id) have nothing to rewrite —
+    # their tombstone rows just retire with the rest.
+    touched = [
+        s
+        for s in sorted({int(r[0]) % num_shards for r in tombs.collect()})
+        if snap.files_in([s])
+    ]
+    adds = []
+    if touched:
+        live = read_tags(spark, t, snap, touched)
+        kept = live.join(F.broadcast(tombs), id_col, "left_anti")
+        adds = t.write_data(kept, bucket_expr=F.col("shard"))
+    removes = sorted(
+        set(snap.files_in(touched) if touched else []) | set(tomb_files)
+    )
+    t.commit(
+        adds=adds,
+        removes=removes,
+        read_version=snap.version,
+        op="rewrite",
+        domains=list(touched) + [TLOG_IVF_TOMBS_TAG],
+    )
 
 
 def shard_compact(spark, path: str) -> None:
     """Settle every shard domain holding more than one live file into
     one file, as ONE rewrite commit declaring the touched domains —
-    the append-accretion bound (St5) for the transactional shard tier,
-    mirroring nsw_compact/inverted_compact. Probe results are
-    unchanged by construction (same rows, fewer files)."""
-    from collections import Counter
-
-    t = _ivf_tlog(path)
-    if t is None:
-        raise ValueError(
-            f"shard_compact requires a transactional layout (shard_build("
-            f"use_tlog=True)); {path} is a legacy tmp+rename layout — "
-            "its partitioned dirs compact via a rebuild"
-        )
-    snap = t.snapshot()
-    num_shards = int(snap.meta["num_shards"])
-    cnt = Counter(
-        b for _p, b in snap.files if b is not None and b < num_shards
-    )
-    touched = sorted(b for b, c in cnt.items() if c > 1)
-    if not touched:
-        return
-    old = [p for p, b in snap.files if b in set(touched)]
-    df = spark.read.parquet(*[os.path.join(t.root, p) for p in old])
-    t.commit(
-        adds=t.write_data(df, bucket_expr=F.col("shard")),
-        removes=old,
-        read_version=snap.version,
-        op="rewrite",
-        domains=touched,
-    )
+    the append-accretion bound (St5) for the shard tier, mirroring
+    nsw_compact/inverted_compact. Probe results are unchanged by
+    construction (same rows, fewer files)."""
+    t = open_layout(path)
+    num_shards = int(t.snapshot().meta["num_shards"])
+    compact_domains(spark, t, lambda b: b < num_shards, F.col("shard"))
 
 
 def ivf_probe(
@@ -957,9 +754,9 @@ def ivf_probe(
 
     Reads the (tiny) codebook, ranks cells by centroid distance on the
     driver (nprobe rows — not a distributed job), then scans ONLY the
-    nprobe nearest cell partitions: ``cell_id IN (...)`` is a partition
-    filter on the partitioned layout, so the scan touches nprobe/n_cells
-    of the files (asserted in tests). Result is bit-identical to
+    nprobe nearest cells: :func:`read_cells` resolves them to their live
+    files in the log, so the scan touches nprobe/n_cells of the files
+    (asserted in tests). Result is bit-identical to
     :func:`ivf_topk` over the same codebook.
     """
     qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
@@ -1041,94 +838,18 @@ def ivf_probe_cells(
     return [cid for _, cid in scored[:nprobe]]
 
 
-def _try_faiss():
-    try:  # pragma: no cover - faiss not in the test container
-        import faiss
-
-        return faiss
-    except ImportError:
-        return None
-
-
-def _faiss_shard_builder(id_col: str, vec_col: str):  # pragma: no cover
-    """applyInPandas fn serializing one HNSW index per shard (M=32,
-    efSearch=300 — the reference's knobs, main.py:30-31) into a
-    (shard, ids, index_bytes) row. FAISS internal ids are the row
-    positions, mapped back through the ``ids`` array at search time."""
-    import pandas as pd
-
-    def build(key, pdf):
-        import faiss
-
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float32)
-        index = faiss.IndexHNSWFlat(mat.shape[1], 32)
-        index.hnsw.efSearch = 300
-        index.add(mat)
-        buf = faiss.serialize_index(index)
-        return pd.DataFrame(
-            {
-                "shard": [int(key[0])],
-                "ids": [pdf[id_col].astype("int64").tolist()],
-                "index_bytes": [bytes(bytearray(buf))],
-            }
-        )
-
-    return build
-
-
-_FAISS_IDX_SCHEMA = "shard int, ids array<bigint>, index_bytes binary"
-
-
-def _write_faiss_shard_artifacts(
-    spark, path: str, shards: list[int] | None, id_col: str, vec_col: str
-) -> None:  # pragma: no cover - faiss not in the test container
-    """(Re)write the per-shard serialized-HNSW artifact table at
-    ``{path}/faiss_idx`` (parquet: shard, ids, index_bytes — FS-agnostic,
-    so the artifact travels with the layout on any Hadoop-compatible
-    store). ``shards=None`` rebuilds every shard; a list rebuilds only
-    those shards and carries the rest over unchanged. The swap is
-    write-to-tmp + rename so a crash leaves the old artifact readable.
-    """
-    import shutil
-
-    build = _faiss_shard_builder(id_col, vec_col)
-    src = spark.read.parquet(f"{path}/shards")
-    # artifacts must index only SURVIVING rows (tombstoned ids would
-    # otherwise be nominated by artifact search forever)
-    src = _without_tombstones(spark, path, src, id_col)
-    if shards is not None:
-        src = src.filter(F.col("shard").isin([int(s) for s in shards]))
-    rebuilt = src.groupBy("shard").applyInPandas(build, schema=_FAISS_IDX_SCHEMA)
-    idx_path = f"{path}/faiss_idx"
-    if shards is not None and os.path.exists(idx_path):
-        kept = spark.read.parquet(idx_path).filter(
-            ~F.col("shard").isin([int(s) for s in shards])
-        )
-        rebuilt = kept.unionByName(rebuilt)
-    tmp = idx_path + ".tmp"
-    rebuilt.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(idx_path):
-        shutil.rmtree(idx_path)
-    os.rename(tmp, idx_path)
-
-
 def read_shards(spark, path: str, shard_ids=None) -> DataFrame:
     """The layout's shard table (RAW — callers apply
-    :func:`_without_tombstones`), dispatching on the layout mode like
-    :func:`read_cells`: legacy reads the ``shards/`` dir (the caller's
-    ``shard`` partition filter prunes), transactional layouts prune at
-    the LOG level via ``shard_ids`` -> live-file tags."""
-    t = _ivf_tlog(path)
-    if t is None:
-        return spark.read.parquet(f"{path}/shards")
+    :func:`_without_tombstones`), pruned at the LOG level via
+    ``shard_ids`` -> live-file tags."""
+    t = open_layout(path)
     snap = t.snapshot()
     tags = (
         sorted(shard_ids)
         if shard_ids is not None
         else list(range(int(snap.meta["num_shards"])))
     )
-    out = _tlog_read_tags(spark, t, snap, tags)
+    out = read_tags(spark, t, snap, tags)
     if out is None:  # a probe against an emptied layout
         geo = read_geometry(path)
         return spark.createDataFrame(
@@ -1145,81 +866,44 @@ def shard_build(
     num_shards: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "nvec",
-    use_tlog: bool = False,
 ) -> None:
     """Materialize the sharded-index layout at ``path``: embeddings
-    written PARTITIONED BY shard (= id mod num_shards). This is the
-    BASELINE 'batch FAISS index build' write step: with faiss installed
-    the build also serializes one HNSW artifact per shard (M=32,
-    efSearch=300, main.py:30-31) into ``{path}/faiss_idx`` and
-    :func:`sharded_topk_persisted` searches those instead of scanning
-    raw vectors; without faiss the layout still pins shard membership so
-    probes skip the hash shuffle that :func:`sharded_topk` pays per
-    query. Extend with :func:`shard_append` — no rebuild.
-
-    ``use_tlog=True`` (r10 verdict #3 — the last mutable ANN tier
-    joins the commit-log doctrine): the shard table lands as ONE init
-    commit with per-shard conflict domains; appends are blind commits,
-    deletes blind tombstone commits, vacuum/compact rewrite commits
-    declaring their touched shard domains — racing mutations into
-    disjoint shards serialize, overlapping ones conflict-and-recompute
-    under run_transaction, replacing the single-writer mutex the
-    legacy tmp+rename layout needs. The serialized-FAISS artifact tier
-    stays a legacy-layout feature (the deps-gated serving sidecar, not
-    layout data — same scope line as PQ/RQ code tables on IVF).
+    split by shard (= id pmod num_shards) as ONE init commit with
+    per-shard conflict domains. This is the BASELINE 'batch FAISS index
+    build' write step: the layout pins shard membership so probes skip
+    the hash shuffle that :func:`sharded_topk` pays per query. Appends
+    are blind commits, deletes blind tombstone commits, vacuum/compact
+    rewrite commits declaring their touched shard domains — racing
+    mutations into disjoint shards serialize, overlapping ones
+    conflict-and-recompute under run_transaction. Extend with
+    :func:`shard_append` — no rebuild.
     """
-    if use_tlog:
-        from cnc_visionsearch_spark.sources.tlog import TLog
-
-        if num_shards >= TLOG_TAG_STRIDE_GAP:
-            # same aliasing guard as ivf_build/hnsw_build: shard
-            # domains must stay clear of the reserved tag ranges
-            # (tombstones at 100_002, code strides at 200_000+)
-            raise ValueError(
-                f"shard_build(use_tlog=True): num_shards={num_shards} "
-                f"must stay below the reserved tag stride gap "
-                f"({TLOG_TAG_STRIDE_GAP}) — larger values alias shard "
-                "domains into reserved tag ranges"
-            )
-        # pmod, not %: Java remainder keeps the dividend's sign, so a
-        # negative id would land in a NEGATIVE shard tag that
-        # read_shards' range(num_shards) pruning never lists — the row
-        # would be invisible to every probe. pmod == Python % for a
-        # positive modulus, so shard_vacuum's driver-side touched-set
-        # math (id % num_shards over tombstone ids) agrees exactly.
-        sharded = emb.withColumn(
-            "shard", F.pmod(F.col(id_col), F.lit(num_shards)).cast("int")
-        )
-        t = TLog(path)
-        if t.latest_version() != 0:
-            raise ValueError(
-                f"shard_build: tlog layout {path} already holds "
-                f"{t.latest_version()} commit(s); wipe to rebuild"
-            )
-        t.commit(
-            adds=t.write_data(sharded, bucket_expr=F.col("shard")),
-            op="append",
-            meta={
-                "kind": "shards",
-                "num_shards": num_shards,
-                "id_col": id_col,
-                "vec_col": vec_col,
-            },
-            base_version=0,
-        )
-        _write_geometry(
-            path, num_shards=num_shards, id_col=id_col, vec_col=vec_col
-        )
-        return
-    sharded = emb.withColumn("shard", (F.col(id_col) % num_shards).cast("int"))
-    sharded.write.mode("overwrite").partitionBy("shard").parquet(f"{path}/shards")
-    _write_geometry(path, num_shards=num_shards, id_col=id_col, vec_col=vec_col)
-    if _try_faiss() is not None:  # pragma: no cover
-        spark = emb.sparkSession
-        _write_faiss_shard_artifacts(spark, path, None, id_col, vec_col)
+    # pmod, not %: Java remainder keeps the dividend's sign, so a
+    # negative id would land in a NEGATIVE shard tag that read_shards'
+    # range(num_shards) pruning never lists — the row would be
+    # invisible to every probe. pmod == Python % for a positive
+    # modulus, so shard_vacuum's driver-side touched-set math
+    # (id % num_shards over tombstone ids) agrees exactly.
+    sharded = emb.withColumn(
+        "shard", F.pmod(F.col(id_col), F.lit(num_shards)).cast("int")
+    )
+    t = _new_layout(path, num_shards, "shard_build: num_shards")
+    t.commit(
+        adds=t.write_data(sharded, bucket_expr=F.col("shard")),
+        op="append",
+        meta={
+            "kind": "shards",
+            "num_shards": num_shards,
+            "id_col": id_col,
+            "vec_col": vec_col,
+        },
+        base_version=0,
+    )
+    _write_geometry(
+        path, num_shards=num_shards, id_col=id_col, vec_col=vec_col
+    )
 
 
-@single_writer("shard_append")
 def shard_append(
     spark,
     path: str,
@@ -1228,14 +912,16 @@ def shard_append(
     vec_col: str = "nvec",
     txn: "tuple[str, int] | None" = None,
 ) -> None:
-    """Append a batch into an existing :func:`shard_build` layout.
+    """Append a batch into an existing :func:`shard_build` layout as
+    ONE blind append commit tagged by shard: conflict-free against
+    other appends and against vacuums/compacts of OTHER shards
+    (disjoint domains); existing files byte-untouched.
 
-    Shard membership (id mod num_shards) comes from the layout's
+    Shard membership (id pmod num_shards) comes from the layout's
     geometry sidecar — a caller cannot silently append with a different
-    modulus and corrupt shard membership. Untouched shard partitions
-    keep their files byte-identical; with faiss installed, only the
-    TOUCHED shards' serialized-HNSW artifacts are rebuilt (bounded by
-    the batch's shard spread, not the corpus).
+    modulus and corrupt shard membership. ``txn`` (app, seq) makes an
+    at-least-once replay — e.g. a restarted streaming micro-batch —
+    commit nothing (the exactly-once contract of the tlog's txn key).
     """
     geo = read_geometry(path)
     num_shards = int(geo["num_shards"])
@@ -1245,31 +931,14 @@ def shard_append(
             f"({geo.get('id_col')}, {geo.get('vec_col')}), got "
             f"({id_col}, {vec_col})"
         )
-    t = _ivf_tlog(path)
-    if t is not None:
-        # ONE blind append commit tagged by shard (pmod — the
-        # shard_build tlog convention: negative tags would be
-        # invisible to read_shards' range pruning): conflict-free
-        # against other appends and against vacuums/compacts of OTHER
-        # shards (disjoint domains); existing files byte-untouched.
-        # ``txn`` (app, seq) makes an at-least-once replay — e.g. a
-        # restarted streaming micro-batch — commit nothing (the
-        # exactly-once contract of the tlog's txn key).
-        sharded = new_emb.withColumn(
-            "shard", F.pmod(F.col(id_col), F.lit(num_shards)).cast("int")
-        )
-        t.commit(
-            adds=t.write_data(sharded, bucket_expr=F.col("shard")),
-            txn=txn,
-        )
-        return
-    sharded = new_emb.withColumn("shard", (F.col(id_col) % num_shards).cast("int"))
-    sharded.write.mode("append").partitionBy("shard").parquet(f"{path}/shards")
-    if _try_faiss() is not None and os.path.exists(f"{path}/faiss_idx"):  # pragma: no cover
-        touched = sorted(
-            r.shard for r in sharded.select("shard").distinct().collect()
-        )
-        _write_faiss_shard_artifacts(spark, path, touched, id_col, vec_col)
+    t = open_layout(path)
+    sharded = new_emb.withColumn(
+        "shard", F.pmod(F.col(id_col), F.lit(num_shards)).cast("int")
+    )
+    t.commit(
+        adds=t.write_data(sharded, bucket_expr=F.col("shard")),
+        txn=txn,
+    )
 
 
 def sharded_topk_persisted(
@@ -1282,65 +951,33 @@ def sharded_topk_persisted(
 ) -> DataFrame:
     """Sharded kNN probe over a :func:`shard_build` layout.
 
-    With faiss installed AND the build's serialized per-shard HNSW
-    artifacts present (``{path}/faiss_idx``), the probe NEVER touches
-    raw vectors for candidate generation: it scans the num_shards-row
-    artifact table, deserializes each shard's index, and beam-searches
-    it (efSearch=300) — the reference's query path (main.py:150-156)
-    distributed one index per shard. Otherwise the layout is already
-    partitioned by shard, so per-shard local search runs as
-    ``mapInPandas`` over the scan partitions — ZERO shuffle before the
-    candidate merge (vs. sharded_topk's groupBy-shard hash exchange of
-    the whole corpus per query). With exact local search (the numpy
-    fallback) the candidate union provably contains the global top-k;
-    with HNSW it holds at the recall the beam reaches (gated in
-    test_real_deps). Either way the JVM-side re-score + TakeOrdered
-    ranks candidates bit-identically to the exact tier (Python only
-    nominates candidate ids; floats never cross back).
+    The layout is already split by shard, so per-shard local search
+    runs as ``mapInPandas`` over the scan partitions — ZERO shuffle
+    before the candidate merge (vs. sharded_topk's groupBy-shard hash
+    exchange of the whole corpus per query). With exact local search
+    (the numpy fallback) the candidate union provably contains the
+    global top-k; with FAISS HNSW it holds at the recall the beam
+    reaches (gated in test_real_deps). Either way the JVM-side re-score
+    + TakeOrdered ranks candidates bit-identically to the exact tier
+    (Python only nominates candidate ids; floats never cross back).
     """
     q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    idx_path = f"{path}/faiss_idx"
-    if _try_faiss() is not None and os.path.exists(idx_path):  # pragma: no cover
-        import pandas as pd
+    search = _local_topk_fn(q, k, id_col, vec_col)
 
-        qf = q.astype(np.float32)
+    def per_partition(batches):
+        # top-k per Arrow batch (bounded memory; the union of per-batch
+        # top-ks is a superset of the global top-k, restored exactly by
+        # the JVM re-score + TakeOrdered)
+        for pdf in batches:
+            if len(pdf):
+                yield search(pdf)
 
-        def search_artifacts(batches):
-            import faiss
-
-            for pdf in batches:
-                out = []
-                for _, row in pdf.iterrows():
-                    index = faiss.deserialize_index(
-                        np.frombuffer(row["index_bytes"], dtype=np.uint8)
-                    )
-                    _, hit = index.search(qf[None, :], min(k, index.ntotal))
-                    out.extend(int(row["ids"][i]) for i in hit[0] if i >= 0)
-                yield pd.DataFrame({id_col: np.asarray(out, dtype=np.int64)})
-
-        cand_ids = spark.read.parquet(idx_path).mapInPandas(
-            search_artifacts, schema=f"{id_col} bigint"
-        )
-        # artifacts are rebuilt tombstone-free on shard_delete, but a
-        # hand-written tombstone set must still be honored
-        cand_ids = _without_tombstones(spark, path, cand_ids, id_col)
-    else:
-        search = _local_topk_fn(q, k, id_col, vec_col)
-
-        def per_partition(batches):
-            # top-k per Arrow batch (bounded memory; the union of
-            # per-batch top-ks is a superset of the global top-k,
-            # restored exactly by the JVM re-score + TakeOrdered)
-            for pdf in batches:
-                if len(pdf):
-                    yield search(pdf)
-
-        shards = read_shards(spark, path).select(id_col, vec_col)
-        # tombstones filter BEFORE the local search: per-shard top-k is
-        # then computed over surviving rows, preserving the exact-merge
-        # guarantee (filtering after would starve the candidate set)
-        shards = _without_tombstones(spark, path, shards, id_col)
-        cand_ids = shards.mapInPandas(per_partition, schema=f"{id_col} bigint")
+    shards = read_shards(spark, path).select(id_col, vec_col)
+    # tombstones filter BEFORE the local search: per-shard top-k is then
+    # computed over surviving rows, preserving the exact-merge guarantee
+    # (filtering after would starve the candidate set)
+    shards = _without_tombstones(spark, path, shards, id_col)
+    cand_ids = shards.mapInPandas(per_partition, schema=f"{id_col} bigint")
     emb = read_shards(spark, path)
     qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
     # candidate side is bounded by construction (<= k rows per Arrow
@@ -1638,6 +1275,14 @@ def pq_assign(
     )
 
 
+def _write_codes(t, codes: DataFrame, stride: int) -> list[dict]:
+    """Adds for a code table keyed by cell_id under ``stride``'s tag
+    family."""
+    return t.write_data(
+        codes, bucket_expr=(F.lit(stride) + F.col("cell_id")).cast("int")
+    )
+
+
 def pq_build(
     spark,
     path: str,
@@ -1646,56 +1291,35 @@ def pq_build(
     id_col: str = "vec_id",
 ) -> None:
     """Materialize the PQ code table for an :func:`ivf_build` layout at
-    ``path``: codes derived from the layout's own codebook, written to
-    ``{path}/pq_codes`` PARTITIONED BY cell_id — the same pruning axis
-    as the vectors, so an IVF-probed ADC scan reads nprobe/n_cells of a
-    table that is m bytes/vector instead of the raw vectors. Run once
-    per corpus version, after (or as part of) the IVF build.
+    ``path``: codes derived from the layout's own codebook, one
+    conflict domain per cell_id — the same pruning axis as the vectors,
+    so an IVF-probed ADC scan reads nprobe/n_cells of a table that is
+    m bytes/vector instead of the raw vectors. Run once per corpus
+    version, after (or as part of) the IVF build.
 
-    On a TRANSACTIONAL layout (r11 — the r10 "last tier" exclusion
-    closed) the code table lands as ONE rewrite commit whose domains
-    are ALL cell ids (the build's read set) plus the PQ code domains
-    it writes: a cell append racing the build conflicts — correctly,
+    The code table lands as ONE rewrite commit whose domains are ALL
+    cell ids (the build's read set) plus the PQ code domains it
+    writes: a cell append racing the build conflicts — correctly,
     because the code table must cover the appended rows to keep the
     codes == re-encode-of-union invariant — and the caller's
     run_transaction recomputes over the union. A re-run replaces the
     previous code files in the same commit shape.
     """
-    t = _ivf_tlog(path)
-    if t is not None:
-        snap = t.snapshot()
-        n_cells = int(snap.meta["n_cells"])
-        cents = read_codebook(spark, path)
-        cb = pq_codebook(cents, m)
-        cells = _tlog_read_tags(spark, t, snap, list(range(n_cells)))
-        codes = pq_assign(cells, cb, m, id_col=id_col, vec_col=vec_col).join(
-            cells.select(id_col, "cell_id"), id_col
-        )
-        old = snap.files_in(
-            [TLOG_PQ_CODES_STRIDE + c for c in range(n_cells)]
-        )
-        t.commit(
-            adds=t.write_data(
-                codes,
-                bucket_expr=(
-                    F.lit(TLOG_PQ_CODES_STRIDE) + F.col("cell_id")
-                ).cast("int"),
-            ),
-            removes=old,
-            read_version=snap.version,
-            op="rewrite",
-            domains=list(range(n_cells))
-            + [TLOG_PQ_CODES_STRIDE + c for c in range(n_cells)],
-        )
-        return
-    cents = spark.read.parquet(f"{path}/codebook")
-    cb = pq_codebook(cents, m)
-    cells = spark.read.parquet(f"{path}/cells")
+    t = open_layout(path)
+    snap = t.snapshot()
+    cell_ids = _family(snap, 0)
+    cb = pq_codebook(read_codebook(spark, path), m)
+    cells = read_tags(spark, t, snap, cell_ids)
     codes = pq_assign(cells, cb, m, id_col=id_col, vec_col=vec_col).join(
         cells.select(id_col, "cell_id"), id_col
     )
-    codes.write.mode("overwrite").partitionBy("cell_id").parquet(
-        f"{path}/pq_codes"
+    code_tags = [TLOG_PQ_CODES_STRIDE + c for c in cell_ids]
+    t.commit(
+        adds=_write_codes(t, codes, TLOG_PQ_CODES_STRIDE),
+        removes=snap.files_in(code_tags),
+        read_version=snap.version,
+        op="rewrite",
+        domains=cell_ids + code_tags,
     )
 
 
@@ -1714,34 +1338,18 @@ def pq_append(
     equals a full re-encode of the union (asserted in tests). Cell ids
     come from the same persisted codebook the vectors were appended
     under, so the code table and the vector table stay partitioned on
-    the same axis. Transactional layouts commit the batch's codes as
-    ONE blind append (frozen codebook — no read-modify-write; only a
-    racing vacuum of the same PQ domains conflicts).
+    the same axis. ONE blind append commit (frozen codebook — no
+    read-modify-write; only a racing vacuum of the same PQ domains
+    conflicts).
     """
-    t = _ivf_tlog(path)
-    if t is not None:
-        cents = read_codebook(spark, path)
-        cb = pq_codebook(cents, m)
-        assigned = ivf_assign(new_emb, cents, id_col, vec_col)
-        codes = pq_assign(
-            assigned, cb, m, id_col=id_col, vec_col=vec_col
-        ).join(assigned.select(id_col, "cell_id"), id_col)
-        t.commit(
-            adds=t.write_data(
-                codes,
-                bucket_expr=(
-                    F.lit(TLOG_PQ_CODES_STRIDE) + F.col("cell_id")
-                ).cast("int"),
-            )
-        )
-        return
-    cents = spark.read.parquet(f"{path}/codebook")
+    t = open_layout(path)
+    cents = read_codebook(spark, path)
     cb = pq_codebook(cents, m)
     assigned = ivf_assign(new_emb, cents, id_col, vec_col)
     codes = pq_assign(assigned, cb, m, id_col=id_col, vec_col=vec_col).join(
         assigned.select(id_col, "cell_id"), id_col
     )
-    codes.write.mode("append").partitionBy("cell_id").parquet(f"{path}/pq_codes")
+    t.commit(adds=_write_codes(t, codes, TLOG_PQ_CODES_STRIDE))
 
 
 def pq_train_codebook(
@@ -1872,72 +1480,40 @@ def pq_trained_build(
     vec_col: str = "nvec",
 ) -> None:
     """Materialize the TRAINED-codebook PQ tier over an
-    :func:`ivf_build` layout: ``{path}/pq_trained_codebook`` (the
-    m*k*-row model) + ``{path}/pq_trained_codes`` PARTITIONED BY
-    cell_id (same pruning axis as the vectors and the stride-PQ codes).
-    The trained tier exists because the stride codebook is an untrained
-    placeholder whose ADC ranking is weak (RECALL.json documents the
-    floor); k-means-trained codewords move ADC recall@10 to >= 0.95 at
-    the default rescore depth on the same fixture. Run once per corpus
+    :func:`ivf_build` layout: the m*k*-row model under its reserved tag
+    + the codes under per-cell trained-stride domains (same pruning
+    axis as the vectors and the stride-PQ codes). The trained tier
+    exists because the stride codebook is an untrained placeholder
+    whose ADC ranking is weak (RECALL.json documents the floor);
+    k-means-trained codewords move ADC recall@10 to >= 0.95 at the
+    default rescore depth on the same fixture. Run once per corpus
     version; probes only ever read the artifacts.
 
-    On a TRANSACTIONAL layout the model + code table land as ONE
-    rewrite commit (model under its reserved tag, codes under per-cell
-    trained-stride domains) whose domains include all cell ids — the
-    same racing-cell-append conflict contract as :func:`pq_build`,
-    with the model frozen by reading back the WRITTEN (uncommitted)
-    model files before encoding, exactly like ivf_build freezes its
-    centroids.
+    Model + codes land as ONE rewrite commit whose domains include all
+    cell ids — the same racing-cell-append conflict contract as
+    :func:`pq_build`, with the model frozen by reading back the WRITTEN
+    (uncommitted) model files before encoding, exactly like ivf_build
+    freezes its centroids.
     """
-    t = _ivf_tlog(path)
-    if t is not None:
-        snap = t.snapshot()
-        n_cells = int(snap.meta["n_cells"])
-        cells = _tlog_read_tags(spark, t, snap, list(range(n_cells)))
-        rows = pq_train_codebook(cells, m, k_star, iters, id_col, vec_col)
-        cb_df = spark.createDataFrame(
-            rows, "sub_j int, code int, cv array<double>"
-        )
-        adds = _retag(
-            t.write_data(cb_df.coalesce(1)), TLOG_PQ_TRAINED_MODEL_TAG
-        )
-        cb = spark.read.parquet(
-            *[os.path.join(path, a["path"]) for a in adds]
-        )
-        codes = pq_assign(cells, cb, m, id_col=id_col, vec_col=vec_col).join(
-            cells.select(id_col, "cell_id"), id_col
-        )
-        adds += t.write_data(
-            codes,
-            bucket_expr=(
-                F.lit(TLOG_PQ_TRAINED_CODES_STRIDE) + F.col("cell_id")
-            ).cast("int"),
-        )
-        trained_tags = [
-            TLOG_PQ_TRAINED_CODES_STRIDE + c for c in range(n_cells)
-        ]
-        t.commit(
-            adds=adds,
-            removes=snap.files_in(
-                trained_tags + [TLOG_PQ_TRAINED_MODEL_TAG]
-            ),
-            read_version=snap.version,
-            op="rewrite",
-            domains=list(range(n_cells))
-            + trained_tags
-            + [TLOG_PQ_TRAINED_MODEL_TAG],
-        )
-        return
-    cells = spark.read.parquet(f"{path}/cells")
+    t = open_layout(path)
+    snap = t.snapshot()
+    cell_ids = _family(snap, 0)
+    cells = read_tags(spark, t, snap, cell_ids)
     rows = pq_train_codebook(cells, m, k_star, iters, id_col, vec_col)
     cb_df = spark.createDataFrame(rows, "sub_j int, code int, cv array<double>")
-    cb_df.write.mode("overwrite").parquet(f"{path}/pq_trained_codebook")
-    cb = spark.read.parquet(f"{path}/pq_trained_codebook")
+    adds = retag(t.write_data(cb_df.coalesce(1)), TLOG_PQ_TRAINED_MODEL_TAG)
+    cb = spark.read.parquet(*[os.path.join(path, a["path"]) for a in adds])
     codes = pq_assign(cells, cb, m, id_col=id_col, vec_col=vec_col).join(
         cells.select(id_col, "cell_id"), id_col
     )
-    codes.write.mode("overwrite").partitionBy("cell_id").parquet(
-        f"{path}/pq_trained_codes"
+    adds += _write_codes(t, codes, TLOG_PQ_TRAINED_CODES_STRIDE)
+    trained_tags = [TLOG_PQ_TRAINED_CODES_STRIDE + c for c in cell_ids]
+    t.commit(
+        adds=adds,
+        removes=snap.files_in(trained_tags + [TLOG_PQ_TRAINED_MODEL_TAG]),
+        read_version=snap.version,
+        op="rewrite",
+        domains=cell_ids + trained_tags + [TLOG_PQ_TRAINED_MODEL_TAG],
     )
 
 
@@ -1955,84 +1531,48 @@ def pq_trained_append(
     trained once on a sample, then encodes every later add), so a
     batch append equals a full re-encode of the union (tests assert
     it) and existing code files stay byte-identical. Re-train = re-run
-    :func:`pq_trained_build` as periodic maintenance. Transactional
-    layouts commit the batch's codes as ONE blind append (frozen
-    model, no read-modify-write).
+    :func:`pq_trained_build` as periodic maintenance. ONE blind append
+    commit (frozen model, no read-modify-write).
     """
-    t = _ivf_tlog(path)
-    if t is not None:
-        cb = read_pq_trained_codebook(spark, path)
-        cents = read_codebook(spark, path)
-        assigned = ivf_assign(new_emb, cents, id_col, vec_col)
-        codes = pq_assign(
-            assigned, cb, m, id_col=id_col, vec_col=vec_col
-        ).join(assigned.select(id_col, "cell_id"), id_col)
-        t.commit(
-            adds=t.write_data(
-                codes,
-                bucket_expr=(
-                    F.lit(TLOG_PQ_TRAINED_CODES_STRIDE) + F.col("cell_id")
-                ).cast("int"),
-            )
-        )
-        return
-    cb = spark.read.parquet(f"{path}/pq_trained_codebook")
-    cents = spark.read.parquet(f"{path}/codebook")
-    assigned = ivf_assign(new_emb, cents, id_col, vec_col)
+    t = open_layout(path)
+    cb = read_pq_trained_codebook(spark, path)
+    assigned = ivf_assign(new_emb, read_codebook(spark, path), id_col, vec_col)
     codes = pq_assign(assigned, cb, m, id_col=id_col, vec_col=vec_col).join(
         assigned.select(id_col, "cell_id"), id_col
     )
-    codes.write.mode("append").partitionBy("cell_id").parquet(
-        f"{path}/pq_trained_codes"
-    )
+    t.commit(adds=_write_codes(t, codes, TLOG_PQ_TRAINED_CODES_STRIDE))
 
 
 def _compute_cell_radii(spark, path: str, vec_col: str = "nvec") -> DataFrame:
     """One layout scan + broadcast codebook + n_cells-row aggregate."""
-    cells = spark.read.parquet(f"{path}/cells")
-    cents = spark.read.parquet(f"{path}/codebook")
-    return (
-        cells.join(F.broadcast(cents), "cell_id")
-        .select(
-            "cell_id", F.sqrt(l2_sq(vec_col, "centroid")).alias("member_d")
-        )
-        .groupBy("cell_id")
-        .agg(F.max("member_d").alias("radius"))
-    )
-
-
-def write_cell_radii(spark, path: str, vec_col: str = "nvec") -> None:
-    """Materialize ``{path}/cell_radii`` (metadata-sized) — the radius
-    table range search prunes with. Called by :func:`ivf_build` and
-    refreshed by :func:`ivf_append` (appends can only GROW a radius;
-    a vacuum may leave it conservatively large, which costs pruning
-    opportunity, never correctness)."""
-    _compute_cell_radii(spark, path, vec_col).write.mode("overwrite").parquet(
-        f"{path}/cell_radii"
+    return _member_radii(
+        read_cells(spark, path), read_codebook(spark, path), vec_col
     )
 
 
 def ivf_cell_radii(spark, path: str, vec_col: str = "nvec") -> DataFrame:
     """(cell_id, radius) — max member-to-centroid L2 distance per cell
-    of an :func:`ivf_build` layout, read from the PERSISTED
-    ``cell_radii`` artifact when present (the build/append jobs keep it
-    current), recomputed with one layout scan otherwise (pre-artifact
-    layouts). The radius is what makes range-search cell pruning
-    LOSSLESS: by the triangle inequality no vector of cell c can lie
-    within R of the query if d(q, centroid_c) - radius_c > R.
+    of an :func:`ivf_build` layout, read from the PERSISTED radii files
+    (the build/append commits keep them current as per-file partial
+    maxima, merged here), recomputed with one layout scan when the
+    layout carries none. The radius is what makes range-search cell
+    pruning LOSSLESS: by the triangle inequality no vector of cell c
+    can lie within R of the query if d(q, centroid_c) - radius_c > R.
     """
-    t = _ivf_tlog(path)
-    if t is not None:
-        rf = _tlog_read_tags(spark, t, t.snapshot(), [TLOG_RADII_TAG])
-        if rf is not None:
-            # per-file partial maxima (build + appends) merge losslessly
-            return rf.groupBy("cell_id").agg(
-                F.max("radius").alias("radius")
-            )
+    t = open_layout(path)
+    rf = read_tags(spark, t, t.snapshot(), [TLOG_RADII_TAG])
+    if rf is None:
         return _compute_cell_radii(spark, path, vec_col)
-    if os.path.exists(f"{path}/cell_radii"):
-        return spark.read.parquet(f"{path}/cell_radii")
-    return _compute_cell_radii(spark, path, vec_col)
+    return rf.groupBy("cell_id").agg(F.max("radius").alias("radius"))
+
+
+def _merged_radii(path: str) -> dict[int, float]:
+    """cell_id -> radius, max-merged over the partial-maxima files."""
+    rad: dict[int, float] = {}
+    for x in _radii_rows(path):
+        cid = int(x["cell_id"])
+        rad[cid] = max(rad.get(cid, 0.0), float(x["radius"]))
+    return rad
 
 
 def ivf_range_search(
@@ -2060,17 +1600,13 @@ def ivf_range_search(
     qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
     r = math.sqrt(r2)
     q = [float(x) for x in query_vec]
-    if _radii_rows(path) is not None:
+    rad = _merged_radii(path)
+    if rad:
         # planner-side pruning: codebook + radii are metadata-sized
         # (n_cells rows) persisted artifacts — rank driver-side like
         # ivf_probe_cells, zero cluster jobs before the pruned scan.
         # math.sqrt == JVM sqrt (both IEEE-754 correctly rounded), so
         # the keep set matches the previous cluster-computed bound.
-        rad = {}
-        for x in _radii_rows(path):
-            cid = int(x["cell_id"])
-            rv = float(x["radius"])
-            rad[cid] = max(rad.get(cid, 0.0), rv)
         keep = [
             int(c["cell_id"])
             for c in _codebook_rows(path)
@@ -2078,8 +1614,8 @@ def ivf_range_search(
             <= r
         ]
     else:
-        # pre-artifact layout: one scan to recompute radii, then the
-        # same bounded n_cells-row collect
+        # a layout without radii files: one scan to recompute them,
+        # then the same bounded n_cells-row collect
         radii = ivf_cell_radii(spark, path, vec_col)
         cents = read_codebook(spark, path)
         keep = [
@@ -2169,37 +1705,6 @@ def ivf_knn_join_probe(
     )
 
 
-def _swap_artifact_dir(live: str) -> None:
-    """Crash-safe replacement of a metadata artifact dir by its
-    freshly-written ``live + ".tmp"`` sibling: live -> .bak, tmp ->
-    live, drop .bak (the compact_layout swap order — a naive
-    rmtree-then-rename loses the artifact if the process dies between
-    the two). Pair with :func:`_heal_artifact_dir` at operation entry.
-    """
-    import shutil
-
-    bak = live + ".bak"
-    if os.path.exists(live):
-        os.rename(live, bak)
-    os.rename(live + ".tmp", live)
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
-
-
-def _heal_artifact_dir(live: str) -> None:
-    """Recover a :func:`_swap_artifact_dir` crash: a ``.bak`` with no
-    live dir is restored; stale ``.bak``/``.tmp`` beside a live dir
-    are discarded."""
-    import shutil
-
-    bak, tmp = live + ".bak", live + ".tmp"
-    if not os.path.exists(live) and os.path.exists(bak):
-        os.rename(bak, live)
-    for leftover in (bak, tmp):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
-
-
 def ivf_rebalance(
     spark,
     path: str,
@@ -2212,109 +1717,38 @@ def ivf_rebalance(
     the maintenance step that keeps probe cost flat as appends skew a
     frozen codebook (the skew the layout's skew-audit query surfaces).
     FAISS answers drift with a periodic full re-train; at 100 TB a full
-    rebuild rewrites every partition, while a split rewrites ONLY the
-    hot cells — the incremental middle ground.
+    rebuild rewrites every cell, while a split rewrites ONLY the hot
+    cells — the incremental middle ground.
 
     Per split, deterministically: members of the hot cell are
     reassigned to two children seeded by the cell's min- and max-id
     vectors (ties to the lo seed), children get fresh cell ids past the
-    current max, the parent partition is swapped out crash-safely
-    (journal sidecar + ``.bak`` — self-healed on entry, the
-    compact_layout discipline), and the codebook swaps the parent
-    centroid for the two seeds. Probes need no code change: the probe
-    path reads the codebook, so the next query simply sees more,
-    smaller cells; the UNION of members is untouched (full-coverage
-    probes are bit-identical before/after — test-pinned), and
-    recall-at-nprobe over the hot region improves because the two
-    children can be pruned independently.
+    current max, and the codebook swaps the parent centroid for the two
+    seeds; the radii drop the parents' rows and gain the children's.
+    All splits land as ONE rewrite commit (hot cells' files, the
+    codebook and the radii files out; children, new codebook and new
+    radii in) declaring those domains, so a reader sees the layout
+    before or after, never a half-split one, and a racing append into a
+    hot cell conflicts instead of being lost. Probes need no code
+    change: the probe path reads the codebook, so the next query simply
+    sees more, smaller cells; the UNION of members is untouched
+    (full-coverage probes are bit-identical before/after —
+    test-pinned), and recall-at-nprobe over the hot region improves
+    because the two children can be pruned independently.
 
     Hot = live rows > ``min_factor`` × mean live rows (tombstones
     excluded from the census), largest first, at most ``max_splits``
     cells, never a cell of < 2 rows. Returns a report of performed
     splits: ``{"cell_id", "n_rows", "lo_cell", "hi_cell"}``.
-    Cost: one metadata-sized census + one partition-bounded rewrite
-    per split — O(hot cells), never a corpus scan.
+    Cost: one metadata-sized census + one cell-bounded rewrite per
+    split — O(hot cells), never a corpus scan.
     """
-    import shutil
-
-    journal = os.path.join(path, "_REBALANCE_INPROGRESS.json")
-    cells_root = f"{path}/cells"
-    # artifact-dir swap recovery first: a crash inside a previous
-    # codebook/radii swap must not strand the layout unreadable
-    _heal_artifact_dir(f"{path}/codebook")
-    if os.path.exists(f"{path}/cell_radii") or os.path.exists(
-        f"{path}/cell_radii.bak"
-    ):
-        _heal_artifact_dir(f"{path}/cell_radii")
-    # self-heal a crashed prior run: the journal records the parent and
-    # child partitions of the in-flight split
-    if os.path.exists(journal):
-        with open(journal) as fh:
-            j = json.load(fh)
-        parent = os.path.join(cells_root, f"cell_id={j['cell_id']}")
-        bak = parent + ".bak"
-        kids = [
-            os.path.join(cells_root, f"cell_id={c}")
-            for c in (j["lo_cell"], j["hi_cell"])
-        ]
-        if all(os.path.exists(k) for k in kids):
-            # died after the children landed: finish the cleanup AND
-            # re-run the codebook swap (the journal outlives the swap,
-            # so a death between landing kids and rewriting the
-            # codebook heals here — without this, children partitions
-            # would be invisible to probes forever). The seeds are
-            # recoverable from the children: the lo seed was the
-            # parent's min-id member (assigned to itself, distance 0,
-            # hence in the lo child), the hi seed its max-id member.
-            if os.path.exists(bak):
-                shutil.rmtree(bak)
-            cb_rows = {
-                int(r["cell_id"]): [float(x) for x in r["centroid"]]
-                for r in spark.read.parquet(f"{path}/codebook").collect()
-            }
-            if (
-                int(j["cell_id"]) in cb_rows
-                or j["lo_cell"] not in cb_rows
-                or j["hi_cell"] not in cb_rows
-            ):
-                union = spark.read.parquet(kids[0]).unionByName(
-                    spark.read.parquet(kids[1])
-                )
-                lo_seed = [
-                    float(x)
-                    for x in union.orderBy(F.col(j.get("id_col", "vec_id")).asc())
-                    .select(j.get("vec_col", "nvec"))
-                    .first()[0]
-                ]
-                hi_seed = [
-                    float(x)
-                    for x in union.orderBy(F.col(j.get("id_col", "vec_id")).desc())
-                    .select(j.get("vec_col", "nvec"))
-                    .first()[0]
-                ]
-                cb_rows.pop(int(j["cell_id"]), None)
-                cb_rows[int(j["lo_cell"])] = lo_seed
-                cb_rows[int(j["hi_cell"])] = hi_seed
-                spark.createDataFrame(
-                    sorted(cb_rows.items()),
-                    "cell_id int, centroid array<double>",
-                ).write.mode("overwrite").parquet(f"{path}/codebook.tmp")
-                _swap_artifact_dir(f"{path}/codebook")
-        else:
-            # died mid-swap: restore the parent, discard partial kids
-            for k in kids:
-                if os.path.exists(k):
-                    shutil.rmtree(k)
-            if os.path.exists(bak):
-                os.rename(bak, parent)
-        tmp = os.path.join(path, ".rebalance_tmp")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        os.remove(journal)
-
-    geo = read_geometry(path)
-    cells = spark.read.parquet(cells_root)
-    live = _without_tombstones(spark, path, cells, id_col)
+    t = open_layout(path)
+    snap = t.snapshot()
+    cell_ids = _family(snap, 0)
+    live = _without_tombstones(
+        spark, path, read_tags(spark, t, snap, cell_ids), id_col
+    )
     census = {
         int(r["cell_id"]): int(r["n"])
         for r in live.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -2326,17 +1760,30 @@ def ivf_rebalance(
         (c for c, n in census.items() if n > min_factor * mean and n >= 2),
         key=lambda c: (-census[c], c),
     )[:max_splits]
-    next_id = max(census) + 1
+    if not hot:
+        return []
+    codebook = {
+        int(r["cell_id"]): [float(x) for x in r["centroid"]]
+        for r in _codebook_rows(path)
+    }
+    radii = _merged_radii(path)
+    next_id = max([*census, *cell_ids, *codebook]) + 1
+    adds: list[dict] = []
     report = []
     for c in hot:
-        parent = os.path.join(cells_root, f"cell_id={c}")
-        members = spark.read.parquet(parent)  # partition dir: no cell_id col
-        lo_seed = members.orderBy(F.col(id_col).asc()).select(vec_col).first()[0]
-        hi_seed = members.orderBy(F.col(id_col).desc()).select(vec_col).first()[0]
+        members = read_tags(spark, t, snap, [c])
+        lo_seed = [
+            float(x)
+            for x in members.orderBy(F.col(id_col).asc()).select(vec_col).first()[0]
+        ]
+        hi_seed = [
+            float(x)
+            for x in members.orderBy(F.col(id_col).desc()).select(vec_col).first()[0]
+        ]
         lo_cell, hi_cell = next_id, next_id + 1
         next_id += 2
-        lo_col = F.array(*[F.lit(float(x)) for x in lo_seed]).cast("array<double>")
-        hi_col = F.array(*[F.lit(float(x)) for x in hi_seed]).cast("array<double>")
+        lo_col = F.array(*[F.lit(x) for x in lo_seed]).cast("array<double>")
+        hi_col = F.array(*[F.lit(x) for x in hi_seed]).cast("array<double>")
         rea = members.withColumn(
             "cell_id",
             F.when(
@@ -2344,76 +1791,49 @@ def ivf_rebalance(
                 F.lit(lo_cell),
             ).otherwise(F.lit(hi_cell)),
         )
-        tmp = os.path.join(path, ".rebalance_tmp")
-        rea.write.mode("overwrite").partitionBy("cell_id").parquet(tmp)
-        with open(journal, "w") as fh:
-            json.dump(
-                {
-                    "cell_id": c,
-                    "lo_cell": lo_cell,
-                    "hi_cell": hi_cell,
-                    "id_col": id_col,
-                    "vec_col": vec_col,
-                },
-                fh,
-            )
-        os.rename(parent, parent + ".bak")
-        for child in (lo_cell, hi_cell):
-            src = os.path.join(tmp, f"cell_id={child}")
-            if os.path.exists(src):  # a seed pair can capture all rows
-                os.rename(src, os.path.join(cells_root, f"cell_id={child}"))
-        shutil.rmtree(parent + ".bak")
-        shutil.rmtree(tmp)
-        # codebook swap: parent row out, the two seeds in (metadata-
-        # sized). The journal stays on disk until AFTER the swap so a
-        # crash here heals on the next entry (codebook repair above).
-        cb = [
-            (int(r["cell_id"]), [float(x) for x in r["centroid"]])
-            for r in spark.read.parquet(f"{path}/codebook").collect()
-            if int(r["cell_id"]) != c
-        ]
-        cb.append((lo_cell, [float(x) for x in lo_seed]))
-        cb.append((hi_cell, [float(x) for x in hi_seed]))
-        spark.createDataFrame(
-            cb, "cell_id int, centroid array<double>"
-        ).write.mode("overwrite").parquet(f"{path}/codebook.tmp")
-        _swap_artifact_dir(f"{path}/codebook")
-        os.remove(journal)
+        # a seed pair can capture all rows: then only one child gets files
+        adds += t.write_data(rea, bucket_expr=F.col("cell_id"))
+        seeds = spark.createDataFrame(
+            [(lo_cell, lo_seed), (hi_cell, hi_seed)],
+            "cell_id int, centroid array<double>",
+        )
+        radii.pop(c, None)
+        for r in _member_radii(rea, seeds, vec_col).collect():  # <= 2 rows
+            radii[int(r["cell_id"])] = float(r["radius"])
+        codebook.pop(c, None)
+        codebook[lo_cell], codebook[hi_cell] = lo_seed, hi_seed
         report.append(
             {"cell_id": c, "n_rows": census[c], "lo_cell": lo_cell, "hi_cell": hi_cell}
         )
-    if report:
-        geo["n_cells"] = int(geo.get("n_cells", len(census))) + len(report)
-        _write_geometry(path, **geo)
-        if os.path.exists(f"{path}/cell_radii"):
-            # bounded radii refresh: drop the split parents' rows, add
-            # the children's — scans ONLY the children partitions (the
-            # O(hot cells) contract; a full write_cell_radii rescan
-            # would touch every cell)
-            split_parents = [r["cell_id"] for r in report]
-            kid_ids = [x for r in report for x in (r["lo_cell"], r["hi_cell"])]
-            cents = spark.read.parquet(f"{path}/codebook")
-            kid_radii = (
-                spark.read.parquet(cells_root)
-                .filter(F.col("cell_id").isin(kid_ids))
-                .join(F.broadcast(cents), "cell_id")
-                .select(
-                    "cell_id",
-                    F.sqrt(l2_sq(vec_col, "centroid")).alias("member_d"),
-                )
-                .groupBy("cell_id")
-                .agg(F.max("member_d").alias("radius"))
-                .collect()
-            )
-            kept = [
-                (int(r["cell_id"]), float(r["radius"]))
-                for r in spark.read.parquet(f"{path}/cell_radii").collect()
-                if int(r["cell_id"]) not in split_parents
-            ] + [(int(r["cell_id"]), float(r["radius"])) for r in kid_radii]
+    adds += retag(
+        t.write_data(
             spark.createDataFrame(
-                kept, "cell_id int, radius double"
-            ).write.mode("overwrite").parquet(f"{path}/cell_radii.tmp")
-            _swap_artifact_dir(f"{path}/cell_radii")
+                sorted(codebook.items()), "cell_id int, centroid array<double>"
+            ).coalesce(1)
+        ),
+        TLOG_CODEBOOK_TAG,
+    )
+    adds += retag(
+        t.write_data(
+            spark.createDataFrame(
+                sorted(radii.items()), "cell_id int, radius double"
+            ).coalesce(1)
+        ),
+        TLOG_RADII_TAG,
+    )
+    kids = [x for r in report for x in (r["lo_cell"], r["hi_cell"])]
+    n_cells = int(snap.meta.get("n_cells", len(census))) + len(report)
+    t.commit(
+        adds=adds,
+        removes=snap.files_in(hot + [TLOG_CODEBOOK_TAG, TLOG_RADII_TAG]),
+        read_version=snap.version,
+        op="rewrite",
+        domains=hot + kids + [TLOG_CODEBOOK_TAG, TLOG_RADII_TAG],
+        meta={"n_cells": n_cells},
+    )
+    geo = read_geometry(path)
+    geo["n_cells"] = n_cells
+    _write_geometry(path, **geo)
     return report
 
 
@@ -2430,9 +1850,9 @@ def ivf_exact_pruned_search(
     and the exact counterpart of the recall-gated nprobe probes): for
     every cell, ``lb_c = max(0, d(q, centroid_c) - radius_c)²`` lower-
     bounds the distance of ANY member (triangle inequality, radii from
-    the persisted ``cell_radii`` artifact). Cells are visited in
+    the persisted radii files). Cells are visited in
     ascending-``lb`` order (ties by cell_id), each visit ONE
-    partition-pruned scan collecting that cell's top-k (k rows —
+    file-pruned scan collecting that cell's top-k (k rows —
     planner state); the walk stops at the first cell whose bound the
     current kth-best already beats, which proves no unvisited cell can
     improve the answer. Result is bit-identical to brute force — the
@@ -2444,11 +1864,8 @@ def ivf_exact_pruned_search(
     """
     import math
 
-    cents = _metadata_rows(f"{path}/codebook")
-    radii = {
-        int(r["cell_id"]): float(r["radius"])
-        for r in _metadata_rows(f"{path}/cell_radii")
-    }
+    cents = _codebook_rows(path)
+    radii = _merged_radii(path)
     q = [float(x) for x in query_vec]
     def _lb(c):
         g = max(
@@ -2460,7 +1877,6 @@ def ivf_exact_pruned_search(
 
     order = sorted((_lb(c), int(c["cell_id"])) for c in cents)
     qcol = F.array(*[F.lit(x) for x in q]).cast("array<double>")
-    cells = spark.read.parquet(f"{path}/cells")
     best: list[tuple[float, int]] = []  # (distance, id), ascending
     scanned: list[int] = []
     # geometric batch doubling: visiting cells one job each would mean
@@ -2486,7 +1902,10 @@ def ivf_exact_pruned_search(
         )
         rows = (
             _without_tombstones(
-                spark, path, cells.filter(F.col("cell_id").isin(take)), id_col
+                spark,
+                path,
+                read_cells(spark, path, take).filter(F.col("cell_id").isin(take)),
+                id_col,
             )
             .select("cell_id", id_col, l2_sq(vec_col, qcol).alias("d"))
             .withColumn("rn", F.row_number().over(w))

@@ -8,12 +8,13 @@ HNSW is a pointer-chasing, single-process structure; it cannot hold a
 ideas — a bounded-degree kNN graph and greedy beam search — and maps
 each to a Spark-scale primitive:
 
-- **Graph = a bucket-partitioned parquet table.** One row per directed
-  edge ``(src, dst, dvec)`` with the destination vector DENORMALIZED
-  into the edge row (HNSW equally stores vectors adjacent to the
-  adjacency lists) and partitioned by ``src_bucket = src % n_buckets``.
-  A hop therefore reads only the beam's buckets — partition pruning is
-  the distributed analog of following in-RAM pointers.
+- **Graph = a bucketed parquet table under a transaction log.** One
+  row per directed edge ``(src, dst, dvec)`` with the destination
+  vector DENORMALIZED into the edge row (HNSW equally stores vectors
+  adjacent to the adjacency lists), one conflict domain per
+  ``src_bucket = src % n_buckets``. A hop therefore reads only the
+  beam's buckets' files — log-level file pruning is the distributed
+  analog of following in-RAM pointers.
 - **Search = H beam-search hops, each ONE pruned scan.** The beam is a
   query-planner value (≤ ef rows, like the probe-cell list of the IVF
   tier), so per hop the driver prunes buckets, scans ≤ |beam| · m edge
@@ -49,9 +50,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.functions.vector import l2_sq
-from cnc_visionsearch_spark.memo import file_fingerprint
+from cnc_visionsearch_spark.memo import LRU, file_fingerprint
 from cnc_visionsearch_spark.operators.ann import _metadata_rows, _seq_l2_sq
-from cnc_visionsearch_spark.operators.mutex import single_writer
+from cnc_visionsearch_spark.sources.tlog import (
+    TLog,
+    compact_domains,
+    empty_frame,
+    open_layout,
+    retag,
+    run_transaction,
+)
 
 __all__ = [
     "nsw_build",
@@ -76,61 +84,32 @@ def _meta(path: str) -> dict:
         return json.load(fh)
 
 
-# ---- transactional (tlog) NSW layout mode (r10) --------------------------
-# The r9 scope exclusion "graph-ANN appends race compacts unarbitrated"
-# closes the same way the token-IVF/inverted/IVF artifacts did in r9:
-# `nsw_build(use_tlog=True)` lays the edge table down as ONE init
-# commit with per-edge-file src_bucket conflict domains, appends are
-# blind commits (never conflict, rebase on version races), and
-# `nsw_compact` is a rewrite commit declaring the touched bucket
-# domains — racing appends into other buckets serialize, overlapping
-# ones conflict-and-recompute (run_transaction). Entries carry a
-# reserved tag. Legacy tmp+rename layouts keep the operators/mutex.py
-# single-writer lock instead (single_writer skips tlog layouts).
+# ---- the graph layouts in the transaction log -----------------------------
+# `nsw_build` lays the edge table down as ONE init commit with
+# per-edge-file src_bucket conflict domains, appends are blind commits
+# (never conflict, rebase on version races), and `nsw_compact` is a
+# rewrite commit declaring the touched bucket domains — racing appends
+# into other buckets serialize, overlapping ones conflict-and-recompute
+# (run_transaction). Entries carry a reserved tag.
 
 TLOG_NSW_ENTRIES_TAG = 300_000
 _GRAPH_SCHEMA = "src bigint, dst bigint, dvec array<double>, src_bucket int"
 # HNSW conflict-domain tag = layer * STRIDE + src_bucket (one int per
 # (layer, bucket) edge partition; n_buckets must stay < STRIDE — the
 # geometry sidecar's n_buckets is 16/1024 in every layout here). The
-# ENTRY is not a file at all in tlog mode: it rides commit META (a
-# read-modify-write key, so racing promotions serialize through the
-# meta-rebase window instead of racing a directory swap).
+# ENTRY is not a file at all: it rides commit META (a read-modify-write
+# key, so racing promotions serialize through the meta-rebase window).
 TLOG_HNSW_LAYER_STRIDE = 1024
 _HGRAPH_SCHEMA = (
     "layer int, src bigint, dst bigint, dvec array<double>, src_bucket int"
 )
 
 
-def _nsw_tlog(path: str):
-    from cnc_visionsearch_spark.sources.tlog import tlog_of
-
-    return tlog_of(path)
-
-
-def _retag_g(adds: list, tag: int) -> list:
-    for a in adds:
-        a["bucket"] = tag
-    return adds
-
-
 def _nsw_graph_reader(spark, path: str):
-    """One-per-search reader handle for the edge table: the legacy
-    relation (ONE spark.read.parquet — re-creating it per hop re-lists
-    files and re-infers schema, a measured multi-hop tax) or the tlog
-    snapshot (ONE log replay) is captured once; each call prunes to
-    ``buckets`` — partition pruning on legacy layouts, LOG-level file
-    pruning on transactional ones."""
-    t = _nsw_tlog(path)
-    if t is None:
-        g = spark.read.parquet(f"{path}/graph")
-
-        def read(buckets=None):
-            if buckets is None:
-                return g
-            return g.filter(F.col("src_bucket").isin(sorted(buckets)))
-
-        return read
+    """One-per-search reader handle for the edge table: the snapshot
+    (ONE log replay) is captured once; each call prunes to ``buckets``
+    at the LOG level (only those buckets' files enter the scan)."""
+    t = open_layout(path)
     snap = t.snapshot()
     n_buckets = int(_meta(path)["n_buckets"])
     # relation memo per live-file set (r11): a beam search's hops
@@ -148,7 +127,7 @@ def _nsw_graph_reader(spark, path: str):
         rel = _rel_memo.get(paths)
         if rel is None:
             if not paths:
-                rel = spark.createDataFrame([], _GRAPH_SCHEMA)
+                rel = empty_frame(spark, _GRAPH_SCHEMA)
             else:
                 rel = spark.read.schema(_GRAPH_SCHEMA).parquet(
                     *[os.path.join(t.root, p) for p in paths]
@@ -163,17 +142,14 @@ def read_nsw_graph(spark, path: str, buckets=None) -> DataFrame:
     """The sanctioned one-shot reader for the layout's denormalized
     edge table (see :func:`_nsw_graph_reader`; loops should take a
     reader handle instead of calling this per hop). The src_bucket
-    column is real data in both modes, so downstream filters are
-    mode-invariant."""
+    column is real data, so downstream filters on it still apply."""
     return _nsw_graph_reader(spark, path)(buckets)
 
 
 def _entry_rows(path: str) -> list[dict]:
     """Driver-side entry-point rows (metadata-sized, like the IVF
-    codebook) across both layout modes."""
-    t = _nsw_tlog(path)
-    if t is None:
-        return _metadata_rows(f"{path}/entries")
+    codebook)."""
+    t = open_layout(path)
     snap = t.snapshot()
     rows: list[dict] = []
     for rel in snap.files_in([TLOG_NSW_ENTRIES_TAG]):
@@ -181,69 +157,27 @@ def _entry_rows(path: str) -> list[dict]:
     return rows
 
 
-def _compact_tlog_graph(spark, t, tag_pred, schema, bucket_expr) -> None:
-    """Shared graph-compact kernel: rewrite every conflict domain
-    (tag) holding more than one live file into one file, as ONE
-    rewrite commit declaring the touched domains."""
-    from collections import Counter
-
-    snap = t.snapshot()
-    cnt = Counter(b for _p, b in snap.files if b is not None and tag_pred(b))
-    touched = sorted(b for b, c in cnt.items() if c > 1)
-    if not touched:
-        return
-    old = [p for p, b in snap.files if b in set(touched)]
-    df = spark.read.schema(schema).parquet(
-        *[os.path.join(t.root, p) for p in old]
-    )
-    t.commit(
-        adds=t.write_data(df, bucket_expr=bucket_expr),
-        removes=old,
-        read_version=snap.version,
-        op="rewrite",
-        domains=touched,
-    )
-
-
 def nsw_compact(spark, path: str) -> None:
-    """Compact a TRANSACTIONAL NSW layout: rewrite every bucket holding
+    """Compact an NSW layout: rewrite every bucket holding
     more than one live edge file into one file, as ONE rewrite commit
     declaring the touched bucket domains — the append-accretion bound
     (St5) for the graph tier, now arbitrated: a racing append into an
     untouched bucket serializes; into a touched one, this commit
     conflicts and the caller's run_transaction recomputes. Probe
     results are unchanged by construction (same rows, fewer files)."""
-    t = _nsw_tlog(path)
-    if t is None:
-        raise ValueError(
-            f"nsw_compact requires a transactional layout (nsw_build("
-            f"use_tlog=True)); {path} is a legacy tmp+rename layout"
-        )
+    t = open_layout(path)
     n_buckets = int(_meta(path)["n_buckets"])
-    _compact_tlog_graph(
-        spark, t, lambda b: b < n_buckets, _GRAPH_SCHEMA, F.col("src_bucket")
+    compact_domains(
+        spark, t, lambda b: b < n_buckets, F.col("src_bucket"), _GRAPH_SCHEMA
     )
 
 
 def _hnsw_graph_reader(spark, path: str):
     """One-per-search reader handle for the layered edge table (the
-    :func:`_nsw_graph_reader` doctrine): legacy relation or tlog
-    snapshot captured ONCE, each call prunes to (layer, buckets) —
-    partition filters on legacy layouts, (layer, bucket) tag -> live
-    file pruning on transactional ones, same row filters either way."""
-    t = _nsw_tlog(path)
-    if t is None:
-        g0 = spark.read.parquet(f"{path}/graph")
-
-        def read(layer=None, buckets=None):
-            g = g0
-            if layer is not None:
-                g = g.filter(F.col("layer") == int(layer))
-            if buckets is not None:
-                g = g.filter(F.col("src_bucket").isin(sorted(buckets)))
-            return g
-
-        return read
+    :func:`_nsw_graph_reader` doctrine): the snapshot is captured ONCE,
+    each call prunes to (layer, buckets) — (layer, bucket) tag -> live
+    file pruning, plus the same row filters."""
+    t = open_layout(path)
     meta = _hnsw_meta(path)
     nb, ml = int(meta["n_buckets"]), int(meta["max_level"])
     snap = t.snapshot()
@@ -260,7 +194,7 @@ def _hnsw_graph_reader(spark, path: str):
         g = _rel_memo.get(paths)
         if g is None:
             if not paths:
-                g = spark.createDataFrame([], _HGRAPH_SCHEMA)
+                g = empty_frame(spark, _HGRAPH_SCHEMA)
             else:
                 g = spark.read.schema(_HGRAPH_SCHEMA).parquet(
                     *[os.path.join(t.root, p) for p in paths]
@@ -284,22 +218,9 @@ def read_hnsw_graph(
 
 
 def _hnsw_entry(spark, path: str) -> dict:
-    """The search entry point across both modes: legacy layouts read
-    the (healed) entry artifact dir; transactional layouts carry the
-    entry in commit META — promotion is a meta-key commit, so racing
-    promotions serialize instead of racing a directory swap."""
-    t = _nsw_tlog(path)
-    if t is None:
-        from cnc_visionsearch_spark.operators.ann import _heal_artifact_dir
-
-        _heal_artifact_dir(f"{path}/entry")  # crashed promotion swap
-        e = spark.read.parquet(f"{path}/entry").first()
-        return {
-            "vec_id": int(e["vec_id"]),
-            "nvec": [float(x) for x in e["nvec"]],
-            "level": int(e["level"]),
-        }
-    m = t.snapshot().meta["entry"]
+    """The search entry point, carried in commit META — promotion is a
+    meta-key commit, so racing promotions serialize."""
+    m = open_layout(path).snapshot().meta["entry"]
     return {
         "vec_id": int(m["vec_id"]),
         "nvec": [float(x) for x in m["nvec"]],
@@ -316,14 +237,9 @@ def _hnsw_tag_expr():
 def hnsw_compact(spark, path: str) -> None:
     """:func:`nsw_compact` for the layered layout — one rewrite commit
     over every (layer, bucket) domain holding more than one live file."""
-    t = _nsw_tlog(path)
-    if t is None:
-        raise ValueError(
-            f"hnsw_compact requires a transactional layout (hnsw_build("
-            f"use_tlog=True)); {path} is a legacy tmp+rename layout"
-        )
-    _compact_tlog_graph(
-        spark, t, lambda b: True, _HGRAPH_SCHEMA, _hnsw_tag_expr()
+    compact_domains(
+        spark, open_layout(path), lambda b: True, _hnsw_tag_expr(),
+        _HGRAPH_SCHEMA,
     )
 
 
@@ -412,22 +328,35 @@ def nsw_build(
     ivf_path: str | None = None,
     ivf_cells: int = 8,
     ivf_nprobe: int = 4,
-    use_tlog: bool = False,
 ) -> None:
     """Materialize the NSW layout at ``path``: the per-src top-``m``
     neighbor graph (candidate set per ``candidates`` — see
     :func:`nsw_candidate_edges`; "exact" is the fixture-scale oracle-
     parity mode, "ivf" the 100 TB IVF-pruned mode), destination
-    vectors denormalized into edge rows, partitioned by
-    ``src % n_buckets``; plus ``{path}/entries`` — the ``n_entries``
-    smallest ids with their vectors, the fixed search entry points
-    (metadata-sized, read driver-side like the IVF codebook).
+    vectors denormalized into edge rows, one conflict domain per
+    ``src % n_buckets``; plus the entries — the ``n_entries`` smallest
+    ids with their vectors, the fixed search entry points
+    (metadata-sized, read driver-side like the IVF codebook) — all as
+    ONE atomic init commit; every later mutation is a commit with
+    src_bucket conflict domains.
 
     In ivf mode, ``ivf_path`` reuses an existing
     :func:`~cnc_visionsearch_spark.operators.ann.ivf_build` layout
     (the production shape: the corpus already has one); when omitted a
     transient ``ivf_cells``-cell layout is built under ``path`` and
     removed after the graph is written."""
+    if n_buckets >= TLOG_NSW_ENTRIES_TAG:
+        raise ValueError(
+            f"nsw_build: n_buckets={n_buckets} would collide with the "
+            f"reserved entries conflict-domain tag "
+            f"({TLOG_NSW_ENTRIES_TAG}); keep n_buckets below it"
+        )
+    t = TLog(path)
+    if t.latest_version() != 0:
+        raise ValueError(
+            f"nsw_build: layout {path} already holds "
+            f"{t.latest_version()} commit(s); wipe to rebuild"
+        )
     transient_ivf = None
     if candidates == "ivf" and ivf_path is None:
         from cnc_visionsearch_spark.operators.ann import ivf_build
@@ -456,51 +385,18 @@ def nsw_build(
         .limit(n_entries)
         .coalesce(1)
     )
-    if use_tlog:
-        # TRANSACTIONAL layout: graph + entries as ONE atomic init
-        # commit (the r9 artifact-tlog doctrine applied to the graph
-        # tier); every later mutation is a commit with src_bucket
-        # conflict domains
-        from cnc_visionsearch_spark.sources.tlog import TLog
-
-        if n_buckets >= TLOG_NSW_ENTRIES_TAG:
-            raise ValueError(
-                f"nsw_build(use_tlog=True): n_buckets={n_buckets} would "
-                f"collide with the reserved entries conflict-domain tag "
-                f"({TLOG_NSW_ENTRIES_TAG}); keep n_buckets below it"
-            )
-        t = TLog(path)
-        if t.latest_version() != 0:
-            raise ValueError(
-                f"nsw_build: tlog layout {path} already holds "
-                f"{t.latest_version()} commit(s); wipe to rebuild"
-            )
-        adds = t.write_data(graph, bucket_expr=F.col("src_bucket"))
-        adds += _retag_g(t.write_data(entries), TLOG_NSW_ENTRIES_TAG)
-        t.commit(
-            adds=adds,
-            op="append",
-            meta={"kind": "nsw", "m": m, "n_buckets": n_buckets},
-            base_version=0,
-        )
-    else:
-        # ONE file per bucket (r12, guide §6 small files): the raw
-        # partitionBy write fragments each bucket across every writer
-        # task (~10 files/bucket at bench sf — 160 files for 16
-        # buckets), and every beam hop re-opens all of them. Keyed
-        # repartition before the write collapses the layout to one
-        # file per bucket — exactly what the tlog write_data path and
-        # the r8 copurchase-edges build already do. Measured
-        # interleaved (same session, per-layout twin artifacts,
-        # identical search results asserted): nsw_search min
-        # 0.93s -> 0.65s, every block faster.
-        (
-            graph.repartition(F.col("src_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("src_bucket")
-            .parquet(f"{path}/graph")
-        )
-        entries.write.mode("overwrite").parquet(f"{path}/entries")
+    # write_data's keyed repartition lands each bucket in ONE file: every
+    # beam hop re-opens the files of its buckets, so fragmenting a bucket
+    # across writer tasks is a per-hop tax (measured nsw_search min
+    # 0.93s -> 0.65s when the layout was collapsed to a file per bucket)
+    adds = t.write_data(graph, bucket_expr=F.col("src_bucket"))
+    adds += retag(t.write_data(entries), TLOG_NSW_ENTRIES_TAG)
+    t.commit(
+        adds=adds,
+        op="append",
+        meta={"kind": "nsw", "m": m, "n_buckets": n_buckets},
+        base_version=0,
+    )
     if transient_ivf is not None:
         import shutil
 
@@ -511,20 +407,18 @@ def nsw_build(
         )
 
 
-@single_writer("nsw_append")
 def nsw_append(spark, path: str, new_emb: DataFrame) -> None:
     """Incremental insert — the batch twin of HNSW's online ``add``:
     each new node gets out-edges to its m nearest EXISTING nodes (found
     by :func:`nsw_search_df`, i.e. through the index itself, exactly how
     HNSW inserts) plus BACK-edges from those neighbors, so new nodes
     are reachable by later searches. Both edge sets append into the
-    bucket-partitioned layout — existing files stay byte-identical; a
-    touched src may temporarily exceed degree m (search correctness
-    only widens; periodic :func:`nsw_build` re-trims). O(batch), never
-    a corpus rescan. On a TRANSACTIONAL layout the edges land as ONE
-    blind append commit (src_bucket-tagged adds — never blocked by a
-    racing :func:`nsw_compact`; an overlapping compact conflicts and
-    recomputes instead)."""
+    layout as ONE blind append commit (src_bucket-tagged adds — never
+    blocked by a racing :func:`nsw_compact`; an overlapping compact
+    conflicts and recomputes instead) — existing files stay
+    byte-identical; a touched src may temporarily exceed degree m
+    (search correctness only widens; periodic :func:`nsw_build`
+    re-trims). O(batch), never a corpus rescan."""
     meta = _meta(path)
     m, n_buckets = meta["m"], meta["n_buckets"]
     new_rows = new_emb.select("vec_id", "nvec").collect()
@@ -556,16 +450,11 @@ def nsw_append(spark, path: str, new_emb: DataFrame) -> None:
         if dst in nbr_vec
     ] + [(src, dst, dvec, src % n_buckets) for src, dst, dvec in back]
     df = spark.createDataFrame(rows, _GRAPH_SCHEMA)
-    t = _nsw_tlog(path)
-    if t is not None:
-        t.commit(
-            adds=t.write_data(df, bucket_expr=F.col("src_bucket")),
-            op="append",
-        )
-    else:
-        df.write.mode("append").partitionBy("src_bucket").parquet(
-            f"{path}/graph"
-        )
+    t = open_layout(path)
+    t.commit(
+        adds=t.write_data(df, bucket_expr=F.col("src_bucket")),
+        op="append",
+    )
 
 
 def nsw_search(
@@ -698,14 +587,31 @@ def hnsw_build(
     candidates: str = "exact",
     ivf_path: str | None = None,
     ivf_nprobe: int = 4,
-    use_tlog: bool = False,
 ) -> None:
-    """Materialize the hierarchical layout at ``path``:
-    ``{path}/graph`` partitioned by ``(layer, src_bucket)`` — layer 0
-    is the full top-``m`` graph (the flat NSW tier's table), layer
-    l >= 1 the top-``m_upper`` graph over nodes of level >= l — plus
-    ``{path}/entry`` (the max-level node, ties to min id: the fixed
-    search entry, metadata-sized) and ``_HNSW.json``."""
+    """Materialize the hierarchical layout at ``path`` as ONE init
+    commit: the edge table with one conflict domain per
+    ``(layer, src_bucket)`` — layer 0 is the full top-``m`` graph (the
+    flat NSW tier's table), layer l >= 1 the top-``m_upper`` graph over
+    nodes of level >= l — with the entry (the max-level node, ties to
+    min id: the fixed search entry) in commit meta; plus
+    ``_HNSW.json``."""
+    if n_buckets >= TLOG_HNSW_LAYER_STRIDE:
+        # the (layer, bucket) conflict-domain tag is layer * STRIDE +
+        # bucket — a wider bucket count would silently alias tags ACROSS
+        # layers, corrupting log-level pruning and append/compact
+        # conflict domains
+        raise ValueError(
+            f"hnsw_build: n_buckets={n_buckets} must stay below "
+            f"TLOG_HNSW_LAYER_STRIDE ({TLOG_HNSW_LAYER_STRIDE}) — larger "
+            "values alias (layer, bucket) conflict-domain tags across "
+            "layers"
+        )
+    t = TLog(path)
+    if t.latest_version() != 0:
+        raise ValueError(
+            f"hnsw_build: layout {path} already holds "
+            f"{t.latest_version()} commit(s); wipe to rebuild"
+        )
     levels = emb.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("nvec"),
@@ -734,63 +640,29 @@ def hnsw_build(
     graph = layers[0]
     for g in layers[1:]:
         graph = graph.unionByName(g)
-    if use_tlog:
-        from cnc_visionsearch_spark.sources.tlog import TLog
-
-        if n_buckets >= TLOG_HNSW_LAYER_STRIDE:
-            # the (layer, bucket) conflict-domain tag is
-            # layer * STRIDE + bucket — a wider bucket count would
-            # silently alias tags ACROSS layers, corrupting log-level
-            # pruning and append/compact conflict domains (r10 advice:
-            # the documented invariant is now validated, not prose)
-            raise ValueError(
-                f"hnsw_build(use_tlog=True): n_buckets={n_buckets} must "
-                f"stay below TLOG_HNSW_LAYER_STRIDE "
-                f"({TLOG_HNSW_LAYER_STRIDE}) — larger values alias "
-                "(layer, bucket) conflict-domain tags across layers"
-            )
-        t = TLog(path)
-        if t.latest_version() != 0:
-            raise ValueError(
-                f"hnsw_build: tlog layout {path} already holds "
-                f"{t.latest_version()} commit(s); wipe to rebuild"
-            )
-        e = (
-            levels.orderBy(F.col("level").desc(), F.col("vec_id").asc())
-            .limit(1)
-            .first()
-        )
-        t.commit(
-            adds=t.write_data(graph, bucket_expr=_hnsw_tag_expr()),
-            op="append",
-            meta={
-                "kind": "hnsw",
-                "m": m,
-                "m_upper": m_upper,
-                "n_buckets": n_buckets,
-                "entry": {
-                    "vec_id": int(e["vec_id"]),
-                    "nvec": [float(x) for x in e["nvec"]],
-                    "level": int(e["level"]),
-                },
+    e = (
+        levels.orderBy(F.col("level").desc(), F.col("vec_id").asc())
+        .limit(1)
+        .first()
+    )
+    # one file per (layer, bucket) via write_data's keyed repartition —
+    # see nsw_build (measured hnsw_search min 1.20s -> 0.89s)
+    t.commit(
+        adds=t.write_data(graph, bucket_expr=_hnsw_tag_expr()),
+        op="append",
+        meta={
+            "kind": "hnsw",
+            "m": m,
+            "m_upper": m_upper,
+            "n_buckets": n_buckets,
+            "entry": {
+                "vec_id": int(e["vec_id"]),
+                "nvec": [float(x) for x in e["nvec"]],
+                "level": int(e["level"]),
             },
-            base_version=0,
-        )
-    else:
-        # one file per (layer, bucket) — see nsw_build (r12, guide §6):
-        # measured hnsw_search min 1.20s -> 0.89s on the compacted twin
-        graph.repartition(
-            F.col("layer"), F.col("src_bucket")
-        ).write.mode("overwrite").partitionBy(
-            "layer", "src_bucket"
-        ).parquet(f"{path}/graph")
-        (
-            levels.orderBy(F.col("level").desc(), F.col("vec_id").asc())
-            .limit(1)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{path}/entry")
-        )
+        },
+        base_version=0,
+    )
     with open(os.path.join(path, "_HNSW.json"), "w") as fh:
         json.dump(
             {
@@ -812,48 +684,69 @@ def _hnsw_meta(path: str) -> dict:
 # Upper-descent batching gate (r12, verdict #6): the greedy descent ran
 # ONE Spark job (pruned scan + collect) PER HOP — up to
 # max_level x upper_hops sequential driver round trips per search, each
-# fetching <= m_upper rows. When the upper layers' LIVE FILE BYTES
-# (known driver-side from the layout — no job needed, the spread_scan
-# guard discipline) fit under this bound, the search collects layers
-# >= 1 ONCE and replays the whole descent driver-side with the same
-# sequential fold (_seq_l2_sq is already the doctrine-blessed twin of
-# the codegen score — entry distances have always mixed with hop
-# distances in one beam). Above the bound — upper layers are a corpus
-# fraction (level_mult^-l) at 100 TB — the per-hop bucket-pruned scans
-# remain, so the pruning story is intact by construction.
-HNSW_UPPER_COLLECT_MAX_BYTES = int(
+# fetching <= m_upper rows. When the upper layers' IN-MEMORY size
+# (estimated driver-side from the parquet footers — no job needed)
+# fits under this bound, the search collects layers >= 1 ONCE and
+# replays the whole descent driver-side with the same sequential fold
+# (_seq_l2_sq is already the doctrine-blessed twin of the codegen score
+# — entry distances have always mixed with hop distances in one beam).
+# Above the bound — upper layers are a corpus fraction (level_mult^-l)
+# at 100 TB — the per-hop bucket-pruned scans remain, so the pruning
+# story is intact by construction. The bound is on the collected rows,
+# not on the files: dvec repeats per in-edge, so dictionary-encoded
+# parquet is many times smaller than the rows it decodes to. The env
+# value is clamped to HNSW_UPPER_COLLECT_CEILING, so no setting can
+# make the driver collect more than that.
+HNSW_UPPER_COLLECT_CEILING = 256 << 20
+
+
+def _collect_bound(raw: str) -> int:
+    """The env value clamped to [0, HNSW_UPPER_COLLECT_CEILING]."""
+    return max(0, min(int(raw), HNSW_UPPER_COLLECT_CEILING))
+
+
+HNSW_UPPER_COLLECT_MAX_BYTES = _collect_bound(
     os.environ.get("HNSW_UPPER_COLLECT_MAX_BYTES", str(32 << 20))
 )
+# bytes per collected edge row beyond its dvec doubles: the layer, src,
+# dst and src_bucket fields plus the Row and list headers
+_UPPER_ROW_OVERHEAD = 64
+_FOOTER_ROWS = LRU(256)
 
 
 def _hnsw_upper_bytes(path: str):
-    """Total live bytes of layers >= 1, from the file layout only (no
-    Spark job); None when unknowable (assume big — keep per-hop scans)."""
-    t = _nsw_tlog(path)
-    if t is None:
-        base = os.path.join(path, "graph")
-        try:
-            levels = {
-                n: int(n.split("=", 1)[1])
-                for n in os.listdir(base)
-                if n.startswith("layer=")
-            }
-        except (OSError, ValueError):
-            return None
-        dirs = [os.path.join(base, n) for n, lv in levels.items() if lv >= 1]
-    else:
-        dirs = [
-            os.path.join(t.root, p)
-            for p, b in t.snapshot().files
-            if b is not None and b >= TLOG_HNSW_LAYER_STRIDE
-        ]
+    """Estimated in-memory bytes of the layers >= 1 a batched descent
+    would collect: the live files' parquet-footer row counts × (dvec
+    dim × 8 + _UPPER_ROW_OVERHEAD), from the layout only (no Spark job;
+    footer row counts memoized per file fingerprint). None when
+    unknowable (assume big — keep per-hop scans)."""
+    import pyarrow.parquet as pq
+
+    snap = open_layout(path).snapshot()
+    dirs = [
+        os.path.join(path, p)
+        for p, b in snap.files
+        if b is not None and b >= TLOG_HNSW_LAYER_STRIDE
+    ]
     fp = file_fingerprint(dirs)
-    return None if fp is None else sum(size for _, size, _ in fp)
+    if fp is None:
+        return None
+    rows = 0
+    for name, size, mtime in fp:
+        if not name.endswith(".parquet"):
+            continue
+        n = _FOOTER_ROWS.get((name, size, mtime))
+        if n is None:
+            n = pq.ParquetFile(name).metadata.num_rows
+            _FOOTER_ROWS.put((name, size, mtime), n)
+        rows += n
+    dim = len(snap.meta["entry"]["nvec"])
+    return rows * (dim * 8 + _UPPER_ROW_OVERHEAD)
 
 
 def _collect_upper_adjacency(read, start_layer: int):
     """ONE job: the (layer, src) -> [(dst, dvec)] adjacency of layers
-    1..start_layer (each layer's relation is partition/tag-pruned; the
+    1..start_layer (each layer's relation is tag-pruned; the
     union never touches layer 0)."""
     rel = None
     for l in range(1, start_layer + 1):
@@ -880,7 +773,7 @@ def hnsw_search(
 ) -> list[tuple[int, float]]:
     """HNSW descent over a :func:`hnsw_build` layout: from the fixed
     max-level entry, ``upper_hops`` greedy width-1 hops per layer down
-    to 1 (each hop ONE scan pruned to layer partition × current node's
+    to 1 (each hop ONE scan pruned to layer × current node's
     bucket, <= m_upper rows scored by the codegen fold; a hop that
     finds no closer neighbor stays put, so converged layers are
     no-ops), then the standard width-``ef`` beam at layer 0 seeded by
@@ -905,7 +798,7 @@ def hnsw_search(
         if ub is not None and ub <= HNSW_UPPER_COLLECT_MAX_BYTES:
             # batched descent (r12): ONE pruned collect of layers >= 1
             # replaces up to start_layer x upper_hops per-hop jobs;
-            # gated on measured live bytes, see HNSW_UPPER_COLLECT_MAX_BYTES
+            # gated on its in-memory size, see HNSW_UPPER_COLLECT_MAX_BYTES
             upper_adj = _collect_upper_adjacency(read, start_layer)
     for layer in range(start_layer, 0, -1):
         for _ in range(upper_hops):
@@ -1007,7 +900,6 @@ def _hnsw_beam_layer(
     return beam
 
 
-@single_writer("hnsw_append")
 def hnsw_append(spark, path: str, new_emb: DataFrame) -> None:
     """Incremental insert into a :func:`hnsw_build` layout — the exact
     HNSW insert algorithm, batched: each new node draws its
@@ -1091,53 +983,25 @@ def hnsw_append(spark, path: str, new_emb: DataFrame) -> None:
         for layer, src, dst, dvec in back_edges
     ]
     df = spark.createDataFrame(rows, _HGRAPH_SCHEMA)
-    t = _nsw_tlog(path)
-    if t is not None:
-        # edges land as ONE blind append commit (never blocked by a
-        # racing compact), THEN the entry promotion as a meta-key
-        # commit: racing promotions serialize through the meta-rebase
-        # window (base_version), and the loser re-reads and promotes
-        # only if it still wins (level desc, vec_id asc) — the
-        # read-modify-write the legacy directory swap could not
-        # arbitrate. Edge-before-entry order keeps every search seeded
-        # at a node whose out-edges are already visible.
-        t.commit(
-            adds=t.write_data(df, bucket_expr=_hnsw_tag_expr()), op="append"
-        )
-        if new_entry is not None:
-            from cnc_visionsearch_spark.sources.tlog import run_transaction
+    t = open_layout(path)
+    # edges land as ONE blind append commit (never blocked by a racing
+    # compact), THEN the entry promotion as a meta-key commit: racing
+    # promotions serialize through the meta-rebase window
+    # (base_version), and the loser re-reads and promotes only if it
+    # still wins (level desc, vec_id asc). Edge-before-entry order keeps
+    # every search seeded at a node whose out-edges are already visible.
+    t.commit(adds=t.write_data(df, bucket_expr=_hnsw_tag_expr()), op="append")
+    if new_entry is not None:
+        vid, nvec, lvl = new_entry
 
-            vid, nvec, lvl = new_entry
+        def promote():
+            snap = t.snapshot()
+            cur = snap.meta["entry"]
+            if (lvl, -vid) > (int(cur["level"]), -int(cur["vec_id"])):
+                t.commit(
+                    op="append",
+                    meta={"entry": {"vec_id": vid, "nvec": nvec, "level": lvl}},
+                    base_version=snap.version,
+                )
 
-            def promote():
-                snap = t.snapshot()
-                cur = snap.meta["entry"]
-                if (lvl, -vid) > (int(cur["level"]), -int(cur["vec_id"])):
-                    t.commit(
-                        op="append",
-                        meta={
-                            "entry": {
-                                "vec_id": vid,
-                                "nvec": nvec,
-                                "level": lvl,
-                            }
-                        },
-                        base_version=snap.version,
-                    )
-
-            run_transaction(promote)
-    else:
-        df.write.mode("append").partitionBy("layer", "src_bucket").parquet(
-            f"{path}/graph"
-        )
-        if new_entry is not None:
-            vid, nvec, lvl = new_entry
-            spark.createDataFrame(
-                [(vid, nvec, lvl)],
-                "vec_id bigint, nvec array<double>, level int",
-            ).coalesce(1).write.mode("overwrite").parquet(f"{path}/entry.tmp")
-            from cnc_visionsearch_spark.operators.ann import (
-                _swap_artifact_dir,
-            )
-
-            _swap_artifact_dir(f"{path}/entry")
+        run_transaction(promote)

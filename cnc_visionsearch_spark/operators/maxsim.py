@@ -39,6 +39,12 @@ from pyspark.sql import functions as F
 from cnc_visionsearch_spark.functions.text import hex_to_long
 from cnc_visionsearch_spark.functions.vector import l2_sq
 from cnc_visionsearch_spark.memo import LRU
+from cnc_visionsearch_spark.sources.tlog import (
+    TLog,
+    open_layout,
+    read_tags,
+    retag,
+)
 
 __all__ = [
     "LI_DIM",
@@ -167,61 +173,40 @@ def _corpus_vocab_bound(docs: DataFrame, text_col: str = "text"):
     return n
 
 
-# tlog conflict-domain tags for transactional token-IVF layouts:
-# doc_cells files carry their cell_id; the auxiliary subtables get
-# reserved tags far above any real cell count
+# conflict-domain tags of the token-IVF layout: doc_cells files carry
+# their cell_id; the auxiliary subtables get reserved tags far above
+# any real cell count
 TLOG_TIVF_CENTROIDS_TAG = 200_000
 TLOG_TIVF_TOKENS_TAG = 200_001
 TLOG_TIVF_TOMBS_TAG = 200_002
 
 
-def _tivf_tlog(path: str):
-    from cnc_visionsearch_spark.sources.tlog import tlog_of
-
-    return tlog_of(path)
-
-
-def _retag(adds: list[dict], tag: int) -> list[dict]:
-    for a in adds:
-        a["bucket"] = tag
-    return adds
-
-
-def _tlog_read_tags(spark, t, snap, tags):
-    paths = snap.files_in(tags)
-    if not paths:
-        return None
-    return spark.read.parquet(*[os.path.join(t.root, p) for p in paths])
-
-
 def read_doc_cells(spark: SparkSession, path: str, cells=None) -> DataFrame:
     """The sanctioned reader for the layout's (cell_id, doc_id) table —
     applies the tombstone filter (deleted docs vanish from candidates
-    immediately; the ANN tiers' read-through-the-filter doctrine) and
-    dispatches on the layout mode. ``cells`` prunes at the LOG level
-    on transactional layouts; legacy layouts keep the caller's
-    partition-pruning cell_id filter."""
-    t = _tivf_tlog(path)
-    if t is None:
-        dc = spark.read.parquet(os.path.join(path, "doc_cells"))
-        tdir = os.path.join(path, "tombstones")
-        if os.path.exists(tdir):
-            tombs = spark.read.parquet(tdir).select("doc_id").distinct()
-            dc = dc.join(F.broadcast(tombs), "doc_id", "left_anti")
-        return dc
+    immediately; the ANN tiers' read-through-the-filter doctrine).
+    ``cells`` prunes at the LOG level: only those cells' files enter
+    the scan."""
+    t = open_layout(path)
     snap = t.snapshot()
     tags = (
         sorted(cells)
         if cells is not None
         else list(range(int(snap.meta["n_cells"])))
     )
-    dc = _tlog_read_tags(spark, t, snap, tags)
-    tf = _tlog_read_tags(spark, t, snap, [TLOG_TIVF_TOMBS_TAG])
+    dc = read_tags(spark, t, snap, tags)
+    tf = read_tags(spark, t, snap, [TLOG_TIVF_TOMBS_TAG])
     if tf is not None:
         dc = dc.join(
             F.broadcast(tf.select("doc_id").distinct()), "doc_id", "left_anti"
         )
     return dc
+
+
+def read_token_cells(spark: SparkSession, path: str) -> DataFrame:
+    """The layout's (tok, cell_id) vocabulary assignment table."""
+    t = open_layout(path)
+    return read_tags(spark, t, t.snapshot(), [TLOG_TIVF_TOKENS_TAG])
 
 
 def token_ivf_delete(spark: SparkSession, path: str, doc_ids: list[int]) -> None:
@@ -231,39 +216,30 @@ def token_ivf_delete(spark: SparkSession, path: str, doc_ids: list[int]) -> None
     anti-join so deleted docs vanish from maxsim candidates
     immediately; resident files stay byte-identical; physical removal
     rides :func:`token_ivf_vacuum`."""
+    t = open_layout(path)
     df = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id bigint")
-    t = _tivf_tlog(path)
-    if t is None:
-        df.write.mode("append").parquet(os.path.join(path, "tombstones"))
-        return
-    t.commit(adds=_retag(t.write_data(df), TLOG_TIVF_TOMBS_TAG), op="append")
+    t.commit(adds=retag(t.write_data(df), TLOG_TIVF_TOMBS_TAG), op="append")
 
 
 def token_ivf_vacuum(spark: SparkSession, path: str) -> None:
     """Apply accumulated tombstones physically: rewrite ONLY the
-    doc_cells partitions holding deleted docs, then retire the
-    tombstone set. Legacy layouts use the shared crash-safe partition
-    swap (operators/ann._vacuum_layout); transactional layouts commit
-    ONE rewrite declaring the touched cell domains + the tombstone tag
-    — racing appends into other cells serialize, overlapping ones
-    conflict and the vacuum recomputes (run_transaction)."""
-    t = _tivf_tlog(path)
-    if t is None:
-        from cnc_visionsearch_spark.operators.ann import _vacuum_layout
-
-        _vacuum_layout(spark, path, ("doc_cells",), "cell_id", "doc_id")
-        return
+    doc_cells cells holding deleted docs, then retire the tombstone set,
+    as ONE rewrite commit declaring the touched cell domains + the
+    tombstone tag — racing appends into other cells serialize,
+    overlapping ones conflict and the vacuum recomputes
+    (run_transaction)."""
+    t = open_layout(path)
     snap = t.snapshot()
     tomb_files = snap.files_in([TLOG_TIVF_TOMBS_TAG])
     if not tomb_files:
         return
     tombs = (
-        _tlog_read_tags(spark, t, snap, [TLOG_TIVF_TOMBS_TAG])
+        read_tags(spark, t, snap, [TLOG_TIVF_TOMBS_TAG])
         .select("doc_id")
         .distinct()
     )
     n_cells = int(snap.meta["n_cells"])
-    dc = _tlog_read_tags(spark, t, snap, list(range(n_cells)))
+    dc = read_tags(spark, t, snap, list(range(n_cells)))
     touched = sorted(
         r[0]
         for r in dc.join(F.broadcast(tombs), "doc_id")
@@ -273,7 +249,7 @@ def token_ivf_vacuum(spark: SparkSession, path: str) -> None:
     )  # bounded: <= n_cells
     adds = []
     if touched:
-        kept = _tlog_read_tags(spark, t, snap, touched).join(
+        kept = read_tags(spark, t, snap, touched).join(
             F.broadcast(tombs), "doc_id", "left_anti"
         )
         adds = t.write_data(kept, bucket_expr=F.col("cell_id"))
@@ -454,21 +430,22 @@ def token_ivf_build(
     docs: DataFrame,
     path: str,
     n_cells: int = TOKEN_IVF_CELLS,
-    use_tlog: bool = False,
 ) -> None:
-    """Build the token-vector IVF layout under ``path``:
+    """Build the token-vector IVF layout under ``path`` as ONE atomic
+    init commit (every later mutation is a commit with cell-id conflict
+    domains) of three subtables:
 
-    - ``centroids/``: n_cells rows (cell_id, ctok, cv) — the first
-      n_cells vocabulary tokens by (md5(tok), tok), their normalized
-      vectors as centroids (deterministic stand-in for a trained
-      codebook, the ivf_centroids doctrine — querying is identical,
-      only centroid quality differs);
-    - ``token_cells/``: every vocabulary token's nearest cell
-      (tie-break cell_id) — O(vocab) rows;
-    - ``doc_cells/``: DISTINCT (cell_id, doc_id), PARTITIONED BY
-      cell_id — probe-time cell pruning is parquet partition pruning,
-      and at 100 TB this table is <= n_cells rows per doc while the
-      corpus text is never touched by a probe.
+    - centroids: n_cells rows (cell_id, ctok, cv) — the first n_cells
+      vocabulary tokens by (md5(tok), tok), their normalized vectors as
+      centroids (deterministic stand-in for a trained codebook, the
+      ivf_centroids doctrine — querying is identical, only centroid
+      quality differs);
+    - token_cells: every vocabulary token's nearest cell (tie-break
+      cell_id) — O(vocab) rows;
+    - doc_cells: DISTINCT (cell_id, doc_id), one conflict domain per
+      cell_id — probe-time cell pruning is log-level file pruning, and
+      at 100 TB this table is <= n_cells rows per doc while the corpus
+      text is never touched by a probe.
 
     Vocabulary extraction is one distinct over exploded tokens
     (vocab << corpus); assignment is a broadcast of the n_cells
@@ -491,64 +468,35 @@ def token_ivf_build(
         "cell_id int, ctok string, cv array<double>",
     )
     asg = _assign_tokens(vocab, cents)
-    os.makedirs(path, exist_ok=True)
-    if use_tlog:
-        # TRANSACTIONAL layout: centroids + token_cells + doc_cells as
-        # ONE atomic init commit (the artifact-tlog doctrine; every
-        # later mutation is a commit with cell-id conflict domains)
-        from cnc_visionsearch_spark.sources.tlog import TLog
-
-        t = TLog(path)
-        if t.latest_version() != 0:
-            raise ValueError(
-                f"token_ivf_build: tlog layout {path} already holds "
-                f"{t.latest_version()} commit(s); wipe to rebuild"
-            )
-        adds = _retag(
-            t.write_data(cents.coalesce(1)), TLOG_TIVF_CENTROIDS_TAG
+    t = TLog(path)
+    if t.latest_version() != 0:
+        raise ValueError(
+            f"token_ivf_build: layout {path} already holds "
+            f"{t.latest_version()} commit(s); wipe to rebuild"
         )
-        asg_written = t.write_data(asg)
-        asg_df = spark.read.parquet(
-            *[os.path.join(path, a["path"]) for a in asg_written]
-        )
-        adds += _retag(asg_written, TLOG_TIVF_TOKENS_TAG)
-        doc_cells = (
-            toks.join(F.broadcast(asg_df), "tok")
-            .select("cell_id", "doc_id")
-            .distinct()
-        )
-        adds += t.write_data(doc_cells, bucket_expr=F.col("cell_id"))
-        t.commit(
-            adds=adds,
-            op="append",
-            meta={"kind": "token_ivf", "n_cells": n_cells, "dim": LI_DIM},
-            base_version=0,
-        )
-    else:
-        cents.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "centroids")
-        )
-        asg.write.mode("overwrite").parquet(os.path.join(path, "token_cells"))
-        doc_cells = (
-            toks.join(
-                F.broadcast(
-                    spark.read.parquet(os.path.join(path, "token_cells"))
-                ),
-                "tok",
-            )
-            .select("cell_id", "doc_id")
-            .distinct()
-        )
-        # one file per cell (r12, guide §6): the distinct's 32-way
-        # shuffle otherwise fans every cell across ~32 writer tasks
-        # (~25 files/cell measured at bench sf), and every pruned probe
-        # re-opens all of them; keyed repartition collapses the layout
-        # — the same fix measured on the NSW/HNSW graph builds
-        # (0.70-0.74x search ratios) and what the tlog write_data path
-        # already does.
-        doc_cells.repartition(F.col("cell_id")).write.mode(
-            "overwrite"
-        ).partitionBy("cell_id").parquet(os.path.join(path, "doc_cells"))
+    adds = retag(t.write_data(cents.coalesce(1)), TLOG_TIVF_CENTROIDS_TAG)
+    # freeze the assignment by reading back the written files: doc_cells
+    # must join the same token -> cell rows the layout records
+    asg_written = t.write_data(asg)
+    asg_df = spark.read.parquet(
+        *[os.path.join(path, a["path"]) for a in asg_written]
+    )
+    adds += retag(asg_written, TLOG_TIVF_TOKENS_TAG)
+    doc_cells = (
+        toks.join(F.broadcast(asg_df), "tok")
+        .select("cell_id", "doc_id")
+        .distinct()
+    )
+    # write_data's keyed repartition lands each cell in ONE file: a
+    # pruned probe re-opens every file of its cells (the distinct's
+    # shuffle would otherwise fan each cell across ~32 writer tasks)
+    adds += t.write_data(doc_cells, bucket_expr=F.col("cell_id"))
+    t.commit(
+        adds=adds,
+        op="append",
+        meta={"kind": "token_ivf", "n_cells": n_cells, "dim": LI_DIM},
+        base_version=0,
+    )
     # atomic sidecar (tmp + os.replace — the operators/ann._write_
     # geometry doctrine): a crash mid-write can never leave a corrupt
     # sidecar inside an otherwise-valid layout. Probes VALIDATE it
@@ -571,11 +519,14 @@ def token_ivf_append(docs_new: DataFrame, path: str) -> None:
       ``_assign_tokens`` pure function the build used, against the
       centroids read back from the layout (bounded) — a token already
       in the vocabulary lands on its existing cell by construction;
-    - unseen tokens append to ``token_cells`` (left_anti against the
+    - unseen tokens append to token_cells (left_anti against the
       resident vocabulary — O(new vocab) work);
     - the new docs' (cell_id, doc_id) rows append as new files into
-      their ``doc_cells`` partitions — existing files byte-untouched,
-      probes see the union at unchanged plan shape.
+      their doc_cells domains — existing files byte-untouched, probes
+      see the union at unchanged plan shape.
+
+    All of it lands as ONE blind append commit — never blocked by a
+    racing vacuum.
 
     O(batch) end to end: the resident corpus is never re-tokenized.
     A rebuild over the grown corpus MAY pick different centroids
@@ -584,55 +535,30 @@ def token_ivf_append(docs_new: DataFrame, path: str) -> None:
     the registered probe's oracle replays exactly that."""
     validate_token_ivf_geometry(path)
     spark = docs_new.sparkSession
-    t = _tivf_tlog(path)
+    t = open_layout(path)
     cents = _read_centroids_df(spark, path)
     toks = doc_distinct_tokens(docs_new)
     vocab_new = toks.select("tok").distinct().withColumn(
         "_nv", li_token_nvec("tok")
     )
     asg_new = _assign_tokens(vocab_new, cents)
-    if t is not None:
-        # ONE blind append commit: unseen-vocabulary rows + the new
-        # docs' (cell, doc) rows — never blocked by a racing vacuum
-        snap = t.snapshot()
-        resident = _tlog_read_tags(
-            spark, t, snap, [TLOG_TIVF_TOKENS_TAG]
-        ).select("tok")
-        adds = _retag(
-            t.write_data(asg_new.join(resident, "tok", "left_anti")),
-            TLOG_TIVF_TOKENS_TAG,
-        )
-        adds += t.write_data(
-            toks.join(F.broadcast(asg_new), "tok")
-            .select("cell_id", "doc_id")
-            .distinct(),
-            bucket_expr=F.col("cell_id"),
-        )
-        t.commit(adds=adds, op="append")
-        return
-    resident = spark.read.parquet(
-        os.path.join(path, "token_cells")
-    ).select("tok")
-    asg_new.join(resident, "tok", "left_anti").write.mode("append").parquet(
-        os.path.join(path, "token_cells")
+    resident = read_token_cells(spark, path).select("tok")
+    adds = retag(
+        t.write_data(asg_new.join(resident, "tok", "left_anti")),
+        TLOG_TIVF_TOKENS_TAG,
     )
-    (
+    adds += t.write_data(
         toks.join(F.broadcast(asg_new), "tok")
         .select("cell_id", "doc_id")
-        .distinct()
-        .write.mode("append")
-        .partitionBy("cell_id")
-        .parquet(os.path.join(path, "doc_cells"))
+        .distinct(),
+        bucket_expr=F.col("cell_id"),
     )
+    t.commit(adds=adds, op="append")
 
 
 def _read_centroids_df(spark: SparkSession, path: str) -> DataFrame:
-    t = _tivf_tlog(path)
-    if t is None:
-        return spark.read.parquet(os.path.join(path, "centroids"))
-    return _tlog_read_tags(
-        spark, t, t.snapshot(), [TLOG_TIVF_CENTROIDS_TAG]
-    )
+    t = open_layout(path)
+    return read_tags(spark, t, t.snapshot(), [TLOG_TIVF_CENTROIDS_TAG])
 
 
 def _collect_centroids(spark: SparkSession, path: str) -> list[tuple]:
@@ -821,10 +747,10 @@ def maxsim_multi_probe(
             # subtree the construction barrier executes)
             # r12 (guide §2.4): count(*) replaces count_distinct(term)
             # — `matched` rows are (qid, term, doc_id)-unique (above;
-            # pinned on both layouts and after an append by
-            # tests/test_maxsim.py::test_postings_unique_per_term_and_doc
-            # — a replayed append on a legacy layout, which has no txn
-            # idempotence, would break it), so the counts are EQUAL,
+            # pinned after build and after an append by
+            # tests/test_maxsim.py::test_postings_unique_per_term_and_doc;
+            # a replayed append commits nothing under its txn key, so
+            # replays cannot duplicate postings), so the counts are EQUAL,
             # and the distinct-aggregate's extra dedup exchange
             # disappears from the candidate subtree (plan: 2 Exchange
             # -> 1 in the barrier's first job; interleaved A/B 3

@@ -34,6 +34,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.functions.vector import fixed_point_q, l2_sq
+from cnc_visionsearch_spark.operators.ann import (
+    TLOG_RQ_CODES_STRIDE,
+    TLOG_RQ_MODEL_L1_TAG,
+    TLOG_RQ_MODEL_L2_TAG,
+    _family,
+)
+from cnc_visionsearch_spark.sources.tlog import TLog, open_layout, read_tags, retag
 
 
 def _cb_df(spark, cb_rows, k: int):
@@ -123,54 +130,24 @@ def rq_train(
 
 
 def read_rq_codebooks(spark, path: str) -> "tuple[DataFrame, DataFrame]":
-    """(cb1, cb2) across both layout modes — legacy dirs or the tlog
-    snapshot's model-tagged files."""
-    from cnc_visionsearch_spark.operators.ann import (
-        TLOG_RQ_MODEL_L1_TAG,
-        TLOG_RQ_MODEL_L2_TAG,
-        _ivf_tlog,
-        _tlog_read_tags,
-    )
-
-    t = _ivf_tlog(path)
-    if t is None:
-        return (
-            spark.read.parquet(f"{path}/rq_codebook_l1"),
-            spark.read.parquet(f"{path}/rq_codebook_l2"),
-        )
+    """(cb1, cb2): the snapshot's model-tagged files."""
+    t = open_layout(path)
     snap = t.snapshot()
     return (
-        _tlog_read_tags(spark, t, snap, [TLOG_RQ_MODEL_L1_TAG]),
-        _tlog_read_tags(spark, t, snap, [TLOG_RQ_MODEL_L2_TAG]),
+        read_tags(spark, t, snap, [TLOG_RQ_MODEL_L1_TAG]),
+        read_tags(spark, t, snap, [TLOG_RQ_MODEL_L2_TAG]),
     )
 
 
 def read_rq_codes(spark, path: str, c1s=None) -> DataFrame:
-    """The (id, c1, c2) code table across both layout modes; ``c1s``
-    prunes at the LOG level on transactional layouts (legacy layouts
-    keep the caller's c1 partition filter)."""
-    from cnc_visionsearch_spark.operators.ann import (
-        TLOG_RQ_CODES_STRIDE,
-        TLOG_TAG_STRIDE_GAP,
-        _ivf_tlog,
-        _tlog_read_tags,
-    )
-
-    t = _ivf_tlog(path)
-    if t is None:
-        return spark.read.parquet(f"{path}/rq_codes")
+    """The (id, c1, c2) code table; ``c1s`` prunes at the LOG level
+    (only those coarse cells' files enter the scan)."""
+    t = open_layout(path)
     snap = t.snapshot()
     if c1s is None:
-        c1s = sorted(
-            b - TLOG_RQ_CODES_STRIDE
-            for _p, b in snap.files
-            if b is not None
-            and TLOG_RQ_CODES_STRIDE
-            <= b
-            < TLOG_RQ_CODES_STRIDE + TLOG_TAG_STRIDE_GAP
-        )
+        c1s = _family(snap, TLOG_RQ_CODES_STRIDE)
     id_col = snap.meta.get("id_col", "vec_id")
-    return _tlog_read_tags(
+    return read_tags(
         spark,
         t,
         snap,
@@ -189,65 +166,39 @@ def rq_build(
     id_col: str = "vec_id",
     vec_col: str = "nvec",
 ) -> None:
-    """Persist the RQ layout into an artifact dir: ``rq_codebook_l1``,
-    ``rq_codebook_l2`` (the model — k1+k2 rows) and ``rq_codes``
-    PARTITIONED BY c1 (the coarse cell), so probes partition-prune to
-    the probed cells exactly like the IVF tiers.
+    """Persist the RQ layout into the log at ``path`` (typically an
+    :func:`~cnc_visionsearch_spark.operators.ann.ivf_build` layout's;
+    a fresh path starts a log of its own): the model (k1+k2 rows) under
+    its reserved tags and the codes under per-c1 (coarse cell) stride
+    domains, so probes prune to the probed cells at the log level
+    exactly like the IVF tiers.
 
-    On a TRANSACTIONAL layout (r11) models + codes land as ONE rewrite
-    commit: models under their reserved tags, codes under per-c1
-    stride domains, any previous RQ artifacts removed in the same
-    commit. The training input is the caller's ``emb`` (outside the
-    log), so the commit declares only the RQ domains it replaces."""
-    from cnc_visionsearch_spark.operators.ann import (
-        TLOG_RQ_CODES_STRIDE,
-        TLOG_RQ_MODEL_L1_TAG,
-        TLOG_RQ_MODEL_L2_TAG,
-        TLOG_TAG_STRIDE_GAP,
-        _ivf_tlog,
-        _retag,
-    )
-
+    Models + codes land as ONE rewrite commit, any previous RQ
+    artifacts removed in the same commit. The training input is the
+    caller's ``emb`` (outside the log), so the commit declares only the
+    RQ domains it replaces."""
     cb1, cb2, codes = rq_train(
         emb, k1=k1, k2=k2, iters=iters, id_col=id_col, vec_col=vec_col
     )
-    t = _ivf_tlog(path)
-    if t is not None:
-        snap = t.snapshot()
-        adds = _retag(t.write_data(cb1.coalesce(1)), TLOG_RQ_MODEL_L1_TAG)
-        adds += _retag(t.write_data(cb2.coalesce(1)), TLOG_RQ_MODEL_L2_TAG)
-        adds += t.write_data(
-            codes,
-            bucket_expr=(F.lit(TLOG_RQ_CODES_STRIDE) + F.col("c1")).cast(
-                "int"
-            ),
-        )
-        old_tags = [
-            b
-            for _p, b in snap.files
-            if b is not None
-            and (
-                b in (TLOG_RQ_MODEL_L1_TAG, TLOG_RQ_MODEL_L2_TAG)
-                or TLOG_RQ_CODES_STRIDE
-                <= b
-                < TLOG_RQ_CODES_STRIDE + TLOG_TAG_STRIDE_GAP
-            )
-        ]
-        new_tags = sorted(
-            {a["bucket"] for a in adds} | set(old_tags)
-        )
-        t.commit(
-            adds=adds,
-            removes=snap.files_in(sorted(set(old_tags))),
-            read_version=snap.version,
-            op="rewrite",
-            domains=new_tags,
-        )
-        return
-    cb1.write.mode("overwrite").parquet(f"{path}/rq_codebook_l1")
-    cb2.write.mode("overwrite").parquet(f"{path}/rq_codebook_l2")
-    codes.write.mode("overwrite").partitionBy("c1").parquet(
-        f"{path}/rq_codes"
+    t = TLog(path)  # a build may start a layout of its own
+    snap = t.snapshot()
+    adds = retag(t.write_data(cb1.coalesce(1)), TLOG_RQ_MODEL_L1_TAG)
+    adds += retag(t.write_data(cb2.coalesce(1)), TLOG_RQ_MODEL_L2_TAG)
+    adds += t.write_data(
+        codes,
+        bucket_expr=(F.lit(TLOG_RQ_CODES_STRIDE) + F.col("c1")).cast("int"),
+    )
+    old_tags = [
+        b
+        for _p, b in snap.files
+        if b in (TLOG_RQ_MODEL_L1_TAG, TLOG_RQ_MODEL_L2_TAG)
+    ] + [TLOG_RQ_CODES_STRIDE + c for c in _family(snap, TLOG_RQ_CODES_STRIDE)]
+    t.commit(
+        adds=adds,
+        removes=snap.files_in(sorted(set(old_tags))),
+        read_version=snap.version,
+        op="rewrite",
+        domains=sorted({a["bucket"] for a in adds} | set(old_tags)),
     )
 
 
@@ -392,16 +343,11 @@ def rq_append(
     codebooks — the same incremental contract as ivf_append /
     pq_trained_append: new vectors are coded with the persisted
     level-1 and level-2 models (never retrained), their (c1, c2) rows
-    land in the touched c1 partitions, resident files stay
-    byte-identical. Codebook drift accumulates in reconstruction
-    error, repaired by re-running rq_build as periodic maintenance.
-    Transactional layouts commit the batch's codes as ONE blind
-    append under their c1 stride domains."""
-    from cnc_visionsearch_spark.operators.ann import (
-        TLOG_RQ_CODES_STRIDE,
-        _ivf_tlog,
-    )
-
+    land as ONE blind append commit under their c1 stride domains,
+    resident files stay byte-identical. Codebook drift accumulates in
+    reconstruction error, repaired by re-running rq_build as periodic
+    maintenance."""
+    t = open_layout(path)
     cb1, cb2 = read_rq_codebooks(spark, path)
     a1 = argmin_code(batch, cb1, vec_col, id_col).withColumnRenamed(
         "code", "c1"
@@ -421,15 +367,9 @@ def rq_append(
     out = res.select(id_col, "c1").join(a2, id_col).select(
         id_col, "c1", "c2"
     )
-    t = _ivf_tlog(path)
-    if t is not None:
-        t.commit(
-            adds=t.write_data(
-                out,
-                bucket_expr=(
-                    F.lit(TLOG_RQ_CODES_STRIDE) + F.col("c1")
-                ).cast("int"),
-            )
+    t.commit(
+        adds=t.write_data(
+            out,
+            bucket_expr=(F.lit(TLOG_RQ_CODES_STRIDE) + F.col("c1")).cast("int"),
         )
-        return
-    out.write.mode("append").partitionBy("c1").parquet(f"{path}/rq_codes")
+    )

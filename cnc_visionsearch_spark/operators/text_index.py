@@ -2,17 +2,18 @@
 probes — the lexical twin of the ANN tiers' "derived layout, probed by
 partition pruning" design (SURVEY §4).
 
-Layout: ``{path}/postings`` with one row per (term, doc) —
-``(term, doc_id, tf, positions)`` where positions are the 1-based
-whitespace-token offsets — PARTITIONED BY ``bucket`` = the portable
-31-bit md5 hash of the term (operators/dedup._base_hash, the same hash
-family the MinHash tier uses) mod ``n_buckets``. A query touches only
-its terms' buckets: term lookup is partition pruning, and at 100 TB a
-phrase query reads |terms|/n_buckets of the postings instead of
-scanning the corpus. Positions in the row make phrase adjacency a
-per-row array intersection — no second corpus pass, no shuffle.
+Layout: a transaction log (sources/tlog.py) whose postings hold one row
+per (term, doc) — ``(term, doc_id, tf, positions)`` where positions are
+the 1-based whitespace-token offsets — in one conflict domain per
+``bucket`` = the portable 31-bit md5 hash of the term
+(operators/dedup._base_hash, the same hash family the MinHash tier uses)
+mod ``n_buckets``. A query touches only its terms' buckets: term lookup
+is log-level file pruning, and at 100 TB a phrase query reads
+|terms|/n_buckets of the postings instead of scanning the corpus.
+Positions in the row make phrase adjacency a per-row array
+intersection — no second corpus pass, no shuffle.
 
-``{path}/doclens`` is the layout's norms table — one (doc_id, dl) row
+The doclens subtable is the layout's norms table — one (doc_id, dl) row
 per document, dl = whitespace token count. It is what lets RANKED
 probes (BM25, :func:`bm25_probe`) run without ever touching the
 corpus: tf and df come from the pruned postings buckets, dl from this
@@ -21,13 +22,9 @@ inverted index (Lucene norms, Tantivy fieldnorms) keeps exactly this
 side table; it is ~1/avg_dl the size of the postings and appends are
 per-document facts, so :func:`inverted_append` extends it O(batch).
 
-TRANSACTIONAL MODE (r8 verdict #1): ``inverted_build(..,
-use_tlog=True)`` puts the layout under the sources/tlog commit
-protocol — the tmp+rename convention's documented gap ("no conflict
-detection between DIFFERENT mutations of one artifact",
-SCALE.md table-format stance) closes for this artifact. Every
-mutation is one atomic commit; conflict DOMAINS are the postings'
-term-hash buckets plus two reserved tags (doclens, tombstones), so:
+Every mutation is one atomic commit; conflict DOMAINS are the
+postings' term-hash buckets plus two reserved tags (doclens,
+tombstones), so:
 
 - appends (new docs) and deletes (tombstones) are BLIND commits —
   never blocked, never lost;
@@ -39,21 +36,23 @@ term-hash buckets plus two reserved tags (doclens, tombstones), so:
   sees a torn mix of pre- and post-vacuum files.
 
 Every probe reads through :func:`read_postings`/:func:`read_doclens`
-(the ONLY sanctioned readers), which dispatch on the layout's
-``_tlog/`` dir — legacy directories keep byte-identical behavior, and
-probe results are mode-invariant by construction (same rows either
-way).
+(the ONLY sanctioned readers), which resolve the snapshot's live files.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.operators.dedup import _MERSENNE31, _base_hash
+from cnc_visionsearch_spark.sources.tlog import (
+    TLog,
+    open_layout,
+    read_tags,
+    retag,
+)
 
 __all__ = [
     "inverted_build",
@@ -86,26 +85,8 @@ TLOG_DOCLENS_TAG = 10_000
 TLOG_TOMBS_TAG = 10_001
 
 
-def _tlog_of(path: str):
-    """The layout's TLog handle when it is a transactional layout
-    (``{path}/_tlog`` exists), else None — the mode dispatch every
-    lifecycle function and reader shares."""
-    from cnc_visionsearch_spark.sources.tlog import tlog_of
-
-    return tlog_of(path)
-
-
-def _retag(adds: list[dict], tag: int) -> list[dict]:
-    """Stamp untagged add-actions with a reserved domain tag (the
-    bucket field is the log's conflict/pruning tag — for single-domain
-    subtables it is a constant, not a data column)."""
-    for a in adds:
-        a["bucket"] = tag
-    return adds
-
-
 def inverted_build(
-    docs: DataFrame, path: str, n_buckets: int = 16, use_tlog: bool = False
+    docs: DataFrame, path: str, n_buckets: int = 16, use_tlog: bool = True
 ) -> None:
     """Materialize the postings layout: posexplode the whitespace
     tokens (the corpus tokenization convention shared with every text
@@ -114,22 +95,19 @@ def inverted_build(
     (term, doc_id) — the shuffle carries positions, never text.
 
     Also writes the ``doclens`` norms table (doc_id, dl) — shuffle-free
-    (a per-row projection of the same scan).
+    (a per-row projection of the same scan). Both subtables + the
+    layout geometry (commit meta) land as ONE atomic init commit; every
+    later mutation goes through the commit protocol. Refuses a
+    non-empty log (the tlog_init_id_mapping doctrine: a second init
+    would append a duplicate full index).
 
-    ``use_tlog=True`` builds the TRANSACTIONAL layout (module
-    docstring): same rows, one atomic init commit carrying both
-    subtables + the layout geometry in commit meta; every later
-    mutation goes through the commit protocol. Refuses a non-empty
-    log (the tlog_init_id_mapping doctrine: a second init would append
-    a duplicate full index)."""
-    if not use_tlog:
-        _postings(docs, n_buckets).write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(f"{path}/postings")
-        _doclens(docs).write.mode("overwrite").parquet(f"{path}/doclens")
-        return
-    from cnc_visionsearch_spark.sources.tlog import TLog
-
+    ``use_tlog`` is accepted for callers written when a directory
+    format existed; only ``True`` (the log) is valid."""
+    if use_tlog is not True:
+        raise ValueError(
+            "inverted_build: the transaction log is the only layout "
+            f"format; use_tlog={use_tlog!r} is not supported"
+        )
     t = TLog(path)
     if t.latest_version() != 0:
         raise ValueError(
@@ -137,15 +115,14 @@ def inverted_build(
             f"{t.latest_version()} commit(s); wipe to rebuild"
         )
     adds = t.write_data(
-        # bucket stays a DATA column (int, matching the legacy
-        # partition-inferred type) — probes filter it identically in
-        # both modes; the log's per-file tag replays it for pruning
+        # bucket stays an int DATA column — probes filter on it; the
+        # log's per-file tag replays it for pruning
         _postings(docs, n_buckets).withColumn(
             "bucket", F.col("bucket").cast("int")
         ),
         bucket_expr=F.col("bucket"),
     )
-    adds += _retag(t.write_data(_doclens(docs)), TLOG_DOCLENS_TAG)
+    adds += retag(t.write_data(_doclens(docs)), TLOG_DOCLENS_TAG)
     t.commit(
         adds=adds,
         op="append",
@@ -188,27 +165,13 @@ def inverted_append(
     files stay byte-identical, and probes see the new documents at the
     same pruned cost. O(batch), never a corpus rescan.
 
-    On a transactional layout the batch lands as ONE blind append
-    commit (postings adds tagged by bucket + the doclens add) — never
-    blocked by a racing vacuum/compact, which instead detects the new
-    files and recomputes. ``txn`` (app id, batch seq — tlog layouts
-    only) makes an at-least-once replay commit NOTHING: exactly-once
-    index ingest in the TABLE's protocol (the tlog_upsert_stream
-    doctrine extended to a derived artifact)."""
-    t = _tlog_of(path)
-    if t is None:
-        if txn is not None:
-            raise ValueError(
-                "inverted_append: txn idempotence requires a "
-                "transactional layout (inverted_build(use_tlog=True)) "
-                "— a legacy layout would silently double-append on "
-                "replay"
-            )
-        _postings(docs, n_buckets).write.mode("append").partitionBy(
-            "bucket"
-        ).parquet(f"{path}/postings")
-        _doclens(docs).write.mode("append").parquet(f"{path}/doclens")
-        return
+    The batch lands as ONE blind append commit (postings adds tagged by
+    bucket + the doclens add) — never blocked by a racing
+    vacuum/compact, which instead detects the new files and recomputes.
+    ``txn`` (app id, batch seq) makes an at-least-once replay commit
+    NOTHING: exactly-once index ingest in the TABLE's protocol (the
+    tlog_upsert_stream doctrine extended to a derived artifact)."""
+    t = open_layout(path)
     n_buckets = int(t.snapshot().meta["n_buckets"])
     adds = t.write_data(
         _postings(docs, n_buckets).withColumn(
@@ -216,7 +179,7 @@ def inverted_append(
         ),
         bucket_expr=F.col("bucket"),
     )
-    adds += _retag(t.write_data(_doclens(docs)), TLOG_DOCLENS_TAG)
+    adds += retag(t.write_data(_doclens(docs)), TLOG_DOCLENS_TAG)
     t.commit(adds=adds, op="append", txn=txn)
 
 
@@ -229,95 +192,54 @@ def inverted_delete(spark, path: str, doc_ids: list[int]) -> None:
     which anti-join the broadcast-small tombstone set — deleted
     documents disappear from hits, tf/df, and the N/avgdl norms
     immediately, resident postings files stay byte-identical.
-    O(batch); physical removal rides :func:`inverted_vacuum`.
-    Transactional layouts commit the tombstone file as a blind append
-    under the reserved tombstone domain tag."""
+    O(batch); physical removal rides :func:`inverted_vacuum`. The
+    tombstone file commits as a blind append under the reserved
+    tombstone domain tag."""
+    t = open_layout(path)
     df = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id bigint")
-    t = _tlog_of(path)
-    if t is None:
-        df.write.mode("append").parquet(f"{path}/tombstones")
-        return
-    adds = _retag(t.write_data(df), TLOG_TOMBS_TAG)
-    t.commit(adds=adds, op="append")
+    t.commit(adds=retag(t.write_data(df), TLOG_TOMBS_TAG), op="append")
 
 
-def _tlog_read(spark, t, snap, tags, schema=None) -> DataFrame | None:
-    """DataFrame over the snapshot files whose domain tag is in
-    ``tags`` (None when the snapshot holds none and no schema given)."""
-    paths = snap.files_in(tags)
-    if not paths:
-        if schema is None:
-            return None
-        return spark.createDataFrame([], schema)
-    full = [os.path.join(t.root, p) for p in paths]
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.parquet(*full)
-
-
-def _without_deleted(spark, path: str, df: DataFrame, snap=None) -> DataFrame:
-    """Anti-join the layout's tombstones (broadcast — deletes are
-    batch-scale). No-op when the layout has none, so delete-free
-    layouts keep their exact plan shape. ``snap``: a transactional
-    layout's snapshot (tombstones come from its reserved tag, so the
-    filter sees exactly the version the caller planned against)."""
-    if snap is not None:
-        t = _tlog_of(path)
-        tf = _tlog_read(spark, t, snap, [TLOG_TOMBS_TAG])
-        if tf is None:
-            return df
-        return df.join(
-            F.broadcast(tf.select("doc_id").distinct()), "doc_id", "left_anti"
-        )
-    if not os.path.exists(f"{path}/tombstones"):
+def _without_deleted(spark, t, snap, df: DataFrame) -> DataFrame:
+    """Anti-join the snapshot's tombstones (broadcast — deletes are
+    batch-scale; they come from the reserved tag of the SAME snapshot,
+    so the filter sees exactly the version the caller planned against).
+    No-op when the layout has none, so delete-free layouts keep their
+    exact plan shape."""
+    tf = read_tags(spark, t, snap, [TLOG_TOMBS_TAG])
+    if tf is None:
         return df
-    tombs = (
-        spark.read.parquet(f"{path}/tombstones").select("doc_id").distinct()
+    return df.join(
+        F.broadcast(tf.select("doc_id").distinct()), "doc_id", "left_anti"
     )
-    return df.join(F.broadcast(tombs), "doc_id", "left_anti")
 
 
 def read_postings(spark, path: str, buckets=None) -> DataFrame:
     """The ONLY sanctioned way to read the postings — applies the
     tombstone filter so no probe path can resurrect deleted documents
-    (the ANN tiers' read-through-the-filter doctrine). Dispatches on
-    the layout mode: transactional layouts read one SNAPSHOT (postings
-    files = tags < the reserved range), legacy layouts read the
-    directory.
+    (the ANN tiers' read-through-the-filter doctrine). Reads one
+    SNAPSHOT (postings files = tags below the reserved range).
 
-    ``buckets`` (optional, a probe's term-bucket list): on a
-    transactional layout it prunes at the LOG level — only those
-    buckets' files enter the scan, no directory listing, no footer
-    reads for pruned buckets (legacy layouts get the same effect from
-    the caller's partition-pruning ``bucket`` filter, which callers
-    apply in both modes)."""
-    t = _tlog_of(path)
-    if t is None:
-        return _without_deleted(
-            spark, path, spark.read.parquet(f"{path}/postings")
-        )
+    ``buckets`` (optional, a probe's term-bucket list) prunes at the
+    LOG level — only those buckets' files enter the scan, no directory
+    listing, no footer reads for pruned buckets."""
+    t = open_layout(path)
     snap = t.snapshot()
     tags = (
         sorted(buckets)
         if buckets is not None
         else list(range(int(snap.meta["n_buckets"])))
     )
-    posts = _tlog_read(spark, t, snap, tags)
-    return _without_deleted(spark, path, posts, snap=snap)
+    return _without_deleted(spark, t, snap, read_tags(spark, t, snap, tags))
 
 
 def read_doclens(spark, path: str) -> DataFrame:
     """Tombstone-aware reader for the doclens norms table: deleted
     documents leave N and avgdl as if they were never indexed."""
-    t = _tlog_of(path)
-    if t is None:
-        return _without_deleted(
-            spark, path, spark.read.parquet(f"{path}/doclens")
-        )
+    t = open_layout(path)
     snap = t.snapshot()
-    dl = _tlog_read(spark, t, snap, [TLOG_DOCLENS_TAG])
-    return _without_deleted(spark, path, dl, snap=snap)
+    dl = read_tags(spark, t, snap, [TLOG_DOCLENS_TAG])
+    return _without_deleted(spark, t, snap, dl)
 
 
 def phrase_probe(
@@ -562,119 +484,34 @@ def bm25_multi_probe(
     )
 
 
-def _swap_in(live: str) -> None:
-    """Crash-safe directory swap (compact_layout's order — see
-    sources/formats.py:120): live -> ``.bak``, tmp -> live, drop
-    ``.bak``. A ``rmtree(live); rename(tmp, live)`` order loses the
-    partition forever if the process dies between the two calls; with
-    this order every crash window leaves either the old or the new
-    layout plus a recoverable sibling."""
-    import shutil
-
-    tmp = live + ".vacuum_tmp"
-    bak = live + ".vacuum_bak"
-    os.rename(live, bak)
-    os.rename(tmp, live)
-    shutil.rmtree(bak)
-
-
-def _heal_swaps(root: str) -> None:
-    """Self-heal leftovers of a crashed ``_swap_in`` under ``root``:
-    a ``.vacuum_bak`` with no live path (death between the renames) is
-    restored; a ``.vacuum_bak``/``.vacuum_tmp`` beside a live path
-    (death before or after the swap) is discarded."""
-    import shutil
-
-    if not os.path.isdir(root):
-        return
-    for name in os.listdir(root):
-        full = os.path.join(root, name)
-        if name.endswith(".vacuum_bak"):
-            live = full[: -len(".vacuum_bak")]
-            if not os.path.exists(live):
-                os.rename(full, live)
-            else:
-                shutil.rmtree(full)
-        elif name.endswith(".vacuum_tmp"):
-            shutil.rmtree(full)
-
-
 def inverted_vacuum(spark, path: str) -> None:
     """Apply accumulated tombstones physically — the text-index twin
-    of ann.ivf_vacuum: rewrite ONLY the postings bucket partitions
-    that contain tombstoned docs (a document's terms spread across
-    buckets, so the touched set is wider than the vector tiers' — the
-    cost a vacuum SCHEDULE amortizes), rewrite the small doclens norms
-    table wholesale, then drop the tombstone dir. Results are
-    unchanged by construction (the read_postings/read_doclens
-    anti-join already hid the rows); tombstone-free probe plans are
-    restored. Untouched bucket partitions keep their files
-    byte-identical. Each rewritten dir is swapped in crash-safely
-    (``_swap_in``) and entry self-heals any earlier crash
-    (``_heal_swaps``).
+    of ann.ivf_vacuum — as ONE rewrite commit that (a) rewrites only
+    the postings buckets holding tombstoned docs (a document's terms
+    spread across buckets, so the touched set is wider than the vector
+    tiers' — the cost a vacuum SCHEDULE amortizes), (b) rewrites the
+    doclens norms table, (c) drops every tombstone file. Results are
+    unchanged by construction (the read_postings/read_doclens anti-join
+    already hid the rows); tombstone-free probe plans are restored, and
+    untouched buckets keep their files.
 
-    On a TRANSACTIONAL layout the whole vacuum is one rewrite commit
-    declaring the touched buckets + the doclens and tombstone domains:
-    a racing append/delete raises :class:`TLogConflictError` (wrap in
-    ``run_transaction`` to retry against the new snapshot), appends
-    are never blocked, and readers see either the whole vacuum or none
-    of it — the crash-safe swap machinery is unnecessary there because
-    data files are immutable and the commit is the atom."""
-    import shutil
-
-    t = _tlog_of(path)
-    if t is not None:
-        _inverted_vacuum_tlog(spark, t)
-        return
-    _heal_swaps(f"{path}/postings")
-    _heal_swaps(path)
-    tdir = f"{path}/tombstones"
-    if not os.path.exists(tdir):
-        return
-    tombs = spark.read.parquet(tdir).select("doc_id").distinct()
-    posts = spark.read.parquet(f"{path}/postings")
-    touched = [
-        r[0]
-        for r in posts.join(F.broadcast(tombs), "doc_id")
-        .select("bucket")
-        .distinct()
-        .collect()
-    ]
-    for bv in touched:
-        part = f"{path}/postings/bucket={bv}"
-        if not os.path.exists(part):
-            continue
-        kept = spark.read.parquet(part).join(
-            F.broadcast(tombs), "doc_id", "left_anti"
-        )
-        kept.write.mode("overwrite").parquet(part + ".vacuum_tmp")
-        _swap_in(part)
-    kept_dl = spark.read.parquet(f"{path}/doclens").join(
-        F.broadcast(tombs), "doc_id", "left_anti"
-    )
-    kept_dl.write.mode("overwrite").parquet(f"{path}/doclens.vacuum_tmp")
-    _swap_in(f"{path}/doclens")
-    shutil.rmtree(tdir)
-
-
-def _inverted_vacuum_tlog(spark, t) -> None:
-    """Transactional vacuum: ONE rewrite commit that (a) rewrites only
-    the postings buckets holding tombstoned docs, (b) rewrites the
-    doclens norms table, (c) drops every tombstone file. Conflict
-    domains = the touched buckets + the two reserved tags, so a racing
-    append into an UNtouched bucket... also conflicts via the doclens
-    tag — the honest arbitration: every append extends doclens, whose
-    rewrite this vacuum owns; the loser is always the vacuum
-    (run_transaction recomputes), never the append."""
+    Conflict domains = the touched buckets + the doclens and tombstone
+    tags: a racing append/delete raises :class:`TLogConflictError`
+    (wrap in ``run_transaction`` to retry against the new snapshot) —
+    every append extends doclens, whose rewrite this vacuum owns, so
+    the loser is always the vacuum, never the append. Readers see
+    either the whole vacuum or none of it: data files are immutable
+    and the commit is the atom."""
+    t = open_layout(path)
     snap = t.snapshot()
     tomb_files = snap.files_in([TLOG_TOMBS_TAG])
     if not tomb_files:
         return
     n_buckets = int(snap.meta["n_buckets"])
-    tombs = _tlog_read(spark, t, snap, [TLOG_TOMBS_TAG]).select(
+    tombs = read_tags(spark, t, snap, [TLOG_TOMBS_TAG]).select(
         "doc_id"
     ).distinct()
-    posts = _tlog_read(spark, t, snap, list(range(n_buckets)))
+    posts = read_tags(spark, t, snap, list(range(n_buckets)))
     touched = sorted(
         r[0]
         for r in posts.join(F.broadcast(tombs), "doc_id")
@@ -684,13 +521,13 @@ def _inverted_vacuum_tlog(spark, t) -> None:
     )  # bounded: <= n_buckets
     adds = []
     if touched:
-        kept = _tlog_read(spark, t, snap, touched).join(
+        kept = read_tags(spark, t, snap, touched).join(
             F.broadcast(tombs), "doc_id", "left_anti"
         )
         adds += t.write_data(kept, bucket_expr=F.col("bucket"))
-    dl = _tlog_read(spark, t, snap, [TLOG_DOCLENS_TAG])
+    dl = read_tags(spark, t, snap, [TLOG_DOCLENS_TAG])
     kept_dl = dl.join(F.broadcast(tombs), "doc_id", "left_anti")
-    adds += _retag(t.write_data(kept_dl), TLOG_DOCLENS_TAG)
+    adds += retag(t.write_data(kept_dl), TLOG_DOCLENS_TAG)
     removes = (
         snap.files_in(touched if touched else [])
         + snap.files_in([TLOG_DOCLENS_TAG])
@@ -708,15 +545,11 @@ def _inverted_vacuum_tlog(spark, t) -> None:
 
 
 def inverted_compact(spark, path: str) -> None:
-    """Settle a transactional layout's accreted files: rewrite every
-    bucket that holds more than one file into one file, plus the
-    doclens table — the maintenance.compact_layout twin expressed as a
-    tlog rewrite (a racing append conflicts the compaction, never the
-    reverse). No-op on a single-file-per-bucket layout and on legacy
-    layouts (maintenance.py's compact_layout already covers those)."""
-    t = _tlog_of(path)
-    if t is None:
-        return
+    """Settle the layout's accreted files: rewrite every bucket that
+    holds more than one file into one file, plus the doclens table, as
+    ONE rewrite commit (a racing append conflicts the compaction, never
+    the reverse). No-op on a single-file-per-bucket layout."""
+    t = open_layout(path)
     snap = t.snapshot()
     n_buckets = int(snap.meta["n_buckets"])
     by_tag: dict[int, list[str]] = {}
@@ -732,12 +565,12 @@ def inverted_compact(spark, path: str) -> None:
     if multi:
         # write_data's repartition("_tb") already lands each bucket's
         # rows in one task -> one file per bucket
-        kept = _tlog_read(spark, t, snap, multi)
+        kept = read_tags(spark, t, snap, multi)
         adds += t.write_data(kept, bucket_expr=F.col("bucket"))
         removes += snap.files_in(multi)
     if dl_multi:
-        dl = _tlog_read(spark, t, snap, [TLOG_DOCLENS_TAG]).coalesce(1)
-        adds += _retag(t.write_data(dl), TLOG_DOCLENS_TAG)
+        dl = read_tags(spark, t, snap, [TLOG_DOCLENS_TAG]).coalesce(1)
+        adds += retag(t.write_data(dl), TLOG_DOCLENS_TAG)
         removes += snap.files_in([TLOG_DOCLENS_TAG])
     t.commit(
         adds=adds,

@@ -11,9 +11,14 @@ import collections as _collections
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cnc_visionsearch_spark.operators.ann import (
+    read_cells,
+    read_shards,
+)
 from cnc_visionsearch_spark.memo import LRU, file_fingerprint
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
+from cnc_visionsearch_spark.sources.tlog import layout_built
 
 # ---------------------------------------------------------------------------
 # sweep-line interval concurrency
@@ -612,23 +617,17 @@ def ensure_inverted_built(spark: SparkSession, sf_dir: str) -> str:
     from cnc_visionsearch_spark.operators.text_index import inverted_build
     from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
 
-    # v3 (r9): the SERVING layout is now TRANSACTIONAL (tlog mode) —
-    # probe results are mode-invariant by construction (the
-    # read_postings/read_doclens seams serve both modes, test-pinned),
-    # so every registered text query exercises the committed-snapshot
-    # read path and the index is maintainable by concurrent jobs with
-    # defined conflict semantics. The version suffix retires the
-    # legacy v2 dir.
+    # v3: the serving layout is a transaction log, so every registered
+    # text query exercises the committed-snapshot read path and the
+    # index is maintainable by concurrent jobs with defined conflict
+    # semantics.
     path = (
         f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
         f"/inverted_b{_INV_BUCKETS}v3"
     )
-    if not os.path.exists(os.path.join(path, "_BUILT")):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)  # partial tlog builds
+    if not layout_built(os.path.join(path, "_BUILT")):
         docs = load_table(spark, sf_dir, "documents")
-        inverted_build(docs, path, n_buckets=_INV_BUCKETS, use_tlog=True)
+        inverted_build(docs, path, n_buckets=_INV_BUCKETS)
         open(os.path.join(path, "_BUILT"), "w").close()
     return path
 
@@ -1974,12 +1973,9 @@ def ensure_inverted_deleted_layout(spark: SparkSession, sf_dir: str) -> str:
         f"/inverted_del_b{_INV_BUCKETS}v3"
     )
     marker = os.path.join(path, "_DELETED")
-    if not os.path.exists(marker):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)  # partial tlog builds
+    if not layout_built(marker):
         docs = load_table(spark, sf_dir, "documents")
-        inverted_build(docs, path, n_buckets=_INV_BUCKETS, use_tlog=True)
+        inverted_build(docs, path, n_buckets=_INV_BUCKETS)
         ids = [
             r.doc_id
             for r in docs.filter(
@@ -2661,24 +2657,26 @@ _KCORE_ROUNDS = 4
 def _kcore_oracle(k: int, rounds: int) -> str:
     """k-core peel as unrolled CTE rounds from the SAME constants the
     engine loop uses (the iterative-driver oracle pattern): per round,
-    drop nodes of degree < k and restrict edges to survivors."""
+    drop nodes of degree < k and restrict edges to survivors. Every
+    CTE read more than once is MATERIALIZED — inlined, each round
+    re-derives all earlier rounds several times over."""
     parts = [
         """
-lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-e AS (
+lp AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+e AS MATERIALIZED (
   SELECT a.l_partkey AS a, b.l_partkey AS b
   FROM lp a JOIN lp b
     ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
   GROUP BY 1, 2 HAVING count(*) >= 2
 ),
-d0 AS (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e)"""
+d0 AS MATERIALIZED (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e)"""
     ]
     for i in range(1, rounds + 1):
         parts.append(
             f""",
 deg{i} AS (SELECT a AS node, count(*) AS deg FROM d{i - 1} GROUP BY a),
-keep{i} AS (SELECT node FROM deg{i} WHERE deg >= {k}),
-d{i} AS (
+keep{i} AS MATERIALIZED (SELECT node FROM deg{i} WHERE deg >= {k}),
+d{i} AS MATERIALIZED (
   SELECT d.a, d.b FROM d{i - 1} d
   JOIN keep{i} ka ON d.a = ka.node
   JOIN keep{i} kb ON d.b = kb.node
@@ -2791,7 +2789,13 @@ def ensure_forget_layouts(spark: SparkSession, sf_dir: str) -> tuple[str, str, s
 
     root = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/forget"
     p_ivf, p_sh, p_inv = f"{root}/ivf", f"{root}/shards", f"{root}/inverted"
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    # the marker sits in the IVF layout (built first); a rebuild wipes
+    # the whole root so no stale sibling layout survives
+    marker = os.path.join(p_ivf, "_FORGOTTEN")
+    if not layout_built(marker):
+        import shutil
+
+        shutil.rmtree(root, ignore_errors=True)
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         ivf_build(emb, p_ivf, n_cells=8)
         shard_build(emb, p_sh, num_shards=4)
@@ -2813,7 +2817,7 @@ def ensure_forget_layouts(spark: SparkSession, sf_dir: str) -> tuple[str, str, s
             shard_paths=(p_sh,),
             inverted_paths=(p_inv,),
         )
-        open(os.path.join(root, "_BUILT"), "w").close()
+        open(marker, "w").close()
     return p_ivf, p_sh, p_inv
 
 
@@ -2896,7 +2900,7 @@ def forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = []
     # IVF: live census + full-coverage probe (top-1 past the self-match)
     ivf_live = _without_tombstones(
-        spark, p_ivf, spark.read.parquet(f"{p_ivf}/cells"), "vec_id"
+        spark, p_ivf, read_cells(spark, p_ivf), "vec_id"
     ).count()
     r = (
         ivf_probe(spark, p_ivf, q, k=2, nprobe=100)
@@ -2907,7 +2911,7 @@ def forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.append(("ivf", int(ivf_live), int(r["vec_id"]), float(r["distance"])))
     # sharded: same audit through the persisted-shard probe
     sh_live = _without_tombstones(
-        spark, p_sh, spark.read.parquet(f"{p_sh}/shards"), "vec_id"
+        spark, p_sh, read_shards(spark, p_sh), "vec_id"
     ).count()
     r = (
         sharded_topk_persisted(spark, p_sh, q, k=2)

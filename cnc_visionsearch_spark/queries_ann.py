@@ -14,6 +14,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.operators.ann import (
+    read_cells,
+    read_codebook,
+    read_pq_codes,
+)
+from cnc_visionsearch_spark.operators.ann import (
     hyperplane_signature,
     hyperplanes,
     ivf_assign,
@@ -29,6 +34,7 @@ from cnc_visionsearch_spark.memo import file_fingerprint
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
+from cnc_visionsearch_spark.sources.tlog import layout_built
 
 _DIM = 64  # fixture embedding dimension (FIXTURES.md)
 _N_PLANES = 6
@@ -65,7 +71,7 @@ def ensure_ivf_built(spark: SparkSession, sf_dir: str, n_cells: int = 8) -> str:
     layout once per (corpus content, n_cells); return the artifact
     path."""
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/ivf_c{n_cells}"
-    if not os.path.exists(os.path.join(path, "_BUILT")):
+    if not layout_built(os.path.join(path, "_BUILT")):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         ivf_build(emb, path, n_cells=n_cells)
         open(os.path.join(path, "_BUILT"), "w").close()
@@ -77,7 +83,7 @@ def ensure_shards_built(
 ) -> str:
     """Idempotent shard-layout build for the sharded-index tier."""
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/shards_s{num_shards}"
-    if not os.path.exists(os.path.join(path, "_BUILT")):
+    if not layout_built(os.path.join(path, "_BUILT")):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         shard_build(emb, path, num_shards=num_shards)
         open(os.path.join(path, "_BUILT"), "w").close()
@@ -411,12 +417,11 @@ def ann_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_ivf_built(spark, sf_dir, n_cells=8)
     q = _norm_query_vec(spark, sf_dir, 3)
     qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    probed = ivf_probe_cells(spark, path, q, nprobe=4)
     cells = _without_tombstones(
         spark,
         path,
-        spark.read.parquet(f"{path}/cells").filter(
-            F.col("cell_id").isin(ivf_probe_cells(spark, path, q, nprobe=4))
-        ),
+        read_cells(spark, path, probed).filter(F.col("cell_id").isin(probed)),
         "vec_id",
     )
     staged = cells.select("vec_id", "nvec", int8_dequant("nvec").alias("rv"))
@@ -572,9 +577,9 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Tombstone filter keeps deletes coherent across EVERY probe path of
     # a layout (no-op plan change on delete-free layouts).
     path = ensure_pq_built(spark, sf_dir)
-    cb = pq_codebook(spark.read.parquet(f"{path}/codebook"), m=_PQ_M)
+    cb = pq_codebook(read_codebook(spark, path), m=_PQ_M)
     codes = _without_tombstones(
-        spark, path, spark.read.parquet(f"{path}/pq_codes"), "vec_id"
+        spark, path, read_pq_codes(spark, path), "vec_id"
     )
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     q = _norm_query_vec(spark, sf_dir, 7)
@@ -718,17 +723,17 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = _without_tombstones(
         spark,
         path,
-        spark.read.parquet(f"{path}/cells").filter(F.col("cell_id").isin(probed)),
+        read_cells(spark, path, probed).filter(F.col("cell_id").isin(probed)),
         "vec_id",
     )
-    cb = pq_codebook(spark.read.parquet(f"{path}/codebook"), m=8)
+    cb = pq_codebook(read_codebook(spark, path), m=8)
     # the ADC scan reads the PERSISTED cell-partitioned code table with
     # the same partition filter — m bytes/vector, no raw vectors until
     # the re-score (tombstone-filtered like every probe path)
     codes = _without_tombstones(
         spark,
         path,
-        spark.read.parquet(f"{path}/pq_codes").filter(
+        read_pq_codes(spark, path, probed).filter(
             F.col("cell_id").isin(probed)
         ),
         "vec_id",

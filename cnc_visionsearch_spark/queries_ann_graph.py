@@ -19,7 +19,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cnc_visionsearch_spark.operators.graph_ann import nsw_build, nsw_search_df
+from cnc_visionsearch_spark.operators.graph_ann import (
+    nsw_build,
+    nsw_search_df,
+    read_hnsw_graph,
+    read_nsw_graph,
+)
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.queries_ann import (
     _ARTIFACT_ROOT,
@@ -30,6 +35,7 @@ from cnc_visionsearch_spark.queries_ann import (
 )
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
+from cnc_visionsearch_spark.sources.tlog import layout_built
 
 # Defaults chosen from the measured sweep (RECALL.json nsw_ef_sweep):
 # m=12/ef=24/hops=6 reaches recall@10 = 1.0 (mean AND min) on the sf0.1
@@ -46,7 +52,7 @@ def ensure_nsw_built(spark: SparkSession, sf_dir: str, m: int = _M) -> str:
     """Idempotent NSW build: graph + entries artifacts once per
     (corpus content, m); returns the layout path."""
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/nsw_m{m}"
-    if not os.path.exists(os.path.join(path, "_BUILT")):
+    if not layout_built(os.path.join(path, "_BUILT")):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings")).select(
             "vec_id", "nvec"
         )
@@ -61,7 +67,7 @@ pairs AS (
     {_L2SQ.format(a="a.nvec", b="b.nvec")} AS gd
   FROM normed a, normed b WHERE a.vec_id <> b.vec_id
 ),
-graph AS (
+graph AS MATERIALIZED (
   SELECT src, dst, dvec FROM (
     SELECT src, dst, dvec,
       ROW_NUMBER() OVER (PARTITION BY src ORDER BY gd ASC, dst ASC) AS rn
@@ -72,10 +78,13 @@ graph AS (
 
 
 def _beam_ctes(hops: int, ef: int) -> str:
-    """Unrolled beam-search CTE chain b0 -> c1/b1 -> ... -> b{hops}."""
+    """Unrolled beam-search CTE chain b0 -> c1/b1 -> ... -> b{hops}.
+    Each beam is read twice by the next hop, so it is MATERIALIZED: an
+    inlined chain doubles per hop and re-derives the exact graph each
+    time (out of memory past a few hops)."""
     parts = [
         f"""
-b0 AS (
+b0 AS MATERIALIZED (
   SELECT vec_id AS id, {_L2SQ.format(a="nvec", b="qvec")} AS d
   FROM normed, q
   WHERE vec_id IN (SELECT vec_id FROM normed ORDER BY vec_id LIMIT {_ENTRIES})
@@ -90,7 +99,7 @@ c{i} AS (
   SELECT g.dst AS id, {_L2SQ.format(a="g.dvec", b="qvec")} AS d
   FROM graph g, q WHERE g.src IN (SELECT id FROM b{i - 1})
 ),
-b{i} AS (SELECT id, d FROM c{i} ORDER BY d ASC, id ASC LIMIT {ef})"""
+b{i} AS MATERIALIZED (SELECT id, d FROM c{i} ORDER BY d ASC, id ASC LIMIT {ef})"""
         )
     return ",".join(parts)
 
@@ -111,7 +120,7 @@ FROM graph GROUP BY src ORDER BY src LIMIT 50
 def ann_nsw_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_nsw_built(spark, sf_dir)
     return (
-        spark.read.parquet(f"{path}/graph")
+        read_nsw_graph(spark, path)
         .groupBy(F.col("src").cast("bigint").alias("src"))
         .agg(F.count(F.lit(1)).alias("degree"))
         .orderBy("src")
@@ -152,20 +161,17 @@ def ensure_tlog_nsw_built(spark: SparkSession, sf_dir: str) -> str:
     commit under the optimistic loop. The final graph CONTENT equals a
     one-shot build by construction (same pure edge function, disjoint
     halves), so the beam-search oracle replays the whole lifecycle."""
-    import shutil
 
     from cnc_visionsearch_spark.operators.graph_ann import (
         TLOG_NSW_ENTRIES_TAG,
-        _retag_g,
         nsw_candidate_edges,
         nsw_compact,
     )
-    from cnc_visionsearch_spark.sources.tlog import TLog, run_transaction
+    from cnc_visionsearch_spark.sources.tlog import TLog, retag, run_transaction
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/nsw_tlog_m{_M}"
     marker = os.path.join(path, "_HISTORY")
-    if not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
+    if not layout_built(marker):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings")).select(
             "vec_id", "nvec"
         )
@@ -196,7 +202,7 @@ def ensure_tlog_nsw_built(spark: SparkSession, sf_dir: str) -> str:
             edges.filter(F.col("dst") % 2 == 0),
             bucket_expr=F.col("src_bucket"),
         )
-        adds += _retag_g(t.write_data(entries), TLOG_NSW_ENTRIES_TAG)
+        adds += retag(t.write_data(entries), TLOG_NSW_ENTRIES_TAG)
         t.commit(
             adds=adds,
             op="append",
@@ -244,7 +250,7 @@ FROM b{_HOPS} ORDER BY distance ASC, vec_id ASC LIMIT 10
     "log-level file pruning instead of directory listings. The oracle "
     "is the SAME unrolled beam replay as ann_nsw_beam_topk — a hash "
     "match proves split-commit + compact + snapshot reads reproduce "
-    "the legacy layout's ranking bit-for-bit.",
+    "the one-shot build's ranking bit-for-bit.",
 )
 def tlog_nsw_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_tlog_nsw_built(spark, sf_dir)
@@ -267,7 +273,7 @@ def ensure_hnsw_built(spark: SparkSession, sf_dir: str) -> str:
     from cnc_visionsearch_spark.operators.graph_ann import hnsw_build
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/hnsw_m{_M}"
-    if not os.path.exists(os.path.join(path, "_BUILT")):
+    if not layout_built(os.path.join(path, "_BUILT")):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings")).select(
             "vec_id", "nvec"
         )
@@ -389,13 +395,13 @@ SELECT {l}, CAST(count(DISTINCT src) AS BIGINT),
     "HNSW's geometric level draw, reference main.py:60 IndexHNSWFlat); "
     "layer 0 is the flat NSW top-m graph, each upper layer the "
     f"top-{_M_UPPER} graph over its surviving nodes, all in ONE table "
-    "partitioned by (layer, src_bucket). Hash-matching the oracle's "
+    "split by (layer, src_bucket). Hash-matching the oracle's "
     "per-layer ranked pair joins pins membership AND adjacency of "
     "every layer.",
 )
 def ann_hnsw_layer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_hnsw_built(spark, sf_dir)
-    g = spark.read.parquet(f"{path}/graph")
+    g = read_hnsw_graph(spark, path)
     out = None
     for l in range(0, _MAX_LEVEL + 1):
         cen = g.filter(F.col("layer") == l).agg(
@@ -486,7 +492,6 @@ def ensure_tlog_hnsw_built(spark: SparkSession, sf_dir: str) -> str:
     accreted-history shape a compact exists for), then ONE hnsw_compact
     rewrite commit under the optimistic loop. Final graph CONTENT
     equals a one-shot build by construction."""
-    import shutil
 
     from cnc_visionsearch_spark.operators.graph_ann import (
         hnsw_build,
@@ -496,8 +501,7 @@ def ensure_tlog_hnsw_built(spark: SparkSession, sf_dir: str) -> str:
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/hnsw_tlog_m{_M}"
     marker = os.path.join(path, "_HISTORY")
-    if not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
+    if not layout_built(marker):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings")).select(
             "vec_id", "nvec"
         )
@@ -508,7 +512,6 @@ def ensure_tlog_hnsw_built(spark: SparkSession, sf_dir: str) -> str:
             m_upper=_M_UPPER,
             level_mult=_LEVEL_MULT,
             max_level=_MAX_LEVEL,
-            use_tlog=True,
         )
         _fragment_tlog_hnsw(spark, path)
         run_transaction(lambda: hnsw_compact(spark, path))
@@ -538,15 +541,14 @@ FROM b{_HOPS} ORDER BY distance ASC, vec_id ASC LIMIT 10
     "instead of a swapped directory — entry promotion is a "
     "read-modify-write "
     "meta-key commit, so racing promotions serialize through the "
-    "base_version rebase window (the arbitration the legacy swap "
-    "lacked; promotion + racing interleaves test-pinned in tests/"
+    "base_version rebase window (promotion + racing interleaves test-pinned in tests/"
     "test_tlog_artifacts.py) — then hnsw_compact rewrites every "
     "multi-file domain as ONE commit. Reads (entry from snapshot "
     "meta, per-hop (layer, bucket) scans via log-level file pruning) "
     "replace directory listings at the same plan shape. The oracle is "
     "the SAME unrolled hierarchy replay as ann_hnsw_descend_topk — a "
     "hash match proves split-commit + meta entry + compact + snapshot "
-    "reads reproduce the legacy ranking bit-for-bit.",
+    "reads reproduce the one-shot build's ranking bit-for-bit.",
 )
 def tlog_hnsw_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.graph_ann import hnsw_search_df

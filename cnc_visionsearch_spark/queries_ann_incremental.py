@@ -21,6 +21,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.operators.ann import (
+    _codebook_rows,
+    read_cells,
+    read_codebook,
+    read_pq_codes,
+    read_shards,
+)
+from cnc_visionsearch_spark.operators.ann import (
     ivf_append,
     ivf_build,
     ivf_probe,
@@ -42,6 +49,7 @@ from cnc_visionsearch_spark.queries_ann import (
 )
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
+from cnc_visionsearch_spark.sources.tlog import layout_built
 
 # The base/append split: layouts build over vec_id < _SPLIT, then the
 # remaining vectors arrive as an append batch (fixtures carry 500
@@ -85,7 +93,7 @@ def ensure_appended_layout(
     regeneration rebuilds."""
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/ivf_append_c{n_cells}"
     marker = os.path.join(path, f"_APPENDED_m{_PQ_M}")
-    if not os.path.exists(marker):
+    if not layout_built(marker):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         base = emb.filter(F.col("vec_id") < _SPLIT)
         rest = emb.filter(F.col("vec_id") >= _SPLIT)
@@ -103,7 +111,7 @@ def ensure_appended_shards(
     """Idempotent shard_build(base) + shard_append(rest) lifecycle."""
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/shards_append_s{num_shards}"
     marker = os.path.join(path, "_APPENDED")
-    if not os.path.exists(marker):
+    if not layout_built(marker):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         shard_build(emb.filter(F.col("vec_id") < _SPLIT), path, num_shards=num_shards)
         shard_append(spark, path, emb.filter(F.col("vec_id") >= _SPLIT))
@@ -160,7 +168,7 @@ FROM codes GROUP BY sub_j, code
 )
 def ann_pq_append_code_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_appended_layout(spark, sf_dir, n_cells=8)
-    codes = spark.read.parquet(f"{path}/pq_codes")
+    codes = read_pq_codes(spark, path)
     return codes.groupBy("sub_j", "code").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.min("vec_id").alias("sample_id"),
@@ -256,8 +264,8 @@ def ann_pq_wide_codebook_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_pq_built(spark, sf_dir, n_cells=_KSTAR)
     q = _norm_query_vec(spark, sf_dir, 13)
     qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
-    cb = pq_codebook(spark.read.parquet(f"{path}/codebook"), m=_PQ_M)
-    codes = spark.read.parquet(f"{path}/pq_codes")
+    cb = pq_codebook(read_codebook(spark, path), m=_PQ_M)
+    codes = read_pq_codes(spark, path)
     w = len(q) // _PQ_M
     qd = cb.select(
         "sub_j",
@@ -293,7 +301,7 @@ def ensure_deleted_layout(spark: SparkSession, sf_dir: str, n_cells: int = 8) ->
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/ivf_delete_c{n_cells}"
     marker = os.path.join(path, "_DELETED")
-    if not os.path.exists(marker):
+    if not layout_built(marker):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         ivf_build(emb, path, n_cells=n_cells)
         ivf_delete(spark, path, _DELETED_IDS)
@@ -395,7 +403,7 @@ def ann_ivf_cell_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = ensure_ivf_built(spark, sf_dir, n_cells=8)
     per_cell = (
-        spark.read.parquet(f"{path}/cells")
+        read_cells(spark, path)
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -423,7 +431,7 @@ def ensure_deleted_shards(
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/shards_delete_s{num_shards}"
     marker = os.path.join(path, "_DELETED")
-    if not os.path.exists(marker):
+    if not layout_built(marker):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         shard_build(emb, path, num_shards=num_shards)
         shard_delete(spark, path, _SHARD_DELETED)
@@ -595,9 +603,9 @@ def ann_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_ivf_built(spark, sf_dir, n_cells=8)
     q = _norm_query_vec(spark, sf_dir, 5)
     qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
-    cells = spark.read.parquet(f"{path}/cells").filter(
-        F.col("cell_id").isin(ivf_probe_cells(spark, path, q, nprobe=4))
-        & (F.col("label") == 3)
+    probed = ivf_probe_cells(spark, path, q, nprobe=4)
+    cells = read_cells(spark, path, probed).filter(
+        F.col("cell_id").isin(probed) & (F.col("label") == 3)
     )
     return (
         cells.select("vec_id", "label", l2_sq("nvec", qcol).alias("distance"))
@@ -646,9 +654,10 @@ def ann_ivf_grouped_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_ivf_built(spark, sf_dir, n_cells=8)
     q = _norm_query_vec(spark, sf_dir, 5)
     qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    probed = ivf_probe_cells(spark, path, q, nprobe=4)
     scored = (
-        spark.read.parquet(f"{path}/cells")
-        .filter(F.col("cell_id").isin(ivf_probe_cells(spark, path, q, nprobe=4)))
+        read_cells(spark, path, probed)
+        .filter(F.col("cell_id").isin(probed))
         .select("vec_id", "label", l2_sq("nvec", qcol).alias("distance"))
     )
     w = Window.partitionBy("label").orderBy(
@@ -725,7 +734,7 @@ def ensure_ivf_rebalanced(spark: SparkSession, sf_dir: str) -> str:
     from cnc_visionsearch_spark.operators.ann import ivf_rebalance
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/ivf_rebal_c8"
-    if not os.path.exists(os.path.join(path, "_BUILT")):
+    if not layout_built(os.path.join(path, "_BUILT")):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         ivf_build(emb, path, n_cells=8)
         ivf_rebalance(spark, path, max_splits=1, min_factor=0.0)
@@ -791,7 +800,7 @@ FROM final GROUP BY cell_id ORDER BY cell_id
 def ann_ivf_rebalance_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_ivf_rebalanced(spark, sf_dir)
     return (
-        spark.read.parquet(f"{path}/cells")
+        read_cells(spark, path)
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
         .select(
@@ -1102,7 +1111,7 @@ def ann_ivf_exact_pruned_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = ensure_ivf_built(spark, sf_dir)
     q = _norm_query_vec(spark, sf_dir, _XP_QID)
-    n_total = spark.read.parquet(f"{path}/codebook").count()  # metadata
+    n_total = read_codebook(spark, path).count()  # metadata
     rows = []
     for k in (1, _XP_K):
         top, scanned = ivf_exact_pruned_search(spark, path, q, k=k)
@@ -1152,19 +1161,19 @@ ORDER BY nprobe
     "integer division of exact counts — hash-stable by construction.",
 )
 def ann_ivf_nprobe_cost_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.operators.ann import _metadata_rows, _seq_l2_sq
+    from cnc_visionsearch_spark.operators.ann import _seq_l2_sq
     from cnc_visionsearch_spark.queries_ann import ensure_ivf_built
 
     path = ensure_ivf_built(spark, sf_dir)
     q = _norm_query_vec(spark, sf_dir, _XP_QID)
     census = {
         int(r["cell_id"]): int(r["n"])
-        for r in spark.read.parquet(f"{path}/cells")
+        for r in read_cells(spark, path)
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }  # one row per cell — planner state, like the probe-cell list
-    cents = _metadata_rows(f"{path}/codebook")
+    cents = _codebook_rows(path)
     order = sorted(
         (_seq_l2_sq(c["centroid"], q), int(c["cell_id"])) for c in cents
     )
@@ -1218,7 +1227,7 @@ def ann_shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = ensure_shards_built(spark, sf_dir, num_shards=8)
     census = (
-        spark.read.parquet(f"{path}/shards")
+        read_shards(spark, path)
         .groupBy("shard")
         .agg(F.count(F.lit(1)).alias("n"))
     )

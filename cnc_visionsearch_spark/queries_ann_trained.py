@@ -30,6 +30,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cnc_visionsearch_spark.operators.ann import (
+    read_cells,
+    read_pq_codes,
+    read_pq_trained_codebook,
+)
 from cnc_visionsearch_spark.functions.vector import (
     FIXED_POINT_SQL,
     fixed_point_q,
@@ -46,6 +51,7 @@ from cnc_visionsearch_spark.queries_ann import (
 )
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
+from cnc_visionsearch_spark.sources.tlog import layout_built
 
 _M = 16  # subspaces (width 4 at dim=64): finer than the stride tier's 8
 _KSTAR = 128  # codewords per subspace
@@ -191,9 +197,9 @@ def ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.ann import _without_tombstones
 
     path = ensure_pq_trained_built(spark, sf_dir)
-    cb = spark.read.parquet(f"{path}/pq_trained_codebook")
+    cb = read_pq_trained_codebook(spark, path)
     codes = _without_tombstones(
-        spark, path, spark.read.parquet(f"{path}/pq_trained_codes"), "vec_id"
+        spark, path, read_pq_codes(spark, path, trained=True), "vec_id"
     )
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     q = _norm_query_vec(spark, sf_dir, 11)
@@ -268,7 +274,7 @@ def ann_pq_trained_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_pq_trained_built(spark, sf_dir)
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     subs = pq_subvectors(emb, _M)
-    trained_cb = spark.read.parquet(f"{path}/pq_trained_codebook")
+    trained_cb = read_pq_trained_codebook(spark, path)
     # init codebook reconstructed EXACTLY like the oracle's cb0: stride
     # s from the full-corpus max id, membership additionally filtered
     # to the ts training sample — ivf_centroids(emb, ...) alone would
@@ -335,7 +341,7 @@ def ensure_pq_trained_appended(spark: SparkSession, sf_dir: str) -> str:
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/ivf_trained_app"
     marker = os.path.join(path, f"_BUILT_m{_M}_k{_KSTAR}_t{_ITERS}")
-    if not os.path.exists(marker):
+    if not layout_built(marker):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         head = emb.filter(F.col("vec_id") < _APPEND_SPLIT)
         tail = emb.filter(F.col("vec_id") >= _APPEND_SPLIT)
@@ -372,7 +378,7 @@ def ann_pq_trained_append_histogram(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     path = ensure_pq_trained_appended(spark, sf_dir)
-    codes = spark.read.parquet(f"{path}/pq_trained_codes")
+    codes = read_pq_codes(spark, path, trained=True)
     return codes.groupBy("sub_j", "code").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.min("vec_id").alias("sample_id"),
@@ -431,7 +437,7 @@ def ensure_ivf_trained_built(spark: SparkSession, sf_dir: str) -> str:
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/ivf_trained_c8_t{_ITERS}"
     marker = os.path.join(path, "_BUILT")
-    if not os.path.exists(marker):
+    if not layout_built(marker):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         rows = pq_train_codebook(emb, m=1, k_star=8, iters=_ITERS)
         cents = spark.createDataFrame(
@@ -544,11 +550,11 @@ def ann_ivf_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _norm_query_vec(spark, sf_dir, 21)
     qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
     probed = ivf_probe_cells(spark, path, q, nprobe=DEFAULT_NPROBE)
-    cb = spark.read.parquet(f"{path}/pq_trained_codebook")
+    cb = read_pq_trained_codebook(spark, path)
     codes = _without_tombstones(
         spark,
         path,
-        spark.read.parquet(f"{path}/pq_trained_codes").filter(
+        read_pq_codes(spark, path, probed, trained=True).filter(
             F.col("cell_id").isin(probed)
         ),
         "vec_id",
@@ -570,7 +576,7 @@ def ann_ivf_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = _without_tombstones(
         spark,
         path,
-        spark.read.parquet(f"{path}/cells").filter(F.col("cell_id").isin(probed)),
+        read_cells(spark, path, probed).filter(F.col("cell_id").isin(probed)),
         "vec_id",
     )
     return (
@@ -636,9 +642,9 @@ def ann_pq_trained_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.ann import _without_tombstones
 
     path = ensure_pq_trained_built(spark, sf_dir)
-    cb = spark.read.parquet(f"{path}/pq_trained_codebook")
+    cb = read_pq_trained_codebook(spark, path)
     codes = _without_tombstones(
-        spark, path, spark.read.parquet(f"{path}/pq_trained_codes"), "vec_id"
+        spark, path, read_pq_codes(spark, path, trained=True), "vec_id"
     )
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 4).select(

@@ -2223,7 +2223,7 @@ seq0 AS (
   FROM events
 ),
 j AS (SELECT * FROM seq0 WHERE COALESCE(prior_purchases, 0) = 0),
-s AS (
+s AS MATERIALIZED (
   SELECT user_id, event_type,
     ROW_NUMBER() OVER w AS rn,
     LEAD(event_type) OVER w AS nxt
@@ -2238,10 +2238,10 @@ trans0 AS (
   SELECT event_type, 'DROP' FROM s
   WHERE nxt IS NULL AND event_type <> 'purchase'
 ),
-trans AS (
+trans AS MATERIALIZED (
   SELECT src, dst, CAST(count(*) AS BIGINT) AS n FROM trans0 GROUP BY 1, 2
 ),
-tot AS (
+tot AS MATERIALIZED (
   SELECT src, CAST(SUM(n) AS BIGINT) AS row_total FROM trans GROUP BY 1
 )"""
 
@@ -2250,7 +2250,9 @@ def _attr_chain_sql(tag: str, removed: str | None, iters: int) -> str:
     """One absorption power-iteration chain as generated CTEs — exact
     integer arithmetic (1e-9 probability units, one floor division per
     (state, iteration)), the oracle-replay contract of
-    part_pagerank_power_iter."""
+    part_pagerank_power_iter. The shared journey CTEs (s, trans, tot)
+    feed every step of five chains, so they and the steps are
+    MATERIALIZED rather than re-derived inline."""
     removed_case = (
         f"WHEN t.dst = '{removed}' THEN 0 " if removed is not None else ""
     )
@@ -2260,7 +2262,7 @@ def _attr_chain_sql(tag: str, removed: str | None, iters: int) -> str:
     for i in range(1, iters + 1):
         parts.append(
             f""",
-{tag}_{i} AS (
+{tag}_{i} AS MATERIALIZED (
   SELECT t.src AS node,
     CAST(SUM(t.n * (CASE {removed_case}WHEN t.dst = 'purchase' THEN {_ATTR_SCALE}
                          WHEN t.dst = 'DROP' THEN 0

@@ -27,6 +27,7 @@ from cnc_visionsearch_spark.functions.vector import fixed_point_q, l2_sq
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
+from cnc_visionsearch_spark.sources.tlog import layout_built
 
 # Fixed lexical query (fixture vocabulary, FIXTURES.md) and the
 # standard BM25 knobs.
@@ -1548,7 +1549,7 @@ def ensure_token_ivf_built(spark: SparkSession, sf_dir: str) -> str:
         f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
         f"/token_ivf_c{TOKEN_IVF_CELLS}d{_LI_DIM}"
     )
-    if not os.path.exists(os.path.join(path, "_BUILT")):
+    if not layout_built(os.path.join(path, "_BUILT")):
         docs = load_table(spark, sf_dir, "documents")
         token_ivf_build(docs, path, n_cells=TOKEN_IVF_CELLS)
         open(os.path.join(path, "_BUILT"), "w").close()
@@ -1881,7 +1882,7 @@ def ensure_token_ivf_appended(spark: SparkSession, sf_dir: str) -> str:
         f"/token_ivf_append_c{TOKEN_IVF_CELLS}d{_LI_DIM}"
     )
     marker = os.path.join(path, "_APPENDED")
-    if not os.path.exists(marker):
+    if not layout_built(marker):
         docs = load_table(spark, sf_dir, "documents")
         token_ivf_build(
             docs.filter(F.col("doc_id") < _TIVF_SPLIT),
@@ -2386,12 +2387,10 @@ _TIVF_DELETED = [2, 150, 420]
 
 
 def ensure_token_ivf_deleted(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent TRANSACTIONAL token-IVF lifecycle: build(base,
-    use_tlog=True) -> append(rest) -> tombstone delete -> vacuum (one
+    """Idempotent TRANSACTIONAL token-IVF lifecycle: build(base) -> append(rest) -> tombstone delete -> vacuum (one
     rewrite commit under the optimistic loop). Its own layout — the
     shared appended fixture is never mutated."""
     import os
-    import shutil
 
     from cnc_visionsearch_spark.operators.maxsim import (
         TOKEN_IVF_CELLS,
@@ -2408,14 +2407,12 @@ def ensure_token_ivf_deleted(spark: SparkSession, sf_dir: str) -> str:
         f"/token_ivf_tlog_del_c{TOKEN_IVF_CELLS}d{_LI_DIM}"
     )
     marker = os.path.join(path, "_HISTORY")
-    if not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
+    if not layout_built(marker):
         docs = load_table(spark, sf_dir, "documents")
         token_ivf_build(
             docs.filter(F.col("doc_id") < _TIVF_SPLIT),
             path,
             n_cells=TOKEN_IVF_CELLS,
-            use_tlog=True,
         )
         token_ivf_append(docs.filter(F.col("doc_id") >= _TIVF_SPLIT), path)
         token_ivf_delete(spark, path, _TIVF_DELETED)

@@ -17,6 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cnc_visionsearch_spark.operators.ann import (
+    read_cells,
+)
 from cnc_visionsearch_spark.functions.text import (
     hex_to_long,
     shingles_from_tokens,
@@ -1253,7 +1256,7 @@ def emb_semdedup_cell_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.queries_ann import ensure_ivf_built
 
     path = ensure_ivf_built(spark, sf_dir)
-    cells = spark.read.parquet(f"{path}/cells").select(
+    cells = read_cells(spark, path).select(
         "cell_id", "vec_id", "nvec"
     )
     left = cells.select(
@@ -1319,7 +1322,7 @@ def emb_semdedup_removed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.queries_ann import ensure_ivf_built
 
     path = ensure_ivf_built(spark, sf_dir)
-    cells = spark.read.parquet(f"{path}/cells").select(
+    cells = read_cells(spark, path).select(
         "cell_id", "vec_id", "nvec"
     )
     left = cells.select(

@@ -1,19 +1,16 @@
 """Derived artifacts under the transaction log (r8 verdict #1): the
-inverted text index, the IVF vector layout, and the banded MinHash
-store each run their FULL mutation lifecycle — build, append, delete,
-vacuum/compact — as tlog commits (sources/tlog.py), closing the
-tmp+rename convention's documented gap ("no conflict detection between
-DIFFERENT mutations of one artifact", SCALE.md table-format stance)
-for the highest-churn derived state outside id_mapping.
+inverted text index, the IVF vector layout, the shard layout and the
+banded MinHash store each run their FULL mutation lifecycle — build,
+append, delete, vacuum/compact — as tlog commits (sources/tlog.py),
+with conflict detection between DIFFERENT mutations of one artifact.
 
 Each query replays a deterministic lifecycle against a DuckDB oracle
 that recomputes the FINAL state from raw tables — a hash match proves
-the committed mutation chain equals a from-scratch build (the same
-append==rebuild / delete==never-indexed contracts the legacy layouts
-pin, now with concurrent-writer arbitration). Reads go through the
-SAME seams every legacy probe uses (read_postings/read_doclens,
-read_cells/read_codebook, read_minhash_store), so probe semantics are
-mode-invariant by construction. Racing-writer serializability is
+the committed mutation chain equals a from-scratch build (the
+append==rebuild / delete==never-indexed contracts, with concurrent-
+writer arbitration). Reads go through the SAME seams every probe uses
+(read_postings/read_doclens, read_cells/read_codebook,
+read_minhash_store). Racing-writer serializability is
 pinned by tests/test_tlog_artifacts.py (append+vacuum per artifact:
 disjoint domains serialize, overlapping ones raise TLogConflictError
 and recompute).
@@ -30,7 +27,6 @@ delete and compaction are separate long-running jobs).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +42,7 @@ from cnc_visionsearch_spark.queries_ann_incremental import _IVF_APPEND_CTE
 from cnc_visionsearch_spark.queries_dedup_ext import _INCR_MINHASH_ORACLE
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
+from cnc_visionsearch_spark.sources.tlog import layout_built
 
 # lifecycle constants — small, prime-ish, spread across both the base
 # and the appended slice so vacuum touches several buckets/cells
@@ -54,23 +51,12 @@ _INV_DELETED = [5, 12, 77, 210, 233]
 _IVF_DELETED = [3, 7, 450]
 
 
-def _wipe_and(marker_path: str):
-    """True when the lifecycle must (re)build: a marker-less dir is a
-    partial build (tlog reruns APPEND, never overwrite — init refuses
-    a non-empty log), so it is wiped first (ensure_tlog_id_mapping
-    doctrine)."""
-    if os.path.exists(marker_path):
-        return False
-    shutil.rmtree(os.path.dirname(marker_path), ignore_errors=True)
-    return True
-
-
 def ensure_tlog_inverted(spark: SparkSession, sf_dir: str) -> str:
     """Transactional inverted index lifecycle: build(docs<200) ->
     append(200-250) -> delete 5 ids -> vacuum (one rewrite commit,
     under the optimistic retry loop) -> compact. Every mutation is one
     atomic tlog commit; probes read through read_postings/read_doclens
-    exactly like legacy layouts."""
+    like every text probe."""
     from cnc_visionsearch_spark.operators.text_index import (
         inverted_append,
         inverted_build,
@@ -85,13 +71,12 @@ def ensure_tlog_inverted(spark: SparkSession, sf_dir: str) -> str:
         "/tlog_inverted_b16_lt250"
     )
     marker = os.path.join(path, "_HISTORY")
-    if _wipe_and(marker):
+    if not layout_built(marker):
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
         inverted_build(
             docs.filter(F.col("doc_id") < 200), path, n_buckets=16,
-            use_tlog=True,
         )
         inverted_append(
             docs.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 250)),
@@ -156,9 +141,8 @@ LIMIT 10
     "vacuum/compact rewrites that conflict against racing mutations "
     "and recompute — Delta's append-wins arbitration, racing tests in "
     "tests/test_tlog_artifacts.py). The SAME bm25_probe that serves "
-    "legacy layouts ranks over the committed snapshot (read_postings/"
-    "read_doclens dispatch on the layout mode — probe results are "
-    "mode-invariant); the oracle recomputes BM25 from the surviving "
+    "every text query ranks over the committed snapshot (read_postings/"
+    "read_doclens); the oracle recomputes BM25 from the surviving "
     "raw text, so a hash match proves the five-commit chain equals a "
     "from-scratch build: no resurrection, no stale norms, no torn "
     "reads.",
@@ -192,11 +176,10 @@ def ensure_tlog_ivf(spark: SparkSession, sf_dir: str) -> str:
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/tlog_ivf_c8"
     marker = os.path.join(path, "_HISTORY")
-    if _wipe_and(marker):
+    if not layout_built(marker):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         ivf_build(
             emb.filter(F.col("vec_id") < _SPLIT), path, n_cells=8,
-            use_tlog=True,
         )
         ivf_append(spark, path, emb.filter(F.col("vec_id") >= _SPLIT))
         ivf_delete(spark, path, _IVF_DELETED)
@@ -229,8 +212,8 @@ LIMIT 10
     "(blind) -> vacuum (a rewrite declaring the touched cell domains: "
     "a racing append into OTHER cells serializes cleanly — the "
     "disjoint-domain case tests/test_tlog_artifacts.py pins). The "
-    "probe is the SAME ivf_probe the legacy layouts use (read_cells/"
-    "read_codebook dispatch; log-tag pruned cell reads). Query vector "
+    "probe is the SAME ivf_probe every IVF query uses (read_cells/"
+    "read_codebook; log-tag pruned cell reads). Query vector "
     "id 3 is ITSELF deleted, so the exact self-match must not "
     "appear; the oracle recomputes frozen-codebook semantics minus "
     "the deleted set from scratch.",
@@ -268,11 +251,11 @@ def ensure_tlog_ivf_pq(spark: SparkSession, sf_dir: str) -> str:
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/tlog_ivf_pq_c8"
     marker = os.path.join(path, "_HISTORY")
-    if _wipe_and(marker):
+    if not layout_built(marker):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         base = emb.filter(F.col("vec_id") < _SPLIT)
         rest = emb.filter(F.col("vec_id") >= _SPLIT)
-        ivf_build(base, path, n_cells=8, use_tlog=True)
+        ivf_build(base, path, n_cells=8)
         run_transaction(lambda: pq_build(spark, path, m=_PQ_M))
         ivf_append(spark, path, rest)
         pq_append(spark, path, rest, m=_PQ_M)
@@ -332,9 +315,8 @@ LIMIT 10
     "appended vectors code-less (pinned in tests/"
     "test_tlog_artifacts.py); appends of vectors and codes are blind "
     "commits under their own domains; the vacuum rewrites the touched "
-    "cell AND pq-code domains in the SAME commit — the legacy "
-    "vacuum's no-resurrection rule, now atomic with the vector "
-    "rewrite. The probe is the same IVF-pruned ADC-then-rescore "
+    "cell AND pq-code domains in the SAME commit — the vacuum's "
+    "no-resurrection rule, atomic with the vector rewrite. The probe is the same IVF-pruned ADC-then-rescore "
     "composition as ann_ivf_pq_topk, reading through read_cells/"
     "read_pq_codes (log-tag pruned). Query id 11 is itself deleted; "
     "the oracle replays frozen-codebook append semantics minus the "
@@ -420,9 +402,9 @@ def ensure_tlog_rq(spark: SparkSession, sf_dir: str) -> str:
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/tlog_rq_k{_RQ_K1}_{_RQ_K2}"
     marker = os.path.join(path, "_HISTORY")
-    if _wipe_and(marker):
+    if not layout_built(marker):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
-        ivf_build(emb, path, n_cells=8, use_tlog=True)
+        ivf_build(emb, path, n_cells=8)
         run_transaction(
             lambda: rq_build(
                 spark, path, emb, k1=_RQ_K1, k2=_RQ_K2, iters=_RQ_ITERS
@@ -526,11 +508,10 @@ def ensure_tlog_shards(spark: SparkSession, sf_dir: str) -> str:
 
     path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/tlog_shards_s8"
     marker = os.path.join(path, "_HISTORY")
-    if _wipe_and(marker):
+    if not layout_built(marker):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         shard_build(
             emb.filter(F.col("vec_id") < _SPLIT), path, num_shards=8,
-            use_tlog=True,
         )
         shard_append(spark, path, emb.filter(F.col("vec_id") >= _SPLIT))
         shard_delete(spark, path, _SHARD_TLOG_DELETED)
@@ -568,8 +549,8 @@ LIMIT 10
     "two-file domain). Racing mutations into disjoint shards "
     "serialize; overlapping ones conflict-and-recompute under "
     "run_transaction (pinned in tests/test_tlog_artifacts.py). The "
-    "probe is the SAME sharded_topk_persisted the legacy layouts use "
-    "(read_shards dispatches to log-tag pruned snapshot reads). Query "
+    "probe is the SAME sharded_topk_persisted every shard query uses "
+    "(read_shards: log-tag pruned snapshot reads). Query "
     "vector id 9 is ITSELF deleted, so the self-match must vanish; "
     "the oracle is the exact top-10 minus the deleted set — a hash "
     "match proves the commit chain equals a from-scratch build.",
@@ -601,7 +582,7 @@ def ensure_tlog_minhash_store(spark: SparkSession, sf_dir: str) -> str:
         "/tlog_minhash_store_b4h16s3_lt250"
     )
     marker = os.path.join(path, "_HISTORY")
-    if _wipe_and(marker):
+    if not layout_built(marker):
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
@@ -687,8 +668,6 @@ def ensure_tlog_restore(spark: SparkSession, sf_dir: str):
     the data, so later merges mint ids from the RESTORED state) ->
     merge batch2. Final state == batch2 applied to the initial
     mapping, batch1 fully absent."""
-    import shutil as _shutil  # noqa: F401  (wipe via _wipe_and)
-
     from cnc_visionsearch_spark.operators.ingest import (
         tlog_init_id_mapping,
         tlog_merge_upsert,
@@ -703,7 +682,7 @@ def ensure_tlog_restore(spark: SparkSession, sf_dir: str):
     )
     path = f"{_ARTIFACT_ROOT}/{tag}/tlog_idmap_restore_b8"
     marker = os.path.join(path, "_HISTORY")
-    if _wipe_and(marker):
+    if not layout_built(marker):
         t = TLog(path)
         mapping = derive_id_mapping(
             load_table(spark, sf_dir, "embeddings"),

@@ -39,6 +39,12 @@ import numpy as np
 from pyspark.sql import SparkSession
 
 from cnc_visionsearch_spark.operators.ann import (
+    read_cells,
+    read_codebook,
+    read_pq_codes,
+    read_pq_trained_codebook,
+)
+from cnc_visionsearch_spark.operators.ann import (
     DEFAULT_NPROBE,
     hyperplane_signature,
     hyperplanes,
@@ -90,11 +96,11 @@ def measure_recall(spark: SparkSession, sf_dir: str) -> dict:
 
     # ---- IVF: persisted layout's codebook + assignment, nprobe sweep
     path = ensure_ivf_built(spark, sf_dir, n_cells=8)
-    crows = spark.read.parquet(f"{path}/codebook").collect()
+    crows = read_codebook(spark, path).collect()
     cid = np.array([r.cell_id for r in crows])
     cmat = np.stack([np.asarray(r.centroid) for r in crows])
     arows = (
-        spark.read.parquet(f"{path}/cells").select("vec_id", "cell_id").collect()
+        read_cells(spark, path).select("vec_id", "cell_id").collect()
     )
     cell_of = {r.vec_id: r.cell_id for r in arows}
     cell_arr = np.array([cell_of[i] for i in ids])
@@ -120,7 +126,7 @@ def measure_recall(spark: SparkSession, sf_dir: str) -> dict:
     def pq_sweep_for(n_cells: int, depths) -> dict:
         path = ensure_pq_built(spark, sf_dir, n_cells=n_cells)
         codes_rows = (
-            spark.read.parquet(f"{path}/pq_codes")
+            read_pq_codes(spark, path)
             .select("vec_id", "sub_j", "code")
             .collect()
         )
@@ -130,7 +136,7 @@ def measure_recall(spark: SparkSession, sf_dir: str) -> dict:
         pos = {int(v): i for i, v in enumerate(ids)}
         for r in codes_rows:
             codes[pos[r.vec_id], r.sub_j] = r.code
-        crows2 = spark.read.parquet(f"{path}/codebook").collect()
+        crows2 = read_codebook(spark, path).collect()
         cid2 = np.array([r.cell_id for r in crows2])
         cmat2 = np.stack([np.asarray(r.centroid) for r in crows2])
         cbs = cmat2[np.argsort(cid2)].reshape(len(cid2), m, w)
@@ -168,7 +174,7 @@ def measure_recall(spark: SparkSession, sf_dir: str) -> dict:
 
     tpath = ensure_pq_trained_built(spark, sf_dir)
     t_codes_rows = (
-        spark.read.parquet(f"{tpath}/pq_trained_codes")
+        read_pq_codes(spark, tpath, trained=True)
         .select("vec_id", "sub_j", "code")
         .collect()
     )
@@ -178,7 +184,7 @@ def measure_recall(spark: SparkSession, sf_dir: str) -> dict:
     for r in t_codes_rows:
         t_codes[pos[r.vec_id], r.sub_j] = r.code
     t_cb = np.zeros((T_M, T_KSTAR, t_w))
-    for r in spark.read.parquet(f"{tpath}/pq_trained_codebook").collect():
+    for r in read_pq_trained_codebook(spark, tpath).collect():
         t_cb[r.sub_j, r.code] = np.asarray(r.cv)
     # rank once per query (depth only changes the final slice)
     t_rank = {}
@@ -279,7 +285,12 @@ def measure_recall(spark: SparkSession, sf_dir: str) -> dict:
     # the driver-side replay runs the identical beam-search semantics
     # over the persisted graph (numpy distances are measurement-only;
     # the hash gate pins exactness separately)
-    from cnc_visionsearch_spark.operators.ann import _metadata_rows
+    from cnc_visionsearch_spark.operators.graph_ann import (
+        _entry_rows,
+        _hnsw_entry,
+        read_hnsw_graph,
+        read_nsw_graph,
+    )
     from cnc_visionsearch_spark.queries_ann_graph import (
         _EF,
         _HOPS,
@@ -288,10 +299,10 @@ def measure_recall(spark: SparkSession, sf_dir: str) -> dict:
 
     npath = ensure_nsw_built(spark, sf_dir)
     adj: dict[int, list[int]] = {}
-    for r in spark.read.parquet(f"{npath}/graph").select("src", "dst").collect():
+    for r in read_nsw_graph(spark, npath).select("src", "dst").collect():
         adj.setdefault(int(r.src), []).append(int(r.dst))
     entry_ids = [
-        int(e["vec_id"]) for e in _metadata_rows(f"{npath}/entries")
+        int(e["vec_id"]) for e in _entry_rows(npath)
     ]
     idx_of = {int(i): n for n, i in enumerate(ids.tolist())}
 
@@ -331,14 +342,14 @@ def measure_recall(spark: SparkSession, sf_dir: str) -> dict:
     hpath = ensure_hnsw_built(spark, sf_dir)
     hadj: dict[int, dict[int, list[int]]] = {}
     for r in (
-        spark.read.parquet(f"{hpath}/graph")
+        read_hnsw_graph(spark, hpath)
         .select("layer", "src", "dst")
         .collect()
     ):
         hadj.setdefault(int(r.layer), {}).setdefault(int(r.src), []).append(
             int(r.dst)
         )
-    he = spark.read.parquet(f"{hpath}/entry").first()
+    he = _hnsw_entry(spark, hpath)
     h_entry, h_lvl = int(he["vec_id"]), int(he["level"])
 
     def hnsw_recall(q, ef: int, hops: int) -> float:
@@ -393,15 +404,18 @@ def measure_recall(spark: SparkSession, sf_dir: str) -> dict:
     )
 
     rpath = ensure_rq(spark, sf_dir)
-    cb1_rows = spark.read.parquet(f"{rpath}/rq_codebook_l1").collect()
+    from cnc_visionsearch_spark.operators.rq import read_rq_codebooks, read_rq_codes
+
+    cb1_df, cb2_df = read_rq_codebooks(spark, rpath)
+    cb1_rows = cb1_df.collect()
     r_cid = np.array([r.code for r in cb1_rows])
     r_cmat = np.stack([np.asarray(r.cv) for r in cb1_rows])
     cb1_map = {int(r.code): np.asarray(r.cv) for r in cb1_rows}
     cb2_map = {
         int(r.code): np.asarray(r.cv)
-        for r in spark.read.parquet(f"{rpath}/rq_codebook_l2").collect()
+        for r in cb2_df.collect()
     }
-    code_rows = spark.read.parquet(f"{rpath}/rq_codes").collect()
+    code_rows = read_rq_codes(spark, rpath).collect()
     recon = np.zeros_like(mat)
     c1_of = {}
     for r in code_rows:

@@ -3,13 +3,11 @@
 The reference's id_mapping lives in SQLite (main.py:104-135), whose
 single-writer file lock IS its concurrency story; SURVEY §1.2 maps
 those upserts to a table format's ``MERGE INTO``. This container has
-no importable Delta/Iceberg (re-verified every round), and the repo's
-tmp+rename artifact protocol (SCALE.md "Table-format stance") buys
-only single-writer-per-artifact semantics — its documented gap is
-"no conflict detection between DIFFERENT mutations of one artifact".
-This module closes that gap with the PUBLIC protocol those formats
-use (Armbrust et al., "Delta Lake: High-Performance ACID Table
-Storage over Cloud Object Stores", VLDB 2020):
+no importable Delta/Iceberg (re-verified every round). This module
+is the engine's one storage mode for mutable tables and index
+artifacts, built on the PUBLIC protocol those formats use (Armbrust
+et al., "Delta Lake: High-Performance ACID Table Storage over Cloud
+Object Stores", VLDB 2020):
 
 - a table is a directory of immutable parquet data files plus a
   ``_tlog/`` directory of monotonically numbered JSON commit records;
@@ -72,17 +70,124 @@ __all__ = [
     "Snapshot",
     "run_transaction",
     "tlog_of",
+    "open_layout",
+    "layout_built",
+    "retag",
+    "read_tags",
+    "empty_frame",
+    "compact_domains",
     "CHECKPOINT_EVERY",
 ]
 
 
 def tlog_of(path: str) -> "TLog | None":
     """Handle on ``path`` when it is a transactional table (its
-    ``_tlog/`` dir exists), else None — the mode dispatch the dual-mode
-    artifact layers (inverted index, IVF, MinHash store) share."""
+    ``_tlog/`` dir exists), else None. Only the MinHash store, which
+    still has a plain-directory variant, dispatches on this; the index
+    tiers open their layouts with :func:`open_layout`."""
     if os.path.isdir(os.path.join(path, _LOG_DIR)):
         return TLog(path)
     return None
+
+
+# ---- the index tiers' one storage mode ------------------------------------
+# The inverted, IVF (with its PQ/RQ code tables and radii), shard, NSW,
+# HNSW and token-IVF tiers store every artifact as files of ONE log:
+# each add-action's bucket field is the file's conflict/pruning tag
+# (a cell, bucket or shard id, or a reserved tag for an auxiliary
+# subtable), and each tier's readers resolve tags to live files. The
+# helpers below are the glue all six tiers share.
+
+
+def open_layout(path: str) -> "TLog":
+    """Handle on the index layout at ``path``. Raises ``ValueError``
+    naming the path when it holds no ``_tlog/`` (no layout, or one
+    written in the retired tmp+rename directory format — rebuild it);
+    never creates a log, so a reader cannot turn a typo into an empty
+    table."""
+    if not os.path.isdir(os.path.join(path, _LOG_DIR)):
+        raise ValueError(
+            f"{path} is not a transaction-log index layout (no "
+            f"{_LOG_DIR}/ directory); rebuild it with the tier's build "
+            "function"
+        )
+    return TLog(path)
+
+
+def layout_built(marker: str) -> bool:
+    """The ``ensure_*`` builders' done-check for the layout directory
+    holding ``marker``: True when the marker AND a log are there.
+    Otherwise the directory is wiped so the caller builds from empty: a
+    marker-less directory is a partial build (a log refuses a second
+    init), and a marker without a log is a layout of the retired
+    tmp+rename format left by an older build under the same corpus
+    tag — it is rebuilt, never read."""
+    import shutil
+
+    path = os.path.dirname(marker)
+    if os.path.exists(marker) and os.path.isdir(os.path.join(path, _LOG_DIR)):
+        return True
+    shutil.rmtree(path, ignore_errors=True)
+    return False
+
+
+def retag(adds: list[dict], tag: int) -> list[dict]:
+    """Stamp add-actions with one reserved domain tag — for a
+    single-domain subtable (codebook, doclens, tombstones, entries) the
+    tag is a constant, not a data column."""
+    for a in adds:
+        a["bucket"] = tag
+    return adds
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty DataFrame of ``schema`` that costs no job: limit(0)
+    lets the optimizer replace the scan with an empty local relation.
+    Collecting a bare ``createDataFrame([], schema)`` runs a job with a
+    task per core on Python workers (about 2 s on 4 cores) — per hop,
+    for a graph search that meets an empty bucket."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
+def read_tags(
+    spark: SparkSession, t: "TLog", snap: "Snapshot", tags, schema=None
+) -> "DataFrame | None":
+    """DataFrame over the snapshot's live files tagged with any of
+    ``tags`` — log-level pruning, no directory listing. An empty
+    selection returns an empty frame of ``schema``, or None when no
+    schema is given (callers test for "no tombstones" that way)."""
+    paths = snap.files_in(tags)
+    if not paths:
+        return None if schema is None else empty_frame(spark, schema)
+    return spark.read.parquet(*[os.path.join(t.root, p) for p in paths])
+
+
+def compact_domains(
+    spark: SparkSession, t: "TLog", tag_pred, bucket_expr, schema=None
+) -> list[int]:
+    """Rewrite every conflict domain (tag satisfying ``tag_pred``)
+    holding more than one live file into one file, as ONE rewrite
+    commit declaring the touched domains — the append-accretion bound
+    of every tier. Returns the compacted tags (empty: nothing to do).
+    Rows are unchanged, so probe results are too."""
+    from collections import Counter
+
+    snap = t.snapshot()
+    cnt = Counter(b for _p, b in snap.files if b is not None and tag_pred(b))
+    touched = sorted(b for b, c in cnt.items() if c > 1)
+    if not touched:
+        return []
+    old = [p for p, b in snap.files if b in set(touched)]
+    r = spark.read if schema is None else spark.read.schema(schema)
+    df = r.parquet(*[os.path.join(t.root, p) for p in old])
+    t.commit(
+        adds=t.write_data(df, bucket_expr=bucket_expr),
+        removes=old,
+        read_version=snap.version,
+        op="rewrite",
+        domains=touched,
+    )
+    return touched
 
 
 class TLogConflictError(Exception):

@@ -278,18 +278,22 @@ def ivf_ingest_stream(
     with it the full living-corpus story the reference serves online
     (``index.add_with_ids``, main.py:134): each micro-batch of new
     embeddings is assigned against the layout's frozen codebook and
-    appended into its cell partitions (``ivf_append``); when the layout
-    carries a PQ code table and ``pq_m`` is set, codes append in the
-    same batch (``pq_append``). Probes launched after any micro-batch
-    commit see the new vectors at unchanged cost — cell partition
-    pruning does not care how many batches built the files. Pair with
-    :func:`sources.formats.compact_layout` on the cells/ and pq_codes/
-    subtrees from the maintenance schedule: one file per cell per batch
-    accretes exactly like the upsert state's buckets.
+    appended into its cell domains as a blind commit (``ivf_append``);
+    when the layout carries a PQ code table and ``pq_m`` is set, codes
+    append in the same batch (``pq_append``). Probes launched after any
+    micro-batch commit see the new vectors at unchanged cost — cell
+    pruning does not care how many batches built the files. One file
+    per cell per batch accretes exactly like the upsert state's
+    buckets; the maintenance pass (maintenance.run_index_maintenance)
+    compacts it.
 
     Returns the configured DataStreamWriter — call ``.start()``.
     """
-    from cnc_visionsearch_spark.operators.ann import ivf_append, pq_append
+    from cnc_visionsearch_spark.operators.ann import (
+        ivf_append,
+        pq_append,
+        read_pq_trained_codebook,
+    )
     from cnc_visionsearch_spark.operators.knn import with_normalized
     from cnc_visionsearch_spark.schemas import EMBEDDINGS
 
@@ -297,13 +301,9 @@ def ivf_ingest_stream(
     # geometry ONCE here instead of paying a parquet read + aggregate
     # job on every micro-batch of a long-running stream
     trained_m: int | None = None
-    if os.path.exists(f"{index_path}/pq_trained_codebook"):
-        trained_m = int(
-            spark.read.parquet(f"{index_path}/pq_trained_codebook")
-            .agg(F.max("sub_j"))
-            .first()[0]
-            + 1
-        )
+    trained_cb = read_pq_trained_codebook(spark, index_path)
+    if trained_cb is not None:
+        trained_m = int(trained_cb.agg(F.max("sub_j")).first()[0] + 1)
 
     stream = (
         spark.readStream.schema(EMBEDDINGS)
@@ -346,15 +346,13 @@ def shard_ingest_stream(
     completing the St4 symmetry for the newly-transactional tier): each
     micro-batch of new embeddings lands in its id-mod shard partitions
     via ``shard_append``; probes launched after any committed batch see
-    the union at unchanged cost. On a TRANSACTIONAL layout
-    (``shard_build(use_tlog=True)``) the ingest is EXACTLY-ONCE: the
-    append commit carries a (run id, batch id) txn key, so an
-    at-least-once foreachBatch replay commits nothing — the
-    tlog_upsert_stream doctrine, idempotence in the TABLE's protocol.
-    Legacy layouts keep the documented at-least-once append (and its
-    single-writer mutex). Returns the started StreamingQuery.
+    the union at unchanged cost. The ingest is EXACTLY-ONCE: the append
+    commit carries a (run id, batch id) txn key, so an at-least-once
+    foreachBatch replay commits nothing — the tlog_upsert_stream
+    doctrine, idempotence in the TABLE's protocol. Returns the started
+    StreamingQuery.
     """
-    from cnc_visionsearch_spark.operators.ann import _ivf_tlog, shard_append
+    from cnc_visionsearch_spark.operators.ann import shard_append
     from cnc_visionsearch_spark.operators.knn import with_normalized
     from cnc_visionsearch_spark.schemas import EMBEDDINGS
 
@@ -363,7 +361,6 @@ def shard_ingest_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(in_path)
     )
-    is_tlog = _ivf_tlog(index_path) is not None
     _rid: dict = {}
 
     def _run_id() -> str:
@@ -375,7 +372,7 @@ def shard_ingest_stream(
         if batch_df.isEmpty():
             return
         s = batch_df.sparkSession
-        txn = (f"shard_ingest:{_run_id()}", batch_id) if is_tlog else None
+        txn = (f"shard_ingest:{_run_id()}", batch_id)
         shard_append(s, index_path, with_normalized(batch_df), txn=txn)
 
     return (
@@ -397,16 +394,16 @@ def inverted_ingest_stream(
     """Streaming ingest for the inverted text index: each micro-batch
     of new documents gets its postings computed (batch-local group-by —
     a document arrives whole, so its postings are complete within the
-    batch) and appended into the term-bucket-partitioned layout that
-    phrase probes prune. The text-tier twin of ivf_ingest_stream:
-    probes launched after any committed batch see the new documents at
-    unchanged pruned cost; resident files are never rewritten. Returns
-    the started StreamingQuery.
+    batch) and appended into the term-bucket layout that phrase probes
+    prune. The text-tier twin of ivf_ingest_stream: probes launched
+    after any committed batch see the new documents at unchanged pruned
+    cost; resident files are never rewritten. The ingest is
+    EXACTLY-ONCE: the commit's txn key (run id, batch id) makes
+    at-least-once foreachBatch replays commit nothing (the
+    tlog_upsert_stream doctrine — idempotence in the TABLE's protocol).
+    Returns the started StreamingQuery.
     """
-    from cnc_visionsearch_spark.operators.text_index import (
-        _tlog_of,
-        inverted_append,
-    )
+    from cnc_visionsearch_spark.operators.text_index import inverted_append
     from cnc_visionsearch_spark.schemas import DOCUMENTS
 
     stream = (
@@ -414,7 +411,6 @@ def inverted_ingest_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(in_path)
     )
-    is_tlog = _tlog_of(index_path) is not None
     _rid: dict = {}
 
     def _run_id() -> str:
@@ -423,12 +419,7 @@ def inverted_ingest_stream(
         return _rid["v"]
 
     def apply_batch(batch_df, _batch_id):
-        # TRANSACTIONAL layouts get exactly-once ingest: the commit's
-        # txn key (run id, batch id) makes at-least-once foreachBatch
-        # replays commit nothing (the tlog_upsert_stream doctrine —
-        # idempotence in the TABLE's protocol). Legacy layouts keep
-        # the documented at-least-once append.
-        txn = (f"inv_ingest:{_run_id()}", _batch_id) if is_tlog else None
+        txn = (f"inv_ingest:{_run_id()}", _batch_id)
         inverted_append(batch_df, index_path, n_buckets=n_buckets, txn=txn)
 
     return (
@@ -959,8 +950,8 @@ def hnsw_ingest_stream(
     :func:`operators.graph_ann.hnsw_append` — every node draws its
     hash level, descends, finds neighbors BY SEARCHING each layer, and
     appends out+back edges into the touched (layer, bucket)
-    partitions; a node that out-levels the current entry promotes the
-    entry artifact between batches. Searches launched after any commit
+    domains; a node that out-levels the current entry promotes it (a
+    meta commit) between batches. Searches launched after any commit
     reach the new nodes through the appended edges at unchanged scan
     cost. Per-batch work is O(batch) index searches — the insert cost
     profile HNSW itself has — so keep micro-batches small relative to

@@ -13,6 +13,7 @@ from cnc_visionsearch_spark.queries_analytics import (
     part_skyline_price_size,
 )
 from cnc_visionsearch_spark.sources.catalog import load_table
+from layout_files import has_files, live_md5s
 
 SF = "/root/testdata/sf0.001"
 
@@ -71,11 +72,10 @@ def test_max_concurrency_peak_is_attained(spark):
 
 
 def test_phrase_probe_prunes_buckets_and_matches_rescan(spark):
-    """The inverted-layout phrase probe must (a) surface the bucket
-    filter as a PartitionFilter on the postings scan and (b) agree
-    with a from-scratch corpus rescan for an arbitrary other phrase."""
+    """The inverted-layout phrase probe must (a) scan only the two
+    terms' bucket files and (b) agree with a from-scratch corpus rescan
+    for an arbitrary other phrase."""
     from cnc_visionsearch_spark.operators.text_index import phrase_probe
-    from cnc_visionsearch_spark.plans import formatted_plan
     from cnc_visionsearch_spark.queries_analytics import (
         _INV_BUCKETS,
         ensure_inverted_built,
@@ -83,28 +83,15 @@ def test_phrase_probe_prunes_buckets_and_matches_rescan(spark):
 
     path = ensure_inverted_built(spark, SF)
     probe = phrase_probe(spark, path, "slow", "fast", n_buckets=_INV_BUCKETS)
-    # mode-aware pruning evidence (tests/test_plans._assert_bucket_pruned
-    # doctrine): on the transactional layout the proof is the scan's
-    # ACTUAL file set — only the two terms' _tb= domain files enter;
-    # on a legacy layout it is the hive PartitionFilters line
+    # pruning evidence (tests/test_plans._assert_bucket_pruned
+    # doctrine): the scan's ACTUAL file set — only the two terms' _tb=
+    # domain files enter
     from cnc_visionsearch_spark.operators.text_index import term_bucket
 
     files = probe.inputFiles()
-    tb = sorted(
-        {int(f.split("_tb=")[1].split("/")[0]) for f in files if "_tb=" in f}
-    )
-    if tb:
-        want = {
-            term_bucket(t, _INV_BUCKETS) for t in ("slow", "fast")
-        }
-        assert set(tb) <= want, (tb, want)
-    else:
-        pf = [
-            ln
-            for ln in formatted_plan(probe).splitlines()
-            if "PartitionFilters" in ln
-        ]
-        assert pf and any("bucket" in ln and "IN (" in ln for ln in pf)
+    tb = {int(f.split("_tb=")[1].split("/")[0]) for f in files if "_tb=" in f}
+    want = {term_bucket(t, _INV_BUCKETS) for t in ("slow", "fast")}
+    assert tb and tb <= want, (tb, want)
 
     docs = load_table(spark, SF, "documents")
     sp = F.split("text", " ")
@@ -158,8 +145,6 @@ def test_maintenance_compacts_inverted_and_nsw_layouts(spark, tmp_path):
     """run_index_maintenance with the auxiliary layout paths: after
     append accretion, both the postings and the NSW graph shrink to
     <= one file per partition with probe results unchanged."""
-    import os
-
     from cnc_visionsearch_spark.maintenance import run_index_maintenance
     from cnc_visionsearch_spark.operators.graph_ann import (
         nsw_append,
@@ -215,9 +200,6 @@ def test_inverted_delete_no_resurrection_and_resident_files_untouched(
     from every probe (postings AND norms read through the filter),
     resident postings files stay byte-identical, and the tombstone-free
     layout keeps its plan shape (no tombstone scan)."""
-    import glob
-    import hashlib
-
     from pyspark.sql import functions as F
 
     from cnc_visionsearch_spark.operators.text_index import (
@@ -233,10 +215,7 @@ def test_inverted_delete_no_resurrection_and_resident_files_untouched(
     inverted_build(docs, idx, n_buckets=4)
 
     def digest():
-        out = {}
-        for f in sorted(glob.glob(f"{idx}/postings/**/*.parquet", recursive=True)):
-            out[f] = hashlib.md5(open(f, "rb").read()).hexdigest()
-        return out
+        return live_md5s(idx)
 
     before_files = digest()
     full = bm25_probe(spark, idx, ["hash", "join"], n_buckets=4)
@@ -260,17 +239,17 @@ def test_inverted_vacuum_preserves_results_and_drops_tombstones(
     partitions + the doclens table, drops the tombstone dir, and every
     probe result is bit-identical before/after (the anti-join had
     already hidden the rows)."""
-    import os
-
     from pyspark.sql import functions as F
 
     from cnc_visionsearch_spark.operators.text_index import (
+        TLOG_TOMBS_TAG,
         bm25_probe,
         inverted_build,
         inverted_delete,
         inverted_vacuum,
     )
     from cnc_visionsearch_spark.sources.catalog import load_table
+    from cnc_visionsearch_spark.sources.tlog import TLog, read_tags
 
     docs = load_table(spark, SF, "documents").filter(F.col("doc_id") < 120)
     idx = str(tmp_path / "inv")
@@ -282,14 +261,16 @@ def test_inverted_vacuum_preserves_results_and_drops_tombstones(
         for r in bm25_probe(spark, idx, ["hash", "join"], n_buckets=4).collect()
     )
     inverted_vacuum(spark, idx)
-    assert not os.path.exists(f"{idx}/tombstones")
+    assert not has_files(idx, TLOG_TOMBS_TAG)
     after = sorted(
         (r.doc_id, r.n_terms, r.score_q)
         for r in bm25_probe(spark, idx, ["hash", "join"], n_buckets=4).collect()
     )
     assert before == after and before
-    # physically gone: raw reads no longer contain the ids
-    raw = spark.read.parquet(f"{idx}/postings").filter(
+    # physically gone: raw reads of the live files no longer contain
+    # the ids
+    t = TLog(idx)
+    raw = read_tags(spark, t, t.snapshot(), [0, 1, 2, 3]).filter(
         F.col("doc_id").isin([4, 11, 25])
     )
     assert raw.count() == 0
@@ -386,58 +367,6 @@ def test_bloom_words_distributed_build_matches_python_fold(spark):
     assert got == exp
     src = inspect.getsource(_bloom_words)
     assert src.count(".collect()") == 1 and "bit_or" in src
-
-
-def test_inverted_vacuum_self_heals_crashed_swap(spark, tmp_path):
-    """Crash-safety of the vacuum swap: simulate every crash window of
-    _swap_in (a .vacuum_bak with no live dir = died between renames; a
-    leftover .vacuum_tmp beside a live dir = died before the swap) and
-    assert the next vacuum entry restores a probe-identical index
-    instead of losing the partition."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from cnc_visionsearch_spark.operators.text_index import (
-        bm25_probe,
-        inverted_build,
-        inverted_vacuum,
-    )
-    from cnc_visionsearch_spark.sources.catalog import load_table
-
-    docs = load_table(spark, SF, "documents").filter(F.col("doc_id") < 120)
-    idx = str(tmp_path / "inv")
-    inverted_build(docs, idx, n_buckets=4)
-
-    def probe():
-        return sorted(
-            (r.doc_id, r.n_terms, r.score_q)
-            for r in bm25_probe(
-                spark, idx, ["hash", "join"], n_buckets=4
-            ).collect()
-        )
-
-    expected = probe()
-    assert expected
-
-    # crash window 1: died between rename(live->bak) and rename(tmp->live)
-    part = next(
-        f"{idx}/postings/{d}"
-        for d in os.listdir(f"{idx}/postings")
-        if d.startswith("bucket=")
-    )
-    shutil.copytree(part, part + ".vacuum_tmp")
-    os.rename(part, part + ".vacuum_bak")
-    shutil.rmtree(part + ".vacuum_tmp")  # tmp swap-in also never happened
-    inverted_vacuum(spark, idx)  # no tombstones: heal-only entry
-    assert probe() == expected, "bak-without-live not restored"
-
-    # crash window 2: died after writing tmp, before any rename
-    shutil.copytree(part, part + ".vacuum_tmp")
-    inverted_vacuum(spark, idx)
-    assert not os.path.exists(part + ".vacuum_tmp")
-    assert probe() == expected, "leftover tmp corrupted the index"
 
 
 def test_bm25_single_and_batch_probes_cannot_drift(spark, tmp_path):

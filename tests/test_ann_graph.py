@@ -10,12 +10,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.operators.graph_ann import (
+    _hnsw_entry,
     nsw_append,
     nsw_build,
     nsw_search,
+    read_hnsw_graph,
+    read_nsw_graph,
 )
 from cnc_visionsearch_spark.operators.knn import knn_single, with_normalized
 from cnc_visionsearch_spark.sources.catalog import load_table
+from layout_files import scan_tags
 
 SF_01 = "/root/testdata/sf0.01"
 K = 10
@@ -99,18 +103,13 @@ def test_nsw_search_is_deterministic(spark, emb, layout):
 
 
 def test_nsw_hop_reads_are_partition_pruned(spark, emb, layout):
-    """A hop reads only the beam's buckets: the src_bucket filter must
-    surface as a PartitionFilter on the graph scan (real file pruning —
-    |beam buckets|/n_buckets of the edge files read per hop)."""
-    from cnc_visionsearch_spark.plans import formatted_plan
+    """A hop reads only the beam's buckets: the reader resolves them to
+    their live files in the log, so the scan holds |beam
+    buckets|/n_buckets of the edge files (real file pruning)."""
+    from cnc_visionsearch_spark.operators.graph_ann import read_nsw_graph
 
-    g = spark.read.parquet(f"{layout}/graph").filter(
-        F.col("src_bucket").isin([1, 2])
-    )
-    pf = [
-        ln for ln in formatted_plan(g).splitlines() if "PartitionFilters" in ln
-    ]
-    assert pf and any("src_bucket" in ln and "IN (" in ln for ln in pf)
+    assert scan_tags(read_nsw_graph(spark, layout, [1, 2])) == {1, 2}
+    assert len(scan_tags(read_nsw_graph(spark, layout))) == 16
 
 
 def test_nsw_ivf_build_full_probe_equals_exact(spark, emb, layout, tmp_path):
@@ -132,11 +131,11 @@ def test_nsw_ivf_build_full_probe_equals_exact(spark, emb, layout, tmp_path):
     )
     exact_edges = {
         (r.src, r.dst)
-        for r in spark.read.parquet(f"{layout}/graph").select("src", "dst").collect()
+        for r in read_nsw_graph(spark, layout).select("src", "dst").collect()
     }
     ivf_edges = {
         (r.src, r.dst)
-        for r in spark.read.parquet(f"{path}/graph").select("src", "dst").collect()
+        for r in read_nsw_graph(spark, path).select("src", "dst").collect()
     }
     assert exact_edges == ivf_edges and exact_edges
 
@@ -167,8 +166,12 @@ def test_nsw_ivf_candidate_plan_no_corpus_pair_join(spark, emb, tmp_path):
     # to cover it.
     import re
 
+    from cnc_visionsearch_spark.operators.ann import TLOG_CODEBOOK_TAG
+    from cnc_visionsearch_spark.sources.tlog import TLog
+
+    (codebook_dir,) = TLog(ivf).snapshot().files_in([TLOG_CODEBOOK_TAG])
     bnlj_nodes = len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan))
-    codebook_scans = plan.count("codebook")
+    codebook_scans = plan.count(codebook_dir)
     assert bnlj_nodes >= 1 and codebook_scans >= bnlj_nodes, plan
     assert "cell_id" in plan
     # contrast: the exact mode IS the corpus-pair nested loop
@@ -241,7 +244,7 @@ def hlayout(spark, emb, tmp_path_factory):
 
 
 def test_hnsw_layers_thin_geometrically(spark, hlayout):
-    g = spark.read.parquet(f"{hlayout}/graph")
+    g = read_hnsw_graph(spark, hlayout)
     nodes = {
         l: g.filter(F.col("layer") == l).select("src").distinct().count()
         for l in range(4)
@@ -264,8 +267,8 @@ def test_hnsw_layers_thin_geometrically(spark, hlayout):
 
 
 def test_hnsw_entry_is_max_level_node(spark, hlayout):
-    e = spark.read.parquet(f"{hlayout}/entry").first()
-    g = spark.read.parquet(f"{hlayout}/graph")
+    e = _hnsw_entry(spark, hlayout)
+    g = read_hnsw_graph(spark, hlayout)
     top = int(
         g.agg(F.max("layer")).first()[0]
     )  # highest layer that actually has edges
@@ -319,14 +322,14 @@ def test_hnsw_append_reachable_and_entry_promotion(spark, emb, hlayout, tmp_path
     # untouched copy does not know it
     before = [i for i, _ in hnsw_search(spark, hlayout, base, k=K, ef=24, hops=4)]
     assert new_id not in before
-    # if the new node out-levels the old entry, the entry artifact moves
+    # if the new node out-levels the old entry, the entry moves
     lvl = (
         spark.createDataFrame([(new_id,)], "vec_id bigint")
         .select(hnsw_level_col("vec_id", 8, 3).alias("l"))
         .first()[0]
     )
-    e = spark.read.parquet(f"{path}/entry").first()
-    old_e = spark.read.parquet(f"{hlayout}/entry").first()
+    e = _hnsw_entry(spark, path)
+    old_e = _hnsw_entry(spark, hlayout)
     if int(lvl) > int(old_e["level"]):
         assert int(e["vec_id"]) == new_id
     else:
@@ -334,15 +337,14 @@ def test_hnsw_append_reachable_and_entry_promotion(spark, emb, hlayout, tmp_path
 
 
 def test_hnsw_hop_reads_are_layer_and_bucket_pruned(spark, emb, hlayout):
-    """The descent scan must prune BOTH partition axes (layer and
-    src_bucket) — the physical property that keeps upper-layer hops
-    metadata-cheap at corpus scale."""
-    from cnc_visionsearch_spark.plans import formatted_plan
+    """The descent scan must prune BOTH axes (layer and src_bucket) —
+    the (layer, bucket) tag of one domain selects its files alone, the
+    physical property that keeps upper-layer hops metadata-cheap at
+    corpus scale."""
+    from cnc_visionsearch_spark.operators.graph_ann import (
+        TLOG_HNSW_LAYER_STRIDE,
+    )
 
-    g = spark.read.parquet(f"{hlayout}/graph")
-    probe = g.filter(
-        (F.col("layer") == 2) & (F.col("src_bucket") == 3) & (F.col("src") == 99)
-    ).select("dst")
-    plan = formatted_plan(probe)
-    assert "PartitionFilters" in plan
-    assert "layer" in plan and "src_bucket" in plan
+    probe = read_hnsw_graph(spark, hlayout, layer=1, buckets=[3])
+    assert scan_tags(probe) == {1 * TLOG_HNSW_LAYER_STRIDE + 3}
+    assert len(scan_tags(read_hnsw_graph(spark, hlayout))) > 1

@@ -6,13 +6,14 @@ computation over the full corpus with the same frozen codebook.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.operators.ann import (
+    TLOG_IVF_TOMBS_TAG,
+    TLOG_PQ_CODES_STRIDE,
     ivf_append,
     ivf_assign,
     ivf_build,
@@ -22,13 +23,18 @@ from cnc_visionsearch_spark.operators.ann import (
     pq_assign,
     pq_build,
     pq_codebook,
+    read_cells,
+    read_codebook,
     read_geometry,
+    read_pq_codes,
+    read_shards,
     shard_append,
     shard_build,
     sharded_topk_persisted,
 )
 from cnc_visionsearch_spark.operators.knn import knn_single, with_normalized
 from cnc_visionsearch_spark.sources.catalog import load_table
+from layout_files import has_files, live_md5s as _file_md5s
 
 SF = "/root/testdata/sf0.01"
 SPLIT = 300
@@ -46,20 +52,6 @@ def _norm_q(emb, vec_id):
     return [x / n for x in q]
 
 
-def _file_md5s(root):
-    """relative path -> md5 for every parquet data file under root."""
-    out = {}
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(dirpath, f)
-                with open(p, "rb") as fh:
-                    out[os.path.relpath(p, root)] = hashlib.md5(
-                        fh.read()
-                    ).hexdigest()
-    return out
-
-
 def test_ivf_append_extends_layout_without_touching_files(spark, emb, tmp_path):
     """Build over the base slice, append the rest: every pre-existing
     cell file must survive byte-identical (append adds files, never
@@ -70,11 +62,11 @@ def test_ivf_append_extends_layout_without_touching_files(spark, emb, tmp_path):
     base = emb.filter(F.col("vec_id") < SPLIT)
     rest = emb.filter(F.col("vec_id") >= SPLIT)
     ivf_build(base, path, n_cells=8)
-    before = _file_md5s(f"{path}/cells")
+    before = _file_md5s(path)
     assert before  # the build wrote real files
 
     ivf_append(spark, path, rest)
-    after = _file_md5s(f"{path}/cells")
+    after = _file_md5s(path)
 
     for rel, digest in before.items():
         assert after.get(rel) == digest, f"append rewrote existing file {rel}"
@@ -82,7 +74,7 @@ def test_ivf_append_extends_layout_without_touching_files(spark, emb, tmp_path):
 
     # probe equivalence: appended layout == full corpus under the
     # build-time codebook (ids AND exact distances)
-    cents = spark.read.parquet(f"{path}/codebook")
+    cents = read_codebook(spark, path)
     q = _norm_q(emb, 3)
     want = [
         (r.vec_id, r.distance)
@@ -94,7 +86,7 @@ def test_ivf_append_extends_layout_without_touching_files(spark, emb, tmp_path):
     ]
     assert got == want
     # the appended half is actually visible to probes
-    assert spark.read.parquet(f"{path}/cells").filter(
+    assert read_cells(spark, path).filter(
         F.col("vec_id") >= SPLIT
     ).count() == rest.count()
 
@@ -108,16 +100,16 @@ def test_pq_append_equals_full_reencode(spark, emb, tmp_path):
     rest = emb.filter(F.col("vec_id") >= SPLIT)
     ivf_build(base, path, n_cells=8)
     pq_build(spark, path, m=8)
-    before = _file_md5s(f"{path}/pq_codes")
+    before = _file_md5s(path, base=TLOG_PQ_CODES_STRIDE)
     assert before
 
     ivf_append(spark, path, rest)
     pq_append(spark, path, rest, m=8)
-    after = _file_md5s(f"{path}/pq_codes")
+    after = _file_md5s(path, base=TLOG_PQ_CODES_STRIDE)
     for rel, digest in before.items():
         assert after.get(rel) == digest, f"append rewrote existing file {rel}"
 
-    cents = spark.read.parquet(f"{path}/codebook")
+    cents = read_codebook(spark, path)
     cb = pq_codebook(cents, m=8)
     want = sorted(
         (r.vec_id, r.sub_j, r.code)
@@ -125,7 +117,7 @@ def test_pq_append_equals_full_reencode(spark, emb, tmp_path):
     )
     got = sorted(
         (r.vec_id, r.sub_j, r.code)
-        for r in spark.read.parquet(f"{path}/pq_codes")
+        for r in read_pq_codes(spark, path)
         .select("vec_id", "sub_j", "code")
         .collect()
     )
@@ -141,10 +133,10 @@ def test_shard_append_probe_equals_exact(spark, emb, tmp_path):
     rest = emb.filter(F.col("vec_id") >= SPLIT)
     shard_build(base, path, num_shards=8)
     assert read_geometry(path)["num_shards"] == 8
-    before = _file_md5s(f"{path}/shards")
+    before = _file_md5s(path, part="shard")
 
     shard_append(spark, path, rest)
-    after = _file_md5s(f"{path}/shards")
+    after = _file_md5s(path, part="shard")
     for rel, digest in before.items():
         assert after.get(rel) == digest, f"append rewrote existing file {rel}"
 
@@ -171,10 +163,10 @@ def test_shard_append_refuses_mismatched_columns(spark, emb, tmp_path):
 
 def test_compact_appended_cells_preserves_probe_and_pruning(spark, emb, tmp_path):
     """Repeated appends accrete one file per touched cell per batch —
-    compact_layout on the cells/ subtree must shrink files, keep the
-    hive partitioning (so PartitionFilters pruning survives), and leave
-    probe results bit-identical."""
-    from cnc_visionsearch_spark.sources.formats import compact_layout
+    one compaction commit over the cell domains must shrink the live
+    files to one per cell (so cell pruning still reads one file per
+    probed cell) and leave probe results bit-identical."""
+    from cnc_visionsearch_spark.sources.tlog import TLog, compact_domains
 
     path = str(tmp_path / "ivf")
     ivf_build(emb.filter(F.col("vec_id") < 200), path, n_cells=8)
@@ -188,22 +180,13 @@ def test_compact_appended_cells_preserves_probe_and_pruning(spark, emb, tmp_path
         (r.vec_id, r.distance)
         for r in ivf_probe(spark, path, q, k=10, nprobe=4).collect()
     ]
-
-    def n_files():
-        return sum(
-            1
-            for dp, _d, fs in os.walk(f"{path}/cells")
-            for f in fs
-            if f.endswith(".parquet")
-        )
-
-    files_before = n_files()
-    compact_layout(spark, f"{path}/cells", partition_by=["cell_id"])
-    assert n_files() < files_before
-    # hive layout intact -> cell_id IN (...) stays partition pruning
-    assert any(
-        d.startswith("cell_id=") for d in os.listdir(f"{path}/cells")
-    )
+    files_before = len(_file_md5s(path))
+    compact_domains(spark, TLog(path), lambda b: b < 8, F.col("cell_id"))
+    files_after = _file_md5s(path)
+    assert len(files_after) < files_before
+    # one file per cell -> a probe of cell c opens exactly one file
+    cells = [k.split("/")[0] for k in files_after]
+    assert len(cells) == len(set(cells)) == 8
     after = [
         (r.vec_id, r.distance)
         for r in ivf_probe(spark, path, q, k=10, nprobe=4).collect()
@@ -241,7 +224,7 @@ def test_ivf_build_with_trained_codebook(spark, emb, tmp_path):
     ]
     assert got == want
     # every vector landed in one of the custom cells
-    cells = spark.read.parquet(f"{path}/cells")
+    cells = read_cells(spark, path)
     assert cells.count() == emb.count()
     assert cells.filter(~F.col("cell_id").isin([0, 1, 2, 3])).count() == 0
 
@@ -260,9 +243,9 @@ def test_ivf_delete_then_vacuum_lifecycle(spark, emb, tmp_path):
     pre = [r.vec_id for r in ivf_probe(spark, path, q, k=10, nprobe=8).collect()]
     assert pre[0] == 3  # self-match present before the delete
 
-    files_before = _file_md5s(f"{path}/cells")
+    files_before = _file_md5s(path)
     ivf_delete(spark, path, [3, 17, 23])
-    files_after = _file_md5s(f"{path}/cells")
+    files_after = _file_md5s(path)
     assert files_after == files_before  # delete touches no resident file
 
     post = [r.vec_id for r in ivf_probe(spark, path, q, k=10, nprobe=8).collect()]
@@ -280,14 +263,14 @@ def test_ivf_delete_then_vacuum_lifecycle(spark, emb, tmp_path):
     # vacuum: tombstones gone, untouched cells byte-identical, results same
     deleted_cells = {
         r.cell_id
-        for r in spark.read.parquet(f"{path}/cells")
+        for r in read_cells(spark, path)
         .filter(F.col("vec_id").isin([3, 17, 23]))
         .select("cell_id")
         .collect()
     }
     ivf_vacuum(spark, path)
-    assert not os.path.exists(f"{path}/tombstones")
-    files_vac = _file_md5s(f"{path}/cells")
+    assert not has_files(path, TLOG_IVF_TOMBS_TAG)
+    files_vac = _file_md5s(path)
     for rel, digest in files_before.items():
         cell = rel.split("/")[0]
         if int(cell.split("=")[1]) not in deleted_cells:
@@ -298,13 +281,13 @@ def test_ivf_delete_then_vacuum_lifecycle(spark, emb, tmp_path):
     assert after_vac == post
     # physically gone from cells AND pq_codes
     assert (
-        spark.read.parquet(f"{path}/cells")
+        read_cells(spark, path)
         .filter(F.col("vec_id").isin([3, 17, 23]))
         .count()
         == 0
     )
     assert (
-        spark.read.parquet(f"{path}/pq_codes")
+        read_pq_codes(spark, path)
         .filter(F.col("vec_id").isin([3, 17, 23]))
         .count()
         == 0
@@ -366,7 +349,7 @@ def test_streaming_deletes_then_maintenance_runbook(spark, emb, tmp_path):
     report = run_index_maintenance(spark, index_path=path)
     assert report["vacuum_applied"] is True
     assert report["cells_files"]["after"] < report["cells_files"]["before"]
-    assert not os.path.exists(f"{path}/tombstones")
+    assert not has_files(path, TLOG_IVF_TOMBS_TAG)
     assert "recommend_retrain" in report and report["skew_ratio"] >= 1.0
     after = [
         (r.vec_id, r.distance)
@@ -391,9 +374,9 @@ def test_shard_delete_then_vacuum(spark, emb, tmp_path):
 
     path = str(tmp_path / "sh_del")
     shard_build(emb, path, num_shards=8)
-    before = _file_md5s(f"{path}/shards")
+    before = _file_md5s(path, part="shard")
     shard_delete(spark, path, [9, 11])
-    assert _file_md5s(f"{path}/shards") == before  # no resident rewrite
+    assert _file_md5s(path, part="shard") == before  # no resident rewrite
 
     q = _norm_q(emb, 9)
     want = [
@@ -410,20 +393,20 @@ def test_shard_delete_then_vacuum(spark, emb, tmp_path):
     assert got == want
 
     shard_vacuum(spark, path)
-    assert not os.path.exists(f"{path}/tombstones")
+    assert not has_files(path, TLOG_IVF_TOMBS_TAG)
     after = [
         (r.vec_id, r.distance)
         for r in sharded_topk_persisted(spark, path, q, k=10).collect()
     ]
     assert after == want
     # untouched shard partitions byte-identical (9 % 8 = 1, 11 % 8 = 3)
-    vac = _file_md5s(f"{path}/shards")
+    vac = _file_md5s(path, part="shard")
     for rel, digest in before.items():
         shard = rel.split("/")[0]
         if shard not in ("shard=1", "shard=3"):
             assert vac.get(rel) == digest, f"untouched shard rewritten: {rel}"
     assert (
-        spark.read.parquet(f"{path}/shards")
+        read_shards(spark, path)
         .filter(F.col("vec_id").isin([9, 11]))
         .count()
         == 0
@@ -439,10 +422,10 @@ def test_maintenance_second_run_is_true_noop(spark, emb, tmp_path):
     path = str(tmp_path / "ivf")
     ivf_build(emb, path, n_cells=8)
     run_index_maintenance(spark, index_path=path)
-    settled = _file_md5s(f"{path}/cells")
+    settled = _file_md5s(path)
     report = run_index_maintenance(spark, index_path=path)
     assert report["vacuum_applied"] is False
-    assert _file_md5s(f"{path}/cells") == settled
+    assert _file_md5s(path) == settled
 
 
 def test_deletes_honored_by_every_probe_path(spark, monkeypatch, tmp_path):
@@ -503,7 +486,7 @@ class TestIvfRebalance:
         path = self._build(spark, emb, tmp_path)
         before = sorted(
             (int(r["vec_id"]),)
-            for r in spark.read.parquet(f"{path}/cells").select("vec_id").collect()
+            for r in read_cells(spark, path).select("vec_id").collect()
         )
         q = _norm_q(emb, 7)
         full_before = [
@@ -513,12 +496,12 @@ class TestIvfRebalance:
         report = ivf_rebalance(spark, path, max_splits=1, min_factor=0.0)
         assert len(report) == 1
         r = report[0]
-        assert not os.path.exists(
-            os.path.join(path, "cells", f"cell_id={r['cell_id']}")
+        assert not any(
+            k.startswith(f"cell_id={r['cell_id']}/") for k in _file_md5s(path)
         )
         after = sorted(
             (int(x["vec_id"]),)
-            for x in spark.read.parquet(f"{path}/cells").select("vec_id").collect()
+            for x in read_cells(spark, path).select("vec_id").collect()
         )
         assert before == after  # the union of members never changes
         # full-coverage probe (every cell probed) is bit-identical
@@ -530,7 +513,7 @@ class TestIvfRebalance:
         # codebook swapped: parent gone, both children present
         cb_ids = {
             int(x["cell_id"])
-            for x in spark.read.parquet(f"{path}/codebook").collect()
+            for x in read_codebook(spark, path).collect()
         }
         assert r["cell_id"] not in cb_ids
         assert {r["lo_cell"], r["hi_cell"]} <= cb_ids
@@ -542,46 +525,14 @@ class TestIvfRebalance:
         from cnc_visionsearch_spark.operators.ann import ivf_rebalance
 
         path = self._build(spark, emb, tmp_path)
-        pre = _file_md5s(os.path.join(path, "cells"))
+        pre = _file_md5s(path)
         report = ivf_rebalance(spark, path, max_splits=1, min_factor=0.0)
         parent = f"cell_id={report[0]['cell_id']}"
-        post = _file_md5s(os.path.join(path, "cells"))
+        post = _file_md5s(path)
         untouched_pre = {k: v for k, v in pre.items() if not k.startswith(parent)}
         assert {
             k: v for k, v in post.items() if k in untouched_pre
         } == untouched_pre
-
-    def test_crash_self_heal_restores_parent(self, spark, emb, tmp_path):
-        """Simulate death mid-swap (journal written, parent renamed to
-        .bak, children not landed): the next call must restore the
-        parent and proceed to a clean split."""
-        import json as _json
-        import shutil
-
-        from cnc_visionsearch_spark.operators.ann import ivf_rebalance
-
-        path = self._build(spark, emb, tmp_path)
-        sizes = {
-            int(r["cell_id"]): int(r["n"])
-            for r in spark.read.parquet(f"{path}/cells")
-            .groupBy("cell_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        hot = max(sorted(sizes), key=lambda c: sizes[c])
-        parent = os.path.join(path, "cells", f"cell_id={hot}")
-        os.rename(parent, parent + ".bak")
-        with open(os.path.join(path, "_REBALANCE_INPROGRESS.json"), "w") as fh:
-            _json.dump({"cell_id": hot, "lo_cell": 90, "hi_cell": 91}, fh)
-        report = ivf_rebalance(spark, path, max_splits=1, min_factor=0.0)
-        # healed (parent restored) then split normally
-        assert len(report) == 1
-        assert not os.path.exists(parent + ".bak")
-        assert not os.path.exists(
-            os.path.join(path, "_REBALANCE_INPROGRESS.json")
-        )
-        n_total = spark.read.parquet(f"{path}/cells").count()
-        assert n_total == 200
 
     def test_radii_refreshed_for_children_only(self, spark, emb, tmp_path):
         from cnc_visionsearch_spark.operators.ann import (
@@ -606,69 +557,6 @@ class TestIvfRebalance:
             for x in _compute_cell_radii(spark, path).collect()
         }
         assert radii == fresh
-
-
-    def test_crash_after_kids_heals_codebook(self, spark, emb, tmp_path):
-        """Simulate death AFTER the children partitions landed but
-        BEFORE the codebook swap (journal still on disk, codebook
-        still carries the parent): the next call must repair the
-        codebook from the children — otherwise the split data would be
-        invisible to probes forever."""
-        import json as _json
-        import shutil
-
-        from cnc_visionsearch_spark.operators.ann import (
-            ivf_probe,
-            ivf_rebalance,
-        )
-
-        path = self._build(spark, emb, tmp_path)
-        report = ivf_rebalance(spark, path, max_splits=1, min_factor=0.0)
-        r = report[0]
-        # rewind the codebook to its pre-split state (parent in,
-        # children out) and resurrect the journal — the crash window
-        cb = spark.read.parquet(f"{path}/codebook").collect()
-        kid_rows = [x for x in cb if int(x["cell_id"]) in (r["lo_cell"], r["hi_cell"])]
-        assert len(kid_rows) == 2
-        lo_seed = [
-            float(v)
-            for v in next(
-                x["centroid"] for x in kid_rows if int(x["cell_id"]) == r["lo_cell"]
-            )
-        ]
-        old_rows = [
-            (int(x["cell_id"]), [float(v) for v in x["centroid"]])
-            for x in cb
-            if int(x["cell_id"]) not in (r["lo_cell"], r["hi_cell"])
-        ] + [(r["cell_id"], lo_seed)]
-        spark.createDataFrame(
-            old_rows, "cell_id int, centroid array<double>"
-        ).write.mode("overwrite").parquet(f"{path}/codebook.tmp")
-        shutil.rmtree(f"{path}/codebook")
-        os.rename(f"{path}/codebook.tmp", f"{path}/codebook")
-        with open(os.path.join(path, "_REBALANCE_INPROGRESS.json"), "w") as fh:
-            _json.dump(
-                {
-                    "cell_id": r["cell_id"],
-                    "lo_cell": r["lo_cell"],
-                    "hi_cell": r["hi_cell"],
-                },
-                fh,
-            )
-        # next entry heals: codebook swapped, probes see every member
-        ivf_rebalance(spark, path, max_splits=0, min_factor=0.0)
-        cb_ids = {
-            int(x["cell_id"])
-            for x in spark.read.parquet(f"{path}/codebook").collect()
-        }
-        assert r["cell_id"] not in cb_ids
-        assert {r["lo_cell"], r["hi_cell"]} <= cb_ids
-        q = _norm_q(emb, 7)
-        assert len(ivf_probe(spark, path, q, k=10, nprobe=100).collect()) == 10
-        assert not os.path.exists(
-            os.path.join(path, "_REBALANCE_INPROGRESS.json")
-        )
-
 
 # ------------------------------------------------ forget-vectors runbook
 
@@ -707,17 +595,17 @@ def test_forget_vectors_runbook_is_idempotent_and_composes(
         assert not (got & set(victim))
     # idempotent retry: live census unchanged after a second run
     n1 = _without_tombstones(
-        spark, p_ivf, spark.read.parquet(f"{p_ivf}/cells"), "vec_id"
+        spark, p_ivf, read_cells(spark, p_ivf), "vec_id"
     ).count()
     forget_vectors(spark, victim, ivf_paths=(p_ivf,), shard_paths=(p_sh,))
     n2 = _without_tombstones(
-        spark, p_ivf, spark.read.parquet(f"{p_ivf}/cells"), "vec_id"
+        spark, p_ivf, read_cells(spark, p_ivf), "vec_id"
     ).count()
     assert n1 == n2 == 98
     # physical removal rides the normal vacuum
     ivf_vacuum(spark, p_ivf)
-    assert spark.read.parquet(f"{p_ivf}/cells").count() == 98
-    assert not __import__("os").path.exists(f"{p_ivf}/tombstones")
+    assert read_cells(spark, p_ivf).count() == 98
+    assert not has_files(p_ivf, TLOG_IVF_TOMBS_TAG)
 
 
 # ------------------------------------------- exact pruned search

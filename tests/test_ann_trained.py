@@ -11,13 +11,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.operators.ann import (
+    TLOG_IVF_TOMBS_TAG,
+    TLOG_RQ_CODES_STRIDE,
     ivf_build,
     pq_assign,
     pq_train_codebook,
     pq_trained_append,
     pq_trained_build,
+    read_cells,
+    read_codebook,
+    read_pq_codes,
+    read_pq_trained_codebook,
 )
 from cnc_visionsearch_spark.operators.knn import knn_single, with_normalized
+from cnc_visionsearch_spark.operators.rq import read_rq_codebooks, read_rq_codes
 from cnc_visionsearch_spark.queries_ann_trained import (
     _DEPTH,
     _KSTAR,
@@ -27,6 +34,7 @@ from cnc_visionsearch_spark.queries_ann_trained import (
     ensure_pq_trained_built,
 )
 from cnc_visionsearch_spark.sources.catalog import load_table
+from layout_files import has_files, live_md5s
 
 SF_01 = "/root/testdata/sf0.01"
 K = 10
@@ -68,8 +76,8 @@ def test_trained_adc_recall_meets_baseline_gate(spark, emb, trained_path):
     rescore depth SHALLOWER than the default (40 vs 120): the trained
     codebook's ADC ranking concentrates true neighbors early, unlike
     the stride tier (RECALL.json documents both)."""
-    cb = spark.read.parquet(f"{trained_path}/pq_trained_codebook")
-    codes = spark.read.parquet(f"{trained_path}/pq_trained_codes")
+    cb = read_pq_trained_codebook(spark, trained_path)
+    codes = read_pq_codes(spark, trained_path, trained=True)
     from cnc_visionsearch_spark.functions.vector import fixed_point_q, l2_sq
 
     recalls = []
@@ -114,8 +122,8 @@ def test_composed_ivf_pq_trained_recall_meets_baseline_gate(
         ivf_probe_cells,
     )
 
-    cb = spark.read.parquet(f"{trained_path}/pq_trained_codebook")
-    codes = spark.read.parquet(f"{trained_path}/pq_trained_codes")
+    cb = read_pq_trained_codebook(spark, trained_path)
+    codes = read_pq_codes(spark, trained_path, trained=True)
     recalls = []
     for qid in (1, 5, 9, 33, 77):
         q = _norm_q(emb, qid)
@@ -177,14 +185,14 @@ def test_trained_append_equals_full_reencode(spark, tmp_path, emb):
     pq_trained_build(spark, path, m=_M, k_star=_KSTAR, iters=2)
     pq_trained_append(spark, path, tail, m=_M)
 
-    cb = spark.read.parquet(f"{path}/pq_trained_codebook")
+    cb = read_pq_trained_codebook(spark, path)
     expect = {
         (r.vec_id, r.sub_j, r.code)
         for r in pq_assign(emb, cb, m=_M).collect()
     }
     got = {
         (r.vec_id, r.sub_j, r.code)
-        for r in spark.read.parquet(f"{path}/pq_trained_codes")
+        for r in read_pq_codes(spark, path, trained=True)
         .select("vec_id", "sub_j", "code")
         .collect()
     }
@@ -213,12 +221,10 @@ def test_vacuum_rewrites_trained_codes(spark, tmp_path, emb):
     pq_trained_build(spark, path, m=_M, k_star=_KSTAR, iters=1)
     ivf_delete(spark, path, [3, 7])
     ivf_vacuum(spark, path)
-    import os
-
-    assert not os.path.exists(f"{path}/tombstones")
+    assert not has_files(path, TLOG_IVF_TOMBS_TAG)
     left = {
         r.vec_id
-        for r in spark.read.parquet(f"{path}/pq_trained_codes")
+        for r in read_pq_codes(spark, path, trained=True)
         .select("vec_id")
         .distinct()
         .collect()
@@ -226,7 +232,7 @@ def test_vacuum_rewrites_trained_codes(spark, tmp_path, emb):
     assert 3 not in left and 7 not in left
     cells_left = {
         r.vec_id
-        for r in spark.read.parquet(f"{path}/cells").select("vec_id").collect()
+        for r in read_cells(spark, path).select("vec_id").collect()
     }
     assert left == cells_left
 
@@ -295,7 +301,7 @@ def test_range_search_matches_flat_and_prunes_clustered_cells(spark, tmp_path):
     radii = {r.cell_id: r.radius for r in ivf_cell_radii(spark, path).collect()}
     cents = {
         r.cell_id: r.centroid
-        for r in spark.read.parquet(f"{path}/codebook").collect()
+        for r in read_codebook(spark, path).collect()
     }
     # iterate populated cells only (a stride centroid can own zero
     # members on clustered data; empty cells have no radius row and
@@ -348,21 +354,21 @@ def test_train_codebook_sparse_ids_raise(spark):
 
 
 def test_append_merge_updates_persisted_radii(spark, tmp_path, emb):
-    """ivf_append refreshes the persisted cell_radii from the BATCH
-    alone (O(batch) merge-update); the merged bounds must equal a full
-    recompute over the unioned layout."""
+    """ivf_append commits the BATCH's radii alone (O(batch) partial
+    maxima); the bounds merged from them must equal a full recompute
+    over the unioned layout."""
     from cnc_visionsearch_spark.operators.ann import (
         _compute_cell_radii,
         ivf_append,
         ivf_build,
+        ivf_cell_radii,
     )
 
     path = str(tmp_path / "layout")
     ivf_build(emb.filter(F.col("vec_id") < 300), path, n_cells=8)
     ivf_append(spark, path, emb.filter(F.col("vec_id") >= 300))
     persisted = {
-        r.cell_id: r.radius
-        for r in spark.read.parquet(f"{path}/cell_radii").collect()
+        r.cell_id: r.radius for r in ivf_cell_radii(spark, path).collect()
     }
     full = {
         r.cell_id: r.radius for r in _compute_cell_radii(spark, path).collect()
@@ -416,7 +422,7 @@ def test_rq_codes_cover_corpus_once(spark, emb):
     )
 
     path = ensure_rq(spark, SF_01)
-    codes = spark.read.parquet(f"{path}/rq_codes")
+    codes = read_rq_codes(spark, path)
     n = emb.count()
     assert codes.count() == n
     assert codes.select("vec_id").distinct().count() == n
@@ -434,8 +440,6 @@ def test_rq_append_equals_full_reencode(spark, tmp_path, emb):
     400 vectors, append the rest, and every appended vector's (c1, c2)
     must equal coding it directly under the same frozen codebooks;
     resident code files stay byte-identical."""
-    import os
-
     from cnc_visionsearch_spark.operators.rq import (
         argmin_code,
         rq_append,
@@ -447,23 +451,13 @@ def test_rq_append_equals_full_reencode(spark, tmp_path, emb):
     rest = emb.filter(F.col("vec_id") >= 400)
     rq_build(spark, path, base, k1=8, k2=16, iters=2)
 
-    def _snap():
-        out = {}
-        for root, _dirs, files in os.walk(f"{path}/rq_codes"):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    out[p] = os.path.getmtime(p)
-        return out
-
-    before = _snap()
+    before = live_md5s(path, part="c1", base=TLOG_RQ_CODES_STRIDE)
     rq_append(spark, path, rest)
-    after = _snap()
+    after = live_md5s(path, part="c1", base=TLOG_RQ_CODES_STRIDE)
     for p, m in before.items():
-        assert p in after and after[p] == m, f"resident file touched: {p}"
+        assert after.get(p) == m, f"resident file touched: {p}"
 
-    cb1 = spark.read.parquet(f"{path}/rq_codebook_l1")
-    cb2 = spark.read.parquet(f"{path}/rq_codebook_l2")
+    cb1, cb2 = read_rq_codebooks(spark, path)
     a1 = argmin_code(rest, cb1, "nvec").withColumnRenamed("code", "e1")
     res = (
         rest.join(a1.withColumnRenamed("e1", "c1"), "vec_id")
@@ -481,7 +475,7 @@ def test_rq_append_equals_full_reencode(spark, tmp_path, emb):
     }
     stored = {
         r.vec_id: (r.c1, r.c2)
-        for r in spark.read.parquet(f"{path}/rq_codes")
+        for r in read_rq_codes(spark, path)
         .filter(F.col("vec_id") >= 400)
         .collect()
     }
@@ -491,12 +485,10 @@ def test_rq_append_equals_full_reencode(spark, tmp_path, emb):
 def test_rq_delete_hides_then_vacuum_retires(spark, tmp_path, emb):
     """The RQ tier honors the layout's shared tombstone set: deleted
     ids vanish from the probe immediately, vacuum rewrites only the
-    touched c1 partitions (crash-safe swap) and drops the tombstones,
+    touched c1 domains (one rewrite commit) and drops the tombstones,
     and the probe result is unchanged after physical removal."""
     from cnc_visionsearch_spark.operators.ann import ivf_delete, ivf_vacuum
     from cnc_visionsearch_spark.operators.rq import rq_build, rq_probe_topk
-
-    import os
 
     path = str(tmp_path / "rq_del")
     rq_build(spark, path, emb, k1=8, k2=16, iters=2)
@@ -513,9 +505,9 @@ def test_rq_delete_hides_then_vacuum_retires(spark, tmp_path, emb):
     got_ids = [r.vec_id for r in after]
     assert not set(victims) & set(got_ids)
     ivf_vacuum(spark, path)
-    assert not os.path.exists(f"{path}/tombstones")
+    assert not has_files(path, TLOG_IVF_TOMBS_TAG)
     assert (
-        spark.read.parquet(f"{path}/rq_codes")
+        read_rq_codes(spark, path)
         .filter(F.col("vec_id").isin(victims))
         .count()
         == 0

@@ -14,11 +14,14 @@ from cnc_visionsearch_spark.operators.maxsim import (
     doc_distinct_tokens,
     li_token_vec_py,
     maxsim_multi_probe,
+    read_doc_cells,
+    read_token_cells,
     token_ivf_build,
     token_ivf_candidates,
     token_ivf_probe_cells,
 )
 from cnc_visionsearch_spark.sources.catalog import load_table
+from layout_files import live_md5s, scan_tags
 
 SF = "/root/testdata/sf0.001"
 
@@ -40,26 +43,25 @@ def test_token_ivf_build_deterministic(spark, built, tmp_path):
     token_ivf_build(docs, other, n_cells=TOKEN_IVF_CELLS)
     a = sorted(
         (r.tok, r.cell_id)
-        for r in spark.read.parquet(f"{built}/token_cells").collect()
+        for r in read_token_cells(spark, built).collect()
     )
     b = sorted(
         (r.tok, r.cell_id)
-        for r in spark.read.parquet(f"{other}/token_cells").collect()
+        for r in read_token_cells(spark, other).collect()
     )
     assert a == b and len(a) > 0
 
 
 def test_doc_cells_probe_is_partition_pruned(spark, built):
-    """The candidate read must prune doc_cells partitions: the scan's
-    partition filters carry the probed cell ids, so at 100 TB the
+    """The candidate read must prune doc_cells: the scan holds only the
+    probed cells' files (log-level file pruning), so at 100 TB the
     probe reads nprobe/n_cells of the files, never the table."""
     cand = token_ivf_candidates(spark, built, ["vector", "hash"], nprobe=2)
-    plan = cand._sc is None or cand._jdf.queryExecution().executedPlan().toString()
     cells = token_ivf_probe_cells(spark, built, ["vector", "hash"], nprobe=2)
     assert 0 < len(cells) < TOKEN_IVF_CELLS
-    assert "PartitionFilters: [cell_id" in plan or "cell_id#" in plan
+    assert scan_tags(cand) == set(cells)
     # ground truth: candidates == docs holding >= 1 token of a probed cell
-    tc = spark.read.parquet(f"{built}/token_cells").filter(
+    tc = read_token_cells(spark, built).filter(
         F.col("cell_id").isin(cells)
     )
     docs = load_table(spark, SF, "documents")
@@ -102,7 +104,7 @@ def test_vector_candidates_reach_docs_lexical_pruning_cannot(
     qcells = token_ivf_probe_cells(spark, path, [qtok], nprobe=1)
     partners = [
         r.tok
-        for r in spark.read.parquet(f"{path}/token_cells")
+        for r in read_token_cells(spark, path)
         .filter(F.col("cell_id").isin(qcells) & (F.col("tok") != qtok))
         .collect()
     ]
@@ -287,8 +289,6 @@ def test_token_ivf_append_frozen_codebook(spark, tmp_path):
     FROZEN build-time centroids; resident doc_cells files stay
     byte-untouched; probes over the appended layout see exactly the
     union candidate set of the frozen-codebook rule."""
-    import os
-
     from cnc_visionsearch_spark.operators.maxsim import token_ivf_append
 
     docs = load_table(spark, SF, "documents")
@@ -297,24 +297,15 @@ def test_token_ivf_append_frozen_codebook(spark, tmp_path):
     path = str(tmp_path / "tivf_app")
     token_ivf_build(base, path, n_cells=TOKEN_IVF_CELLS)
 
-    def files(sub):
-        out = {}
-        for root, _d, fs in os.walk(os.path.join(path, sub)):
-            for f in fs:
-                if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    out[p] = (os.path.getsize(p), os.path.getmtime(p))
-        return out
-
-    before = files("doc_cells")
+    before = live_md5s(path)
     token_ivf_append(rest, path)
-    after = files("doc_cells")
+    after = live_md5s(path)
     assert set(before) <= set(after) and len(after) > len(before)
     for p, sig in before.items():
         assert after[p] == sig  # resident files byte-untouched
     # union candidate set == frozen-codebook ground truth
     cells = token_ivf_probe_cells(spark, path, ["vector"], nprobe=2)
-    tc = spark.read.parquet(f"{path}/token_cells").filter(
+    tc = read_token_cells(spark, path).filter(
         F.col("cell_id").isin(cells)
     )
     want = {
@@ -406,13 +397,13 @@ def test_token_ivf_ingest_divergent_redelivery_deterministic(
     )
     a = sorted(
         (r.cell_id, r.doc_id)
-        for r in spark.read.parquet(f"{streamed}/doc_cells")
+        for r in read_doc_cells(spark, streamed)
         .filter(F.col("doc_id") == 9001)
         .collect()
     )
     b = sorted(
         (r.cell_id, r.doc_id)
-        for r in spark.read.parquet(f"{oneshot}/doc_cells")
+        for r in read_doc_cells(spark, oneshot)
         .filter(F.col("doc_id") == 9001)
         .collect()
     )
@@ -514,12 +505,12 @@ def test_maxsim_multi_probe_empty_token_lists(spark, tmp_path):
     assert [f.name for f in out.schema.fields] == ["qid", "doc_id", "score_q"]
 
 
-@pytest.mark.parametrize("use_tlog", [False, True])
+@pytest.mark.parametrize("use_tlog", [True])
 def test_postings_unique_per_term_and_doc(spark, tmp_path, use_tlog):
     """maxsim_multi_probe's lexical candidate count is a count(*) over
     (qid, term, doc_id) rows, which equals the distinct-term count only
-    while postings are (term, doc_id)-unique. Pin that on both layouts,
-    after the build and after an append of new documents."""
+    while postings are (term, doc_id)-unique. Pin that after the build
+    and after an append of new documents."""
     from cnc_visionsearch_spark.operators.text_index import (
         inverted_append,
         inverted_build,

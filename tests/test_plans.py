@@ -17,6 +17,7 @@ from cnc_visionsearch_spark.plans import (
 )
 from cnc_visionsearch_spark.registry import all_queries
 from cnc_visionsearch_spark.sources.catalog import load_table
+from layout_files import scan_tags
 
 SF = "/root/testdata/sf0.01"
 
@@ -188,15 +189,19 @@ def test_q2_rank1_uses_window_group_limit(spark, queries):
     assert "WindowGroupLimit" in plan
 
 
+def _cell_tags(df, base=0):
+    """Partition keys of the ``base``-family files an IVF-layout scan
+    reads (cells at base 0, code tables at their stride)."""
+    return {t - base for t in scan_tags(df) if base <= t < base + 10_000}
+
+
 def test_ivf_probe_prunes_cells(spark, queries):
-    """IVF probe runs against the materialized cell-partitioned layout:
-    the nprobe filter must surface as a PartitionFilter on the scan
-    (real file pruning — nprobe/n_cells of the data read), and the scan
-    schema must carry only (id, vector)."""
+    """IVF probe runs against the materialized cell layout: the scan
+    holds only the nprobe probed cells' files (log-level file pruning —
+    nprobe/n_cells of the data read), and the scan schema must carry
+    only (id, vector)."""
     df = queries["ann_ivf_topk"](spark, SF)
-    plan = plan_of(df)
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and any("cell_id" in ln and "IN (" in ln for ln in pf)
+    assert 0 < len(_cell_tags(df)) < 8
     assert all("label" not in s for s in read_schemas(df))
 
 
@@ -352,24 +357,23 @@ def test_simhash_pairs_single_groupby_no_selfjoin(spark, queries):
 
 def test_ivf_pq_probe_prunes_code_partitions(spark, queries):
     """The composed IVF x PQ probe must prune BOTH persisted tables on
-    cell_id (PartitionFilters on the pq_codes scan as well as the cells
-    scan) — the ADC stage reads nprobe/n_cells of the m-byte code
-    files, never a full code-table scan."""
+    cell_id (the pq_codes scan as well as the cells scan holds only the
+    probed cells' files) — the ADC stage reads nprobe/n_cells of the
+    m-byte code files, never a full code-table scan."""
+    from cnc_visionsearch_spark.operators.ann import TLOG_PQ_CODES_STRIDE
+
     df = queries["ann_ivf_pq_topk"](spark, SF)
-    plan = plan_of(df)
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    pruned = [ln for ln in pf if "cell_id" in ln and "IN (" in ln]
-    assert len(pruned) >= 2, f"expected cells+codes both pruned, got {pf}"
+    cells = _cell_tags(df)
+    codes = _cell_tags(df, TLOG_PQ_CODES_STRIDE)
+    assert 0 < len(cells) < 8 and 0 < len(codes) < 8, (cells, codes)
 
 
 def test_ivf_append_probe_still_prunes(spark, queries):
     """Probes over an APPENDED layout keep the same pruned plan shape:
-    appends add files inside cell partitions, they never degrade the
+    appends add files inside cell domains, they never degrade the
     probe to a full scan."""
     df = queries["ann_ivf_append_topk"](spark, SF)
-    plan = plan_of(df)
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and any("cell_id" in ln and "IN (" in ln for ln in pf)
+    assert 0 < len(_cell_tags(df)) < 8
 
 
 def test_text_search_probes_persisted_index_no_python(spark, queries):
@@ -395,12 +399,11 @@ def test_lsh_persisted_probe_prunes_bucket_partition(spark, queries):
 
 def test_filtered_ann_pushes_both_predicates(spark, queries):
     """Filtered vector search composes the metadata predicate with the
-    IVF pruning in ONE scan: cell_id surfaces as a PartitionFilter AND
-    label as a PushedFilter on the same parquet read."""
+    IVF pruning in ONE scan: only the probed cells' files are read AND
+    label is a PushedFilter on the same parquet read."""
     df = queries["ann_ivf_filtered_topk"](spark, SF)
     plan = plan_of(df)
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and any("cell_id" in ln for ln in pf)
+    assert 0 < len(_cell_tags(df)) < 8
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert pushed and any("label" in ln for ln in pushed)
 
@@ -548,30 +551,23 @@ def test_monthly_rollup_serves_from_daily_artifact(spark, queries):
 
 
 def _tb_values(files):
-    """Distinct _tb= domain tags in a transactional layout's scanned
-    file set ([] on legacy layouts — their paths carry bucket= hive
-    dirs instead)."""
+    """Distinct _tb= domain tags in a layout's scanned file set."""
     return sorted(
         {int(f.split("_tb=")[1].split("/")[0]) for f in files if "_tb=" in f}
     )
 
 
 def _assert_bucket_pruned(df, n_buckets=16, expect=None):
-    """Mode-aware pruning evidence for inverted-layout probes. On a
-    TRANSACTIONAL layout the proof is the scan's ACTUAL FILE SET (the
-    log-tag selection already excluded other buckets' files — stronger
-    than a filter string); on a legacy layout it is the hive
-    PartitionFilters bucket IN (...) line."""
+    """Pruning evidence for inverted-layout probes: the scan's ACTUAL
+    FILE SET (the log-tag selection already excluded other buckets'
+    files — stronger than a filter string)."""
     files = df.inputFiles()
     assert files and all("inverted" in f for f in files)
     tb = _tb_values(files)
-    if tb:
-        if expect is not None:
-            assert set(tb) <= set(expect), (tb, expect)
-        assert len(tb) < n_buckets, tb  # proper subset == pruned scan
-        return
-    pf = [ln for ln in plan_of(df).splitlines() if "PartitionFilters" in ln]
-    assert pf and any("bucket" in ln and "IN (" in ln for ln in pf)
+    assert tb
+    if expect is not None:
+        assert set(tb) <= set(expect), (tb, expect)
+    assert len(tb) < n_buckets, tb  # proper subset == pruned scan
 
 
 def test_inverted_phrase_probe_schema_is_postings_only(spark, queries):
@@ -596,14 +592,10 @@ def test_inverted_bm25_probe_reads_index_only(spark, queries):
     df = queries["text_inverted_bm25_topk"](spark, SF)
     files = df.inputFiles()
     assert files and all("inverted" in f for f in files)
-    if _tb_values(files):
-        # transactional layout: postings files carry _tb= domain dirs,
-        # the doclens norms file is untagged — both subtables present
-        assert any("_tb=" in f for f in files)
-        assert any("_tb=" not in f for f in files)
-    else:
-        assert any("doclens" in f for f in files)
-        assert any("postings" in f for f in files)
+    # postings files carry _tb= domain dirs, the doclens norms file is
+    # untagged — both subtables present
+    assert any("_tb=" in f for f in files)
+    assert any("_tb=" not in f for f in files)
     _assert_bucket_pruned(df)
 
 
@@ -613,7 +605,8 @@ def test_semdedup_rides_the_ivf_layout(spark, queries):
     of an index the pipeline already maintains."""
     df = queries["emb_semdedup_cell_report"](spark, SF)
     files = df.inputFiles()
-    assert files and all("/cells/" in f for f in files)
+    assert files and all("/ivf_c8/data/" in f for f in files)
+    assert scan_tags(df) and all(t < 10_000 for t in scan_tags(df))
 
 
 def test_bm25_batch_probe_plan_shape(spark, queries):
@@ -696,20 +689,16 @@ def test_rq_probe_prunes_code_partitions_and_broadcasts_model(
     """ann_rq_trained_topk: the code scan is partition-pruned to the
     probed coarse cells; both codebooks and the candidate set join by
     broadcast; the corpus never shuffles."""
-    df = queries["ann_rq_trained_topk"](spark, SF)
-    plan = plan_of(df)
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and any("c1" in ln and "IN (" in ln for ln in pf)
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
+    from cnc_visionsearch_spark.operators.ann import TLOG_RQ_CODES_STRIDE
     from cnc_visionsearch_spark.queries_ann_trained import _RQ_K1, _RQ_NPROBE
 
-    # the c1 IN (...) partition filter carries exactly the probed cells
-    # (inputFiles() ignores pruning, so parse the plan's filter list)
-    in_list = next(
-        ln for ln in pf if "c1" in ln and "IN (" in ln
-    ).split("IN (")[1].split(")")[0]
-    assert 0 < len(in_list.split(",")) <= _RQ_NPROBE < _RQ_K1
+    df = queries["ann_rq_trained_topk"](spark, SF)
+    plan = plan_of(df)
+    assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
+    # the code scan holds exactly the probed coarse cells' files
+    c1s = _cell_tags(df, TLOG_RQ_CODES_STRIDE)
+    assert 0 < len(c1s) <= _RQ_NPROBE < _RQ_K1
 
 
 def test_budget_epochs_single_corpus_scan(spark, queries):

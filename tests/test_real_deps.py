@@ -83,45 +83,3 @@ def test_pytesseract_slot():
     pytesseract = pytest.importorskip("pytesseract")
 
     assert callable(pytesseract.image_to_string)
-
-
-def test_faiss_shard_artifact_write_and_probe(spark, tmp_path):
-    """With faiss installed, shard_build must serialize one HNSW
-    artifact per shard into {path}/faiss_idx, sharded_topk_persisted
-    must serve candidates FROM the artifacts (never raw vectors), and
-    shard_append must refresh only the touched shards' artifacts.
-    Skips cleanly where faiss is absent (this container)."""
-    pytest.importorskip("faiss")
-    import os
-
-    from pyspark.sql import functions as F
-
-    from cnc_visionsearch_spark.operators.ann import (
-        shard_append,
-        shard_build,
-        sharded_topk_persisted,
-    )
-    from cnc_visionsearch_spark.operators.knn import with_normalized
-    from cnc_visionsearch_spark.sources.catalog import load_table
-
-    emb = with_normalized(load_table(spark, "/root/testdata/sf0.01", "embeddings"))
-    path = str(tmp_path / "faiss_shards")
-    shard_build(emb.filter(F.col("vec_id") < 300), path, num_shards=4)
-    assert os.path.exists(f"{path}/faiss_idx")
-    idx = spark.read.parquet(f"{path}/faiss_idx")
-    assert {r.shard for r in idx.select("shard").collect()} == {0, 1, 2, 3}
-    assert set(idx.columns) == {"shard", "ids", "index_bytes"}
-
-    raw = emb.filter(F.col("vec_id") == 3).select("nvec").first()[0]
-    got = sharded_topk_persisted(spark, path, [float(x) for x in raw], k=10)
-    rows = got.collect()
-    assert len(rows) == 10
-    assert rows[0].vec_id == 3 and rows[0].distance == 0.0  # self-match
-    dists = [r.distance for r in rows]
-    assert dists == sorted(dists)
-
-    # append refreshes artifacts: the new vectors become findable
-    shard_append(spark, path, emb.filter(F.col("vec_id") >= 300))
-    raw2 = emb.filter(F.col("vec_id") == 301).select("nvec").first()[0]
-    got2 = sharded_topk_persisted(spark, path, [float(x) for x in raw2], k=5)
-    assert got2.first().vec_id == 301  # appended self-match found

@@ -10,6 +10,13 @@ import time
 
 from pyspark.sql import functions as F
 
+from cnc_visionsearch_spark.operators.ann import (
+    TLOG_PQ_CODES_STRIDE,
+    read_codebook,
+    read_pq_codes,
+    read_pq_trained_codebook,
+)
+from cnc_visionsearch_spark.operators.graph_ann import _hnsw_entry
 from cnc_visionsearch_spark.sources.catalog import load_table
 from cnc_visionsearch_spark.streaming.pipelines import (
     read_event_stream,
@@ -17,6 +24,7 @@ from cnc_visionsearch_spark.streaming.pipelines import (
     streaming_upsert_sink,
     tumbling_counts_stream,
 )
+from layout_files import live_md5s, scan_tags
 
 SF = "/root/testdata/sf0.001"
 
@@ -617,8 +625,6 @@ def test_ivf_ingest_stream_extends_persisted_index(spark, tmp_path):
     its PQ code table) against the frozen codebook; a probe after the
     stream commits equals a probe over the full corpus with the same
     codebook, and pre-existing files survive byte-identical."""
-    import hashlib
-
     from cnc_visionsearch_spark.operators.ann import (
         ivf_assign,
         ivf_build,
@@ -634,20 +640,8 @@ def test_ivf_ingest_stream_extends_persisted_index(spark, tmp_path):
     ivf_build(emb.filter(F.col("vec_id") < 300), path, n_cells=8)
     pq_build(spark, path, m=8)
 
-    def md5s(root):
-        out = {}
-        for dp, _d, fs in os.walk(root):
-            for f in fs:
-                if f.endswith(".parquet"):
-                    p = os.path.join(dp, f)
-                    with open(p, "rb") as fh:
-                        out[os.path.relpath(p, root)] = hashlib.md5(
-                            fh.read()
-                        ).hexdigest()
-        return out
-
-    before_cells = md5s(f"{path}/cells")
-    before_codes = md5s(f"{path}/pq_codes")
+    before_cells = live_md5s(path)
+    before_codes = live_md5s(path, base=TLOG_PQ_CODES_STRIDE)
 
     rest = emb.filter(F.col("vec_id") >= 300).select(
         "vec_id", "embedding", "label"
@@ -665,8 +659,8 @@ def test_ivf_ingest_stream_extends_persisted_index(spark, tmp_path):
     ).start()
     q.awaitTermination(180)
 
-    after_cells = md5s(f"{path}/cells")
-    after_codes = md5s(f"{path}/pq_codes")
+    after_cells = live_md5s(path)
+    after_codes = live_md5s(path, base=TLOG_PQ_CODES_STRIDE)
     for rel, digest in before_cells.items():
         assert after_cells.get(rel) == digest
     for rel, digest in before_codes.items():
@@ -674,7 +668,7 @@ def test_ivf_ingest_stream_extends_persisted_index(spark, tmp_path):
 
     # probe over the streamed-into layout == full-corpus probe under
     # the frozen codebook (ids and distances)
-    cents = spark.read.parquet(f"{path}/codebook")
+    cents = read_codebook(spark, path)
     raw = emb.filter(F.col("vec_id") == 301).select("nvec").first()[0]
     qv = [float(x) for x in raw]
     want = [
@@ -690,7 +684,7 @@ def test_ivf_ingest_stream_extends_persisted_index(spark, tmp_path):
     # code table is complete: 8 codes for every vector incl. streamed
     n_vec = emb.count()
     assert (
-        spark.read.parquet(f"{path}/pq_codes").count() == n_vec * 8
+        read_pq_codes(spark, path).count() == n_vec * 8
     )
 
 
@@ -784,14 +778,14 @@ def test_ivf_ingest_stream_extends_trained_codes(spark, tmp_path):
     ).start()
     q.awaitTermination(180)
 
-    cb = spark.read.parquet(f"{path}/pq_trained_codebook")
+    cb = read_pq_trained_codebook(spark, path)
     expect = {
         (r.vec_id, r.sub_j, r.code)
         for r in pq_assign(emb, cb, m=16).collect()
     }
     got = {
         (r.vec_id, r.sub_j, r.code)
-        for r in spark.read.parquet(f"{path}/pq_trained_codes")
+        for r in read_pq_codes(spark, path, trained=True)
         .select("vec_id", "sub_j", "code")
         .collect()
     }
@@ -867,16 +861,7 @@ def test_inverted_ingest_stream_extends_postings(spark, tmp_path):
     idx = str(tmp_path / "inverted")
     inverted_build(base, idx, n_buckets=8)
 
-    def file_sizes(root):
-        out = {}
-        for dirpath, _dirs, files in os.walk(f"{root}/postings"):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(dirpath, f)
-                    out[p] = os.path.getsize(p)
-        return out
-
-    before = file_sizes(idx)
+    before = live_md5s(idx)
     stream_dir = _write_chunks(spark, str(tmp_path), chunks)
     q = inverted_ingest_stream(
         spark, stream_dir, idx, str(tmp_path / "ckpt_inv"),
@@ -884,7 +869,7 @@ def test_inverted_ingest_stream_extends_postings(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    after = file_sizes(idx)
+    after = live_md5s(idx)
     assert set(before) <= set(after) and len(after) > len(before)
     for p, sz in before.items():
         assert after[p] == sz  # resident files untouched
@@ -915,16 +900,16 @@ def test_inverted_ingest_stream_extends_postings(spark, tmp_path):
 
 def test_inverted_postings_compaction_preserves_probe(spark, tmp_path):
     """St5 for the text tier: streaming appends accrete one file per
-    micro-batch per bucket; compact_layout must shrink the file count
-    while keeping phrase-probe results identical and the bucket
-    partitioning (pruning) intact."""
+    micro-batch per bucket; inverted_compact must shrink the file count
+    to one per bucket while keeping phrase-probe results identical and
+    the bucket pruning intact."""
     from cnc_visionsearch_spark.operators.text_index import (
         inverted_append,
         inverted_build,
+        inverted_compact,
         phrase_probe,
+        term_bucket,
     )
-    from cnc_visionsearch_spark.plans import formatted_plan
-    from cnc_visionsearch_spark.sources.formats import compact_layout
 
     docs = load_table(spark, SF, "documents")
     idx = str(tmp_path / "inv")
@@ -933,27 +918,19 @@ def test_inverted_postings_compaction_preserves_probe(spark, tmp_path):
         inverted_append(docs.filter(F.col("doc_id") % 4 == i), idx, n_buckets=4)
 
     def n_files():
-        n = 0
-        for dirpath, _dirs, files in os.walk(f"{idx}/postings"):
-            n += sum(f.endswith(".parquet") for f in files)
-        return n
+        return len(live_md5s(idx))
 
     before_files = n_files()
     before = {
         (r.doc_id, r.n_occurrences)
         for r in phrase_probe(spark, idx, "slow", "fast", n_buckets=4).collect()
     }
-    compact_layout(spark, f"{idx}/postings", partition_by=["bucket"])
+    inverted_compact(spark, idx)
     assert n_files() < before_files
     probe = phrase_probe(spark, idx, "slow", "fast", n_buckets=4)
     after = {(r.doc_id, r.n_occurrences) for r in probe.collect()}
     assert after == before and after
-    pf = [
-        ln
-        for ln in formatted_plan(probe).splitlines()
-        if "PartitionFilters" in ln
-    ]
-    assert pf and any("bucket" in ln for ln in pf)
+    assert scan_tags(probe) == {term_bucket(t, 4) for t in ("slow", "fast")}
 
 
 def test_bm25_serving_stream_matches_batch_probe(spark, tmp_path):
@@ -1066,8 +1043,6 @@ def test_hnsw_ingest_stream_inserts_reachable_nodes(spark, tmp_path):
     touched (layer, bucket) partitions), pre-existing graph files
     survive byte-identical except touched back-edge partitions, and
     the entry artifact is promoted if a streamed node out-levels it."""
-    import hashlib
-
     from cnc_visionsearch_spark.operators.graph_ann import (
         hnsw_build,
         hnsw_search,
@@ -1083,7 +1058,7 @@ def test_hnsw_ingest_stream_inserts_reachable_nodes(spark, tmp_path):
         emb.filter(F.col("vec_id") < 300), path, m=8, m_upper=6
     )
     base_entry_lvl = int(
-        spark.read.parquet(f"{path}/entry").first()["level"]
+        _hnsw_entry(spark, path)["level"]
     )
 
     raw = load_table(spark, SF, "embeddings")
@@ -1109,7 +1084,7 @@ def test_hnsw_ingest_stream_inserts_reachable_nodes(spark, tmp_path):
         assert vid in ids
     # entry level can only stay or rise
     assert (
-        int(spark.read.parquet(f"{path}/entry").first()["level"])
+        int(_hnsw_entry(spark, path)["level"])
         >= base_entry_lvl
     )
 

@@ -1,12 +1,14 @@
-"""Derived artifacts under the transaction log (r8 verdict #1):
-mode-invariance (tlog layout == legacy layout for every probe) and
-racing-writer arbitration per artifact — a concurrent append+vacuum
-either SERIALIZES (disjoint conflict domains) or raises
+"""Derived artifacts under the transaction log (r8 verdict #1): each
+tier's full lifecycle serves the rows the retired tmp+rename layouts
+served (pinned below as literals and digests recorded from those
+layouts), and racing writers are arbitrated per artifact — a
+concurrent append+vacuum either SERIALIZES (disjoint conflict domains) or raises
 TLogConflictError cleanly and recomputes under run_transaction; no
 interleave loses data or tears a read."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pytest
@@ -48,6 +50,11 @@ from cnc_visionsearch_spark.sources.tlog import (
 SF = "/root/testdata/sf0.001"
 
 
+def _digest(rows) -> str:
+    """md5 of the rows' repr — pins a whole table as one literal."""
+    return hashlib.md5(repr(rows).encode()).hexdigest()
+
+
 def _docs(spark):
     return load_table(spark, SF, "documents").select("doc_id", "text")
 
@@ -80,43 +87,41 @@ def _inject_before_first_rewrite(monkeypatch, inject_fn):
 
 
 def test_inverted_tlog_mode_invariant_lifecycle(spark, tmp_path):
-    """build -> append -> delete -> vacuum -> compact on a tlog layout
-    yields byte-identical probe results to the same lifecycle on a
-    legacy layout (the same read seams serve both)."""
+    """build -> append -> delete -> vacuum -> compact yields the BM25
+    rows the retired directory layout returned for the same lifecycle
+    (pinned: row count, digest, top 5)."""
     docs = _docs(spark)
     base = docs.filter(F.col("doc_id") < 150)
     day2 = docs.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 200))
+    path = str(tmp_path / "tl")
 
-    def run(path, use_tlog):
-        inverted_build(base, path, n_buckets=8, use_tlog=use_tlog)
-        inverted_append(day2, path, n_buckets=8)
-        inverted_delete(spark, path, [5, 7, 160])
-        pre = (
-            bm25_probe(spark, path, ["vector", "scan"], n_buckets=8)
+    def probe():
+        return [
+            tuple(r)
+            for r in bm25_probe(spark, path, ["vector", "scan"], n_buckets=8)
             .orderBy(F.col("score_q").desc(), "doc_id")
             .collect()
-        )
-        inverted_vacuum(spark, path)
-        post = (
-            bm25_probe(spark, path, ["vector", "scan"], n_buckets=8)
-            .orderBy(F.col("score_q").desc(), "doc_id")
-            .collect()
-        )
-        assert pre == post  # vacuum never changes results
-        return post
+        ]
 
-    legacy = run(str(tmp_path / "leg"), False)
-    tl = run(str(tmp_path / "tl"), True)
-    assert legacy == tl
+    inverted_build(base, path, n_buckets=8)
+    inverted_append(day2, path, n_buckets=8)
+    inverted_delete(spark, path, [5, 7, 160])
+    pre = probe()
+    inverted_vacuum(spark, path)
+    tl = probe()
+    assert pre == tl  # vacuum never changes results
+    assert (len(tl), _digest(tl)) == (184, "8182d6b7760816ec321e8e7c48188c5d")
+    assert tl[:5] == [
+        (94, 2, 1079873363),
+        (131, 2, 1078984421),
+        (63, 2, 1072751307),
+        (25, 2, 1058893275),
+        (41, 2, 1035467255),
+    ]
     # compact settles to one file per live domain, results unchanged
-    inverted_compact(spark, str(tmp_path / "tl"))
-    after = (
-        bm25_probe(spark, str(tmp_path / "tl"), ["vector", "scan"], n_buckets=8)
-        .orderBy(F.col("score_q").desc(), "doc_id")
-        .collect()
-    )
-    assert after == tl
-    assert read_doclens(spark, str(tmp_path / "tl")).count() == 197
+    inverted_compact(spark, path)
+    assert probe() == tl
+    assert read_doclens(spark, path).count() == 197
 
 
 def test_inverted_racing_append_vs_vacuum_conflicts_and_recomputes(
@@ -130,7 +135,7 @@ def test_inverted_racing_append_vs_vacuum_conflicts_and_recomputes(
     path = str(tmp_path / "inv")
     docs = _docs(spark)
     inverted_build(
-        docs.filter(F.col("doc_id") < 100), path, n_buckets=8, use_tlog=True
+        docs.filter(F.col("doc_id") < 100), path, n_buckets=8
     )
     inverted_delete(spark, path, [5, 7])
     racing = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
@@ -157,25 +162,30 @@ def test_inverted_racing_append_vs_vacuum_conflicts_and_recomputes(
 
 
 def test_ivf_tlog_mode_invariant_lifecycle(spark, tmp_path):
-    docs_q = [
-        r["nvec"] for r in _emb(spark).filter(F.col("vec_id") == 3).collect()
-    ][0]
+    """build -> append -> delete -> vacuum serves the probe rows the
+    retired directory layout returned (pinned literals)."""
+    q = [r["nvec"] for r in _emb(spark).filter(F.col("vec_id") == 3).collect()][0]
     emb = _emb(spark)
-    base = emb.filter(F.col("vec_id") < 300)
-    rest = emb.filter(F.col("vec_id") >= 300)
-
-    def run(path, use_tlog):
-        ivf_build(base, path, n_cells=8, use_tlog=use_tlog)
-        ivf_append(spark, path, rest)
-        ivf_delete(spark, path, [3, 7, 450])
-        pre = ivf_probe(spark, path, list(docs_q), k=10, nprobe=4).collect()
-        ivf_vacuum(spark, path)
-        post = ivf_probe(spark, path, list(docs_q), k=10, nprobe=4).collect()
-        assert pre == post
-        assert not {r.vec_id for r in post} & {3, 7, 450}
-        return post
-
-    assert run(str(tmp_path / "leg"), False) == run(str(tmp_path / "tl"), True)
+    path = str(tmp_path / "tl")
+    ivf_build(emb.filter(F.col("vec_id") < 300), path, n_cells=8)
+    ivf_append(spark, path, emb.filter(F.col("vec_id") >= 300))
+    ivf_delete(spark, path, [3, 7, 450])
+    pre = ivf_probe(spark, path, list(q), k=10, nprobe=4).collect()
+    ivf_vacuum(spark, path)
+    post = [tuple(r) for r in ivf_probe(spark, path, list(q), k=10, nprobe=4).collect()]
+    assert [tuple(r) for r in pre] == post
+    assert post == [
+        (223, 1.3181691692934476),
+        (212, 1.3605571723761458),
+        (84, 1.360671525790928),
+        (426, 1.3698035574338148),
+        (278, 1.4612057914616303),
+        (137, 1.5080864759005719),
+        (32, 1.543794093283275),
+        (108, 1.560202670145336),
+        (380, 1.5619350001685477),
+        (53, 1.5654909493450304),
+    ]
 
 
 def test_ivf_racing_append_to_untouched_cells_serializes(
@@ -187,7 +197,7 @@ def test_ivf_racing_append_to_untouched_cells_serializes(
     conflict, no retry): bucket-domain arbitration, not a table lock."""
     path = str(tmp_path / "ivf")
     emb = _emb(spark)
-    ivf_build(emb.filter(F.col("vec_id") < 300), path, n_cells=8, use_tlog=True)
+    ivf_build(emb.filter(F.col("vec_id") < 300), path, n_cells=8)
     ivf_delete(spark, path, [3])
     t = TLog(path)
     # the vacuum will touch exactly the deleted id's cell — race an
@@ -218,7 +228,7 @@ def test_ivf_racing_delete_vs_vacuum_conflicts(spark, tmp_path, monkeypatch):
     retry applies BOTH deletes."""
     path = str(tmp_path / "ivf2")
     emb = _emb(spark)
-    ivf_build(emb.filter(F.col("vec_id") < 300), path, n_cells=8, use_tlog=True)
+    ivf_build(emb.filter(F.col("vec_id") < 300), path, n_cells=8)
     ivf_delete(spark, path, [3])
     state = _inject_before_first_rewrite(
         monkeypatch, lambda: ivf_delete(spark, path, [7])
@@ -238,7 +248,7 @@ def test_pq_rq_tlog_mode_invariant_lifecycle(spark, tmp_path):
     """r11 (the r10 'last tier' exclusion closed): the composed-codec
     code tables — stride-PQ, trained-PQ and RQ — run build/append/
     delete/vacuum as tlog commits and serve code tables content-equal
-    to the legacy layouts at every step; ivf_vacuum rewrites the
+    to the retired directory layouts' (pinned digests); ivf_vacuum rewrites the
     touched CODE domains in the SAME commit as the vector rewrite (the
     no-resurrection rule, now atomic)."""
     from cnc_visionsearch_spark.operators.ann import (
@@ -271,9 +281,9 @@ def test_pq_rq_tlog_mode_invariant_lifecycle(spark, tmp_path):
         return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
     out = {}
-    for mode, use in (("leg", False), ("tl", True)):
+    for mode in ("tl",):
         p = str(tmp_path / mode)
-        ivf_build(base, p, n_cells=4, use_tlog=use)
+        ivf_build(base, p, n_cells=4)
         pq_build(spark, p, m=4)
         pq_trained_build(spark, p, m=4, k_star=8, iters=1)
         ivf_append(spark, p, rest)
@@ -302,8 +312,24 @@ def test_pq_rq_tlog_mode_invariant_lifecycle(spark, tmp_path):
             ),
             "probe": rq_probe_topk(spark, p, q, emb, k=5).collect(),
         }
-    for key in out["leg"]:
-        assert out["leg"][key] == out["tl"][key], f"{key} diverged"
+    # pinned from the retired directory layouts' lifecycle: (rows, digest)
+    pinned = {
+        "pq": (1988, "9972fa24b33d3ae7577f1c78f6026489"),
+        "pqt": (1988, "1666cf7f4cb0cd22530064a10f8d5527"),
+        "pqt_model": (32, "98ed380c1f8217cbfd793833c3b7977a"),
+        "rq": (497, "2eb30ef6adb5c867a9522ae31168d511"),
+        "rq_model": (2, "c45a5081c2f603ef9c54611402eb5a76"),
+    }
+    for key, want in pinned.items():
+        got = out["tl"][key]
+        assert (len(got), _digest(got)) == want, f"{key} diverged"
+    assert [tuple(r) for r in out["tl"]["probe"]] == [
+        (365, 1.3577022722901495),
+        (216, 1.454925765616184),
+        (327, 1.4812082936540727),
+        (205, 1.5449716711054535),
+        (352, 1.5453909806089696),
+    ]
     # the vacuum physically removed deleted ids from EVERY code table
     for key in ("pq", "pqt", "rq"):
         assert not {r[0] for r in out["tl"][key]} & {3, 9, 450}
@@ -326,7 +352,7 @@ def test_pq_build_racing_cell_append_conflicts_and_recomputes(
 
     path = str(tmp_path / "pq")
     emb = _emb(spark)
-    ivf_build(emb.filter(F.col("vec_id") < 300), path, n_cells=4, use_tlog=True)
+    ivf_build(emb.filter(F.col("vec_id") < 300), path, n_cells=4)
     state = _inject_before_first_rewrite(
         monkeypatch,
         lambda: ivf_append(spark, path, emb.filter(F.col("vec_id") >= 300)),
@@ -345,8 +371,8 @@ def test_pq_build_racing_cell_append_conflicts_and_recomputes(
 
 def test_shard_tlog_mode_invariant_lifecycle(spark, tmp_path):
     """r10 verdict #3: the shard tier's lifecycle (build -> append ->
-    delete -> vacuum -> compact) under tlog commits serves results
-    identical to the legacy tmp+rename layout at every step."""
+    delete -> vacuum -> compact) under tlog commits serves the rows the
+    retired tmp+rename layout served (pinned literals)."""
     from cnc_visionsearch_spark.operators.ann import (
         read_shards,
         shard_append,
@@ -365,8 +391,8 @@ def test_shard_tlog_mode_invariant_lifecycle(spark, tmp_path):
     base = emb.filter(F.col("vec_id") < 300)
     rest = emb.filter(F.col("vec_id") >= 300)
 
-    def run(path, use_tlog):
-        shard_build(base, path, num_shards=4, use_tlog=use_tlog)
+    def run(path):
+        shard_build(base, path, num_shards=4)
         shard_append(spark, path, rest)
         shard_delete(spark, path, [9, 11])
         pre = sharded_topk_persisted(spark, path, q, k=10).collect()
@@ -376,10 +402,20 @@ def test_shard_tlog_mode_invariant_lifecycle(spark, tmp_path):
         assert not {r.vec_id for r in post} & {9, 11}
         return post
 
-    leg = run(str(tmp_path / "leg"), False)
     tl_path = str(tmp_path / "tl")
-    tl = run(tl_path, True)
-    assert leg == tl
+    tl = run(tl_path)
+    assert [tuple(r) for r in tl] == [
+        (381, 1.2866169631432427),
+        (107, 1.3406439618746575),
+        (365, 1.3577022722901495),
+        (261, 1.4405745230245282),
+        (396, 1.4409251754307357),
+        (216, 1.454925765616184),
+        (327, 1.4812082936540727),
+        (88, 1.4963477640258087),
+        (463, 1.4972910644284656),
+        (314, 1.4981418103894553),
+    ]
     # compact settles every build+append two-file domain to one live
     # file with results unchanged
     run_transaction(lambda: shard_compact(spark, tl_path))
@@ -388,9 +424,10 @@ def test_shard_tlog_mode_invariant_lifecycle(spark, tmp_path):
 
     cnt = Counter(b for _p, b in TLog(tl_path).snapshot().files)
     assert cnt and max(cnt.values()) == 1
-    # and the legacy layout refuses compact loudly
-    with pytest.raises(ValueError, match="transactional layout"):
-        shard_compact(spark, str(tmp_path / "leg"))
+    # a directory that is not a log layout is refused loudly
+    os.makedirs(str(tmp_path / "plain"))
+    with pytest.raises(ValueError, match="not a transaction-log"):
+        shard_compact(spark, str(tmp_path / "plain"))
     # snapshot reads prune at the log level: one shard's read lists
     # only that shard's file
     one = read_shards(spark, tl_path, shard_ids=[1])
@@ -417,7 +454,7 @@ def test_shard_tlog_negative_ids_and_empty_domain_vacuum(spark, tmp_path):
         "vec_id bigint, nvec array<double>",
     )
     path = str(tmp_path / "neg")
-    shard_build(emb, path, num_shards=4, use_tlog=True)
+    shard_build(emb, path, num_shards=4)
     ids = {r.vec_id for r in read_shards(spark, path).collect()}
     assert ids == {-3, -8, 5}  # negative ids visible (pmod tags)
     got = sharded_topk_persisted(spark, path, [1.0, 0.0], k=2).collect()
@@ -453,7 +490,7 @@ def test_shard_racing_append_to_untouched_shards_serializes(
     path = str(tmp_path / "sh")
     emb = _emb(spark)
     shard_build(
-        emb.filter(F.col("vec_id") < 300), path, num_shards=4, use_tlog=True
+        emb.filter(F.col("vec_id") < 300), path, num_shards=4
     )
     shard_delete(spark, path, [8])  # shard 0 — vacuum touches only it
     t = TLog(path)
@@ -486,7 +523,7 @@ def test_shard_racing_delete_vs_vacuum_conflicts(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "sh2")
     emb = _emb(spark)
     shard_build(
-        emb.filter(F.col("vec_id") < 300), path, num_shards=4, use_tlog=True
+        emb.filter(F.col("vec_id") < 300), path, num_shards=4
     )
     shard_delete(spark, path, [8])
     state = _inject_before_first_rewrite(
@@ -594,23 +631,23 @@ def test_store_probe_divergent_text_latest_batch_wins(spark):
 def test_inverted_append_txn_replay_commits_nothing(spark, tmp_path):
     """Exactly-once index ingest on a transactional layout: the same
     batch appended twice under one txn key lands ONCE (the replay
-    finds its txn in the log and commits nothing); a legacy layout
-    refuses txn appends loudly instead of silently double-appending."""
+    finds its txn in the log and commits nothing); a directory that is
+    not a log layout refuses appends loudly."""
     path = str(tmp_path / "inv")
     docs = _docs(spark)
     inverted_build(
-        docs.filter(F.col("doc_id") < 100), path, n_buckets=8, use_tlog=True
+        docs.filter(F.col("doc_id") < 100), path, n_buckets=8
     )
     day2 = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 130))
     inverted_append(day2, path, txn=("ing", 1))
     n1 = read_doclens(spark, path).count()
     inverted_append(day2, path, txn=("ing", 1))  # at-least-once replay
     assert read_doclens(spark, path).count() == n1 == 130
-    # legacy layouts cannot honor the idempotence contract
-    leg = str(tmp_path / "leg")
-    inverted_build(docs.filter(F.col("doc_id") < 50), leg, n_buckets=8)
-    with pytest.raises(ValueError, match="transactional layout"):
-        inverted_append(day2, leg, txn=("ing", 1))
+    # only a log can honor the idempotence contract
+    plain = str(tmp_path / "plain")
+    os.makedirs(plain)
+    with pytest.raises(ValueError, match=f"{plain} is not a transaction-log"):
+        inverted_append(day2, plain, txn=("ing", 1))
 
 
 def test_inverted_ingest_stream_exactly_once_on_tlog_layout(
@@ -626,7 +663,7 @@ def test_inverted_ingest_stream_exactly_once_on_tlog_layout(
     docs = _docs(spark)
     path = str(tmp_path / "inv")
     inverted_build(
-        docs.filter(F.col("doc_id") < 100), path, n_buckets=8, use_tlog=True
+        docs.filter(F.col("doc_id") < 100), path, n_buckets=8
     )
     stream_dir = str(tmp_path / "in")
     docs.filter(
@@ -650,7 +687,7 @@ def test_inverted_ingest_stream_exactly_once_on_tlog_layout(
     # one-shot twin over the same final corpus
     ref = str(tmp_path / "ref")
     inverted_build(
-        docs.filter(F.col("doc_id") < 160), ref, n_buckets=8, use_tlog=True
+        docs.filter(F.col("doc_id") < 160), ref, n_buckets=8
     )
     want = (
         bm25_probe(spark, ref, ["vector", "scan"], n_buckets=8)
@@ -683,7 +720,7 @@ def test_shard_ingest_stream_exactly_once_on_tlog_layout(spark, tmp_path):
     emb = with_normalized(load_table(spark, SF, "embeddings"))
     path = str(tmp_path / "sh")
     shard_build(
-        emb.filter(F.col("vec_id") < 300), path, num_shards=4, use_tlog=True
+        emb.filter(F.col("vec_id") < 300), path, num_shards=4
     )
 
     def md5s():
@@ -718,7 +755,7 @@ def test_shard_ingest_stream_exactly_once_on_tlog_layout(spark, tmp_path):
         for x in emb.filter(F.col("vec_id") == 301).first()["nvec"]
     ]
     ref = str(tmp_path / "ref")
-    shard_build(emb, ref, num_shards=4, use_tlog=True)
+    shard_build(emb, ref, num_shards=4)
     got = sharded_topk_persisted(spark, path, qv, k=10).collect()
     want = sharded_topk_persisted(spark, ref, qv, k=10).collect()
     assert got == want
@@ -743,7 +780,7 @@ def test_inverted_concurrent_mixed_workload_serializes(spark, tmp_path):
     path = str(tmp_path / "inv")
     docs = _docs(spark)
     inverted_build(
-        docs.filter(F.col("doc_id") < 100), path, n_buckets=8, use_tlog=True
+        docs.filter(F.col("doc_id") < 100), path, n_buckets=8
     )
     ranges = [(100, 130), (130, 160), (160, 190), (190, 220)]
     deletes = [[3, 17], [105, 42]]
@@ -804,7 +841,6 @@ def test_inverted_concurrent_mixed_workload_serializes(spark, tmp_path):
         ),
         ref,
         n_buckets=8,
-        use_tlog=True,
     )
     want = (
         bm25_probe(spark, ref, ["vector", "scan"], n_buckets=8)
@@ -817,18 +853,16 @@ def test_inverted_concurrent_mixed_workload_serializes(spark, tmp_path):
 # ---------------------------------------------------------------- NSW graph
 # r10: the graph tier joins the transactional-artifact doctrine (the
 # r9 scope exclusion "a graph-ANN append racing a compact is still
-# unarbitrated" closed): nsw_build(use_tlog=True) lays the edge table
+# unarbitrated" closed): nsw_build lays the edge table
 # down as ONE init commit with src_bucket conflict domains, appends
 # are blind commits, nsw_compact is a rewrite commit over the touched
 # buckets.
 
 
 def test_nsw_tlog_mode_invariant_search_and_blind_append(spark, tmp_path):
-    """A tlog-mode NSW layout serves BIT-IDENTICAL beam searches to the
-    legacy layout (same read seams), and appends land as blind commits:
+    """The NSW layout serves the beam search the retired directory
+    layout served (pinned literals), and appends land as blind commits:
     resident edge files stay byte-identical, appended nodes reachable."""
-    import os
-
     from cnc_visionsearch_spark.operators.graph_ann import (
         nsw_append,
         nsw_build,
@@ -840,12 +874,20 @@ def test_nsw_tlog_mode_invariant_search_and_blind_append(spark, tmp_path):
         float(x)
         for x in emb.filter(F.col("vec_id") == 5).first()["nvec"]
     ]
-    leg, tl = str(tmp_path / "leg"), str(tmp_path / "tl")
-    nsw_build(emb, leg, m=6, n_buckets=8, n_entries=2)
-    nsw_build(emb, tl, m=6, n_buckets=8, n_entries=2, use_tlog=True)
-    a = nsw_search(spark, leg, q, k=10, ef=16, hops=4)
-    b = nsw_search(spark, tl, q, k=10, ef=16, hops=4)
-    assert a == b and a
+    tl = str(tmp_path / "tl")
+    nsw_build(emb, tl, m=6, n_buckets=8, n_entries=2)
+    assert nsw_search(spark, tl, q, k=10, ef=16, hops=4) == [
+        (5, 0.0),
+        (113, 1.2711349220115475),
+        (440, 1.381490229488229),
+        (234, 1.391176095557496),
+        (298, 1.4018538191615226),
+        (448, 1.4416969901719556),
+        (118, 1.4529155619180167),
+        (31, 1.4746708605571224),
+        (143, 1.5270241752715161),
+        (109, 1.5515429802403877),
+    ]
 
     def sig(root):
         out = {}
@@ -896,7 +938,6 @@ def test_nsw_tlog_compact_racing_append_conflicts_and_recomputes(
         m=6,
         n_buckets=8,
         n_entries=2,
-        use_tlog=True,
     )
     nsw_append(
         spark,
@@ -925,19 +966,6 @@ def test_nsw_tlog_compact_racing_append_conflicts_and_recomputes(
     assert cnt and max(cnt.values()) == 1  # every bucket settled to 1 file
 
 
-def test_nsw_compact_refuses_legacy_layouts(spark, tmp_path):
-    from cnc_visionsearch_spark.operators.graph_ann import (
-        nsw_build,
-        nsw_compact,
-    )
-
-    emb = _emb(spark)
-    path = str(tmp_path / "leg")
-    nsw_build(emb.limit(50), path, m=4, n_buckets=4, n_entries=2)
-    with pytest.raises(ValueError, match="transactional layout"):
-        nsw_compact(spark, path)
-
-
 def test_tlog_graph_builds_validate_conflict_domain_bounds(spark, tmp_path):
     """r10 advice: the (layer, bucket) conflict-domain tag is
     layer * TLOG_HNSW_LAYER_STRIDE + bucket, so n_buckets >= STRIDE
@@ -956,12 +984,12 @@ def test_tlog_graph_builds_validate_conflict_domain_bounds(spark, tmp_path):
     hp = str(tmp_path / "h")
     with pytest.raises(ValueError, match="TLOG_HNSW_LAYER_STRIDE"):
         hnsw_build(
-            emb, hp, n_buckets=TLOG_HNSW_LAYER_STRIDE, use_tlog=True
+            emb, hp, n_buckets=TLOG_HNSW_LAYER_STRIDE
         )
     np_ = str(tmp_path / "n")
     with pytest.raises(ValueError, match="entries conflict-domain tag"):
         nsw_build(
-            emb, np_, n_buckets=TLOG_NSW_ENTRIES_TAG, use_tlog=True
+            emb, np_, n_buckets=TLOG_NSW_ENTRIES_TAG
         )
     from cnc_visionsearch_spark.operators.ann import (
         TLOG_TAG_STRIDE_GAP,
@@ -970,7 +998,7 @@ def test_tlog_graph_builds_validate_conflict_domain_bounds(spark, tmp_path):
 
     sp = str(tmp_path / "s")
     with pytest.raises(ValueError, match="reserved tag stride gap"):
-        shard_build(emb, sp, num_shards=TLOG_TAG_STRIDE_GAP, use_tlog=True)
+        shard_build(emb, sp, num_shards=TLOG_TAG_STRIDE_GAP)
     # the refusal wrote NOTHING: no tlog dir, no partial layout
     import os as _os
 
@@ -981,10 +1009,10 @@ def test_tlog_graph_builds_validate_conflict_domain_bounds(spark, tmp_path):
 def test_hnsw_tlog_mode_invariant_and_meta_entry_promotion(
     spark, tmp_path
 ):
-    """HNSW joins the doctrine: tlog-mode descend == legacy descend
-    bit-for-bit; an append whose node out-levels the entry PROMOTES it
-    through a meta-key commit (read-modify-write serialized by
-    base_version — the arbitration the legacy directory swap lacked),
+    """HNSW joins the doctrine: the descent returns the rows the retired
+    directory layout returned (pinned literals); an append whose node
+    out-levels the entry PROMOTES it through a meta-key commit
+    (read-modify-write serialized by base_version),
     and hnsw_compact settles every (layer, bucket) domain to one file
     with results unchanged."""
     from collections import Counter
@@ -1009,26 +1037,32 @@ def test_hnsw_tlog_mode_invariant_and_meta_entry_promotion(
         .first()
     )
     assert hi is not None, "fixture has no level>=2 node"
-    leg, tl = str(tmp_path / "leg"), str(tmp_path / "tl")
-    for p, use in ((leg, False), (tl, True)):
-        hnsw_build(
-            base, p, m=6, m_upper=4, level_mult=8, max_level=3,
-            n_buckets=8, use_tlog=use,
-        )
+    tl = str(tmp_path / "tl")
+    hnsw_build(
+        base, tl, m=6, m_upper=4, level_mult=8, max_level=3, n_buckets=8
+    )
     qid = base.orderBy("vec_id").first()
     q = [float(x) for x in qid["nvec"]]
-    a = hnsw_search(spark, leg, q, k=10, ef=16, hops=4, upper_hops=2)
-    b = hnsw_search(spark, tl, q, k=10, ef=16, hops=4, upper_hops=2)
-    assert a == b and a
+    pinned = [
+        (0, 0.0),
+        (17, 1.3310874376696016),
+        (225, 1.3697452825815666),
+        (12, 1.3779455356583084),
+        (483, 1.3990975603533056),
+        (260, 1.4026616935355627),
+        (73, 1.4055235568223716),
+        (212, 1.4372016103731433),
+        (347, 1.450984773364004),
+        (402, 1.4510002844731653),
+    ]
+    assert hnsw_search(spark, tl, q, k=10, ef=16, hops=4, upper_hops=2) == pinned
     newbie = spark.createDataFrame(
         [(int(hi["vec_id"]), [float(x) for x in hi["nvec"]])],
         "vec_id bigint, nvec array<double>",
     )
-    hnsw_append(spark, leg, newbie)
     hnsw_append(spark, tl, newbie)
-    a2 = hnsw_search(spark, leg, q, k=10, ef=16, hops=4, upper_hops=2)
-    b2 = hnsw_search(spark, tl, q, k=10, ef=16, hops=4, upper_hops=2)
-    assert a2 == b2 and a2
+    a2 = hnsw_search(spark, tl, q, k=10, ef=16, hops=4, upper_hops=2)
+    assert a2 == pinned  # the retired layout returned the same rows
     # the promotion landed as commit meta, not a directory swap
     ent = TLog(tl).snapshot().meta["entry"]
     assert int(ent["vec_id"]) == int(hi["vec_id"])
