@@ -19,18 +19,59 @@ All functions accept Column or column-name and compute in DOUBLE
 (inputs are cast) so results are deterministic and match a
 double-precision oracle bit-for-bit (sequential left-fold accumulation,
 same order as the array).
+
+A driver-side query vector enters a plan one way: :func:`unit`
+normalizes it, :func:`vec_lit` makes it ONE parsed literal
+``CAST(array(<repr(float(x))>D, ...) AS array<double>)``. ``repr``
+round-trips every double (−0.0 and subnormals too), so the literal is
+bit-identical to a per-element ``F.lit`` array at one parse instead of
+one py4j round trip per dimension. NaN and ±inf are written
+``CAST('NaN' AS DOUBLE)`` and ``CAST('[-]Infinity' AS DOUBLE)``.
 """
 
 from __future__ import annotations
 
+import math
+from collections.abc import Iterable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["as_double_array", "dot", "l2_norm", "l2_normalize", "l2_sq", "cosine_sim", "abs_max", "int8_dequant_errors", "int8_dequant", "fixed_point_q", "FIXED_POINT_SQL"]
+__all__ = ["vec_lit", "unit", "as_double_array", "dot", "l2_norm", "l2_normalize", "l2_sq", "cosine_sim", "abs_max", "int8_dequant_errors", "int8_dequant", "fixed_point_q", "FIXED_POINT_SQL"]
 
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
+
+
+def _token(x) -> str:
+    # float() first: under numpy 2, repr(np.float64(x)) is "np.float64(x)"
+    v = float(x)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return "CAST('Infinity' AS DOUBLE)" if v > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return repr(v) + "D"
+
+
+def vec_lit(values: Iterable) -> Column:
+    """A driver-side vector as one parsed ``ARRAY<DOUBLE>`` literal (the
+    literal contract is in the module docstring)."""
+    return F.expr(
+        "CAST(array(" + ", ".join(_token(x) for x in values) + ") AS array<double>)"
+    )
+
+
+def unit(q: Iterable) -> list[float]:
+    """L2-normalize a driver-side query vector (reference main.py:87,145).
+
+    The norm is the sequential fold ``sum(x * x) ** 0.5`` the SQL
+    oracles replay. A zero vector gives all NaN, like the reference's
+    numpy ``x / 0.0``: distances come back NaN as a result, not an
+    exception."""
+    q = [float(x) for x in q]
+    n = sum(x * x for x in q) ** 0.5
+    return [x / n for x in q] if n != 0.0 else [float("nan")] * len(q)
 
 
 def as_double_array(col: Column | str) -> Column:

@@ -45,7 +45,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cnc_visionsearch_spark.functions.vector import dot, l2_sq
+from cnc_visionsearch_spark.functions.vector import dot, fixed_point_q, l2_sq, vec_lit
 from cnc_visionsearch_spark.memo import LRU, file_fingerprint
 from cnc_visionsearch_spark.sources.tlog import (
     TLog,
@@ -132,7 +132,7 @@ def hyperplane_signature(
     """
     bucket = F.lit(0).cast("bigint")
     for i, plane in enumerate(planes):
-        pcol = F.array(*[F.lit(x) for x in plane]).cast("array<double>")
+        pcol = vec_lit(plane)
         bit = F.when(dot(vec_col, pcol) >= 0.0, F.lit(1 << i).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         )
@@ -167,7 +167,7 @@ def lsh_topk(
             acc = acc + x * p
         if acc >= 0.0:
             qsig += 1 << i
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
+    qcol = vec_lit(query_vec)
     return (
         emb.withColumn("lsh_bucket", hyperplane_signature(vec_col, planes))
         .filter(F.col("lsh_bucket") == qsig)
@@ -254,7 +254,7 @@ def ivf_topk(
     With the corpus partitioned by cell_id the filter is partition
     pruning: the 100 TB scan reads nprobe/n_cells of the files.
     """
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
+    qcol = vec_lit(query_vec)
     probe_cells = [
         r.cell_id
         for r in centroids.select(
@@ -759,7 +759,7 @@ def ivf_probe(
     (asserted in tests). Result is bit-identical to
     :func:`ivf_topk` over the same codebook.
     """
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
+    qcol = vec_lit(query_vec)
     probed = ivf_probe_cells(spark, path, query_vec, nprobe)
     cells = read_cells(spark, path, probed).filter(
         F.col("cell_id").isin(probed)
@@ -979,7 +979,7 @@ def sharded_topk_persisted(
     shards = _without_tombstones(spark, path, shards, id_col)
     cand_ids = shards.mapInPandas(per_partition, schema=f"{id_col} bigint")
     emb = read_shards(spark, path)
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
+    qcol = vec_lit(query_vec)
     # candidate side is bounded by construction (<= k rows per Arrow
     # batch), but it hides behind a mapInPandas so Catalyst has no size
     # estimate and would plan a sort-merge join shuffling the corpus —
@@ -1055,7 +1055,7 @@ def sharded_topk(
     cand_ids = sharded.groupBy("shard").applyInPandas(
         per_shard, schema=f"{id_col} bigint"
     )
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
+    qcol = vec_lit(query_vec)
     return (
         cand_ids.join(emb, id_col)
         .select(F.col(id_col), l2_sq(F.col(vec_col), qcol).alias("distance"))
@@ -1384,8 +1384,6 @@ def pq_train_codebook(
     on (distance, code) via struct min. Codewords with no members keep
     their previous value (standard empty-cluster rule).
     """
-    from cnc_visionsearch_spark.functions.vector import fixed_point_q
-
     spark = emb.sparkSession
     max_id = emb.agg(F.max(id_col)).first()[0]
     if max_id is None:
@@ -1597,7 +1595,7 @@ def ivf_range_search(
     """
     import math
 
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
+    qcol = vec_lit(query_vec)
     r = math.sqrt(r2)
     q = [float(x) for x in query_vec]
     rad = _merged_radii(path)
@@ -1742,9 +1740,20 @@ def ivf_rebalance(
     splits: ``{"cell_id", "n_rows", "lo_cell", "hi_cell"}``.
     Cost: one metadata-sized census + one cell-bounded rewrite per
     split — O(hot cells), never a corpus scan.
+
+    A layout with PQ code tables is refused before any write: the
+    stride codebook derives from the IVF codebook a split changes, and
+    the split cell's codes would stay under the parent's cell domain.
     """
     t = open_layout(path)
     snap = t.snapshot()
+    if _family(snap, TLOG_PQ_CODES_STRIDE) or _family(
+        snap, TLOG_PQ_TRAINED_CODES_STRIDE
+    ):
+        raise ValueError(
+            f"ivf_rebalance: {path} carries stride-PQ/trained-PQ code tables, "
+            "which a split would leave stale; rebuild the layout instead"
+        )
     cell_ids = _family(snap, 0)
     live = _without_tombstones(
         spark, path, read_tags(spark, t, snap, cell_ids), id_col
@@ -1782,8 +1791,8 @@ def ivf_rebalance(
         ]
         lo_cell, hi_cell = next_id, next_id + 1
         next_id += 2
-        lo_col = F.array(*[F.lit(x) for x in lo_seed]).cast("array<double>")
-        hi_col = F.array(*[F.lit(x) for x in hi_seed]).cast("array<double>")
+        lo_col = vec_lit(lo_seed)
+        hi_col = vec_lit(hi_seed)
         rea = members.withColumn(
             "cell_id",
             F.when(
@@ -1876,7 +1885,7 @@ def ivf_exact_pruned_search(
         return g * g  # g*g, not pow(g, 2): bit-stable vs the SQL replay
 
     order = sorted((_lb(c), int(c["cell_id"])) for c in cents)
-    qcol = F.array(*[F.lit(x) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     best: list[tuple[float, int]] = []  # (distance, id), ascending
     scanned: list[int] = []
     # geometric batch doubling: visiting cells one job each would mean

@@ -45,11 +45,12 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cnc_visionsearch_spark.functions.vector import l2_sq
+from cnc_visionsearch_spark.functions.vector import l2_sq, vec_lit
 from cnc_visionsearch_spark.memo import LRU, file_fingerprint
 from cnc_visionsearch_spark.operators.ann import _metadata_rows, _seq_l2_sq
 from cnc_visionsearch_spark.sources.tlog import (
@@ -467,37 +468,37 @@ def nsw_search(
 ) -> list[tuple[int, float]]:
     """Beam search over a :func:`nsw_build` layout; returns the top-k
     ``(vec_id, distance)``. Entry distances fold driver-side
-    (sequential, bit-identical to the codegen fold); each hop is one
-    partition-pruned scan of the beam's buckets scoring ≤ |beam|·m
-    denormalized edge rows. The beam (≤ ef entries) is planner state,
-    like the IVF probe-cell list."""
-    meta = _meta(path)
-    n_buckets = meta["n_buckets"]
+    (sequential, bit-identical to the codegen fold); the hops are
+    :func:`_beam`."""
+    n_buckets = _meta(path)["n_buckets"]
     q = [float(x) for x in query_vec]
-    beam: dict[int, float] = {
-        int(r["vec_id"]): _seq_l2_sq(r["nvec"], q)
-        for r in _entry_rows(path)
-    }
-    beam = dict(sorted(beam.items(), key=lambda kv: (kv[1], kv[0]))[:ef])
-    qcol = F.array(*[F.lit(x) for x in q]).cast("array<double>")
-    # hoisted per-search constants (r11): the score Column is the same
-    # expression every hop — Columns are immutable, so building the
-    # zip_with/aggregate fold once removes ~20 py4j round trips per
-    # hop; the beam-id membership filter goes through ONE sql-parsed
-    # expression instead of a per-literal isin build (internal bigint
-    # ids, not user input)
-    score = l2_sq("dvec", qcol).alias("d")
+    seeds = {int(r["vec_id"]): _seq_l2_sq(r["nvec"], q) for r in _entry_rows(path)}
+    score = l2_sq("dvec", vec_lit(q)).alias("d")
     read = _nsw_graph_reader(spark, path)  # ONE relation/snapshot per search
+    beam = _beam(read, n_buckets, score, seeds, ef, hops)
+    top = sorted(beam.items(), key=lambda kv: (kv[1], kv[0]))[:k]
+    return [(i, d) for i, d in top]
+
+
+def _beam(
+    scan, n_buckets: int, score, seeds: dict[int, float], ef: int, hops: int
+) -> dict[int, float]:
+    """The width-``ef`` beam loop of :func:`nsw_search`, of
+    :func:`hnsw_search`'s layer 0 and of :func:`hnsw_append`'s neighbor
+    finding. Each hop is one scan of ``scan(buckets)`` (edges pruned to
+    the beam's buckets at the log level) selecting ``score``, the
+    distance Column aliased ``d`` built once per query vector; the
+    beam-id filter is ONE sql-parsed expression (internal bigint ids).
+    The beam (<= ef entries) is planner state, like IVF probe cells."""
+    beam = dict(sorted(seeds.items(), key=lambda kv: (kv[1], kv[0]))[:ef])
     for _ in range(hops):
         ids = sorted(beam)
         if not ids:
             # empty beam (an index with no entry rows): the parsed
-            # `src IN ()` would be a ParseException; the replaced
-            # .isin([]) was constant-false — same result, zero scans
+            # `src IN ()` would be a ParseException
             break
-        buckets = sorted({i % n_buckets for i in ids})
         nbrs = (
-            read(buckets)
+            scan(sorted({i % n_buckets for i in ids}))
             .filter(F.expr(f"src IN ({','.join(str(int(i)) for i in ids)})"))
             .select("dst", score)
             .collect()
@@ -510,11 +511,9 @@ def nsw_search(
             # hop and can never change again — remaining hops are
             # no-ops on every engine, so breaking preserves the
             # oracle's fixed-hop result bit-for-bit
-            beam = nxt
-            break
+            return nxt
         beam = nxt
-    top = sorted(beam.items(), key=lambda kv: (kv[1], kv[0]))[:k]
-    return [(i, d) for i, d in top]
+    return beam
 
 
 def nsw_search_df(
@@ -785,9 +784,8 @@ def hnsw_search(
     q = [float(x) for x in query_vec]
     e = _hnsw_entry(spark, path)
     cur_id, cur_d = int(e["vec_id"]), _seq_l2_sq(e["nvec"], q)
-    qcol = F.array(*[F.lit(x) for x in q]).cast("array<double>")
-    # hoisted per-search score Column — see nsw_search (r11)
-    score = l2_sq("dvec", qcol).alias("d")
+    # hoisted per-search score Column — see _beam
+    score = l2_sq("dvec", vec_lit(q)).alias("d")
     read = _hnsw_graph_reader(spark, path)  # ONE relation/snapshot per search
     # layers above the entry's level are empty by construction (the
     # entry IS a max-level node) — skip their no-op scans
@@ -822,25 +820,7 @@ def hnsw_search(
             if best_id == cur_id:
                 break  # converged at this layer
             cur_id, cur_d = best_id, best_d
-    beam: dict[int, float] = {cur_id: cur_d}
-    for _ in range(hops):
-        ids = sorted(beam)
-        if not ids:
-            break  # see nsw_search: empty beam must not render `IN ()`
-        buckets = sorted({i % n_buckets for i in ids})
-        nbrs = (
-            read(0, buckets)
-            .filter(F.expr(f"src IN ({','.join(str(int(i)) for i in ids)})"))
-            .select("dst", score)
-            .collect()
-        )
-        for r in nbrs:
-            beam.setdefault(int(r.dst), float(r.d))
-        nxt = dict(sorted(beam.items(), key=lambda kv: (kv[1], kv[0]))[:ef])
-        if sorted(nxt) == ids:
-            beam = nxt
-            break  # fixpoint — same justification as nsw_search
-        beam = nxt
+    beam = _beam(partial(read, 0), n_buckets, score, {cur_id: cur_d}, ef, hops)
     top = sorted(beam.items(), key=lambda kv: (kv[1], kv[0]))[:k]
     return [(i, d) for i, d in top]
 
@@ -862,42 +842,6 @@ def hnsw_search_df(
         [(int(i), float(d)) for i, d in rows],
         "vec_id bigint, distance double",
     )
-
-
-def _hnsw_beam_layer(
-    spark,
-    read_fn,
-    n_buckets: int,
-    layer: int,
-    q: list[float],
-    seeds: dict[int, float],
-    ef: int,
-    hops: int,
-) -> dict[int, float]:
-    """Width-``ef`` beam restricted to one layer's edges — the shared
-    loop behind layer-0 search and the per-layer neighbor finding of
-    :func:`hnsw_append` (HNSW inserts by searching the graph itself).
-    Each hop is one scan pruned to (layer, beam buckets) through
-    ``read_fn(layer, buckets)`` — mode-aware pruning, see
-    :func:`read_hnsw_graph`."""
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
-    score = l2_sq("dvec", qcol).alias("d")  # hoisted per-beam (r11)
-    beam = dict(sorted(seeds.items(), key=lambda kv: (kv[1], kv[0]))[:ef])
-    for _ in range(hops):
-        ids = sorted(beam)
-        if not ids:
-            break  # see nsw_search: empty beam must not render `IN ()`
-        buckets = sorted({i % n_buckets for i in ids})
-        nbrs = (
-            read_fn(layer, buckets)
-            .filter(F.expr(f"src IN ({','.join(str(int(i)) for i in ids)})"))
-            .select("dst", score)
-            .collect()
-        )
-        for r in nbrs:
-            beam.setdefault(int(r.dst), float(r.d))
-        beam = dict(sorted(beam.items(), key=lambda kv: (kv[1], kv[0]))[:ef])
-    return beam
 
 
 def hnsw_append(spark, path: str, new_emb: DataFrame) -> None:
@@ -933,16 +877,14 @@ def hnsw_append(spark, path: str, new_emb: DataFrame) -> None:
         nvec = [float(x) for x in r.nvec]
         lvl = int(r.level)
         cur = {entry_id: _seq_l2_sq(entry_vec, nvec)}
+        # one score Column per node, shared by every layer's beam
+        score = l2_sq("dvec", vec_lit(nvec)).alias("d")
         for layer in range(max_level, 0, -1):
+            scan = partial(read_fn, layer)
             if layer > lvl:
-                cur = _hnsw_beam_layer(
-                    spark, read_fn, n_buckets, layer, nvec, cur, ef=1, hops=3
-                )
+                cur = _beam(scan, n_buckets, score, cur, ef=1, hops=3)
             else:
-                found = _hnsw_beam_layer(
-                    spark, read_fn, n_buckets, layer, nvec, cur,
-                    ef=4 * m_upper, hops=3,
-                )
+                found = _beam(scan, n_buckets, score, cur, ef=4 * m_upper, hops=3)
                 nbrs = sorted(found.items(), key=lambda kv: (kv[1], kv[0]))[
                     :m_upper
                 ]
@@ -950,9 +892,7 @@ def hnsw_append(spark, path: str, new_emb: DataFrame) -> None:
                     out_edges.append((layer, int(r.vec_id), nb_id))
                     back_edges.append((layer, nb_id, int(r.vec_id), nvec))
                 cur = dict(nbrs[:1]) or cur
-        found0 = _hnsw_beam_layer(
-            spark, read_fn, n_buckets, 0, nvec, cur, ef=4 * m, hops=4
-        )
+        found0 = _beam(partial(read_fn, 0), n_buckets, score, cur, ef=4 * m, hops=4)
         for nb_id, _d in sorted(found0.items(), key=lambda kv: (kv[1], kv[0]))[:m]:
             out_edges.append((0, int(r.vec_id), nb_id))
             back_edges.append((0, nb_id, int(r.vec_id), nvec))

@@ -39,7 +39,13 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cnc_visionsearch_spark.functions.vector import dot, l2_sq
+from cnc_visionsearch_spark.functions.vector import (
+    dot,
+    l2_normalize,
+    l2_sq,
+    unit,
+    vec_lit,
+)
 
 __all__ = [
     "with_normalized",
@@ -62,8 +68,6 @@ def with_normalized(
     (zip_with against array_repeat — see that function's note on why a
     materialized norm column does NOT survive CollapseProject).
     """
-    from cnc_visionsearch_spark.functions.vector import l2_normalize
-
     return df.withColumn(out_col, l2_normalize(vec_col, zero_guard=zero_guard))
 
 
@@ -101,16 +105,15 @@ def knn_single(
     (use :func:`with_normalized`); at scale that table is written once,
     normalized, and served to every query.
 
+    The query is normalized driver-side by :func:`unit` (a zero query
+    gives NaN distances as a result, like the reference's numpy
+    ``x / 0.0``) and enters the plan as one parsed :func:`vec_lit`
+    literal.
+
     Returns (id_col, distance) ascending, ties broken by id.
     """
-    q = [float(x) for x in query_vec]
-    if normalize_query:
-        n = sum(x * x for x in q) ** 0.5
-        # a zero query vector normalizes to all-NaN, exactly like the
-        # reference's numpy x/0.0 (main.py:87): distances come back NaN
-        # as a RESULT, not an exception
-        q = [x / n for x in q] if n != 0.0 else [float("nan")] * len(q)
-    qcol = F.array(*[F.lit(x) for x in q]).cast("array<double>")
+    q = unit(query_vec) if normalize_query else query_vec
+    qcol = vec_lit(q)
     dist = _distance_expr(metric, F.col(vec_col), qcol)
     return (
         embeddings.select(F.col(id_col), dist.alias("distance"))

@@ -33,7 +33,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cnc_visionsearch_spark.functions.vector import fixed_point_q, l2_sq
+from cnc_visionsearch_spark.functions.vector import fixed_point_q, l2_sq, vec_lit
 from cnc_visionsearch_spark.operators.ann import (
     TLOG_RQ_CODES_STRIDE,
     TLOG_RQ_MODEL_L1_TAG,
@@ -225,7 +225,7 @@ def rq_probe_topk(
     ivf_delete disappear from this tier immediately too."""
     from cnc_visionsearch_spark.operators.ann import _without_tombstones
 
-    qcol = F.array(*[F.lit(float(x)) for x in qvec]).cast("array<double>")
+    qcol = vec_lit(qvec)
     cb1, cb2 = read_rq_codebooks(spark, path)
     probe_cells = [
         int(r.code)

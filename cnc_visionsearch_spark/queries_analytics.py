@@ -11,6 +11,7 @@ import collections as _collections
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cnc_visionsearch_spark.functions.vector import fixed_point_q, l2_sq, vec_lit
 from cnc_visionsearch_spark.operators.ann import (
     read_cells,
     read_shards,
@@ -1690,7 +1691,6 @@ def _ab_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(arm, n_users, n_converted, value_q) — the Spark twin of
     ``_AB_ARMS_CTES``; both A/B queries reduce from this."""
     from cnc_visionsearch_spark.functions.text import hex_to_long
-    from cnc_visionsearch_spark.functions.vector import fixed_point_q
 
     ev = load_table(spark, sf_dir, "events")
     arm = (
@@ -1887,7 +1887,6 @@ ORDER BY lift_q DESC, term ASC LIMIT 10
     "either a pruned index slice or <= 10 documents.",
 )
 def text_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import fixed_point_q
     from cnc_visionsearch_spark.operators.text_index import (
         bm25_probe,
         read_doclens,
@@ -2225,8 +2224,6 @@ def events_ewma_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{_EWMA_FOLD.format(om=om, al=al)})"
         )
 
-    from cnc_visionsearch_spark.functions.vector import fixed_point_q
-
     fast_q = fixed_point_q(fold(*_EWMA_FAST))
     slow_q = fixed_point_q(fold(*_EWMA_SLOW))
     return series.select(
@@ -2286,8 +2283,6 @@ FROM pairs GROUP BY touch_type ORDER BY touch_type
     "MTA semantics).",
 )
 def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import fixed_point_q
-
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("pid"),
@@ -2776,7 +2771,6 @@ def ensure_forget_layouts(spark: SparkSession, sf_dir: str) -> tuple[str, str, s
     stay tombstone-free for every other probe's plan shape."""
     import os
 
-    from cnc_visionsearch_spark.functions.vector import l2_sq
     from cnc_visionsearch_spark.maintenance import forget_vectors
     from cnc_visionsearch_spark.operators.ann import ivf_build, shard_build
     from cnc_visionsearch_spark.operators.knn import with_normalized
@@ -2801,7 +2795,7 @@ def ensure_forget_layouts(spark: SparkSession, sf_dir: str) -> tuple[str, str, s
         shard_build(emb, p_sh, num_shards=4)
         inverted_build(load_table(spark, sf_dir, "documents"), p_inv)
         q = _norm_query_vec(spark, sf_dir, 21)
-        qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+        qcol = vec_lit(q)
         del_ids = [
             int(r["vec_id"])
             for r in emb.filter(F.col("vec_id") != 21)

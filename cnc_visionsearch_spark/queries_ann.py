@@ -29,7 +29,13 @@ from cnc_visionsearch_spark.operators.ann import (
     shard_build,
     sharded_topk_persisted,
 )
-from cnc_visionsearch_spark.functions.vector import fixed_point_q
+from cnc_visionsearch_spark.functions.vector import (
+    fixed_point_q,
+    int8_dequant,
+    l2_sq,
+    unit,
+    vec_lit,
+)
 from cnc_visionsearch_spark.memo import file_fingerprint
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.registry import register
@@ -133,9 +139,7 @@ def _norm_query_vec(spark: SparkSession, sf_dir: str, vec_id: int) -> list[float
     from cnc_visionsearch_spark.sources.catalog import memoized_point_value
 
     raw = memoized_point_value(spark, sf_dir, "embeddings", "vec_id", vec_id, "embedding")
-    q = [float(x) for x in raw]
-    n = sum(x * x for x in q) ** 0.5  # sequential fold, same as the SQL oracle
-    return [x / n for x in q]
+    return unit(raw)
 
 
 @register(
@@ -336,11 +340,9 @@ LIMIT 10
     "engines, ties break by vec_id.",
 )
 def ann_int8_rescore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import int8_dequant, l2_sq
-
     emb = load_table(spark, sf_dir, "embeddings")
     raw = emb.filter(F.col("vec_id") == 5).select("embedding").first()[0]
-    qcol = F.array(*[F.lit(float(x)) for x in raw]).cast("array<double>")
+    qcol = vec_lit(raw)
     staged = emb.select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("v"),
@@ -408,15 +410,13 @@ LIMIT 10
     "candidate set.",
 )
 def ann_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import int8_dequant, l2_sq
-
     from cnc_visionsearch_spark.operators.ann import ivf_probe_cells
 
     from cnc_visionsearch_spark.operators.ann import _without_tombstones
 
     path = ensure_ivf_built(spark, sf_dir, n_cells=8)
     q = _norm_query_vec(spark, sf_dir, 3)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     probed = ivf_probe_cells(spark, path, q, nprobe=4)
     cells = _without_tombstones(
         spark,
@@ -569,7 +569,6 @@ LIMIT 10
     "ann_pq_trained_topk (mean 1.0 at its default depth).",
 )
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import l2_sq
     from cnc_visionsearch_spark.operators.ann import _without_tombstones, pq_codebook
 
     # probe the PERSISTED code table (built once per corpus) — the scan
@@ -583,7 +582,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     q = _norm_query_vec(spark, sf_dir, 7)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     w = len(q) // _PQ_M
     # query-vs-codeword lookup table: m*k* rows, computed once, broadcast
     qd = cb.select(
@@ -709,7 +708,6 @@ LIMIT 10
     "as ann_ivf_int8_topk, one tier deeper.",
 )
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import l2_sq
     from cnc_visionsearch_spark.operators.ann import (
         _without_tombstones,
         ivf_probe_cells,
@@ -718,7 +716,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = ensure_pq_built(spark, sf_dir, n_cells=8)
     q = _norm_query_vec(spark, sf_dir, 11)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     probed = ivf_probe_cells(spark, path, q, nprobe=4)
     pruned = _without_tombstones(
         spark,

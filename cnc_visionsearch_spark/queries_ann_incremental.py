@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cnc_visionsearch_spark.functions.vector import dot, fixed_point_q, l2_sq, vec_lit
 from cnc_visionsearch_spark.operators.ann import (
     _codebook_rows,
     read_cells,
@@ -257,13 +258,12 @@ LIMIT 10
     "storage stays m bytes/vector.",
 )
 def ann_pq_wide_codebook_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import fixed_point_q, l2_sq
     from cnc_visionsearch_spark.operators.ann import pq_codebook
     from cnc_visionsearch_spark.queries_ann import ensure_pq_built
 
     path = ensure_pq_built(spark, sf_dir, n_cells=_KSTAR)
     q = _norm_query_vec(spark, sf_dir, 13)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     cb = pq_codebook(read_codebook(spark, path), m=_PQ_M)
     codes = read_pq_codes(spark, path)
     w = len(q) // _PQ_M
@@ -523,7 +523,6 @@ LIMIT 10
 )
 def ann_lsh_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.ann import hyperplanes
-    from cnc_visionsearch_spark.functions.vector import l2_sq
     from cnc_visionsearch_spark.queries_ann import _DIM, _N_PLANES, _SEED
 
     path = ensure_lsh_built(spark, sf_dir, n_planes=_N_PLANES)
@@ -536,7 +535,7 @@ def ann_lsh_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc = acc + x * p
         if acc >= 0.0:
             qsig += 1 << i
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     bucket = spark.read.parquet(f"{path}/buckets").filter(
         F.col("lsh_bucket") == qsig
     )
@@ -596,13 +595,12 @@ LIMIT 10
     "k matches exist in the probed cells.",
 )
 def ann_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import l2_sq
     from cnc_visionsearch_spark.operators.ann import ivf_probe_cells
     from cnc_visionsearch_spark.queries_ann import ensure_ivf_built
 
     path = ensure_ivf_built(spark, sf_dir, n_cells=8)
     q = _norm_query_vec(spark, sf_dir, 5)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     probed = ivf_probe_cells(spark, path, q, nprobe=4)
     cells = read_cells(spark, path, probed).filter(
         F.col("cell_id").isin(probed) & (F.col("label") == 3)
@@ -647,13 +645,12 @@ SELECT vec_id, label, distance FROM (
 def ann_ivf_grouped_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from cnc_visionsearch_spark.functions.vector import l2_sq
     from cnc_visionsearch_spark.operators.ann import ivf_probe_cells
     from cnc_visionsearch_spark.queries_ann import ensure_ivf_built
 
     path = ensure_ivf_built(spark, sf_dir, n_cells=8)
     q = _norm_query_vec(spark, sf_dir, 5)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     probed = ivf_probe_cells(spark, path, q, nprobe=4)
     scored = (
         read_cells(spark, path, probed)
@@ -697,7 +694,6 @@ LIMIT 10
     "signatures), hash-gated like the single-probe tier.",
 )
 def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import l2_sq
     from cnc_visionsearch_spark.operators.ann import hyperplanes
     from cnc_visionsearch_spark.queries_ann import _DIM, _N_PLANES, _SEED
 
@@ -712,7 +708,7 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         if acc >= 0.0:
             qsig += 1 << i
     probe = sorted({qsig} | {qsig ^ (1 << i) for i in range(_N_PLANES)})
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     buckets = spark.read.parquet(f"{path}/buckets").filter(
         F.col("lsh_bucket").isin(probe)
     )
@@ -1304,11 +1300,9 @@ ORDER BY rank
 def knn_l2_cosine_rank_agreement(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import dot, l2_sq
-
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     q = _norm_query_vec(spark, sf_dir, 27)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     scored = emb.filter(F.col("vec_id") != 27).select(
         "vec_id",
         l2_sq("nvec", qcol).alias("l2_sq"),

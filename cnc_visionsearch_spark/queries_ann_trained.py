@@ -39,6 +39,7 @@ from cnc_visionsearch_spark.functions.vector import (
     FIXED_POINT_SQL,
     fixed_point_q,
     l2_sq,
+    vec_lit,
 )
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.queries_ann import (
@@ -203,7 +204,7 @@ def ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     q = _norm_query_vec(spark, sf_dir, 11)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     w = len(q) // _M
     lut = cb.select(
         "sub_j",
@@ -548,7 +549,7 @@ def ann_ivf_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = ensure_pq_trained_built(spark, sf_dir)
     q = _norm_query_vec(spark, sf_dir, 21)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     probed = ivf_probe_cells(spark, path, q, nprobe=DEFAULT_NPROBE)
     cb = read_pq_trained_codebook(spark, path)
     codes = _without_tombstones(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cnc_visionsearch_spark.functions.vector import fixed_point_q, l2_sq
+from cnc_visionsearch_spark.functions.vector import dot, fixed_point_q, l2_sq, vec_lit
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
@@ -258,7 +258,7 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.queries_ann import _norm_query_vec
 
     q = _norm_query_vec(spark, sf_dir, 7)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     # bound FIRST (TakeOrderedAndProject over the corpus), then rank the
     # 20 surviving rows — a global row_number over the unbounded input
     # would single-partition the whole corpus (WindowExec warning)
@@ -338,7 +338,7 @@ def knn_multiquery_max_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dists = [
         l2_sq(
             "nvec",
-            F.array(*[F.lit(float(x)) for x in _norm_query_vec(spark, sf_dir, q)]),
+            vec_lit(_norm_query_vec(spark, sf_dir, q)),
         )
         for q in (2, 4, 6)
     ]
@@ -386,8 +386,8 @@ def ann_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     q = _norm_query_vec(spark, sf_dir, 13)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
-    qpre = F.array(*[F.lit(float(x)) for x in q[:16]]).cast("array<double>")
+    qcol = vec_lit(q)
+    qpre = vec_lit(q[:16])
     cand = (
         emb.select(
             "vec_id", l2_sq(F.slice("nvec", 1, 16), qpre).alias("cd")
@@ -467,7 +467,7 @@ def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     q = _norm_query_vec(spark, sf_dir, 17)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
 
     def _bits(vals):
         # 32 sign bits per word (bits 0-31 of a BIGINT): always
@@ -573,7 +573,7 @@ def ann_cascade_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     q = _norm_query_vec(spark, sf_dir, _CASCADE_QID)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
 
     def _bits(vals, base):
         word = 0
@@ -729,13 +729,12 @@ LEFT JOIN kth USING (d)
     "depth == fewer postings/cells read per hybrid query.",
 )
 def hybrid_ta_stop_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import dot
     from cnc_visionsearch_spark.queries_ann import _norm_query_vec
 
     maxd = max(_TA_DEPTHS)
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     q = _norm_query_vec(spark, sf_dir, _TA_QVEC)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     vec = emb.select(
         F.col("vec_id").alias("doc_id"),
         fixed_point_q(dot("nvec", qcol)).alias("cos_q"),
@@ -1193,12 +1192,11 @@ LIMIT 10
     "(TakeOrderedAndProject), the 1-row min/max bands broadcast.",
 )
 def hybrid_minmax_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import dot
     from cnc_visionsearch_spark.queries_ann import _norm_query_vec
 
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     qv = _norm_query_vec(spark, sf_dir, _TA_QVEC)
-    qcol = F.array(*[F.lit(float(x)) for x in qv]).cast("array<double>")
+    qcol = vec_lit(qv)
     vtop = (
         emb.select(
             F.col("vec_id").alias("doc_id"),
@@ -1390,7 +1388,7 @@ def _li_maxsim_topk(
         dot = F.aggregate(
             F.zip_with(
                 F.col("_nv"),
-                F.array(*[F.lit(x) for x in qv]),
+                vec_lit(qv),
                 lambda a, b: a * b,
             ),
             F.lit(0.0),

@@ -13,6 +13,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cnc_visionsearch_spark.functions.vector import l2_sq, vec_lit
 from cnc_visionsearch_spark.operators.multimodal import (
     attach_payload,
     audio_features,
@@ -229,13 +230,11 @@ ORDER BY h.distance ASC, h.doc_id ASC
     "already pays, and search reuses its materialized output.",
 )
 def mm_search_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import l2_sq
-
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
     media = attach_payload(d).select("doc_id", "payload")
     embedded = media.withColumn("v", fake_image_embedding(8)(F.col("payload")))
     qv = embedded.filter(F.col("doc_id") == 3).select("v").first()[0]
-    qcol = F.array(*[F.lit(float(x)) for x in qv]).cast("array<double>")
+    qcol = vec_lit(qv)
     hits = (
         embedded.filter(F.col("doc_id") != 3)
         .select("doc_id", l2_sq("v", qcol).alias("distance"))
@@ -289,7 +288,6 @@ LIMIT 5
     "before one Arrow batch crosses to Python.",
 )
 def mm_rerank_crossencoder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import l2_sq
     from cnc_visionsearch_spark.operators.multimodal import fake_cross_encoder
     from cnc_visionsearch_spark.sources.catalog import memoized_point_value
 
@@ -302,7 +300,7 @@ def mm_rerank_crossencoder(spark: SparkSession, sf_dir: str) -> DataFrame:
          / 4294967296.0) * 2.0 - 1.0
         for j in range(8)
     ]
-    qcol = F.array(*[F.lit(float(x)) for x in qv_list]).cast("array<double>")
+    qcol = vec_lit(qv_list)
     hits = (
         embedded.filter(F.col("doc_id") != 3)
         .select("doc_id", l2_sq("v", qcol).alias("distance"))

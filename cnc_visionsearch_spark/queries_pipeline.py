@@ -26,7 +26,15 @@ from cnc_visionsearch_spark.functions.text import (
     token_count,
     tokens,
 )
-from cnc_visionsearch_spark.functions.vector import FIXED_POINT_SQL, fixed_point_q
+from cnc_visionsearch_spark.functions.vector import (
+    FIXED_POINT_SQL,
+    as_double_array,
+    dot,
+    fixed_point_q,
+    l2_norm,
+    l2_sq,
+    vec_lit,
+)
 from cnc_visionsearch_spark.queries_ann import _DIM, _IVF_CTE, _L2SQ, _NORM_CTE
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
@@ -457,11 +465,10 @@ SELECT dim, s_q FROM s
     "projections are sequential folds, identical on both engines.",
 )
 def embedding_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import dot
     from cnc_visionsearch_spark.operators.knn import with_normalized
 
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
-    v0 = F.array(*[F.lit(_V0)] * _DIM).cast("array<double>")
+    v0 = vec_lit([_V0] * _DIM)
     proj = emb.select("vec_id", "nvec", dot(F.col("nvec"), v0).alias("p"))
     terms = proj.select(
         F.posexplode(F.expr("transform(nvec, x -> x * p)")).alias("dim", "t")
@@ -504,7 +511,6 @@ SELECT aid, vec_id, distance FROM (
 def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from cnc_visionsearch_spark.functions.vector import l2_sq
     from cnc_visionsearch_spark.operators.knn import with_normalized
 
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
@@ -1252,7 +1258,6 @@ ORDER BY cell_id
     "raw embeddings, so the gate also re-proves layout == truth.",
 )
 def emb_semdedup_cell_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import dot
     from cnc_visionsearch_spark.queries_ann import ensure_ivf_built
 
     path = ensure_ivf_built(spark, sf_dir)
@@ -1318,7 +1323,6 @@ ORDER BY vec_id
     "the kept set.",
 )
 def emb_semdedup_removed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import dot
     from cnc_visionsearch_spark.queries_ann import ensure_ivf_built
 
     path = ensure_ivf_built(spark, sf_dir)
@@ -1630,11 +1634,6 @@ LIMIT 10
     "M^2 is a 1-row broadcast aggregate.",
 )
 def ann_mips_augmented_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import (
-        as_double_array,
-        dot,
-        l2_sq,
-    )
     from cnc_visionsearch_spark.sources.catalog import memoized_point_value
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -1646,7 +1645,7 @@ def ann_mips_augmented_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sf_dir, "embeddings", "vec_id", _MIPS_QID, "embedding"
         )
     ]
-    qcol = F.array(*[F.lit(x) for x in qv]).cast("array<double>")
+    qcol = vec_lit(qv)
     sq_norm = F.aggregate(
         F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
     )
@@ -2833,8 +2832,6 @@ ORDER BY keeper
     "first-pass before any ANN-based near-dup tier.",
 )
 def emb_exact_duplicate_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import fixed_point_q
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     aug = e.unionByName(
         e.filter(F.col("vec_id") % 50 == 7).select(
@@ -3277,8 +3274,6 @@ LIMIT 20
     "report is exact. One scan plus a two-value broadcast.",
 )
 def emb_raw_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import l2_norm
-
     e = load_table(spark, sf_dir, "embeddings")
     norms = e.select(
         "vec_id",
@@ -3646,8 +3641,6 @@ LIMIT 15
     "text never crosses the network.",
 )
 def source_drift_tv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import fixed_point_q
-
     d = load_table(spark, sf_dir, "documents")
     cnt = (
         d.select("source", F.explode(F.split("text", " ")).alias("term"))
@@ -3831,7 +3824,6 @@ FROM ({" UNION ALL ".join(f"SELECT * FROM agg_{k}" for k in _INERTIA_KS)})
 def emb_codebook_inertia_curve(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import l2_sq
     from cnc_visionsearch_spark.operators.ann import ivf_centroids
     from cnc_visionsearch_spark.operators.knn import with_normalized
 
@@ -3845,7 +3837,7 @@ def emb_codebook_inertia_curve(
         ]
         dmin = F.least(
             *[
-                l2_sq("nvec", F.array(*[F.lit(v) for v in c]))
+                l2_sq("nvec", vec_lit(c))
                 for c in cents
             ]
         )

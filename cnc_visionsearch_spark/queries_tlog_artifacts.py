@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cnc_visionsearch_spark.functions.vector import fixed_point_q, l2_sq, vec_lit
 from cnc_visionsearch_spark.queries_ann import (
     _ARTIFACT_ROOT,
     _L2SQ,
@@ -323,7 +324,6 @@ LIMIT 10
     "deleted set.",
 )
 def tlog_ivf_pq_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import fixed_point_q
     from cnc_visionsearch_spark.operators.ann import (
         _without_tombstones,
         ivf_probe_cells,
@@ -332,12 +332,11 @@ def tlog_ivf_pq_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_codebook,
         read_pq_codes,
     )
-    from cnc_visionsearch_spark.functions.vector import l2_sq
     from cnc_visionsearch_spark.queries_ann import _PQ_M
 
     path = ensure_tlog_ivf_pq(spark, sf_dir)
     q = _norm_query_vec(spark, sf_dir, 11)
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qcol = vec_lit(q)
     probed = ivf_probe_cells(spark, path, q, nprobe=4)
     pruned = _without_tombstones(
         spark,

@@ -15,7 +15,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cnc_visionsearch_spark.functions.vector import cosine_sim
+from cnc_visionsearch_spark.functions.vector import (
+    abs_max,
+    cosine_sim,
+    int8_dequant_errors,
+    l2_norm,
+    vec_lit,
+)
 from cnc_visionsearch_spark.operators.knn import (
     attach_metadata,
     knn_join,
@@ -157,7 +163,7 @@ LIMIT 10
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = _query_vec(spark, sf_dir, 2)
-    qcol = F.array(*[F.lit(float(x)) for x in qvec]).cast("array<double>")
+    qcol = vec_lit(qvec)
     return (
         emb.select(
             "vec_id", cosine_sim(F.col("embedding"), qcol).alias("cosine")
@@ -183,8 +189,6 @@ GROUP BY label
     "decimal-summed norms). HashAggregate partial+final, no sort.",
 )
 def embedding_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import l2_norm
-
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
@@ -214,8 +218,6 @@ FROM embeddings
     "would NaN, SURVEY §7f).",
 )
 def ingest_guard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import l2_norm
-
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -260,10 +262,6 @@ FROM err
     "contract with the DuckDB oracle.",
 )
 def embedding_int8_quant_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.functions.vector import (
-        abs_max,
-        int8_dequant_errors,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     # Two projections: the error array materializes ONCE per row, then

@@ -38,6 +38,7 @@ import json
 import numpy as np
 from pyspark.sql import SparkSession
 
+from cnc_visionsearch_spark.functions.vector import vec_lit
 from cnc_visionsearch_spark.operators.ann import (
     read_cells,
     read_codebook,
@@ -571,7 +572,7 @@ def measure_maxsim_candidates(spark: SparkSession, sf_dir: str) -> dict:
             dot = F.aggregate(
                 F.zip_with(
                     F.col("_nv"),
-                    F.array(*[F.lit(x) for x in qv]),
+                    vec_lit(qv),
                     lambda a, b: a * b,
                 ),
                 F.lit(0.0),
@@ -742,7 +743,7 @@ def measure_maxsim_sweep(spark: SparkSession, sf_dir: str) -> dict:
                 dot = F.aggregate(
                     F.zip_with(
                         F.col("_nv"),
-                        F.array(*[F.lit(x) for x in qv]),
+                        vec_lit(qv),
                         lambda a, b: a * b,
                     ),
                     F.lit(0.0),

@@ -23,7 +23,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cnc_visionsearch_spark.functions.vector import l2_normalize
+from cnc_visionsearch_spark.functions.vector import l2_normalize, unit
 from cnc_visionsearch_spark.operators.ingest import upsert_id_mapping
 from cnc_visionsearch_spark.operators.knn import attach_metadata, knn_single
 from cnc_visionsearch_spark.operators.multimodal import fake_image_embedding
@@ -101,8 +101,7 @@ def embed_text_query(query_text: str) -> list[float]:
         - 1.0
         for j in range(_TEXT_DIM)
     ]
-    n = sum(x * x for x in v) ** 0.5
-    return [x / n for x in v]
+    return unit(v)
 
 
 def ensure_text_index_built(spark: SparkSession, sf_dir: str) -> str:

@@ -15,13 +15,16 @@ The script checks the checkout it lives in (its parent directory goes
 first on sys.path). DuckDB runs under a memory limit, spilling to a
 temporary directory; an oracle that still runs out of memory is
 reported as ``FAIL ... UNCHECKED`` and counted as a failure, never as a
-pass.
+pass. Whenever the process's peak RSS (``ru_maxrss``) rises after a
+query, an ``RSS`` line names that query; the summary names the query at
+which the peak was reached.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import resource
 import shutil
 import sys
 import tempfile
@@ -84,11 +87,22 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
+    peak = {"mb": 0.0, "at": None}
+
+    def note_peak(after: str) -> None:
+        mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024  # KiB on Linux
+        if mb > peak["mb"]:
+            peak.update(mb=mb, at=after)
+            print(f"RSS {after}: peak {mb:.0f} MB")
+
     n_pass = n_fail = n_weak = n_oom = 0
     results: dict[str, dict] = {}
+    prev = "(startup)"
     for name, fn in qs.items():
         if only and not any(name.startswith(p) for p in only):
             continue
+        note_peak(prev)
+        prev = name
         rec = {
             "rows_match": False,
             "schema_match": False,
@@ -152,8 +166,10 @@ def main() -> int:
         else:
             print(f"PASS {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
             n_pass += 1
+    note_peak(prev)
     shutil.rmtree(spill, ignore_errors=True)
-    print(f"\n{n_pass} pass, {n_weak} weak (rows-only), {n_fail} fail")
+    print(f"\npeak RSS {peak['mb']:.0f} MB, reached at {peak['at']}")
+    print(f"{n_pass} pass, {n_weak} weak (rows-only), {n_fail} fail")
     if n_oom:
         print(f"{n_oom} of the failures are UNCHECKED: oracle out of memory")
     if json_out:

@@ -558,6 +558,19 @@ class TestIvfRebalance:
         }
         assert radii == fresh
 
+    def test_refuses_a_layout_with_pq_codes(self, spark, emb, tmp_path):
+        # a split would leave the stride codes stale and under the
+        # parent's cell domain, so the rebalance must write nothing
+        from cnc_visionsearch_spark.operators.ann import ivf_rebalance
+        from cnc_visionsearch_spark.sources.tlog import open_layout
+
+        path = self._build(spark, emb, tmp_path)
+        pq_build(spark, path, m=8)
+        version = open_layout(path).snapshot().version
+        with pytest.raises(ValueError, match="stride-PQ/trained-PQ code tables"):
+            ivf_rebalance(spark, path, max_splits=1, min_factor=0.0)
+        assert open_layout(path).snapshot().version == version
+
 # ------------------------------------------------ forget-vectors runbook
 
 

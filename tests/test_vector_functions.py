@@ -6,6 +6,7 @@ pinned in SURVEY §5.2: L2-normalize (main.py:87), squared-L2 scores
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
 import pytest
@@ -17,6 +18,8 @@ from cnc_visionsearch_spark.functions.vector import (
     l2_norm,
     l2_normalize,
     l2_sq,
+    unit,
+    vec_lit,
 )
 
 VECS = [
@@ -117,3 +120,44 @@ def test_int8_quant_error_bounded_by_half_step(spark):
         assert max(r.errs) <= r.scale / 2 + 1e-15
     assert by_id[3].errs == [0.0, 0.0, 0.0, 0.0]
     assert by_id[3].scale == 0.0
+
+
+def _bits(xs) -> list[bytes]:
+    return [struct.pack(">d", float(x)) for x in xs]
+
+
+def test_vec_lit_is_bit_identical_to_the_per_element_literal(spark):
+    """One parsed literal collects the same doubles, bit for bit, as the
+    element-by-element F.lit array it replaces: repr round-trips every
+    finite double, and NaN/inf go through CAST of their string names."""
+    rng = np.random.default_rng(8)
+    cases = [
+        rng.standard_normal(64).tolist(),
+        [-0.0, 0.0, 5e-324, -5e-324, 2.2250738585072014e-308,
+         -2.2250738585072014e-308, 1e308, -1e308, 1.7976931348623157e308,
+         1e22, 1 / 3, math.inf, -math.inf, math.nan],
+        [],
+        rng.standard_normal(8).astype(np.float32),
+        rng.standard_normal(8).astype(np.float64),
+    ]
+    cols = []
+    for i, vals in enumerate(cases):
+        per_element = F.array(*[F.lit(float(x)) for x in vals]).cast("array<double>")
+        cols += [vec_lit(vals).alias(f"p{i}"), per_element.alias(f"e{i}")]
+    df = spark.range(1).select(*cols)
+    assert all(f.dataType.simpleString() == "array<double>" for f in df.schema)
+    row = df.first()
+    for i, vals in enumerate(cases):
+        assert _bits(row[f"p{i}"]) == _bits(row[f"e{i}"]) == _bits(vals), i
+
+
+def test_unit_is_the_sequential_fold_and_nan_on_zero():
+    rng = np.random.default_rng(9)
+    q = rng.standard_normal(64).astype(np.float32)
+    n = 0.0
+    for x in q.tolist():
+        n = n + x * x
+    n = n ** 0.5
+    assert _bits(unit(q)) == _bits([float(x) / n for x in q])
+    assert unit([3, 4]) == [0.6, 0.8]
+    assert all(math.isnan(x) for x in unit([0.0, -0.0]))
