@@ -141,25 +141,21 @@ def validate_minhash_meta(
 
 
 # ---- transactional MinHash store (r8 verdict #1) -------------------------
-# The cross-run banded store previously relied on the tmp+rename
-# convention (single-writer per artifact, no arbitration between
-# DIFFERENT mutations). Under the sources/tlog protocol every mutation
-# is one atomic commit; conflict domains are the band ids, so appends
-# (new day's signatures) are blind and never blocked, while compaction
-# (dedupe of at-least-once replay rows + file settling) is a rewrite
-# that conflicts against racing appends and recomputes.
+# The cross-run banded store is a log of the sources/tlog protocol:
+# every mutation is one atomic commit; conflict domains are the band
+# ids, so appends (new day's signatures) are blind and never blocked,
+# while compaction (dedupe of at-least-once replay rows + file
+# settling) is a rewrite that conflicts against racing appends and
+# recomputes.
 
 
 def read_minhash_store(spark, path: str) -> DataFrame:
-    """The sanctioned reader for a persisted banded-MinHash store —
-    dispatches on the layout mode (transactional: the snapshot's
-    band-tagged files; legacy: the directory)."""
-    from cnc_visionsearch_spark.sources.tlog import tlog_of
+    """The sanctioned reader for a persisted banded-MinHash store: the
+    live snapshot's band-tagged files (a bare parquet read of the
+    directory would also pick up files a compaction removed)."""
+    from cnc_visionsearch_spark.sources.tlog import open_layout
 
-    t = tlog_of(path)
-    if t is None:
-        return spark.read.parquet(path)
-    snap = t.snapshot()
+    snap = open_layout(path).snapshot()
     bands = int(snap.meta["bands"])
     paths = snap.files_in(list(range(bands)))
     return spark.read.parquet(*[os.path.join(path, p) for p in paths])
@@ -174,8 +170,8 @@ def minhash_store_init(
 ) -> int:
     """Version 1 of a TRANSACTIONAL banded store: the base corpus's
     (doc_id, band_id, band_sig) rows land tagged by band with the band
-    GEOMETRY in commit meta (+ the ``_META.json`` sidecar, so
-    validate_minhash_meta covers both modes). Refuses a non-empty log
+    GEOMETRY in commit meta (+ the ``_META.json`` sidecar that
+    validate_minhash_meta checks). Refuses a non-empty log
     (the tlog init doctrine)."""
     from cnc_visionsearch_spark.sources.tlog import TLog
 

@@ -85,6 +85,11 @@ def _meta(path: str) -> dict:
         return json.load(fh)
 
 
+def _write_meta(path: str, m: int, n_buckets: int, n_entries: int) -> None:
+    with open(os.path.join(path, "_NSW.json"), "w") as fh:
+        json.dump({"m": m, "n_buckets": n_buckets, "n_entries": n_entries}, fh)
+
+
 # ---- the graph layouts in the transaction log -----------------------------
 # `nsw_build` lays the edge table down as ONE init commit with
 # per-edge-file src_bucket conflict domains, appends are blind commits
@@ -402,10 +407,7 @@ def nsw_build(
         import shutil
 
         shutil.rmtree(transient_ivf, ignore_errors=True)
-    with open(os.path.join(path, "_NSW.json"), "w") as fh:
-        json.dump(
-            {"m": m, "n_buckets": n_buckets, "n_entries": n_entries}, fh
-        )
+    _write_meta(path, m, n_buckets, n_entries)
 
 
 def nsw_append(spark, path: str, new_emb: DataFrame) -> None:

@@ -19,7 +19,6 @@ from cnc_visionsearch_spark.operators.ann import (
 from cnc_visionsearch_spark.memo import LRU, file_fingerprint
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
-from cnc_visionsearch_spark.sources.tlog import layout_built
 
 # ---------------------------------------------------------------------------
 # sweep-line interval concurrency
@@ -242,12 +241,9 @@ def ensure_daily_rollup_built(spark: SparkSession, sf_dir: str) -> str:
     the persisted aggregate a 100 TB pipeline maintains incrementally
     (orders_incremental_daily_agg proves the merge invariant) and
     serves coarser queries from."""
-    import os
+    from cnc_visionsearch_spark.queries_ann import artifact_path, build_once
 
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
-
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'orders')}/daily_rollup"
-    if not os.path.exists(os.path.join(path, "_BUILT")):
+    def build(path):
         orders = load_table(spark, sf_dir, "orders")
         (
             orders.groupBy(
@@ -259,11 +255,12 @@ def ensure_daily_rollup_built(spark: SparkSession, sf_dir: str) -> str:
                     "revenue_dec"
                 ),
             )
-            .write.mode("overwrite")
-            .parquet(f"{path}/daily")
+            .write.parquet(f"{path}/daily")
         )
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+
+    return build_once(
+        artifact_path(sf_dir, "daily_rollup", "orders"), build, log=False
+    )
 
 
 @register(
@@ -613,24 +610,19 @@ _PHRASE = ("hash", "join")
 def ensure_inverted_built(spark: SparkSession, sf_dir: str) -> str:
     """Idempotent inverted-index build over the documents table, once
     per corpus content (same artifact discipline as ensure_ivf_built)."""
-    import os
-
     from cnc_visionsearch_spark.operators.text_index import inverted_build
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.queries_ann import artifact_path, build_once
 
     # v3: the serving layout is a transaction log, so every registered
     # text query exercises the committed-snapshot read path and the
     # index is maintainable by concurrent jobs with defined conflict
     # semantics.
-    path = (
-        f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
-        f"/inverted_b{_INV_BUCKETS}v3"
+    return build_once(
+        artifact_path(sf_dir, f"inverted_b{_INV_BUCKETS}v3", "documents"),
+        lambda stage: inverted_build(
+            load_table(spark, sf_dir, "documents"), stage, n_buckets=_INV_BUCKETS
+        ),
     )
-    if not layout_built(os.path.join(path, "_BUILT")):
-        docs = load_table(spark, sf_dir, "documents")
-        inverted_build(docs, path, n_buckets=_INV_BUCKETS)
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
 
 
 @register(
@@ -1959,20 +1951,13 @@ def ensure_inverted_deleted_layout(spark: SparkSession, sf_dir: str) -> str:
     Deletes target their own artifact dir so the shared layout stays
     tombstone-free and every other probe keeps its exact plan shape
     (the ensure_deleted_layout pattern from the IVF tier)."""
-    import os
-
     from cnc_visionsearch_spark.operators.text_index import (
         inverted_build,
         inverted_delete,
     )
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.queries_ann import artifact_path, build_once
 
-    path = (
-        f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
-        f"/inverted_del_b{_INV_BUCKETS}v3"
-    )
-    marker = os.path.join(path, "_DELETED")
-    if not layout_built(marker):
+    def build(path):
         docs = load_table(spark, sf_dir, "documents")
         inverted_build(docs, path, n_buckets=_INV_BUCKETS)
         ids = [
@@ -1984,8 +1969,11 @@ def ensure_inverted_deleted_layout(spark: SparkSession, sf_dir: str) -> str:
             .collect()
         ]
         inverted_delete(spark, path, ids)
-        open(marker, "w").close()
-    return path
+
+    return build_once(
+        artifact_path(sf_dir, f"inverted_del_b{_INV_BUCKETS}v3", "documents"),
+        build,
+    )
 
 
 @register(
@@ -2769,27 +2757,23 @@ def ensure_forget_layouts(spark: SparkSession, sf_dir: str) -> tuple[str, str, s
     nearest non-self neighbors — a pure function of the corpus, so the
     oracle derives the same set. Dedicated dirs: shared layouts must
     stay tombstone-free for every other probe's plan shape."""
-    import os
-
     from cnc_visionsearch_spark.maintenance import forget_vectors
     from cnc_visionsearch_spark.operators.ann import ivf_build, shard_build
     from cnc_visionsearch_spark.operators.knn import with_normalized
     from cnc_visionsearch_spark.operators.text_index import inverted_build
     from cnc_visionsearch_spark.queries_ann import (
-        _ARTIFACT_ROOT,
-        _corpus_tag,
         _norm_query_vec,
+        artifact_path,
+        build_once,
     )
 
-    root = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/forget"
-    p_ivf, p_sh, p_inv = f"{root}/ivf", f"{root}/shards", f"{root}/inverted"
-    # the marker sits in the IVF layout (built first); a rebuild wipes
-    # the whole root so no stale sibling layout survives
-    marker = os.path.join(p_ivf, "_FORGOTTEN")
-    if not layout_built(marker):
-        import shutil
+    def layouts(root):
+        return f"{root}/ivf", f"{root}/shards", f"{root}/inverted"
 
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root):
+        # the three layouts are staged and published together, so no
+        # layout of an older forget root survives beside newer ones
+        p_ivf, p_sh, p_inv = layouts(root)
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         ivf_build(emb, p_ivf, n_cells=8)
         shard_build(emb, p_sh, num_shards=4)
@@ -2811,8 +2795,8 @@ def ensure_forget_layouts(spark: SparkSession, sf_dir: str) -> tuple[str, str, s
             shard_paths=(p_sh,),
             inverted_paths=(p_inv,),
         )
-        open(marker, "w").close()
-    return p_ivf, p_sh, p_inv
+
+    return layouts(build_once(artifact_path(sf_dir, "forget"), build, log=False))
 
 
 @register(

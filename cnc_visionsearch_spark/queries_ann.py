@@ -40,18 +40,80 @@ from cnc_visionsearch_spark.memo import file_fingerprint
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
-from cnc_visionsearch_spark.sources.tlog import layout_built
 
 _DIM = 64  # fixture embedding dimension (FIXTURES.md)
 _N_PLANES = 6
 _SEED = 42
 
 # Build artifacts live outside the (read-only) testdata tree, keyed by
-# corpus (sf dir basename) and build params, so a rebuild happens only
-# when the corpus or the index geometry changes. Local-FS markers are
-# fine in local mode; a cluster deployment swaps this for a catalog
-# entry / _SUCCESS check via the Hadoop FS API.
+# corpus (sf dir basename + content fingerprint) and build geometry in
+# the directory name, so a rebuild happens only when the corpus or the
+# geometry changes. One protocol builds and publishes every artifact
+# (build_once): build into a private stage directory, write _BUILT into
+# it last, rename the stage onto the artifact path. A reader therefore
+# sees a whole artifact or none, a losing racer drops its stage, and no
+# session deletes a directory another one is still building. Local-FS
+# rename is the publish step in local mode; a cluster deployment swaps
+# it for a catalog entry / rename-without-overwrite on the Hadoop FS.
 _ARTIFACT_ROOT = os.environ.get("SPARK_GRAFT_ANN_DIR", "/tmp/cnc_ann_artifacts")
+
+
+def artifact_path(sf_dir: str, name: str, table: str = "embeddings") -> str:
+    """Path of the artifact ``name`` derived from ``table`` of the
+    corpus at ``sf_dir``; reads the artifact root at call time."""
+    return f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, table)}/{name}"
+
+
+def _built(path: str, log: bool) -> bool:
+    """Done check: ``_BUILT`` is there — and, for a transaction-log
+    layout, a ``_tlog/`` too (a marker without a log is a layout of the
+    retired tmp+rename format, which is rebuilt, never read)."""
+    return os.path.exists(os.path.join(path, "_BUILT")) and (
+        not log or os.path.isdir(os.path.join(path, "_tlog"))
+    )
+
+
+def build_once(path: str, build, log: bool = True) -> str:
+    """Build the artifact at ``path`` unless it is already built;
+    return ``path``. ``build(stage)`` writes the whole artifact into a
+    fresh private sibling directory; the stage gets ``_BUILT`` last and
+    is renamed onto ``path`` (the Delta Lake rule: write everything,
+    then make it visible in one atomic step). If another session
+    published ``path`` meanwhile, the stage is dropped. A directory at
+    ``path`` that is not built (a retired-format or marker-less
+    layout) is stale: it is moved aside, the stage renamed in, and the
+    moved-aside copy deleted. Nothing else is ever deleted. ``log``
+    False marks an artifact that is not a transaction-log layout."""
+    import contextlib
+    import errno
+    import shutil
+    import uuid
+
+    if _built(path, log):
+        return path
+    stage = f"{path}.stage.{os.getpid()}.{uuid.uuid4().hex}"
+    moved = []
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    try:
+        build(stage)
+        os.makedirs(stage, exist_ok=True)
+        open(os.path.join(stage, "_BUILT"), "w").close()
+        while True:
+            try:
+                os.rename(stage, path)
+                break
+            except OSError as e:
+                if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
+                    raise
+            if _built(path, log):
+                break  # another session published first: drop the stage
+            moved.append(f"{path}.stale.{uuid.uuid4().hex}")
+            with contextlib.suppress(FileNotFoundError):  # moved by another
+                os.rename(path, moved[-1])
+    finally:
+        for d in (stage, *moved):
+            shutil.rmtree(d, ignore_errors=True)
+    return path
 
 
 def _corpus_tag(sf_dir: str, table: str = "embeddings") -> str:
@@ -76,24 +138,28 @@ def ensure_ivf_built(spark: SparkSession, sf_dir: str, n_cells: int = 8) -> str:
     """Idempotent IVF build: materialize codebook + cell-partitioned
     layout once per (corpus content, n_cells); return the artifact
     path."""
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/ivf_c{n_cells}"
-    if not layout_built(os.path.join(path, "_BUILT")):
-        emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
-        ivf_build(emb, path, n_cells=n_cells)
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+    return build_once(
+        artifact_path(sf_dir, f"ivf_c{n_cells}"),
+        lambda stage: ivf_build(
+            with_normalized(load_table(spark, sf_dir, "embeddings")),
+            stage,
+            n_cells=n_cells,
+        ),
+    )
 
 
 def ensure_shards_built(
     spark: SparkSession, sf_dir: str, num_shards: int = 8
 ) -> str:
     """Idempotent shard-layout build for the sharded-index tier."""
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/shards_s{num_shards}"
-    if not layout_built(os.path.join(path, "_BUILT")):
-        emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
-        shard_build(emb, path, num_shards=num_shards)
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+    return build_once(
+        artifact_path(sf_dir, f"shards_s{num_shards}"),
+        lambda stage: shard_build(
+            with_normalized(load_table(spark, sf_dir, "embeddings")),
+            stage,
+            num_shards=num_shards,
+        ),
+    )
 
 _NORM_CTE = """
 normed AS (

@@ -27,15 +27,14 @@ from cnc_visionsearch_spark.operators.graph_ann import (
 )
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.queries_ann import (
-    _ARTIFACT_ROOT,
     _L2SQ,
     _NORM_CTE,
-    _corpus_tag,
     _norm_query_vec,
+    artifact_path,
+    build_once,
 )
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
-from cnc_visionsearch_spark.sources.tlog import layout_built
 
 # Defaults chosen from the measured sweep (RECALL.json nsw_ef_sweep):
 # m=12/ef=24/hops=6 reaches recall@10 = 1.0 (mean AND min) on the sf0.1
@@ -51,14 +50,16 @@ _QID = 5  # query vector, same convention as the other ANN tiers
 def ensure_nsw_built(spark: SparkSession, sf_dir: str, m: int = _M) -> str:
     """Idempotent NSW build: graph + entries artifacts once per
     (corpus content, m); returns the layout path."""
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/nsw_m{m}"
-    if not layout_built(os.path.join(path, "_BUILT")):
-        emb = with_normalized(load_table(spark, sf_dir, "embeddings")).select(
-            "vec_id", "nvec"
-        )
-        nsw_build(emb, path, m=m, n_entries=_ENTRIES)
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+    return build_once(
+        artifact_path(sf_dir, f"nsw_m{m}"),
+        lambda stage: nsw_build(_emb(spark, sf_dir), stage, m=m, n_entries=_ENTRIES),
+    )
+
+
+def _emb(spark: SparkSession, sf_dir: str):
+    return with_normalized(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", "nvec"
+    )
 
 
 _GRAPH_CTE = f"""
@@ -164,17 +165,14 @@ def ensure_tlog_nsw_built(spark: SparkSession, sf_dir: str) -> str:
 
     from cnc_visionsearch_spark.operators.graph_ann import (
         TLOG_NSW_ENTRIES_TAG,
+        _write_meta,
         nsw_candidate_edges,
         nsw_compact,
     )
     from cnc_visionsearch_spark.sources.tlog import TLog, retag, run_transaction
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/nsw_tlog_m{_M}"
-    marker = os.path.join(path, "_HISTORY")
-    if not layout_built(marker):
-        emb = with_normalized(load_table(spark, sf_dir, "embeddings")).select(
-            "vec_id", "nvec"
-        )
+    def build(path):
+        emb = _emb(spark, sf_dir)
         n_buckets = 16  # nsw_build's default — the oracle is bucket-blind
         edges = nsw_candidate_edges(emb, _M).select(
             "src",
@@ -216,15 +214,10 @@ def ensure_tlog_nsw_built(spark: SparkSession, sf_dir: str) -> str:
             ),
             op="append",
         )
-        import json as _json
-
-        with open(os.path.join(path, "_NSW.json"), "w") as fh:
-            _json.dump(
-                {"m": _M, "n_buckets": n_buckets, "n_entries": _ENTRIES}, fh
-            )
+        _write_meta(path, _M, n_buckets, _ENTRIES)
         run_transaction(lambda: nsw_compact(spark, path))
-        open(marker, "w").close()
-    return path
+
+    return build_once(artifact_path(sf_dir, f"nsw_tlog_m{_M}"), build)
 
 
 @register(
@@ -263,6 +256,9 @@ def tlog_nsw_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _M_UPPER = 8
 _LEVEL_MULT = 8
 _MAX_LEVEL = 3
+_HNSW_GEOMETRY = dict(
+    m=_M, m_upper=_M_UPPER, level_mult=_LEVEL_MULT, max_level=_MAX_LEVEL
+)
 _UPPER_HOPS = 3
 _HQID = 11
 
@@ -272,21 +268,10 @@ def ensure_hnsw_built(spark: SparkSession, sf_dir: str) -> str:
     once per corpus content; returns the layout path."""
     from cnc_visionsearch_spark.operators.graph_ann import hnsw_build
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/hnsw_m{_M}"
-    if not layout_built(os.path.join(path, "_BUILT")):
-        emb = with_normalized(load_table(spark, sf_dir, "embeddings")).select(
-            "vec_id", "nvec"
-        )
-        hnsw_build(
-            emb,
-            path,
-            m=_M,
-            m_upper=_M_UPPER,
-            level_mult=_LEVEL_MULT,
-            max_level=_MAX_LEVEL,
-        )
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+    return build_once(
+        artifact_path(sf_dir, f"hnsw_m{_M}"),
+        lambda stage: hnsw_build(_emb(spark, sf_dir), stage, **_HNSW_GEOMETRY),
+    )
 
 
 def _lv_case() -> str:
@@ -499,24 +484,12 @@ def ensure_tlog_hnsw_built(spark: SparkSession, sf_dir: str) -> str:
     )
     from cnc_visionsearch_spark.sources.tlog import run_transaction
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/hnsw_tlog_m{_M}"
-    marker = os.path.join(path, "_HISTORY")
-    if not layout_built(marker):
-        emb = with_normalized(load_table(spark, sf_dir, "embeddings")).select(
-            "vec_id", "nvec"
-        )
-        hnsw_build(
-            emb,
-            path,
-            m=_M,
-            m_upper=_M_UPPER,
-            level_mult=_LEVEL_MULT,
-            max_level=_MAX_LEVEL,
-        )
+    def build(path):
+        hnsw_build(_emb(spark, sf_dir), path, **_HNSW_GEOMETRY)
         _fragment_tlog_hnsw(spark, path)
         run_transaction(lambda: hnsw_compact(spark, path))
-        open(marker, "w").close()
-    return path
+
+    return build_once(artifact_path(sf_dir, f"hnsw_tlog_m{_M}"), build)
 
 
 @register(

@@ -15,8 +15,6 @@ its queries sit past the driver's 50-entry correctness window
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -40,17 +38,16 @@ from cnc_visionsearch_spark.operators.ann import (
 )
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.queries_ann import (
-    _ARTIFACT_ROOT,
     _L2SQ,
     _NORM_CTE,
     _PQ_M,
-    _corpus_tag,
     _norm_query_vec,
     _pq_sql,
+    artifact_path,
+    build_once,
 )
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
-from cnc_visionsearch_spark.sources.tlog import layout_built
 
 # The base/append split: layouts build over vec_id < _SPLIT, then the
 # remaining vectors arrive as an append batch (fixtures carry 500
@@ -92,9 +89,8 @@ def ensure_appended_layout(
     remaining vectors into both tables against the frozen codebook.
     Keyed by corpus content (fingerprint in _corpus_tag), so a fixture
     regeneration rebuilds."""
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/ivf_append_c{n_cells}"
-    marker = os.path.join(path, f"_APPENDED_m{_PQ_M}")
-    if not layout_built(marker):
+
+    def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         base = emb.filter(F.col("vec_id") < _SPLIT)
         rest = emb.filter(F.col("vec_id") >= _SPLIT)
@@ -102,22 +98,23 @@ def ensure_appended_layout(
         pq_build(spark, path, m=_PQ_M)
         ivf_append(spark, path, rest)
         pq_append(spark, path, rest, m=_PQ_M)
-        open(marker, "w").close()
-    return path
+
+    return build_once(
+        artifact_path(sf_dir, f"ivf_append_c{n_cells}_m{_PQ_M}"), build
+    )
 
 
 def ensure_appended_shards(
     spark: SparkSession, sf_dir: str, num_shards: int = 8
 ) -> str:
     """Idempotent shard_build(base) + shard_append(rest) lifecycle."""
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/shards_append_s{num_shards}"
-    marker = os.path.join(path, "_APPENDED")
-    if not layout_built(marker):
+
+    def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         shard_build(emb.filter(F.col("vec_id") < _SPLIT), path, num_shards=num_shards)
         shard_append(spark, path, emb.filter(F.col("vec_id") >= _SPLIT))
-        open(marker, "w").close()
-    return path
+
+    return build_once(artifact_path(sf_dir, f"shards_append_s{num_shards}"), build)
 
 
 @register(
@@ -299,14 +296,12 @@ def ensure_deleted_layout(spark: SparkSession, sf_dir: str, n_cells: int = 8) ->
     probe keeps its exact plan shape.)"""
     from cnc_visionsearch_spark.operators.ann import ivf_delete
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/ivf_delete_c{n_cells}"
-    marker = os.path.join(path, "_DELETED")
-    if not layout_built(marker):
+    def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         ivf_build(emb, path, n_cells=n_cells)
         ivf_delete(spark, path, _DELETED_IDS)
-        open(marker, "w").close()
-    return path
+
+    return build_once(artifact_path(sf_dir, f"ivf_delete_c{n_cells}"), build)
 
 
 @register(
@@ -429,14 +424,12 @@ def ensure_deleted_shards(
     """Dedicated shard layout: full build, then tombstone-delete ids."""
     from cnc_visionsearch_spark.operators.ann import shard_delete
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/shards_delete_s{num_shards}"
-    marker = os.path.join(path, "_DELETED")
-    if not layout_built(marker):
+    def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         shard_build(emb, path, num_shards=num_shards)
         shard_delete(spark, path, _SHARD_DELETED)
-        open(marker, "w").close()
-    return path
+
+    return build_once(artifact_path(sf_dir, f"shards_delete_s{num_shards}"), build)
 
 
 @register(
@@ -482,18 +475,16 @@ def ensure_lsh_built(
     )
     from cnc_visionsearch_spark.queries_ann import _DIM, _SEED
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/lsh_p{n_planes}"
-    if not os.path.exists(os.path.join(path, "_BUILT")):
+    def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         planes = hyperplanes(_DIM, n_planes, _SEED)
         (
             emb.withColumn("lsh_bucket", hyperplane_signature("nvec", planes))
-            .write.mode("overwrite")
-            .partitionBy("lsh_bucket")
+            .write.partitionBy("lsh_bucket")
             .parquet(f"{path}/buckets")
         )
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+
+    return build_once(artifact_path(sf_dir, f"lsh_p{n_planes}"), build, log=False)
 
 
 from cnc_visionsearch_spark.queries_ann import _SIG_CTE, _planes_cte  # noqa: E402
@@ -729,13 +720,12 @@ def ensure_ivf_rebalanced(spark: SparkSession, sf_dir: str) -> str:
     shared ivf_c8 artifact serves other queries and must not mutate."""
     from cnc_visionsearch_spark.operators.ann import ivf_rebalance
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/ivf_rebal_c8"
-    if not layout_built(os.path.join(path, "_BUILT")):
+    def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         ivf_build(emb, path, n_cells=8)
         ivf_rebalance(spark, path, max_splits=1, min_factor=0.0)
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+
+    return build_once(artifact_path(sf_dir, "ivf_rebal_c8"), build)
 
 
 @register(

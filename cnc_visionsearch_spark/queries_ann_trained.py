@@ -48,11 +48,12 @@ from cnc_visionsearch_spark.queries_ann import (
     _L2SQ,
     _NORM_CTE,
     _norm_query_vec,
+    artifact_path,
+    build_once,
     ensure_ivf_built,
 )
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
-from cnc_visionsearch_spark.sources.tlog import layout_built
 
 _M = 16  # subspaces (width 4 at dim=64): finer than the stride tier's 8
 _KSTAR = 128  # codewords per subspace
@@ -74,7 +75,10 @@ def _trained_cb_chain(
     end-inclusive: ``v[j*w+1 : j*w+w]`` is subvector ``j``. With
     ``m=1`` the "subspace" is the whole vector and the chain trains a
     COARSE quantizer (the IVF codebook) instead of a product one —
-    identical arithmetic, different geometry.
+    identical arithmetic, different geometry. Every CTE read more than
+    once (by the chain or by the oracles around it) is MATERIALIZED:
+    inlined, ``cb{i}``'s two readers would double the work of every
+    earlier iteration, 2^iters-fold in all.
     """
     m = _M if m is None else m
     k_star = _KSTAR if k_star is None else k_star
@@ -83,22 +87,25 @@ def _trained_cb_chain(
     where = f" WHERE {train_where}" if train_where else ""
     parts = [
         f"""
-tw AS (SELECT CAST(len(nvec) // {m} AS INT) AS w FROM normed LIMIT 1),
-tsubs AS (
+tw AS MATERIALIZED (SELECT CAST(len(nvec) // {m} AS INT) AS w FROM normed LIMIT 1),
+tsubs AS MATERIALIZED (
   SELECT vec_id, j.j AS sub_j, nvec[j.j*w+1 : j.j*w+w] AS sv
   FROM normed, tw, (SELECT unnest(range({m})) AS j) j
 ),
-tsrc AS (SELECT vec_id, sub_j, sv FROM tsubs{where}),
+tsrc AS MATERIALIZED (SELECT vec_id, sub_j, sv FROM tsubs{where}),
 tstr AS (SELECT greatest((max(vec_id) + 1) // {_TRAIN_CAP}, 1) AS ts FROM tsrc),
-train AS (SELECT t.vec_id, t.sub_j, t.sv FROM tsrc t, tstr WHERE t.vec_id % ts = 0),
+train AS MATERIALIZED (
+  SELECT t.vec_id, t.sub_j, t.sv FROM tsrc t, tstr WHERE t.vec_id % ts = 0
+),
 kstr AS (SELECT greatest(max(vec_id) // {k_star}, 1) AS s FROM tsrc),
-cb0 AS (
+cb0 AS MATERIALIZED (
   SELECT CAST(t.vec_id // s AS INT) AS code, t.sub_j, t.sv AS cv
   FROM train t, kstr WHERE t.vec_id % s = 0 AND t.vec_id // s < {k_star}
 )"""
     ]
     for i in range(1, iters + 1):
         p = i - 1
+        mat = " MATERIALIZED" if i < iters else ""  # cb{iters}: cbt only
         parts.append(
             f""",
 asg{i} AS (
@@ -122,12 +129,12 @@ upd{i} AS (
     list(CAST(sum_q AS DOUBLE) / CAST(n AS DOUBLE) / 1000000000.0 ORDER BY dim) AS cv
   FROM agg{i} GROUP BY sub_j, code
 ),
-cb{i} AS (
+cb{i} AS{mat} (
   SELECT o.sub_j, o.code, coalesce(u.cv, o.cv) AS cv
   FROM cb{p} o LEFT JOIN upd{i} u ON o.sub_j = u.sub_j AND o.code = u.code
 )"""
         )
-    parts.append(f",\ncbt AS (SELECT sub_j, code, cv FROM cb{iters})")
+    parts.append(f",\ncbt AS MATERIALIZED (SELECT sub_j, code, cv FROM cb{iters})")
     return "".join(parts)
 
 
@@ -338,11 +345,8 @@ def ensure_pq_trained_appended(spark: SparkSession, sf_dir: str) -> str:
         pq_trained_append,
         pq_trained_build,
     )
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/ivf_trained_app"
-    marker = os.path.join(path, f"_BUILT_m{_M}_k{_KSTAR}_t{_ITERS}")
-    if not layout_built(marker):
+    def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         head = emb.filter(F.col("vec_id") < _APPEND_SPLIT)
         tail = emb.filter(F.col("vec_id") >= _APPEND_SPLIT)
@@ -350,8 +354,10 @@ def ensure_pq_trained_appended(spark: SparkSession, sf_dir: str) -> str:
         pq_trained_build(spark, path, m=_M, k_star=_KSTAR, iters=_ITERS)
         ivf_append(spark, path, tail)
         pq_trained_append(spark, path, tail, m=_M)
-        open(marker, "w").close()
-    return path
+
+    return build_once(
+        artifact_path(sf_dir, f"ivf_trained_app_m{_M}_k{_KSTAR}_t{_ITERS}"), build
+    )
 
 
 @register(
@@ -434,11 +440,8 @@ def ensure_ivf_trained_built(spark: SparkSession, sf_dir: str) -> str:
         ivf_build,
         pq_train_codebook,
     )
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/ivf_trained_c8_t{_ITERS}"
-    marker = os.path.join(path, "_BUILT")
-    if not layout_built(marker):
+    def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         rows = pq_train_codebook(emb, m=1, k_star=8, iters=_ITERS)
         cents = spark.createDataFrame(
@@ -446,8 +449,8 @@ def ensure_ivf_trained_built(spark: SparkSession, sf_dir: str) -> str:
             "cell_id int, centroid array<double>",
         )
         ivf_build(emb, path, n_cells=8, centroids=cents)
-        open(marker, "w").close()
-    return path
+
+    return build_once(artifact_path(sf_dir, f"ivf_trained_c8_t{_ITERS}"), build)
 
 
 @register(

@@ -104,94 +104,60 @@ def ensure_minhash_built(spark: SparkSession, sf_dir: str) -> str:
     doctrine as the ANN layouts; content-fingerprint key rebuilds on
     any corpus change). Exact verification still reads the documents
     table — only the CANDIDATE GENERATION rides the artifact."""
-    from cnc_visionsearch_spark.operators.dedup import minhash_banded
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.operators.dedup import (
+        minhash_banded,
+        write_minhash_meta,
+    )
+    from cnc_visionsearch_spark.queries_ann import artifact_path, build_once
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, table='documents')}/minhash_b4h16s3"
-    import os
-
-    if not os.path.exists(os.path.join(path, "_BUILT")):
-        from cnc_visionsearch_spark.operators.dedup import write_minhash_meta
-
+    def build(path):
         d = load_table(spark, sf_dir, "documents")
-        minhash_banded(d, num_hashes=16, bands=4, shingle_n=3).write.mode(
-            "overwrite"
-        ).parquet(path)
+        minhash_banded(d, num_hashes=16, bands=4, shingle_n=3).write.parquet(path)
         write_minhash_meta(path, num_hashes=16, bands=4, shingle_n=3)
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+
+    return build_once(
+        artifact_path(sf_dir, "minhash_b4h16s3", "documents"), build, log=False
+    )
 
 
 def ensure_minhash_store_built(spark: SparkSession, sf_dir: str) -> str:
     """Persisted banded-MinHash STORE with an APPEND lifecycle — the
     cross-run incremental near-dedup state (r6 verdict task #8). Two
-    steps, mirroring a daily-ingest pipeline:
+    commits of one transaction log, mirroring a daily-ingest pipeline:
 
-    - base build (docs < 200): written to a tmp dir and ``os.rename``d
-      into place (atomic on one filesystem — losers of a build race
-      discard their tmp, readers never see a partial base);
-    - append (docs 200-249): the NEW day's banded rows land as
-      additional parquet files in the same directory — the
-      inverted_append pattern (operators/text_index.py:95): O(batch)
-      work, resident rows untouched, no corpus re-scan.
+    - base build (docs < 200): ``minhash_store_init``, which also
+      stamps the geometry sidecar (r7 verdict #3);
+    - append (docs 200-249): the NEW day's banded rows land as one
+      blind commit — the inverted_append pattern: O(batch) work,
+      resident rows untouched, no corpus re-scan. Its txn key makes a
+      replayed append commit nothing.
 
     After the append the store covers doc_id < 250 — byte-equivalent
     to a from-scratch build over that slice (pinned by
-    tests/test_dedup.py). A racing double-append is harmless by
-    construction: probe candidates are DISTINCT (band-key, id) pairs,
-    so duplicate band rows change no result; and every ensure() call
-    returns only after its OWN append completes, so a reader never
-    depends on another session's in-flight files for completeness."""
-    import os
-    import shutil
-
+    tests/test_dedup.py). Read it with ``read_minhash_store``."""
     from cnc_visionsearch_spark.operators.dedup import (
         minhash_banded,
-        validate_minhash_meta,
-        write_minhash_meta,
+        minhash_store_append,
+        minhash_store_init,
     )
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.queries_ann import artifact_path, build_once
 
-    tag = _corpus_tag(sf_dir, table="documents")
-    path = f"{_ARTIFACT_ROOT}/{tag}/minhash_store_b4h16s3_lt250"
-    if not os.path.exists(os.path.join(path, "_BUILT")):
-        tmp = f"{path}.tmp.{os.getpid()}"
-        d = load_table(spark, sf_dir, "documents")
-        minhash_banded(
-            d.filter(F.col("doc_id") < 200).select("doc_id", "text"),
-            num_hashes=16,
-            bands=4,
-            shingle_n=3,
-        ).write.mode("overwrite").parquet(tmp)
-        # geometry sidecar rides the atomic rename: a reader can never
-        # see a store without its _META.json (r7 verdict #3)
-        write_minhash_meta(tmp, num_hashes=16, bands=4, shingle_n=3)
-        open(os.path.join(tmp, "_BUILT"), "w").close()
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    from cnc_visionsearch_spark.operators.dedup import read_minhash_meta
+    def build(path):
+        d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    if read_minhash_meta(path) is None:
-        # legacy store predating the sidecar: THIS function built it
-        # with these constants (they are also in the dir name), so the
-        # owner may stamp it; foreign stores never get here
-        write_minhash_meta(path, num_hashes=16, bands=4, shingle_n=3)
-    if not os.path.exists(os.path.join(path, "_APPENDED")):
-        # an append with MISMATCHED geometry would corrupt the store —
-        # validate against the stamped sidecar before writing
-        validate_minhash_meta(path, num_hashes=16, bands=4, shingle_n=3)
-        d = load_table(spark, sf_dir, "documents")
-        minhash_banded(
-            d.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 250))
-            .select("doc_id", "text"),
-            num_hashes=16,
-            bands=4,
-            shingle_n=3,
-        ).write.mode("append").parquet(path)
-        open(os.path.join(path, "_APPENDED"), "w").close()
-    return path
+        def banded(cond):
+            return minhash_banded(
+                d.filter(cond), num_hashes=16, bands=4, shingle_n=3
+            )
+
+        base = banded(F.col("doc_id") < 200)
+        minhash_store_init(base, path, num_hashes=16, bands=4, shingle_n=3)
+        day2 = banded((F.col("doc_id") >= 200) & (F.col("doc_id") < 250))
+        minhash_store_append(day2, path, txn=("lt250", 1))
+
+    return build_once(
+        artifact_path(sf_dir, "minhash_store_b4h16s3_lt250", "documents"), build
+    )
 
 
 

@@ -571,6 +571,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.dedup import (
         minhash_lsh_pairs,
         minhash_store_probe,
+        read_minhash_store,
     )
     from cnc_visionsearch_spark.queries_dedup import (
         ensure_minhash_store_built,
@@ -587,7 +588,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     store_path = ensure_minhash_store_built(spark, sf_dir)
-    store_banded = spark.read.parquet(store_path)
+    store_banded = read_minhash_store(spark, store_path)
     pairs = minhash_store_probe(
         batch,
         store_banded,

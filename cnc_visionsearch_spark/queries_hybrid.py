@@ -27,7 +27,6 @@ from cnc_visionsearch_spark.functions.vector import dot, fixed_point_q, l2_sq, v
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
-from cnc_visionsearch_spark.sources.tlog import layout_built
 
 # Fixed lexical query (fixture vocabulary, FIXTURES.md) and the
 # standard BM25 knobs.
@@ -1535,23 +1534,20 @@ def ensure_token_ivf_built(spark: SparkSession, sf_dir: str) -> str:
     token_ivf_build) over the documents vocabulary, once per corpus
     content — the PLAID-candidate layout every vector-pruned maxsim
     probe reads (same artifact discipline as ensure_inverted_built)."""
-    import os
-
     from cnc_visionsearch_spark.operators.maxsim import (
         TOKEN_IVF_CELLS,
         token_ivf_build,
     )
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.queries_ann import artifact_path, build_once
 
-    path = (
-        f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
-        f"/token_ivf_c{TOKEN_IVF_CELLS}d{_LI_DIM}"
+    return build_once(
+        artifact_path(
+            sf_dir, f"token_ivf_c{TOKEN_IVF_CELLS}d{_LI_DIM}", "documents"
+        ),
+        lambda stage: token_ivf_build(
+            load_table(spark, sf_dir, "documents"), stage, n_cells=TOKEN_IVF_CELLS
+        ),
     )
-    if not layout_built(os.path.join(path, "_BUILT")):
-        docs = load_table(spark, sf_dir, "documents")
-        token_ivf_build(docs, path, n_cells=TOKEN_IVF_CELLS)
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
 
 
 @register(
@@ -1866,21 +1862,14 @@ def ensure_token_ivf_appended(spark: SparkSession, sf_dir: str) -> str:
     base document slice, then append the rest against the frozen
     centroids. Keyed by corpus content, so fixture regeneration
     rebuilds."""
-    import os
-
     from cnc_visionsearch_spark.operators.maxsim import (
         TOKEN_IVF_CELLS,
         token_ivf_append,
         token_ivf_build,
     )
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.queries_ann import artifact_path, build_once
 
-    path = (
-        f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
-        f"/token_ivf_append_c{TOKEN_IVF_CELLS}d{_LI_DIM}"
-    )
-    marker = os.path.join(path, "_APPENDED")
-    if not layout_built(marker):
+    def build(path):
         docs = load_table(spark, sf_dir, "documents")
         token_ivf_build(
             docs.filter(F.col("doc_id") < _TIVF_SPLIT),
@@ -1890,8 +1879,13 @@ def ensure_token_ivf_appended(spark: SparkSession, sf_dir: str) -> str:
         token_ivf_append(
             docs.filter(F.col("doc_id") >= _TIVF_SPLIT), path
         )
-        open(marker, "w").close()
-    return path
+
+    return build_once(
+        artifact_path(
+            sf_dir, f"token_ivf_append_c{TOKEN_IVF_CELLS}d{_LI_DIM}", "documents"
+        ),
+        build,
+    )
 
 
 @register(
@@ -2388,8 +2382,6 @@ def ensure_token_ivf_deleted(spark: SparkSession, sf_dir: str) -> str:
     """Idempotent TRANSACTIONAL token-IVF lifecycle: build(base) -> append(rest) -> tombstone delete -> vacuum (one
     rewrite commit under the optimistic loop). Its own layout — the
     shared appended fixture is never mutated."""
-    import os
-
     from cnc_visionsearch_spark.operators.maxsim import (
         TOKEN_IVF_CELLS,
         token_ivf_append,
@@ -2397,15 +2389,10 @@ def ensure_token_ivf_deleted(spark: SparkSession, sf_dir: str) -> str:
         token_ivf_delete,
         token_ivf_vacuum,
     )
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.queries_ann import artifact_path, build_once
     from cnc_visionsearch_spark.sources.tlog import run_transaction
 
-    path = (
-        f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
-        f"/token_ivf_tlog_del_c{TOKEN_IVF_CELLS}d{_LI_DIM}"
-    )
-    marker = os.path.join(path, "_HISTORY")
-    if not layout_built(marker):
+    def build(path):
         docs = load_table(spark, sf_dir, "documents")
         token_ivf_build(
             docs.filter(F.col("doc_id") < _TIVF_SPLIT),
@@ -2415,8 +2402,13 @@ def ensure_token_ivf_deleted(spark: SparkSession, sf_dir: str) -> str:
         token_ivf_append(docs.filter(F.col("doc_id") >= _TIVF_SPLIT), path)
         token_ivf_delete(spark, path, _TIVF_DELETED)
         run_transaction(lambda: token_ivf_vacuum(spark, path))
-        open(marker, "w").close()
-    return path
+
+    return build_once(
+        artifact_path(
+            sf_dir, f"token_ivf_tlog_del_c{TOKEN_IVF_CELLS}d{_LI_DIM}", "documents"
+        ),
+        build,
+    )
 
 
 @register(

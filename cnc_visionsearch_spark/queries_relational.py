@@ -1460,10 +1460,9 @@ def ensure_copurchase_edges_built(spark: SparkSession, sf_dir: str) -> str:
     100-TB LPA/PageRank shape — run with ZERO exchange on the edge
     side, every round, forever; (b) the path carries the derivation
     version ``_EDGES_VERSION`` besides the corpus tag; (c) the build
-    writes to a tmp dir and ``os.rename``s into place — atomic on one
-    filesystem, so concurrent sessions (bench + pytest) race safely:
-    one wins, losers discard their tmp, readers never see a
-    half-written artifact.
+    is staged and published by ``build_once`` — concurrent sessions
+    (bench + pytest) race safely: one wins, losers drop their stage,
+    readers never see a half-written artifact.
 
     r8 (v3): the edge stream is REPARTITIONED ON THE BUCKET KEY before
     the bucketed write — repartition(n, src) and bucketBy(n, src)
@@ -1476,14 +1475,10 @@ def ensure_copurchase_edges_built(spark: SparkSession, sf_dir: str) -> str:
     bench-run contention, and the compaction retires the remainder
     while keeping the exchange-free at-scale join."""
     import os
-    import shutil
 
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.queries_ann import artifact_path, build_once
 
-    tag = _corpus_tag(sf_dir, "lineitem")
-    path = f"{_ARTIFACT_ROOT}/{tag}/copurchase_edges_{_EDGES_VERSION}"
-    if not os.path.exists(os.path.join(path, "_BUILT")):
-        tmp = f"{path}.tmp.{os.getpid()}"
+    def build(stage):
         build_tbl = f"copurchase_edges_build_{os.getpid()}"
         li = load_table(spark, sf_dir, "lineitem")
         (
@@ -1493,22 +1488,20 @@ def ensure_copurchase_edges_built(spark: SparkSession, sf_dir: str) -> str:
             .repartition(_EDGES_BUCKETS, "src")
             .write.bucketBy(_EDGES_BUCKETS, "src")
             .sortBy("src")
-            .option("path", tmp)
+            .option("path", stage)
             .mode("overwrite")
             .format("parquet")
             .saveAsTable(build_tbl)
         )
-        # external table: DROP removes only the catalog entry (the tmp
-        # path keeps its files for the rename)
+        # external table: DROP removes only the catalog entry (the
+        # stage keeps its files for the publish)
         spark.sql(f"DROP TABLE IF EXISTS {build_tbl}")
-        open(os.path.join(tmp, "_BUILT"), "w").close()
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # another session won the build race — its artifact is
-            # complete (rename happens only after a full write)
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+
+    return build_once(
+        artifact_path(sf_dir, f"copurchase_edges_{_EDGES_VERSION}", "lineitem"),
+        build,
+        log=False,
+    )
 
 
 def _edges_table(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -98,37 +98,32 @@ def _tlog_batches(spark: SparkSession, sf_dir: str):
     return b1, b2
 
 
+def _idmap_path(sf_dir: str, name: str) -> str:
+    """Artifact path keyed by the content of BOTH source tables of the
+    id mapping (embeddings and documents)."""
+    from cnc_visionsearch_spark import queries_ann as qa
+
+    tag = (
+        f"{qa._corpus_tag(sf_dir, 'embeddings')}-"
+        f"{qa._corpus_tag(sf_dir, 'documents')[-8:]}"
+    )
+    return f"{qa._ARTIFACT_ROOT}/{tag}/{name}"
+
+
 def ensure_tlog_id_mapping(spark: SparkSession, sf_dir: str):
     """Idempotent transactional-table history: version 1 = the derived
     id_mapping (bucketed, max_faiss_id in commit meta), versions 2-3 =
     the two deterministic merges above — built ONCE per corpus content
     (the ensure_* artifact doctrine; the content tag covers both source
     tables, so fixture regeneration rebuilds)."""
-    import os
-
     from cnc_visionsearch_spark.operators.ingest import (
         tlog_init_id_mapping,
         tlog_merge_upsert,
     )
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
+    from cnc_visionsearch_spark.queries_ann import build_once
     from cnc_visionsearch_spark.sources.tlog import TLog
 
-    tag = (
-        f"{_corpus_tag(sf_dir, 'embeddings')}-"
-        f"{_corpus_tag(sf_dir, 'documents')[-8:]}"
-    )
-    path = f"{_ARTIFACT_ROOT}/{tag}/tlog_idmap_b16"
-    marker = os.path.join(path, "_HISTORY")
-    if not os.path.exists(marker):
-        # crash-safe rebuild: a marker-less dir is a PARTIAL build
-        # (crash between init and the marker), and a tlog rerun
-        # APPENDS rather than overwrites — init refuses a non-empty
-        # log — so the partial tree is wiped and rebuilt from scratch
-        # (the merges' txn keys additionally make a concurrent
-        # double-apply a no-op)
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path):
         t = TLog(path)
         mapping = derive_id_mapping(
             load_table(spark, sf_dir, "embeddings"),
@@ -138,8 +133,8 @@ def ensure_tlog_id_mapping(spark: SparkSession, sf_dir: str):
         b1, b2 = _tlog_batches(spark, sf_dir)
         tlog_merge_upsert(t, b1, txn=("history", 1))
         tlog_merge_upsert(t, b2, txn=("history", 2))
-        open(marker, "w").close()
-    return TLog(path)
+
+    return TLog(build_once(_idmap_path(sf_dir, "tlog_idmap_b16"), build))
 
 
 @register(

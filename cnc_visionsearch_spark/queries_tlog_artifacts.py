@@ -26,24 +26,21 @@ delete and compaction are separate long-running jobs).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.functions.vector import fixed_point_q, l2_sq, vec_lit
 from cnc_visionsearch_spark.queries_ann import (
-    _ARTIFACT_ROOT,
     _L2SQ,
     _NORM_CTE,
-    _corpus_tag,
     _norm_query_vec,
+    artifact_path,
+    build_once,
 )
 from cnc_visionsearch_spark.queries_ann_incremental import _IVF_APPEND_CTE
 from cnc_visionsearch_spark.queries_dedup_ext import _INCR_MINHASH_ORACLE
 from cnc_visionsearch_spark.registry import register
 from cnc_visionsearch_spark.sources.catalog import load_table
-from cnc_visionsearch_spark.sources.tlog import layout_built
 
 # lifecycle constants — small, prime-ish, spread across both the base
 # and the appended slice so vacuum touches several buckets/cells
@@ -67,12 +64,7 @@ def ensure_tlog_inverted(spark: SparkSession, sf_dir: str) -> str:
     )
     from cnc_visionsearch_spark.sources.tlog import run_transaction
 
-    path = (
-        f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
-        "/tlog_inverted_b16_lt250"
-    )
-    marker = os.path.join(path, "_HISTORY")
-    if not layout_built(marker):
+    def build(path):
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
@@ -86,8 +78,10 @@ def ensure_tlog_inverted(spark: SparkSession, sf_dir: str) -> str:
         inverted_delete(spark, path, _INV_DELETED)
         run_transaction(lambda: inverted_vacuum(spark, path))
         run_transaction(lambda: inverted_compact(spark, path))
-        open(marker, "w").close()
-    return path
+
+    return build_once(
+        artifact_path(sf_dir, "tlog_inverted_b16_lt250", "documents"), build
+    )
 
 
 @register(
@@ -175,9 +169,7 @@ def ensure_tlog_ivf(spark: SparkSession, sf_dir: str) -> str:
     from cnc_visionsearch_spark.queries_ann_incremental import _SPLIT
     from cnc_visionsearch_spark.sources.tlog import run_transaction
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/tlog_ivf_c8"
-    marker = os.path.join(path, "_HISTORY")
-    if not layout_built(marker):
+    def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         ivf_build(
             emb.filter(F.col("vec_id") < _SPLIT), path, n_cells=8,
@@ -185,8 +177,8 @@ def ensure_tlog_ivf(spark: SparkSession, sf_dir: str) -> str:
         ivf_append(spark, path, emb.filter(F.col("vec_id") >= _SPLIT))
         ivf_delete(spark, path, _IVF_DELETED)
         run_transaction(lambda: ivf_vacuum(spark, path))
-        open(marker, "w").close()
-    return path
+
+    return build_once(artifact_path(sf_dir, "tlog_ivf_c8"), build)
 
 
 @register(
@@ -250,9 +242,7 @@ def ensure_tlog_ivf_pq(spark: SparkSession, sf_dir: str) -> str:
     from cnc_visionsearch_spark.queries_ann_incremental import _SPLIT
     from cnc_visionsearch_spark.sources.tlog import run_transaction
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/tlog_ivf_pq_c8"
-    marker = os.path.join(path, "_HISTORY")
-    if not layout_built(marker):
+    def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         base = emb.filter(F.col("vec_id") < _SPLIT)
         rest = emb.filter(F.col("vec_id") >= _SPLIT)
@@ -262,8 +252,8 @@ def ensure_tlog_ivf_pq(spark: SparkSession, sf_dir: str) -> str:
         pq_append(spark, path, rest, m=_PQ_M)
         ivf_delete(spark, path, _PQ_TLOG_DELETED)
         run_transaction(lambda: ivf_vacuum(spark, path))
-        open(marker, "w").close()
-    return path
+
+    return build_once(artifact_path(sf_dir, "tlog_ivf_pq_c8"), build)
 
 
 def _tlog_pq_oracle() -> str:
@@ -399,9 +389,7 @@ def ensure_tlog_rq(spark: SparkSession, sf_dir: str) -> str:
     )
     from cnc_visionsearch_spark.sources.tlog import run_transaction
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/tlog_rq_k{_RQ_K1}_{_RQ_K2}"
-    marker = os.path.join(path, "_HISTORY")
-    if not layout_built(marker):
+    def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         ivf_build(emb, path, n_cells=8)
         run_transaction(
@@ -411,8 +399,8 @@ def ensure_tlog_rq(spark: SparkSession, sf_dir: str) -> str:
         )
         ivf_delete(spark, path, _RQ_TLOG_DELETED)
         run_transaction(lambda: ivf_vacuum(spark, path))
-        open(marker, "w").close()
-    return path
+
+    return build_once(artifact_path(sf_dir, f"tlog_rq_k{_RQ_K1}_{_RQ_K2}"), build)
 
 
 def _tlog_rq_oracle() -> str:
@@ -505,9 +493,7 @@ def ensure_tlog_shards(spark: SparkSession, sf_dir: str) -> str:
     from cnc_visionsearch_spark.queries_ann_incremental import _SPLIT
     from cnc_visionsearch_spark.sources.tlog import TLog, run_transaction
 
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir)}/tlog_shards_s8"
-    marker = os.path.join(path, "_HISTORY")
-    if not layout_built(marker):
+    def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         shard_build(
             emb.filter(F.col("vec_id") < _SPLIT), path, num_shards=8,
@@ -522,8 +508,8 @@ def ensure_tlog_shards(spark: SparkSession, sf_dir: str) -> str:
 
         cnt = Counter(b for _p, b in TLog(path).snapshot().files)
         assert cnt and max(cnt.values()) == 1 and all(b < 8 for b in cnt)
-        open(marker, "w").close()
-    return path
+
+    return build_once(artifact_path(sf_dir, "tlog_shards_s8"), build)
 
 
 @register(
@@ -576,12 +562,7 @@ def ensure_tlog_minhash_store(spark: SparkSession, sf_dir: str) -> str:
     )
     from cnc_visionsearch_spark.sources.tlog import TLog, run_transaction
 
-    path = (
-        f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, 'documents')}"
-        "/tlog_minhash_store_b4h16s3_lt250"
-    )
-    marker = os.path.join(path, "_HISTORY")
-    if not layout_built(marker):
+    def build(path):
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
@@ -601,8 +582,11 @@ def ensure_tlog_minhash_store(spark: SparkSession, sf_dir: str) -> str:
         t = TLog(path)
         # one file per band after compact; snapshot-isolated reads
         assert len(t.snapshot().files) == 4
-        open(marker, "w").close()
-    return path
+
+    return build_once(
+        artifact_path(sf_dir, "tlog_minhash_store_b4h16s3_lt250", "documents"),
+        build,
+    )
 
 
 @register(
@@ -671,17 +655,11 @@ def ensure_tlog_restore(spark: SparkSession, sf_dir: str):
         tlog_init_id_mapping,
         tlog_merge_upsert,
     )
-    from cnc_visionsearch_spark.queries_tlog import _tlog_batches
+    from cnc_visionsearch_spark.queries_tlog import _idmap_path, _tlog_batches
     from cnc_visionsearch_spark.sources.catalog import derive_id_mapping
     from cnc_visionsearch_spark.sources.tlog import TLog
 
-    tag = (
-        f"{_corpus_tag(sf_dir, 'embeddings')}-"
-        f"{_corpus_tag(sf_dir, 'documents')[-8:]}"
-    )
-    path = f"{_ARTIFACT_ROOT}/{tag}/tlog_idmap_restore_b8"
-    marker = os.path.join(path, "_HISTORY")
-    if not layout_built(marker):
+    def build(path):
         t = TLog(path)
         mapping = derive_id_mapping(
             load_table(spark, sf_dir, "embeddings"),
@@ -692,8 +670,8 @@ def ensure_tlog_restore(spark: SparkSession, sf_dir: str):
         tlog_merge_upsert(t, b1, txn=("restore_hist", 1))
         t.restore(1)
         tlog_merge_upsert(t, b2, txn=("restore_hist", 2))
-        open(marker, "w").close()
-    return TLog(path)
+
+    return TLog(build_once(_idmap_path(sf_dir, "tlog_idmap_restore_b8"), build))
 
 
 @register(

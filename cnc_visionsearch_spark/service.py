@@ -115,16 +115,15 @@ def ensure_text_index_built(spark: SparkSession, sf_dir: str) -> str:
     never serve a regenerated corpus). Parquet float64 round-trips
     doubles losslessly, so probe distances are bit-identical to the
     in-memory path."""
-    import os
+    from cnc_visionsearch_spark.queries_ann import artifact_path, build_once
 
-    from cnc_visionsearch_spark.queries_ann import _ARTIFACT_ROOT, _corpus_tag
-
-    path = f"{_ARTIFACT_ROOT}/{_corpus_tag(sf_dir, table='documents')}/text_index"
-    if not os.path.exists(os.path.join(path, "_BUILT")):
-        index = build_text_index(load_table(spark, sf_dir, "documents"))
-        index.write.mode("overwrite").parquet(f"{path}/index")
-        open(os.path.join(path, "_BUILT"), "w").close()
-    return path
+    return build_once(
+        artifact_path(sf_dir, "text_index", "documents"),
+        lambda stage: build_text_index(
+            load_table(spark, sf_dir, "documents")
+        ).write.parquet(f"{stage}/index"),
+        log=False,
+    )
 
 
 def search_by_text(

@@ -69,25 +69,13 @@ __all__ = [
     "TLogConflictError",
     "Snapshot",
     "run_transaction",
-    "tlog_of",
     "open_layout",
-    "layout_built",
     "retag",
     "read_tags",
     "empty_frame",
     "compact_domains",
     "CHECKPOINT_EVERY",
 ]
-
-
-def tlog_of(path: str) -> "TLog | None":
-    """Handle on ``path`` when it is a transactional table (its
-    ``_tlog/`` dir exists), else None. Only the MinHash store, which
-    still has a plain-directory variant, dispatches on this; the index
-    tiers open their layouts with :func:`open_layout`."""
-    if os.path.isdir(os.path.join(path, _LOG_DIR)):
-        return TLog(path)
-    return None
 
 
 # ---- the index tiers' one storage mode ------------------------------------
@@ -112,23 +100,6 @@ def open_layout(path: str) -> "TLog":
             "function"
         )
     return TLog(path)
-
-
-def layout_built(marker: str) -> bool:
-    """The ``ensure_*`` builders' done-check for the layout directory
-    holding ``marker``: True when the marker AND a log are there.
-    Otherwise the directory is wiped so the caller builds from empty: a
-    marker-less directory is a partial build (a log refuses a second
-    init), and a marker without a log is a layout of the retired
-    tmp+rename format left by an older build under the same corpus
-    tag — it is rebuilt, never read."""
-    import shutil
-
-    path = os.path.dirname(marker)
-    if os.path.exists(marker) and os.path.isdir(os.path.join(path, _LOG_DIR)):
-        return True
-    shutil.rmtree(path, ignore_errors=True)
-    return False
 
 
 def retag(adds: list[dict], tag: int) -> list[dict]:

@@ -203,6 +203,7 @@ def test_minhash_store_probe_appended_equals_full_rebuild(spark):
     from cnc_visionsearch_spark.operators.dedup import (
         minhash_banded,
         minhash_store_probe,
+        read_minhash_store,
     )
     from cnc_visionsearch_spark.queries_dedup import (
         ensure_minhash_store_built,
@@ -220,7 +221,7 @@ def test_minhash_store_probe_appended_equals_full_rebuild(spark):
             .select((F.col("doc_id") + 10000).alias("doc_id"), "text")
         )
     )
-    persisted = spark.read.parquet(ensure_minhash_store_built(spark, sf))
+    persisted = read_minhash_store(spark, ensure_minhash_store_built(spark, sf))
     fresh = minhash_banded(store_docs, num_hashes=16, bands=4, shingle_n=3)
 
     def rows(banded):
@@ -249,6 +250,7 @@ def test_minhash_store_meta_written_and_validated(spark, tmp_path):
         minhash_banded,
         minhash_store_probe,
         read_minhash_meta,
+        read_minhash_store,
         write_minhash_meta,
     )
     from cnc_visionsearch_spark.queries_dedup import (
@@ -267,7 +269,7 @@ def test_minhash_store_meta_written_and_validated(spark, tmp_path):
     }
     d = load_table(spark, sf, "documents")
     docs = d.filter(F.col("doc_id") < 50).select("doc_id", "text")
-    store = spark.read.parquet(path)
+    store = read_minhash_store(spark, path)
     # geometry mismatch: probe bands the batch with b=2 -> must raise
     with _pytest.raises(ValueError, match="geometry mismatch"):
         minhash_store_probe(

@@ -29,10 +29,10 @@ def _modules():
 
 def test_one_storage_mode_ast_guard():
     """No function takes a ``use_tlog`` switch except inverted_build's
-    compatibility keyword; only sources/tlog.py and the MinHash store
-    (operators/dedup.py, which keeps a plain-directory variant) dispatch
-    on ``tlog_of``; the layout mutex is gone; no operator renames
-    directories (the crash-swap machinery of the retired format)."""
+    compatibility keyword; no module dispatches on ``tlog_of`` (the
+    MinHash store has no plain-directory variant either); the layout
+    mutex is gone; no operator renames directories (the crash-swap
+    machinery of the retired format)."""
     knobs, dispatch, renames = [], [], []
     for p, tree in _modules():
         rel = str(p.relative_to(PKG))
@@ -47,10 +47,7 @@ def test_one_storage_mode_ast_guard():
             if isinstance(node, ast.Call):
                 f = node.func
                 name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-                if name == "tlog_of" and rel not in (
-                    "sources/tlog.py",
-                    "operators/dedup.py",
-                ):
+                if name == "tlog_of":
                     dispatch.append(f"{rel}:{node.lineno}")
                 if (
                     name == "rename"
@@ -111,24 +108,135 @@ def test_readers_refuse_a_non_log_directory(spark, tmp_path):
     assert not (stale / "_tlog").exists()
 
 
-def test_layout_built_wipes_stale_and_partial_layouts(tmp_path):
-    from cnc_visionsearch_spark.sources.tlog import TLog, layout_built
+def test_build_once_replaces_a_stale_directory(tmp_path):
+    """A directory at the artifact path that is not built — a layout of
+    the retired format, or a log whose build never wrote its marker —
+    is moved aside and replaced by the staged build; a built one is
+    left alone; a failed build leaves nothing behind."""
+    from cnc_visionsearch_spark.queries_ann import build_once
+    from cnc_visionsearch_spark.sources.tlog import TLog
 
-    stale = tmp_path / "stale"
-    _legacy_dir(stale)
-    assert not layout_built(str(stale / "_BUILT"))
-    assert not stale.exists()  # wiped: the caller rebuilds from empty
+    def build(stage):
+        TLog(stage)
+        (Path(stage) / "data.txt").write_text("new")
 
-    partial = tmp_path / "partial"
-    TLog(str(partial))  # a log whose build never wrote its marker
-    assert not layout_built(str(partial / "_BUILT"))
-    assert not partial.exists()
+    stale = {"legacy": _legacy_dir, "partial": lambda p: TLog(str(p))}
+    for name, make in stale.items():
+        path = tmp_path / name
+        make(path)
+        assert build_once(str(path), build) == str(path)
+        assert (path / "_BUILT").exists() and (path / "_tlog").is_dir()
+        assert (path / "data.txt").read_text() == "new"
+        assert not (path / "cells").exists()
+        # built now: a second call does not build again
+        assert build_once(str(path), lambda s: pytest.fail("rebuilt")) == str(path)
 
-    done = tmp_path / "done"
-    TLog(str(done))
-    (done / "_BUILT").touch()
-    assert layout_built(str(done / "_BUILT"))
-    assert (done / "_tlog").is_dir()
+    def boom(stage):
+        TLog(stage)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        build_once(str(tmp_path / "failed"), boom)
+    # no stage, moved-aside copy or failed build is left behind
+    assert sorted(os.listdir(tmp_path)) == sorted(stale)
+
+
+def test_ensure_builder_survives_a_racing_build(spark, tmp_path, monkeypatch):
+    """A second session builds the same artifact while the first is
+    mid-build — here the first build's callback re-enters the
+    ensure_* builder after its base shard_build, so the second build
+    runs to completion inside the first. The first build must complete,
+    exactly one directory is published, and it holds the same rows a
+    single build does. (A done-check that wipes every marker-less
+    directory deletes the first build's log under it instead.)"""
+    import cnc_visionsearch_spark.queries_ann as qa
+    import cnc_visionsearch_spark.queries_ann_incremental as qi
+    from cnc_visionsearch_spark.operators.ann import (
+        read_shards,
+        shard_build,
+        sharded_topk_persisted,
+    )
+
+    monkeypatch.setattr(qa, "_ARTIFACT_ROOT", str(tmp_path / "artifacts"))
+    builds = []
+
+    def racing_shard_build(emb, path, **kw):
+        shard_build(emb, path, **kw)
+        builds.append(path)
+        if len(builds) == 1:
+            qi.ensure_appended_shards(spark, SF, num_shards=8)
+
+    monkeypatch.setattr(qi, "shard_build", racing_shard_build)
+    path = qi.ensure_appended_shards(spark, SF, num_shards=8)
+    assert len(builds) == 2
+    published = [
+        p.name
+        for p in Path(path).parent.iterdir()
+        if p.name.startswith("shards_append_s8")
+    ]
+    assert published == ["shards_append_s8"] == [Path(path).name]
+
+    single = str(tmp_path / "single")
+    emb = with_normalized(load_table(spark, SF, "embeddings"))
+    shard_build(emb, single, num_shards=8)
+    q = [float(x) for x in emb.filter(F.col("vec_id") == 9).first()["nvec"]]
+
+    def probe(p):
+        return sorted(
+            (r.vec_id, r.distance)
+            for r in sharded_topk_persisted(spark, p, q, k=10).collect()
+        )
+
+    def ids(p):
+        return sorted(r.vec_id for r in read_shards(spark, p).collect())
+
+    assert probe(path) == probe(single)
+    assert ids(path) == ids(single)
+
+
+# The three in-place extensions of the shared ivf_c8 layout: each is one
+# rewrite commit that replaces its previous tables when it runs again, so
+# it keeps its own geometry-named marker instead of a staged build.
+_EXTENSIONS = {"ensure_pq_built", "ensure_pq_trained_built", "ensure_rq_built"}
+
+
+def test_ensure_builders_publish_only_through_build_once():
+    """Every ensure_* builder decides "built?" and publishes through
+    build_once: none calls layout_built, renames or deletes a
+    directory, or writes a marker with open(..., "w") — apart from the
+    three in-place extension markers. Each one that builds a whole
+    artifact calls build_once (ensure_rq only delegates)."""
+    bad, unstaged = [], []
+    for p, tree in _modules():
+        rel = str(p.relative_to(PKG))
+        for fn in ast.walk(tree):
+            if not (
+                isinstance(fn, ast.FunctionDef) and fn.name.startswith("ensure_")
+            ):
+                continue
+            names = set()
+            for node in ast.walk(fn):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                owner = getattr(getattr(f, "value", None), "id", None)
+                names.add(name)
+                modes = node.args[1:2] + [k.value for k in node.keywords if k.arg == "mode"]
+                writes = any(
+                    isinstance(m, ast.Constant) and "w" in str(m.value) for m in modes
+                )
+                if (
+                    name == "layout_built"
+                    or (name == "rename" and owner == "os")
+                    or (name == "rmtree" and owner == "shutil")
+                    or (name == "open" and writes and fn.name not in _EXTENSIONS)
+                ):
+                    bad.append(f"{rel}:{fn.name}:{node.lineno}:{name}")
+            if "build_once" not in names and fn.name not in _EXTENSIONS | {"ensure_rq"}:
+                unstaged.append(f"{rel}:{fn.name}")
+    assert bad == [], bad
+    assert unstaged == [], unstaged
 
 
 def test_ensure_builder_rebuilds_a_stale_legacy_layout(
