@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.functions.vector import dot, fixed_point_q, l2_sq, vec_lit
 from cnc_visionsearch_spark.memo import LRU, file_fingerprint
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.tlog import (
     TLog,
     compact_domains,
@@ -545,7 +546,7 @@ def _delete_ids(spark, path: str, ids: list[int], id_col: str) -> None:
     """Blind tombstone commit under the vector layouts' shared
     tombstone tag (IVF and shard layouts filter identically)."""
     t = open_layout(path)
-    df = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} bigint")
+    df = local_frame(spark, [(int(i),) for i in ids], f"{id_col} bigint")
     t.commit(adds=retag(t.write_data(df), TLOG_IVF_TOMBS_TAG), op="append")
 
 
@@ -852,8 +853,8 @@ def read_shards(spark, path: str, shard_ids=None) -> DataFrame:
     out = read_tags(spark, t, snap, tags)
     if out is None:  # a probe against an emptied layout
         geo = read_geometry(path)
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             f"{geo['id_col']} bigint, {geo['vec_col']} array<double>, "
             "shard int",
         )
@@ -1423,8 +1424,8 @@ def pq_train_codebook(
         w = len(next(iter(cb.values())))
         schema = "sub_j int, code int, cv array<double>"
         for _ in range(iters):
-            cb_df = spark.createDataFrame(
-                [(sj, c, v) for (sj, c), v in sorted(cb.items())], schema
+            cb_df = local_frame(
+                spark, [(sj, c, v) for (sj, c), v in sorted(cb.items())], schema
             )
             # argmin codeword per (vector, subspace); carrying sv inside
             # the struct rides the (d, code) lexicographic min (codes are
@@ -1498,7 +1499,7 @@ def pq_trained_build(
     cell_ids = _family(snap, 0)
     cells = read_tags(spark, t, snap, cell_ids)
     rows = pq_train_codebook(cells, m, k_star, iters, id_col, vec_col)
-    cb_df = spark.createDataFrame(rows, "sub_j int, code int, cv array<double>")
+    cb_df = local_frame(spark, rows, "sub_j int, code int, cv array<double>")
     adds = retag(t.write_data(cb_df.coalesce(1)), TLOG_PQ_TRAINED_MODEL_TAG)
     cb = spark.read.parquet(*[os.path.join(path, a["path"]) for a in adds])
     codes = pq_assign(cells, cb, m, id_col=id_col, vec_col=vec_col).join(
@@ -1802,8 +1803,8 @@ def ivf_rebalance(
         )
         # a seed pair can capture all rows: then only one child gets files
         adds += t.write_data(rea, bucket_expr=F.col("cell_id"))
-        seeds = spark.createDataFrame(
-            [(lo_cell, lo_seed), (hi_cell, hi_seed)],
+        seeds = local_frame(
+            spark, [(lo_cell, lo_seed), (hi_cell, hi_seed)],
             "cell_id int, centroid array<double>",
         )
         radii.pop(c, None)
@@ -1816,16 +1817,16 @@ def ivf_rebalance(
         )
     adds += retag(
         t.write_data(
-            spark.createDataFrame(
-                sorted(codebook.items()), "cell_id int, centroid array<double>"
+            local_frame(
+                spark, sorted(codebook.items()), "cell_id int, centroid array<double>"
             ).coalesce(1)
         ),
         TLOG_CODEBOOK_TAG,
     )
     adds += retag(
         t.write_data(
-            spark.createDataFrame(
-                sorted(radii.items()), "cell_id int, radius double"
+            local_frame(
+                spark, sorted(radii.items()), "cell_id int, radius double"
             ).coalesce(1)
         ),
         TLOG_RADII_TAG,

@@ -53,10 +53,10 @@ from pyspark.sql import functions as F
 from cnc_visionsearch_spark.functions.vector import l2_sq, vec_lit
 from cnc_visionsearch_spark.memo import LRU, file_fingerprint
 from cnc_visionsearch_spark.operators.ann import _metadata_rows, _seq_l2_sq
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.tlog import (
     TLog,
     compact_domains,
-    empty_frame,
     open_layout,
     retag,
     run_transaction,
@@ -133,7 +133,7 @@ def _nsw_graph_reader(spark, path: str):
         rel = _rel_memo.get(paths)
         if rel is None:
             if not paths:
-                rel = empty_frame(spark, _GRAPH_SCHEMA)
+                rel = local_frame(spark, [], _GRAPH_SCHEMA)
             else:
                 rel = spark.read.schema(_GRAPH_SCHEMA).parquet(
                     *[os.path.join(t.root, p) for p in paths]
@@ -200,7 +200,7 @@ def _hnsw_graph_reader(spark, path: str):
         g = _rel_memo.get(paths)
         if g is None:
             if not paths:
-                g = empty_frame(spark, _HGRAPH_SCHEMA)
+                g = local_frame(spark, [], _HGRAPH_SCHEMA)
             else:
                 g = spark.read.schema(_HGRAPH_SCHEMA).parquet(
                     *[os.path.join(t.root, p) for p in paths]
@@ -452,7 +452,7 @@ def nsw_append(spark, path: str, new_emb: DataFrame) -> None:
         for src, dst in out
         if dst in nbr_vec
     ] + [(src, dst, dvec, src % n_buckets) for src, dst, dvec in back]
-    df = spark.createDataFrame(rows, _GRAPH_SCHEMA)
+    df = local_frame(spark, rows, _GRAPH_SCHEMA)
     t = open_layout(path)
     t.commit(
         adds=t.write_data(df, bucket_expr=F.col("src_bucket")),
@@ -529,8 +529,8 @@ def nsw_search_df(
     """:func:`nsw_search` as a (vec_id, distance) DataFrame — the
     registered-query surface."""
     rows = nsw_search(spark, path, query_vec, k=k, ef=ef, hops=hops)
-    return spark.createDataFrame(
-        [(int(i), float(d)) for i, d in rows],
+    return local_frame(
+        spark, [(int(i), float(d)) for i, d in rows],
         "vec_id bigint, distance double",
     )
 
@@ -840,8 +840,8 @@ def hnsw_search_df(
     rows = hnsw_search(
         spark, path, query_vec, k=k, ef=ef, hops=hops, upper_hops=upper_hops
     )
-    return spark.createDataFrame(
-        [(int(i), float(d)) for i, d in rows],
+    return local_frame(
+        spark, [(int(i), float(d)) for i, d in rows],
         "vec_id bigint, distance double",
     )
 
@@ -924,7 +924,7 @@ def hnsw_append(spark, path: str, new_emb: DataFrame) -> None:
         (layer, src, dst, dvec, src % n_buckets)
         for layer, src, dst, dvec in back_edges
     ]
-    df = spark.createDataFrame(rows, _HGRAPH_SCHEMA)
+    df = local_frame(spark, rows, _HGRAPH_SCHEMA)
     t = open_layout(path)
     # edges land as ONE blind append commit (never blocked by a racing
     # compact), THEN the entry promotion as a meta-key commit: racing

@@ -36,6 +36,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cnc_visionsearch_spark.session import local_frame
+
 
 def _interleave_terms(col_names: list[str], bits: int, shl: str, shr: str) -> list[str]:
     """Shared SQL-text generator for the Morton key so the Spark
@@ -182,7 +184,7 @@ def pruned_scan(
             keep.append(os.path.join(path, entry["file"]))
     schema = spark.read.parquet(path).schema
     if not keep:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     df = spark.read.schema(schema).parquet(*keep)
     residual = functools.reduce(
         operator.and_,

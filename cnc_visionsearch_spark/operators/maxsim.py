@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from cnc_visionsearch_spark.functions.text import hex_to_long
 from cnc_visionsearch_spark.functions.vector import l2_sq
 from cnc_visionsearch_spark.memo import LRU
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.tlog import (
     TLog,
     open_layout,
@@ -217,7 +218,7 @@ def token_ivf_delete(spark: SparkSession, path: str, doc_ids: list[int]) -> None
     immediately; resident files stay byte-identical; physical removal
     rides :func:`token_ivf_vacuum`."""
     t = open_layout(path)
-    df = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id bigint")
+    df = local_frame(spark, [(int(i),) for i in doc_ids], "doc_id bigint")
     t.commit(adds=retag(t.write_data(df), TLOG_TIVF_TOMBS_TAG), op="append")
 
 
@@ -463,8 +464,8 @@ def token_ivf_build(
         .limit(n_cells)
         .collect()
     )  # bounded: n_cells rows (the ivf_probe_cells collect doctrine)
-    cents = spark.createDataFrame(
-        [(i, r["tok"], list(r["_nv"])) for i, r in enumerate(cent_rows)],
+    cents = local_frame(
+        spark, [(i, r["tok"], list(r["_nv"])) for i, r in enumerate(cent_rows)],
         "cell_id int, ctok string, cv array<double>",
     )
     asg = _assign_tokens(vocab, cents)
@@ -634,9 +635,7 @@ def token_ivf_candidates(
     )
     if min_token_hits <= 1:
         return dc.select("doc_id").distinct()
-    qcells = spark.createDataFrame(
-        per_tok_cells, "qt_idx int, cell_id int"
-    )
+    qcells = local_frame(spark, per_tok_cells, "qt_idx int, cell_id int")
     return (
         dc.join(F.broadcast(qcells), "cell_id")
         .groupBy("doc_id")
@@ -726,8 +725,8 @@ def maxsim_multi_probe(
         # of `matched` unique by construction — postings are unique per
         # (term, doc_id) at any visible snapshot (build groups by
         # (term, doc_id); tombstones hide every copy of a doc)
-        qterms = spark.createDataFrame(
-            sorted({(qid, t) for qid, ts in queries for t in ts}),
+        qterms = local_frame(
+            spark, sorted({(qid, t) for qid, ts in queries for t in ts}),
             "qid bigint, term string",
         )
         matched = posts.join(F.broadcast(qterms), "term")
@@ -763,8 +762,8 @@ def maxsim_multi_probe(
                 if min_token_hits == "all"
                 else F.lit(int(min_token_hits))
             )
-            qn = spark.createDataFrame(
-                [(qid, len(set(ts))) for qid, ts in queries],
+            qn = local_frame(
+                spark, [(qid, len(set(ts))) for qid, ts in queries],
                 "qid bigint, _qn int",
             )
             cand = (
@@ -782,9 +781,7 @@ def maxsim_multi_probe(
             for ti, qt in enumerate(ts)
             for cell in _probe_cells_from_rows(cents, [qt], nprobe)
         ]
-        qcells = spark.createDataFrame(
-            qcell_rows, "qid bigint, qt_idx int, cell_id int"
-        )
+        qcells = local_frame(spark, qcell_rows, "qid bigint, qt_idx int, cell_id int")
         union_cells = sorted({c for _, _, c in qcell_rows})
         hit = (
             read_doc_cells(spark, index_path, cells=union_cells)
@@ -799,8 +796,8 @@ def maxsim_multi_probe(
                 if min_token_hits == "all"
                 else F.lit(int(min_token_hits))
             )
-            qn = spark.createDataFrame(
-                [(qid, len(ts)) for qid, ts in queries],
+            qn = local_frame(
+                spark, [(qid, len(ts)) for qid, ts in queries],
                 "qid bigint, _qn int",
             )
             cand = (
@@ -904,8 +901,8 @@ def maxsim_multi_probe(
         qvec_rows = [
             (qid, t, li_token_vec_py(t)) for qid, ts in chunk for t in ts
         ]
-        qvecs = spark.createDataFrame(
-            qvec_rows, "qid bigint, qtok string, qnv array<double>"
+        qvecs = local_frame(
+            spark, qvec_rows, "qid bigint, qtok string, qnv array<double>"
         )
         vocab_dots = (
             dtoks.select("tok")

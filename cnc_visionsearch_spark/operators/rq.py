@@ -40,6 +40,7 @@ from cnc_visionsearch_spark.operators.ann import (
     TLOG_RQ_MODEL_L2_TAG,
     _family,
 )
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.tlog import TLog, open_layout, read_tags, retag
 
 
@@ -49,7 +50,7 @@ def _cb_df(spark, cb_rows, k: int):
     rows = [(int(c), [float(x) for x in v]) for (_sj, c, v) in cb_rows]
     if len(rows) > k:
         raise ValueError(f"codebook has {len(rows)} rows, expected <= {k}")
-    return spark.createDataFrame(rows, "code int, cv array<double>")
+    return local_frame(spark, rows, "code int, cv array<double>")
 
 
 def argmin_code(
@@ -105,6 +106,9 @@ def rq_train(
     a1 = argmin_code(emb, cb1, vec_col, id_col).withColumnRenamed(
         "code", "c1"
     )
+    # the residual set feeds level 2's max-id and init collects, every
+    # Lloyd round and the code write: checkpoint it (lazily, on its
+    # first use) so the level-1 crossJoin + argmin + joins run once
     res = (
         emb.join(a1, id_col)
         .join(F.broadcast(cb1.withColumnRenamed("code", "c1")), "c1")
@@ -113,6 +117,7 @@ def rq_train(
             "c1",
             F.zip_with(vec_col, "cv", lambda a, b: a - b).alias("rvec"),
         )
+        .localCheckpoint(eager=False)
     )
     cb2 = _cb_df(
         spark,

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.operators.dedup import _MERSENNE31, _base_hash
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.tlog import (
     TLog,
     open_layout,
@@ -196,7 +197,7 @@ def inverted_delete(spark, path: str, doc_ids: list[int]) -> None:
     tombstone file commits as a blind append under the reserved
     tombstone domain tag."""
     t = open_layout(path)
-    df = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id bigint")
+    df = local_frame(spark, [(int(i),) for i in doc_ids], "doc_id bigint")
     t.commit(adds=retag(t.write_data(df), TLOG_TOMBS_TAG), op="append")
 
 
@@ -462,8 +463,8 @@ def bm25_multi_probe(
         .crossJoin(F.broadcast(stats))
         .select("term", "doc_id", fixed_point_q(term_score).alias("sq"))
     )
-    qterms = spark.createDataFrame(
-        [(int(q), t) for q, ts in queries for t in ts],
+    qterms = local_frame(
+        spark, [(int(q), t) for q, ts in queries for t in ts],
         "qid bigint, term string",
     )
     per_query = (
@@ -742,8 +743,8 @@ def percolate_docs(
     micro-batch is matched independently, which is why alerting
     engines scale horizontally on ingest."""
     s = docs.sparkSession
-    qdf = s.createDataFrame(
-        [(n, t, len(ts)) for n, ts in queries for t in ts],
+    qdf = local_frame(
+        s, [(n, t, len(ts)) for n, ts in queries for t in ts],
         "query_name string, term string, n_terms int",
     )
     toks = docs.select(

@@ -39,6 +39,7 @@ from cnc_visionsearch_spark.queries_pipeline import (
     _distinct_trigrams,
     _doc_hash_unit,
 )
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.catalog import load_table
 
 __all__ = ["build_training_corpus"]
@@ -145,7 +146,7 @@ def build_training_corpus(
         ("4_decontamination", n3, n4),
         ("5_stratified_sample", n4, n5),
     ]
-    return spark.createDataFrame(
-        [(s, i, o, i - o) for s, i, o in funnel],
+    return local_frame(
+        spark, [(s, i, o, i - o) for s, i, o in funnel],
         "stage string, docs_in bigint, docs_out bigint, dropped bigint",
     )

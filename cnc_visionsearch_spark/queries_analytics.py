@@ -18,6 +18,7 @@ from cnc_visionsearch_spark.operators.ann import (
 )
 from cnc_visionsearch_spark.memo import LRU, file_fingerprint
 from cnc_visionsearch_spark.registry import register
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
@@ -1114,8 +1115,8 @@ w0 AS (
 def doc_bpe_train_merges(
     spark: SparkSession, sf_dir: str, rounds: int = _BPE_ROUNDS
 ) -> DataFrame:
-    return spark.createDataFrame(
-        bpe_train_merge_rows(spark, sf_dir, rounds=rounds),
+    return local_frame(
+        spark, bpe_train_merge_rows(spark, sf_dir, rounds=rounds),
         "merge_rank bigint, lhs string, rhs string, merged string, "
         "pair_count bigint",
     )
@@ -2524,9 +2525,7 @@ def part_bfs_3hop_reach(
     und = e.unionAll(e.select(F.col("y").alias("x"), F.col("x").alias("y")))
     und = und.localCheckpoint()
 
-    frontier = spark.createDataFrame(
-        [(int(_BFS_SEED),)], "p bigint"
-    ).localCheckpoint()
+    frontier = local_frame(spark, [(int(_BFS_SEED),)], "p bigint").localCheckpoint()
     reached = frontier
     levels = [frontier.withColumn("hop", F.lit(0))]
     for hop in range(1, hops + 1):
@@ -2908,8 +2907,8 @@ def forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .first()
     )
     rows.append(("inverted", int(inv_live), int(r["doc_id"]), float(r["tf"])))
-    return spark.createDataFrame(
-        rows, "layout string, n_live bigint, top1_id bigint, top1_metric double"
+    return local_frame(
+        spark, rows, "layout string, n_live bigint, top1_id bigint, top1_metric double"
     ).orderBy("layout")
 
 
@@ -4516,8 +4515,8 @@ def text_percolator_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_inverted_built(spark, sf_dir)
     all_terms = sorted({t for _, ts in _PERC_QUERIES for t in ts})
     buckets = sorted({term_bucket(t, _INV_BUCKETS) for t in all_terms})
-    qdf = spark.createDataFrame(
-        [
+    qdf = local_frame(
+        spark, [
             (name, t, len(terms))
             for name, terms in _PERC_QUERIES
             for t in terms
@@ -4541,9 +4540,7 @@ def text_percolator_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").alias("first_doc"),
         F.max("doc_id").alias("last_doc"),
     )
-    names = spark.createDataFrame(
-        [(n,) for n, _ in _PERC_QUERIES], "query_name string"
-    )
+    names = local_frame(spark, [(n,) for n, _ in _PERC_QUERIES], "query_name string")
     # broadcast the aggregated side of the zero-fill left join (r12,
     # guide §3.1): agg is ≤ |stored queries| rows BY CONSTRUCTION (one
     # row per query_name — planner-state-sized at any corpus scale),
@@ -4657,9 +4654,7 @@ def order_price_quantile_sketch_report(
     cum = distributed_cumsum(
         hist, ["bin"], sums=[(F.col("c"), "_cum")]
     ).select("bin", F.col("_cum").cast("bigint").alias("cum_c"))
-    targets = spark.createDataFrame(
-        [(q,) for q in _QSK_QS], "q double"
-    )
+    targets = local_frame(spark, [(q,) for q in _QSK_QS], "q double")
     hits = (
         targets.crossJoin(F.broadcast(ext))
         .join(
@@ -4797,16 +4792,16 @@ def text_percolator_negated(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("term").isin(pos_terms + neg_terms))
         .select("term", "doc_id")
     )
-    qdf = spark.createDataFrame(
-        [
+    qdf = local_frame(
+        spark, [
             (name, t, len(ps))
             for name, ps, _ in _PERC_NEG_QUERIES
             for t in ps
         ],
         "query_name string, term string, n_terms int",
     )
-    ndf = spark.createDataFrame(
-        [(name, t) for name, _, ns in _PERC_NEG_QUERIES for t in ns],
+    ndf = local_frame(
+        spark, [(name, t) for name, _, ns in _PERC_NEG_QUERIES for t in ns],
         "query_name string, term string",
     )
     pos = (
@@ -4827,8 +4822,8 @@ def text_percolator_negated(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").alias("first_doc"),
         F.max("doc_id").alias("last_doc"),
     )
-    names = spark.createDataFrame(
-        [(n,) for n, _, _ in _PERC_NEG_QUERIES], "query_name string"
+    names = local_frame(
+        spark, [(n,) for n, _, _ in _PERC_NEG_QUERIES], "query_name string"
     )
     return names.join(agg, "query_name", "left").select(
         "query_name",

@@ -47,6 +47,7 @@ from cnc_visionsearch_spark.queries_ann import (
     build_once,
 )
 from cnc_visionsearch_spark.registry import register
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.catalog import load_table
 
 # The base/append split: layouts build over vec_id < _SPLIT, then the
@@ -1022,8 +1023,8 @@ def ann_ivf_exact_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_ivf_built(spark, sf_dir)
     q = _norm_query_vec(spark, sf_dir, _XP_QID)
     top, _scanned = ivf_exact_pruned_search(spark, path, q, k=_XP_K)
-    return spark.createDataFrame(
-        [(int(i), float(d)) for i, d in top], "vec_id bigint, distance double"
+    return local_frame(
+        spark, [(int(i), float(d)) for i, d in top], "vec_id bigint, distance double"
     )
 
 
@@ -1102,8 +1103,8 @@ def ann_ivf_exact_pruned_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k in (1, _XP_K):
         top, scanned = ivf_exact_pruned_search(spark, path, q, k=k)
         rows.append((k, int(n_total), len(scanned), float(top[k - 1][1])))
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "k bigint, n_cells_total bigint, n_cells_scanned bigint, "
         "kth_distance double",
     )
@@ -1169,8 +1170,8 @@ def ann_ivf_nprobe_cost_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     for rank, (_d, cell) in enumerate(order, start=1):
         cum += census.get(cell, 0)
         rows.append((rank, cum, cum * 1000000 // corpus))
-    return spark.createDataFrame(
-        rows, "nprobe bigint, rows_read bigint, ppm_of_corpus bigint"
+    return local_frame(
+        spark, rows, "nprobe bigint, rows_read bigint, ppm_of_corpus bigint"
     )
 
 
@@ -1387,8 +1388,8 @@ def ann_storage_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         (t, b, rows * b, dim * 8 * 1000 // b)
         for t, b in tiers
     ]
-    return spark.createDataFrame(
-        sorted(out, key=lambda r: -r[1]),
+    return local_frame(
+        spark, sorted(out, key=lambda r: -r[1]),
         "tier string, bytes_per_vector bigint, total_bytes bigint, "
         "compression_permille bigint",
     )

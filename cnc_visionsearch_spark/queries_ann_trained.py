@@ -53,6 +53,7 @@ from cnc_visionsearch_spark.queries_ann import (
     ensure_ivf_built,
 )
 from cnc_visionsearch_spark.registry import register
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.catalog import load_table
 
 _M = 16  # subspaces (width 4 at dim=64): finer than the stride tier's 8
@@ -444,8 +445,8 @@ def ensure_ivf_trained_built(spark: SparkSession, sf_dir: str) -> str:
     def build(path):
         emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
         rows = pq_train_codebook(emb, m=1, k_star=8, iters=_ITERS)
-        cents = spark.createDataFrame(
-            [(code, cv) for _sj, code, cv in rows],
+        cents = local_frame(
+            spark, [(code, cv) for _sj, code, cv in rows],
             "cell_id int, centroid array<double>",
         )
         ivf_build(emb, path, n_cells=8, centroids=cents)

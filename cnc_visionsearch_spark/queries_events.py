@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.registry import register
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.catalog import load_table
 
 
@@ -2414,8 +2415,8 @@ def events_markov_removal_attribution(
         )
         for ch in _ATTR_CHANNELS
     ]
-    return spark.createDataFrame(
-        out,
+    return local_frame(
+        spark, out,
         "channel string, p_base_q bigint, p_removed_q bigint, "
         "removal_q bigint, attr_ppm bigint",
     )
@@ -2587,8 +2588,8 @@ def events_shapley_attribution(
             users for m, (users, _) in stats.items() if m & bit
         )
         out.append((ch, n_with, phi))
-    return spark.createDataFrame(
-        out, "channel string, n_users_with bigint, phi_num_q bigint"
+    return local_frame(
+        spark, out, "channel string, n_users_with bigint, phi_num_q bigint"
     )
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from cnc_visionsearch_spark.functions.vector import dot, fixed_point_q, l2_sq, vec_lit
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.registry import register
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.catalog import load_table
 
 # Fixed lexical query (fixture vocabulary, FIXTURES.md) and the
@@ -786,7 +787,7 @@ def hybrid_ta_stop_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    depths = spark.createDataFrame([(d,) for d in _TA_DEPTHS], "d int")
+    depths = local_frame(spark, [(d,) for d in _TA_DEPTHS], "d int")
     # bounded non-equi joins: |depths| x maxd rows at most (planner
     # state on both sides) — the commented-crossJoin doctrine
     slex = (
@@ -954,7 +955,7 @@ def text_static_prune_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
         .select("doc_id")
     )
-    ps = spark.createDataFrame([(p,) for p in _PRUNE_PCTS], "keep_pct int")
+    ps = local_frame(spark, [(p,) for p in _PRUNE_PCTS], "keep_pct int")
     # bounded multiplier: |ps| literal rows over the matched slice
     kept = ranked.crossJoin(F.broadcast(ps)).filter(
         F.col("rn")
@@ -1079,8 +1080,8 @@ def text_bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("gain"),
     )
     graded = graded.localCheckpoint(eager=False)
-    disc = spark.createDataFrame(
-        [(i + 1, w) for i, w in enumerate(_DCG_DISCOUNTS)], "r int, w double"
+    disc = local_frame(
+        spark, [(i + 1, w) for i, w in enumerate(_DCG_DISCOUNTS)], "r int, w double"
     )
     run = (
         graded.orderBy(F.col("score_q").desc(), F.col("doc_id").asc())
@@ -2081,8 +2082,8 @@ def text_maxsim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     graded = graded.localCheckpoint(eager=False)
-    disc = spark.createDataFrame(
-        [(i + 1, w) for i, w in enumerate(_DCG_DISCOUNTS)], "r int, w double"
+    disc = local_frame(
+        spark, [(i + 1, w) for i, w in enumerate(_DCG_DISCOUNTS)], "r int, w double"
     )
     run = (
         scored.orderBy(F.col("score_q").desc(), F.col("doc_id").asc())
@@ -2207,8 +2208,8 @@ def _ndcg10_report(
     tail (inlined 1/log2(r+1) discounts, 1e-9-quantized gain x
     discount, one final double division)."""
     graded = graded.localCheckpoint(eager=False)
-    disc = spark.createDataFrame(
-        [(i + 1, w) for i, w in enumerate(_DCG_DISCOUNTS)], "r int, w double"
+    disc = local_frame(
+        spark, [(i + 1, w) for i, w in enumerate(_DCG_DISCOUNTS)], "r int, w double"
     )
     run = (
         scored.orderBy(F.col("score_q").desc(), F.col("doc_id").asc())

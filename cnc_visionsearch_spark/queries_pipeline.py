@@ -37,6 +37,7 @@ from cnc_visionsearch_spark.functions.vector import (
 )
 from cnc_visionsearch_spark.queries_ann import _DIM, _IVF_CTE, _L2SQ, _NORM_CTE
 from cnc_visionsearch_spark.registry import register
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.catalog import load_table
 
 # power-iteration start vector: the uniform unit vector, one component
@@ -1146,7 +1147,7 @@ def doc_quality_classifier_weights(
         for j, name in enumerate(_LOGREG_FEATURES)
     ]
     return (
-        spark.createDataFrame(rows, "feature string, weight_q bigint")
+        local_frame(spark, rows, "feature string, weight_q bigint")
         .orderBy("feature")
     )
 
@@ -1913,8 +1914,8 @@ def minhash_band_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         # SQL oracle's NULLIF-guarded division, never ZeroDivisionError
         recall = float(n_cap) / float(n_true) if n_true else None
         rows_out.append((bands, rows, n_cand, n_true, n_cap, recall))
-    return spark.createDataFrame(
-        rows_out,
+    return local_frame(
+        spark, rows_out,
         "bands bigint, rows_per_band bigint, n_candidates bigint, "
         "n_true bigint, n_captured bigint, recall double",
     ).orderBy(F.col("bands").desc())

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.operators.rank import distributed_cumsum, exact_ntile
 from cnc_visionsearch_spark.registry import register
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.catalog import load_table
 
 
@@ -90,9 +91,7 @@ def customer_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         sum_total_cols=["t"],
         bands=16,
     ).withColumn("t", F.col("t").cast("bigint"))
-    th = spark.createDataFrame(
-        [(50,), (80,), (95,)], "threshold_pct int"
-    )
+    th = local_frame(spark, [(50,), (80,), (95,)], "threshold_pct int")
     needed = (F.col("cum_c") - F.col("rev_c")) * 100 < F.col("t") * F.col(
         "threshold_pct"
     )

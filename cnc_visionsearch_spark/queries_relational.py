@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.registry import register
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.catalog import load_table, spread_scan
 
 
@@ -2843,9 +2844,7 @@ def lineitem_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     obs = digits.groupBy("d").agg(F.count(F.lit(1)).cast("bigint").alias("n_obs"))
     tot = obs.agg(F.sum("n_obs").cast("bigint").alias("n"))
-    expect = spark.createDataFrame(
-        sorted(_BENFORD_P.items()), "d bigint, p double"
-    )
+    expect = local_frame(spark, sorted(_BENFORD_P.items()), "d bigint, p double")
     en = F.col("p") * F.col("n").cast("double")
     nobs = F.coalesce(F.col("n_obs"), F.lit(0)).cast("bigint")
     nobs_d = nobs.cast("double")

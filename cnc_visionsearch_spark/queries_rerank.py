@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from cnc_visionsearch_spark.functions.vector import dot, l2_sq
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.registry import register
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.catalog import load_table
 
 _TOP_N = 20
@@ -156,4 +157,4 @@ def knn_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never data-proportional (same pattern as IVF probe-cell
     # selection, operators/ann.py)
     picked = mmr_select(cand.collect(), sims.collect())
-    return spark.createDataFrame(picked, "rank int, vec_id bigint, relq bigint")
+    return local_frame(spark, picked, "rank int, vec_id bigint, relq bigint")

@@ -52,6 +52,7 @@ from cnc_visionsearch_spark.operators.ann import (
 )
 from cnc_visionsearch_spark.operators.knn import with_normalized
 from cnc_visionsearch_spark.queries_ann import ensure_ivf_built, ensure_pq_built
+from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.catalog import load_table
 
 K = 10
@@ -720,8 +721,8 @@ def measure_maxsim_sweep(spark: SparkSession, sf_dir: str) -> dict:
             .limit(n_cells)
             .collect()
         )
-        cents_df = spark.createDataFrame(
-            [(i, r["tok"], list(r["_nv"])) for i, r in enumerate(cent_rows)],
+        cents_df = local_frame(
+            spark, [(i, r["tok"], list(r["_nv"])) for i, r in enumerate(cent_rows)],
             "cell_id int, ctok string, cv array<double>",
         )
         cents_py = [(i, list(r["_nv"])) for i, r in enumerate(cent_rows)]
@@ -801,9 +802,7 @@ def measure_maxsim_sweep(spark: SparkSession, sf_dir: str) -> dict:
                         for i, qt in enumerate(qtoks)
                         for c in probed_cells(qt, nprobe)
                     ]
-                    qc = spark.createDataFrame(
-                        rows, "qt_idx int, cell_id int"
-                    )
+                    qc = local_frame(spark, rows, "qt_idx int, cell_id int")
                     cand_df = (
                         doc_cells.join(F.broadcast(qc), "cell_id")
                         .groupBy("doc_id")

@@ -16,8 +16,49 @@ Config choices are scale-motivated:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema_ddl: "str | StructType"
+) -> DataFrame:
+    """The one constructor for a DataFrame the driver builds from
+    Python rows (codebooks, id lists, query terms, report frames, empty
+    frames).
+
+    ``rows`` is an iterable of positional tuples (``Row`` included) in
+    ``schema_ddl`` order; ``schema_ddl`` is a DDL string or a
+    ``StructType``. The rows become a ``pyarrow.Table`` built column by
+    column under Spark's own Arrow mapping of the schema — pyarrow
+    directly, not pandas, which would turn a nullable bigint into a
+    float — so every value, NaN, ±inf, -0.0 and null included,
+    arrives bit for bit.
+
+    The driver-frame contract: a Python-list ``createDataFrame`` plans
+    an RDD scan that starts Python workers (one job, a task per core)
+    every time a plan evaluates it. An Arrow table below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default) is planned as a ``LocalRelation``: no job at all, and the
+    optimizer sees its size and rows. Above the threshold, executors
+    decode the Arrow batches. Neither path starts a Python worker, so
+    the helper only changes who decodes rows the driver already holds.
+    """
+    struct = (
+        schema_ddl
+        if isinstance(schema_ddl, StructType)
+        else DataType.fromDDL(schema_ddl)
+    )
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def get_session(

@@ -59,6 +59,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cnc_visionsearch_spark.session import local_frame
+
 CHECKPOINT_EVERY = 10
 _LOG_DIR = "_tlog"
 _LAST_CKPT = "_last_checkpoint"
@@ -72,7 +74,6 @@ __all__ = [
     "open_layout",
     "retag",
     "read_tags",
-    "empty_frame",
     "compact_domains",
     "CHECKPOINT_EVERY",
 ]
@@ -111,15 +112,6 @@ def retag(adds: list[dict], tag: int) -> list[dict]:
     return adds
 
 
-def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
-    """An empty DataFrame of ``schema`` that costs no job: limit(0)
-    lets the optimizer replace the scan with an empty local relation.
-    Collecting a bare ``createDataFrame([], schema)`` runs a job with a
-    task per core on Python workers (about 2 s on 4 cores) — per hop,
-    for a graph search that meets an empty bucket."""
-    return spark.createDataFrame([], schema).limit(0)
-
-
 def read_tags(
     spark: SparkSession, t: "TLog", snap: "Snapshot", tags, schema=None
 ) -> "DataFrame | None":
@@ -129,7 +121,7 @@ def read_tags(
     schema is given (callers test for "no tombstones" that way)."""
     paths = snap.files_in(tags)
     if not paths:
-        return None if schema is None else empty_frame(spark, schema)
+        return None if schema is None else local_frame(spark, [], schema)
     return spark.read.parquet(*[os.path.join(t.root, p) for p in paths])
 
 
@@ -372,7 +364,7 @@ class TLog:
                     f"tlog {self.root} v{snap.version} is empty and no "
                     "schema was given"
                 )
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         full = [os.path.join(self.root, p) for p in paths]
         r = spark.read
         if schema is not None:
@@ -566,7 +558,7 @@ class TLog:
                     raise ValueError(
                         "change_feed over an empty side needs `schema`"
                     )
-                return spark.createDataFrame([], schema)
+                return local_frame(spark, [], schema)
             r = spark.read
             if schema is not None:
                 r = r.schema(schema)

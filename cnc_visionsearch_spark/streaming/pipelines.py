@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.operators.ingest import upsert_id_mapping
 from cnc_visionsearch_spark.schemas import EVENTS
+from cnc_visionsearch_spark.session import local_frame
 
 __all__ = [
     "read_event_stream",
@@ -519,7 +520,7 @@ def read_id_mapping(spark: SparkSession, state_dir: str) -> DataFrame:
     man = _read_manifest(state_dir)
     root = os.path.join(state_dir, "id_mapping")
     if not man or not man["buckets"]:
-        return spark.createDataFrame([], _EMPTY_MAPPING)
+        return local_frame(spark, [], _EMPTY_MAPPING)
     paths = [
         os.path.join(root, ver, f"bucket={b}") for b, ver in man["buckets"].items()
     ]
@@ -593,7 +594,7 @@ def streaming_upsert_sink(
         current = (
             s.read.schema(_EMPTY_MAPPING).parquet(*tpaths)
             if tpaths
-            else s.createDataFrame([], _EMPTY_MAPPING)
+            else local_frame(s, [], _EMPTY_MAPPING)
         )
         updated = upsert_id_mapping(current, dedup, known_max=man["max_faiss_id"])
         ver = f"v_{man['version'] + 1:06d}"
