@@ -5,9 +5,11 @@ and sinks stay O(batch)/O(probe); this job bounds the costs that
 accrete between runs:
 
 1. **Vacuum** (:func:`operators.ann.ivf_vacuum`,
-   :func:`operators.text_index.inverted_vacuum`): apply tombstones
-   physically — one rewrite commit over the touched cells/buckets,
-   restoring tombstone-free probe plans.
+   :func:`operators.text_index.inverted_vacuum`, both calls to the one
+   tombstone vacuum :func:`sources.tlog.vacuum_tombstones`): apply
+   tombstones physically — one rewrite commit over the touched
+   cells/buckets, restoring tombstone-free probe plans; each reports
+   whether it committed.
 2. **Compact** (:func:`sources.tlog.compact_domains` over the IVF cells
    and both PQ code tables; :func:`operators.text_index.inverted_compact`
    and :func:`operators.graph_ann.nsw_compact` when their paths are
@@ -54,7 +56,7 @@ def _compacted(spark, t, tag_pred, bucket_expr, schema=None) -> dict:
     from cnc_visionsearch_spark.sources.tlog import compact_domains
 
     before = _n_files(t, tag_pred)
-    compact_domains(spark, t, tag_pred, bucket_expr, schema)
+    compact_domains(spark, t, [(tag_pred, bucket_expr)], schema)
     return {"before": before, "after": _n_files(t, tag_pred)}
 
 
@@ -76,9 +78,7 @@ def run_index_maintenance(
     report: dict = {}
     if index_path is not None:
         t = open_layout(index_path)
-        had = bool(t.snapshot().files_in([ann.TLOG_IVF_TOMBS_TAG]))
-        ann.ivf_vacuum(spark, index_path)
-        report["vacuum_applied"] = had
+        report["vacuum_applied"] = ann.ivf_vacuum(spark, index_path)
         gap = ann.TLOG_TAG_STRIDE_GAP
         for sub, base in (
             ("cells", 0),
@@ -113,19 +113,18 @@ def run_index_maintenance(
     # retention-gated tlog vacuum
     if inverted_path is not None:
         from cnc_visionsearch_spark.operators.text_index import (
-            TLOG_TOMBS_TAG,
             inverted_compact,
             inverted_vacuum,
         )
 
         t = open_layout(inverted_path)
-        had = bool(t.snapshot().files_in([TLOG_TOMBS_TAG]))
-        inverted_vacuum(spark, inverted_path)
+        report["inverted_vacuum_applied"] = inverted_vacuum(
+            spark, inverted_path
+        )
         n_buckets = int(t.snapshot().meta["n_buckets"])
         before = _n_files(t, lambda b: b < n_buckets)
         inverted_compact(spark, inverted_path)
         t.vacuum()
-        report["inverted_vacuum_applied"] = had
         report["postings_files"] = {
             "before": before,
             "after": _n_files(t, lambda b: b < n_buckets),
@@ -174,8 +173,8 @@ def forget_vectors(
 ) -> dict:
     """Right-to-be-forgotten runbook: ONE call tombstones an id set
     across EVERY derived layout of a corpus — IVF cells (which also
-    shields both PQ code tables: their probes anti-join the same
-    tombstone set), sharded layouts, and inverted text indexes (by
+    shields the layout's PQ and RQ code tables: their live reads hide
+    the same tombstone set), sharded layouts, and inverted text indexes (by
     ``doc_ids``, defaulting to ``ids`` — the canonical layout keys
     vectors and documents by the same dense id).
 

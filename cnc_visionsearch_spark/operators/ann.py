@@ -51,9 +51,12 @@ from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.tlog import (
     TLog,
     compact_domains,
+    delete_ids,
     open_layout,
+    read_live,
     read_tags,
     retag,
+    vacuum_tombstones,
 )
 
 __all__ = [
@@ -324,16 +327,24 @@ def read_codebook(spark, path: str) -> DataFrame:
     return read_tags(spark, t, t.snapshot(), [TLOG_CODEBOOK_TAG])
 
 
+def _live(spark, t: TLog, snap, tags, schema=None) -> DataFrame:
+    """The vector layouts' live read: ``tags`` of ``snap`` minus the
+    ids tombstoned in that same snapshot (IVF, its code tables and the
+    shard layout share one tombstone tag)."""
+    id_col = snap.meta.get("id_col", "vec_id")
+    return read_live(spark, t, snap, tags, TLOG_IVF_TOMBS_TAG, id_col, schema)
+
+
 def read_cells(spark, path: str, cell_ids=None) -> DataFrame:
-    """The layout's cell table (RAW — callers apply the tombstone
-    filter via :func:`_without_tombstones`). ``cell_ids`` prunes at the
+    """The layout's live cell table: one snapshot's cell files minus
+    the rows tombstoned in that snapshot. ``cell_ids`` prunes at the
     LOG level: only those cells' files enter the scan. Cells with no
     live file (emptied by a vacuum) read as an empty frame with the
     table's columns."""
     t = open_layout(path)
     snap = t.snapshot()
     every = _family(snap, 0)
-    out = read_tags(
+    out = _live(
         spark, t, snap, sorted(cell_ids) if cell_ids is not None else every
     )
     if out is None and every:
@@ -344,9 +355,9 @@ def read_cells(spark, path: str, cell_ids=None) -> DataFrame:
 def read_pq_codes(
     spark, path: str, cell_ids=None, trained: bool = False
 ) -> DataFrame:
-    """The layout's PQ code table (RAW — callers tombstone-filter),
-    pruned at the LOG level to ``cell_ids`` via the stride-tagged live
-    files."""
+    """The layout's live PQ code table (one snapshot's code files minus
+    its tombstoned ids), pruned at the LOG level to ``cell_ids`` via the
+    stride-tagged live files."""
     stride = (
         TLOG_PQ_TRAINED_CODES_STRIDE if trained else TLOG_PQ_CODES_STRIDE
     )
@@ -356,7 +367,7 @@ def read_pq_codes(
         sorted(cell_ids) if cell_ids is not None else _family(snap, stride)
     )
     id_col = snap.meta.get("id_col", "vec_id")
-    return read_tags(
+    return _live(
         spark,
         t,
         snap,
@@ -542,14 +553,6 @@ def ivf_append(
     t.commit(adds=adds, op="append")
 
 
-def _delete_ids(spark, path: str, ids: list[int], id_col: str) -> None:
-    """Blind tombstone commit under the vector layouts' shared
-    tombstone tag (IVF and shard layouts filter identically)."""
-    t = open_layout(path)
-    df = local_frame(spark, [(int(i),) for i in ids], f"{id_col} bigint")
-    t.commit(adds=retag(t.write_data(df), TLOG_IVF_TOMBS_TAG), op="append")
-
-
 def ivf_delete(spark, path: str, ids: list[int], id_col: str = "vec_id") -> None:
     """Tombstone delete from an :func:`ivf_build` layout — the operation
     the REFERENCE CANNOT perform (HNSW has no delete: re-ingesting an
@@ -562,112 +565,39 @@ def ivf_delete(spark, path: str, ids: list[int], id_col: str = "vec_id") -> None
     :func:`ivf_vacuum` (or the next full rebuild). The codebook is NOT
     edited: it is a quantizer, not data — a deleted vector that served
     as a stride centroid keeps partitioning space perfectly well."""
-    _delete_ids(spark, path, ids, id_col)
+    delete_ids(spark, open_layout(path), TLOG_IVF_TOMBS_TAG, ids, id_col)
 
 
-def _without_tombstones(spark, path: str, cells: DataFrame, id_col: str) -> DataFrame:
-    """Anti-join the layout's tombstone set (broadcast — deletes are
-    batch-scale, never corpus-scale; a corpus-scale tombstone set means
-    it is time to vacuum). No-op when the layout has no tombstones, so
-    delete-free layouts keep their exact plan shape."""
-    t = open_layout(path)
-    tf = read_tags(spark, t, t.snapshot(), [TLOG_IVF_TOMBS_TAG])
-    if tf is None:
-        return cells
-    return cells.join(
-        F.broadcast(tf.select(id_col).distinct()), id_col, "left_anti"
+def _stride_family(stride: int, part_col: str):
+    """The (tag predicate, tag column) of a stride-tagged code table."""
+    return (
+        lambda b: stride <= b < stride + TLOG_TAG_STRIDE_GAP,
+        (F.lit(stride) + F.col(part_col)).cast("int"),
     )
 
 
-def ivf_vacuum(spark, path: str, id_col: str = "vec_id") -> None:
-    """Apply accumulated tombstones physically as ONE rewrite commit:
+def ivf_vacuum(spark, path: str, id_col: str = "vec_id") -> bool:
+    """Apply accumulated tombstones physically as ONE rewrite commit
+    (:func:`~cnc_visionsearch_spark.sources.tlog.vacuum_tombstones`):
     the cells holding deleted rows are rewritten without them and the
-    tombstone files are dropped; untouched cells keep their files, and
-    results are unchanged by construction (the probe anti-join already
-    hid the rows). The commit declares the touched cell domains + the
-    tombstone tag: a racing append into OTHER cells serializes cleanly
-    (disjoint domains), a racing append into a touched cell or a racing
-    delete conflicts and the vacuum recomputes (``run_transaction``).
-
-    The code tables (stride PQ, trained PQ — partitioned by cell_id —
+    tombstone files are dropped; untouched cells keep their files. The
+    code tables (stride PQ and trained PQ — partitioned by cell_id —
     and RQ, partitioned by its own coarse cell ``c1``) ride the SAME
-    commit: their touched code files are rewritten too, so dropping the
-    tombstones can never resurrect a deleted id on any probe path.
-    """
-    t = open_layout(path)
-    snap = t.snapshot()
-    tomb_files = snap.files_in([TLOG_IVF_TOMBS_TAG])
-    if not tomb_files:
-        return
-    tombs = (
-        read_tags(spark, t, snap, [TLOG_IVF_TOMBS_TAG])
-        .select(id_col)
-        .distinct()
-    )
-    cell_ids = _family(snap, 0)  # none on an RQ-only layout
-    touched = (
-        sorted(
-            r[0]
-            for r in read_tags(spark, t, snap, cell_ids)
-            .join(F.broadcast(tombs), id_col)
-            .select("cell_id")
-            .distinct()
-            .collect()
-        )  # bounded: <= n_cells
-        if cell_ids
-        else []
-    )
-    adds = []
-    removes = set(snap.files_in(touched) if touched else [])
-    if touched:
-        kept = read_tags(spark, t, snap, touched).join(
-            F.broadcast(tombs), id_col, "left_anti"
-        )
-        adds += t.write_data(kept, bucket_expr=F.col("cell_id"))
-    domains = list(touched)
-    # code tables ride the same commit: the cell-partitioned ones share
-    # the touched cell set (same axis); the RQ table's c1 axis is
-    # resolved by joining its codes against the tombstones
-    for stride, part_col in (
-        (TLOG_PQ_CODES_STRIDE, "cell_id"),
-        (TLOG_PQ_TRAINED_CODES_STRIDE, "cell_id"),
-        (TLOG_RQ_CODES_STRIDE, "c1"),
-    ):
-        fam = _family(snap, stride)
-        if not fam:
-            continue
-        if part_col == "cell_id":
-            fam_touched = [c for c in touched if c in set(fam)]
-        else:
-            allc = read_tags(spark, t, snap, [stride + c for c in fam])
-            fam_touched = sorted(
-                r[0]
-                for r in allc.join(F.broadcast(tombs), id_col)
-                .select(part_col)
-                .distinct()
-                .collect()
-            )  # bounded: <= k1 coarse cells
-        if not fam_touched:
-            continue
-        fam_tags = [stride + c for c in fam_touched]
-        kept_codes = read_tags(spark, t, snap, fam_tags).join(
-            F.broadcast(tombs), id_col, "left_anti"
-        )
-        adds += t.write_data(
-            kept_codes,
-            bucket_expr=(F.lit(stride) + F.col(part_col)).cast("int"),
-        )
-        removes |= set(snap.files_in(fam_tags))
-        domains += fam_tags
-    removes = sorted(removes | set(tomb_files))
-    # cell radii stay valid: they are UPPER bounds and deletes can only
-    # shrink true radii — a rebuild re-tightens them
-    t.commit(
-        adds=adds,
-        removes=removes,
-        read_version=snap.version,
-        op="rewrite",
-        domains=domains + [TLOG_IVF_TOMBS_TAG],
+    commit, so dropping the tombstones can never resurrect a deleted id
+    on any probe path. Cell radii stay valid: they are UPPER bounds and
+    deletes can only shrink true radii — a rebuild re-tightens them.
+    Returns whether it committed."""
+    return vacuum_tombstones(
+        spark,
+        open_layout(path),
+        TLOG_IVF_TOMBS_TAG,
+        id_col,
+        [
+            (lambda b: b < TLOG_TAG_STRIDE_GAP, F.col("cell_id")),
+            _stride_family(TLOG_PQ_CODES_STRIDE, "cell_id"),
+            _stride_family(TLOG_PQ_TRAINED_CODES_STRIDE, "cell_id"),
+            _stride_family(TLOG_RQ_CODES_STRIDE, "c1"),
+        ],
     )
 
 
@@ -682,52 +612,20 @@ def shard_delete(
     over surviving rows and the exact-merge guarantee holds). Physical
     removal: :func:`shard_vacuum`.
     """
-    _delete_ids(spark, path, ids, id_col)
+    delete_ids(spark, open_layout(path), TLOG_IVF_TOMBS_TAG, ids, id_col)
 
 
-def shard_vacuum(spark, path: str, id_col: str = "vec_id") -> None:
+def shard_vacuum(spark, path: str, id_col: str = "vec_id") -> bool:
     """Apply a shard layout's tombstones physically as ONE rewrite
     commit declaring the touched shard domains plus the tombstone
-    domain — shard membership is id mod num_shards, so the touched set
-    comes from the tombstone ids ALONE (no data scan needed to resolve
-    it)."""
-    t = open_layout(path)
-    snap = t.snapshot()
-    tomb_files = snap.files_in([TLOG_IVF_TOMBS_TAG])
-    if not tomb_files:
-        return
-    tombs = (
-        read_tags(spark, t, snap, [TLOG_IVF_TOMBS_TAG])
-        .select(id_col)
-        .distinct()
-    )
-    num_shards = int(snap.meta["num_shards"])
-    # bounded collect: tombstones are batch-scale by contract
-    # (_without_tombstones broadcasts the same set). Python % with a
-    # positive modulus == the layout's pmod shard assignment, so
-    # negative ids resolve to the same domain their rows live in.
-    # Domains with no live files (already emptied by an earlier vacuum,
-    # or a tombstone for a never-present id) have nothing to rewrite —
-    # their tombstone rows just retire with the rest.
-    touched = [
-        s
-        for s in sorted({int(r[0]) % num_shards for r in tombs.collect()})
-        if snap.files_in([s])
-    ]
-    adds = []
-    if touched:
-        live = read_tags(spark, t, snap, touched)
-        kept = live.join(F.broadcast(tombs), id_col, "left_anti")
-        adds = t.write_data(kept, bucket_expr=F.col("shard"))
-    removes = sorted(
-        set(snap.files_in(touched) if touched else []) | set(tomb_files)
-    )
-    t.commit(
-        adds=adds,
-        removes=removes,
-        read_version=snap.version,
-        op="rewrite",
-        domains=list(touched) + [TLOG_IVF_TOMBS_TAG],
+    domain (:func:`~cnc_visionsearch_spark.sources.tlog.vacuum_tombstones`).
+    Returns whether it committed."""
+    return vacuum_tombstones(
+        spark,
+        open_layout(path),
+        TLOG_IVF_TOMBS_TAG,
+        id_col,
+        [(lambda b: b < TLOG_TAG_STRIDE_GAP, F.col("shard"))],
     )
 
 
@@ -737,9 +635,11 @@ def shard_compact(spark, path: str) -> None:
     the append-accretion bound (St5) for the shard tier, mirroring
     nsw_compact/inverted_compact. Probe results are unchanged by
     construction (same rows, fewer files)."""
-    t = open_layout(path)
-    num_shards = int(t.snapshot().meta["num_shards"])
-    compact_domains(spark, t, lambda b: b < num_shards, F.col("shard"))
+    compact_domains(
+        spark,
+        open_layout(path),
+        [(lambda b: b < TLOG_TAG_STRIDE_GAP, F.col("shard"))],
+    )
 
 
 def ivf_probe(
@@ -765,7 +665,6 @@ def ivf_probe(
     cells = read_cells(spark, path, probed).filter(
         F.col("cell_id").isin(probed)
     )
-    cells = _without_tombstones(spark, path, cells, id_col)
     return (
         cells.select(F.col(id_col), l2_sq(F.col(vec_col), qcol).alias("distance"))
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())
@@ -840,9 +739,9 @@ def ivf_probe_cells(
 
 
 def read_shards(spark, path: str, shard_ids=None) -> DataFrame:
-    """The layout's shard table (RAW — callers apply
-    :func:`_without_tombstones`), pruned at the LOG level via
-    ``shard_ids`` -> live-file tags."""
+    """The layout's live shard table (one snapshot's shard files minus
+    its tombstoned ids), pruned at the LOG level via ``shard_ids`` ->
+    live-file tags."""
     t = open_layout(path)
     snap = t.snapshot()
     tags = (
@@ -850,7 +749,7 @@ def read_shards(spark, path: str, shard_ids=None) -> DataFrame:
         if shard_ids is not None
         else list(range(int(snap.meta["num_shards"])))
     )
-    out = read_tags(spark, t, snap, tags)
+    out = _live(spark, t, snap, tags)
     if out is None:  # a probe against an emptied layout
         geo = read_geometry(path)
         return local_frame(
@@ -973,13 +872,14 @@ def sharded_topk_persisted(
             if len(pdf):
                 yield search(pdf)
 
-    shards = read_shards(spark, path).select(id_col, vec_col)
-    # tombstones filter BEFORE the local search: per-shard top-k is then
-    # computed over surviving rows, preserving the exact-merge guarantee
-    # (filtering after would starve the candidate set)
-    shards = _without_tombstones(spark, path, shards, id_col)
-    cand_ids = shards.mapInPandas(per_partition, schema=f"{id_col} bigint")
+    # the live read filters tombstones BEFORE the local search: per-shard
+    # top-k is then computed over surviving rows, preserving the
+    # exact-merge guarantee (filtering after would starve the candidate
+    # set)
     emb = read_shards(spark, path)
+    cand_ids = emb.select(id_col, vec_col).mapInPandas(
+        per_partition, schema=f"{id_col} bigint"
+    )
     qcol = vec_lit(query_vec)
     # candidate side is bounded by construction (<= k rows per Arrow
     # batch), but it hides behind a mapInPandas so Catalyst has no size
@@ -1630,7 +1530,6 @@ def ivf_range_search(
     cells = read_cells(spark, path, keep).filter(
         F.col("cell_id").isin(keep)
     )
-    cells = _without_tombstones(spark, path, cells, id_col)
     return cells.select(
         F.col(id_col), l2_sq(F.col(vec_col), qcol).alias("distance")
     ).filter(F.col("distance") <= r2)
@@ -1685,11 +1584,8 @@ def ivf_knn_join_probe(
         .select(qid_col, qvec_col, "cell_id")
     )
     probed = [r.cell_id for r in ranked.select("cell_id").distinct().collect()]
-    cells = _without_tombstones(
-        spark,
-        path,
-        read_cells(spark, path, probed).filter(F.col("cell_id").isin(probed)),
-        id_col,
+    cells = read_cells(spark, path, probed).filter(
+        F.col("cell_id").isin(probed)
     )
     probe_side = F.broadcast(ranked) if broadcast_probes else ranked
     cand = probe_side.join(cells, "cell_id")
@@ -1756,9 +1652,7 @@ def ivf_rebalance(
             "which a split would leave stale; rebuild the layout instead"
         )
     cell_ids = _family(snap, 0)
-    live = _without_tombstones(
-        spark, path, read_tags(spark, t, snap, cell_ids), id_col
-    )
+    live = read_live(spark, t, snap, cell_ids, TLOG_IVF_TOMBS_TAG, id_col)
     census = {
         int(r["cell_id"]): int(r["n"])
         for r in live.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -1911,12 +1805,8 @@ def ivf_exact_pruned_search(
             F.col("d").asc(), F.col(id_col).asc()
         )
         rows = (
-            _without_tombstones(
-                spark,
-                path,
-                read_cells(spark, path, take).filter(F.col("cell_id").isin(take)),
-                id_col,
-            )
+            read_cells(spark, path, take)
+            .filter(F.col("cell_id").isin(take))
             .select("cell_id", id_col, l2_sq(vec_col, qcol).alias("d"))
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k)  # per-cell top-k, one job

@@ -153,12 +153,11 @@ def read_minhash_store(spark, path: str) -> DataFrame:
     """The sanctioned reader for a persisted banded-MinHash store: the
     live snapshot's band-tagged files (a bare parquet read of the
     directory would also pick up files a compaction removed)."""
-    from cnc_visionsearch_spark.sources.tlog import open_layout
+    from cnc_visionsearch_spark.sources.tlog import open_layout, read_tags
 
-    snap = open_layout(path).snapshot()
-    bands = int(snap.meta["bands"])
-    paths = snap.files_in(list(range(bands)))
-    return spark.read.parquet(*[os.path.join(path, p) for p in paths])
+    t = open_layout(path)
+    snap = t.snapshot()
+    return read_tags(spark, t, snap, range(int(snap.meta["bands"])))
 
 
 def minhash_store_init(
@@ -227,24 +226,23 @@ def minhash_store_compact(spark, path: str) -> None:
     invariant (candidates are DISTINCT pairs) but the probe's band
     join reads fewer, deduplicated rows. A rewrite commit declaring
     every band domain: racing appends win, the compaction retries
-    (wrap in run_transaction)."""
-    from cnc_visionsearch_spark.sources.tlog import TLog
+    (wrap in run_transaction). A path holding no store raises
+    ``ValueError`` and creates nothing."""
+    from cnc_visionsearch_spark.sources.tlog import open_layout, read_tags
 
-    t = TLog(path)
+    t = open_layout(path)
     snap = t.snapshot()
-    bands = int(snap.meta["bands"])
-    files = snap.files_in(list(range(bands)))
-    kept = (
-        spark.read.parquet(*[os.path.join(path, p) for p in files])
-        .dropDuplicates(["doc_id", "band_id", "band_sig"])
+    bands = list(range(int(snap.meta["bands"])))
+    kept = read_tags(spark, t, snap, bands).dropDuplicates(
+        ["doc_id", "band_id", "band_sig"]
     )
     adds = t.write_data(kept, bucket_expr=F.col("band_id"))
     t.commit(
         adds=adds,
-        removes=files,
+        removes=snap.files_in(bands),
         read_version=snap.version,
         op="rewrite",
-        domains=list(range(bands)),
+        domains=bands,
     )
 
 

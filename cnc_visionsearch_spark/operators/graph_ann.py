@@ -174,7 +174,8 @@ def nsw_compact(spark, path: str) -> None:
     t = open_layout(path)
     n_buckets = int(_meta(path)["n_buckets"])
     compact_domains(
-        spark, t, lambda b: b < n_buckets, F.col("src_bucket"), _GRAPH_SCHEMA
+        spark, t, [(lambda b: b < n_buckets, F.col("src_bucket"))],
+        _GRAPH_SCHEMA,
     )
 
 
@@ -244,7 +245,7 @@ def hnsw_compact(spark, path: str) -> None:
     """:func:`nsw_compact` for the layered layout — one rewrite commit
     over every (layer, bucket) domain holding more than one live file."""
     compact_domains(
-        spark, open_layout(path), lambda b: True, _hnsw_tag_expr(),
+        spark, open_layout(path), [(lambda b: True, _hnsw_tag_expr())],
         _HGRAPH_SCHEMA,
     )
 

@@ -42,9 +42,12 @@ from cnc_visionsearch_spark.memo import LRU
 from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.tlog import (
     TLog,
+    delete_ids,
     open_layout,
+    read_live,
     read_tags,
     retag,
+    vacuum_tombstones,
 )
 
 __all__ = [
@@ -184,7 +187,7 @@ TLOG_TIVF_TOMBS_TAG = 200_002
 
 def read_doc_cells(spark: SparkSession, path: str, cells=None) -> DataFrame:
     """The sanctioned reader for the layout's (cell_id, doc_id) table —
-    applies the tombstone filter (deleted docs vanish from candidates
+    the live read of one snapshot (deleted docs vanish from candidates
     immediately; the ANN tiers' read-through-the-filter doctrine).
     ``cells`` prunes at the LOG level: only those cells' files enter
     the scan."""
@@ -195,13 +198,7 @@ def read_doc_cells(spark: SparkSession, path: str, cells=None) -> DataFrame:
         if cells is not None
         else list(range(int(snap.meta["n_cells"])))
     )
-    dc = read_tags(spark, t, snap, tags)
-    tf = read_tags(spark, t, snap, [TLOG_TIVF_TOMBS_TAG])
-    if tf is not None:
-        dc = dc.join(
-            F.broadcast(tf.select("doc_id").distinct()), "doc_id", "left_anti"
-        )
-    return dc
+    return read_live(spark, t, snap, tags, TLOG_TIVF_TOMBS_TAG, "doc_id")
 
 
 def read_token_cells(spark: SparkSession, path: str) -> DataFrame:
@@ -213,54 +210,28 @@ def read_token_cells(spark: SparkSession, path: str) -> DataFrame:
 def token_ivf_delete(spark: SparkSession, path: str, doc_ids: list[int]) -> None:
     """Tombstone delete from a token-IVF layout — St6 parity for the
     maxsim tier (ivf_delete / inverted_delete twin): O(batch) tombstone
-    append; every candidate read goes through :func:`read_doc_cells`'s
-    anti-join so deleted docs vanish from maxsim candidates
+    append; every candidate read goes through :func:`read_doc_cells`'
+    live read so deleted docs vanish from maxsim candidates
     immediately; resident files stay byte-identical; physical removal
     rides :func:`token_ivf_vacuum`."""
-    t = open_layout(path)
-    df = local_frame(spark, [(int(i),) for i in doc_ids], "doc_id bigint")
-    t.commit(adds=retag(t.write_data(df), TLOG_TIVF_TOMBS_TAG), op="append")
+    delete_ids(spark, open_layout(path), TLOG_TIVF_TOMBS_TAG, doc_ids, "doc_id")
 
 
-def token_ivf_vacuum(spark: SparkSession, path: str) -> None:
+def token_ivf_vacuum(spark: SparkSession, path: str) -> bool:
     """Apply accumulated tombstones physically: rewrite ONLY the
     doc_cells cells holding deleted docs, then retire the tombstone set,
     as ONE rewrite commit declaring the touched cell domains + the
-    tombstone tag — racing appends into other cells serialize,
-    overlapping ones conflict and the vacuum recomputes
-    (run_transaction)."""
-    t = open_layout(path)
-    snap = t.snapshot()
-    tomb_files = snap.files_in([TLOG_TIVF_TOMBS_TAG])
-    if not tomb_files:
-        return
-    tombs = (
-        read_tags(spark, t, snap, [TLOG_TIVF_TOMBS_TAG])
-        .select("doc_id")
-        .distinct()
-    )
-    n_cells = int(snap.meta["n_cells"])
-    dc = read_tags(spark, t, snap, list(range(n_cells)))
-    touched = sorted(
-        r[0]
-        for r in dc.join(F.broadcast(tombs), "doc_id")
-        .select("cell_id")
-        .distinct()
-        .collect()
-    )  # bounded: <= n_cells
-    adds = []
-    if touched:
-        kept = read_tags(spark, t, snap, touched).join(
-            F.broadcast(tombs), "doc_id", "left_anti"
-        )
-        adds = t.write_data(kept, bucket_expr=F.col("cell_id"))
-    removes = (snap.files_in(touched) if touched else []) + tomb_files
-    t.commit(
-        adds=adds,
-        removes=sorted(set(removes)),
-        read_version=snap.version,
-        op="rewrite",
-        domains=list(touched) + [TLOG_TIVF_TOMBS_TAG],
+    tombstone tag
+    (:func:`~cnc_visionsearch_spark.sources.tlog.vacuum_tombstones`) —
+    racing appends into other cells serialize, overlapping ones
+    conflict and the vacuum recomputes (run_transaction). Returns
+    whether it committed."""
+    return vacuum_tombstones(
+        spark,
+        open_layout(path),
+        TLOG_TIVF_TOMBS_TAG,
+        "doc_id",
+        [(lambda b: b < TLOG_TIVF_CENTROIDS_TAG, F.col("cell_id"))],
     )
 
 

@@ -39,6 +39,7 @@ from cnc_visionsearch_spark.operators.ann import (
     TLOG_RQ_MODEL_L1_TAG,
     TLOG_RQ_MODEL_L2_TAG,
     _family,
+    _live,
 )
 from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.tlog import TLog, open_layout, read_tags, retag
@@ -145,14 +146,16 @@ def read_rq_codebooks(spark, path: str) -> "tuple[DataFrame, DataFrame]":
 
 
 def read_rq_codes(spark, path: str, c1s=None) -> DataFrame:
-    """The (id, c1, c2) code table; ``c1s`` prunes at the LOG level
-    (only those coarse cells' files enter the scan)."""
+    """The live (id, c1, c2) code table: one snapshot's code files minus
+    the ids tombstoned in that snapshot (the layout's shared tombstone
+    set — ivf_delete hides a vector from this tier too). ``c1s`` prunes
+    at the LOG level (only those coarse cells' files enter the scan)."""
     t = open_layout(path)
     snap = t.snapshot()
     if c1s is None:
         c1s = _family(snap, TLOG_RQ_CODES_STRIDE)
     id_col = snap.meta.get("id_col", "vec_id")
-    return read_tags(
+    return _live(
         spark,
         t,
         snap,
@@ -226,10 +229,8 @@ def rq_probe_topk(
     result), keep the best ``depth``, and fp64-rescore those from the
     canonical embeddings table. Probe cells are planner state: a
     <= nprobe driver-side collect, like every IVF probe here. Codes
-    read through the layout's shared tombstone filter, so deletes via
+    come from :func:`read_rq_codes`' live read, so deletes via
     ivf_delete disappear from this tier immediately too."""
-    from cnc_visionsearch_spark.operators.ann import _without_tombstones
-
     qcol = vec_lit(qvec)
     cb1, cb2 = read_rq_codebooks(spark, path)
     probe_cells = [
@@ -239,13 +240,8 @@ def rq_probe_topk(
         .limit(nprobe)
         .collect()  # bounded: <= nprobe rows by construction
     ]
-    codes = _without_tombstones(
-        spark,
-        path,
-        read_rq_codes(spark, path, probe_cells).filter(
-            F.col("c1").isin(probe_cells)
-        ),
-        id_col,
+    codes = read_rq_codes(spark, path, probe_cells).filter(
+        F.col("c1").isin(probe_cells)
     )
     recon = F.zip_with("cv1", "cv2", lambda a, b: a + b)
     cand = (

@@ -36,7 +36,10 @@ tombstones), so:
   sees a torn mix of pre- and post-vacuum files.
 
 Every probe reads through :func:`read_postings`/:func:`read_doclens`
-(the ONLY sanctioned readers), which resolve the snapshot's live files.
+(the ONLY sanctioned readers), which resolve the snapshot's live files
+minus the documents tombstoned in that same snapshot; the ranked probes
+take postings and doclens from ONE snapshot, so N and avgdl always
+describe the postings they score.
 """
 
 from __future__ import annotations
@@ -50,9 +53,12 @@ from cnc_visionsearch_spark.operators.dedup import _MERSENNE31, _base_hash
 from cnc_visionsearch_spark.session import local_frame
 from cnc_visionsearch_spark.sources.tlog import (
     TLog,
+    compact_domains,
+    delete_ids,
     open_layout,
-    read_tags,
+    read_live,
     retag,
+    vacuum_tombstones,
 )
 
 __all__ = [
@@ -190,57 +196,55 @@ def inverted_delete(spark, path: str, doc_ids: list[int]) -> None:
     reference structurally lacks, main.py:119-126): append the doc ids
     to the layout's tombstone set; EVERY probe reads postings and
     doclens through :func:`read_postings` / :func:`read_doclens`,
-    which anti-join the broadcast-small tombstone set — deleted
+    whose live read hides the tombstoned documents — deleted
     documents disappear from hits, tf/df, and the N/avgdl norms
     immediately, resident postings files stay byte-identical.
-    O(batch); physical removal rides :func:`inverted_vacuum`. The
-    tombstone file commits as a blind append under the reserved
-    tombstone domain tag."""
+    O(batch); physical removal rides :func:`inverted_vacuum`."""
+    delete_ids(spark, open_layout(path), TLOG_TOMBS_TAG, doc_ids, "doc_id")
+
+
+def _postings_tags(snap, buckets) -> list[int]:
+    return (
+        sorted(buckets)
+        if buckets is not None
+        else list(range(int(snap.meta["n_buckets"])))
+    )
+
+
+def _postings_and_doclens(spark, path: str, buckets=None):
+    """(postings, doclens), both live reads of ONE snapshot — what the
+    ranked probes score with, so df, N and avgdl describe one version."""
     t = open_layout(path)
-    df = local_frame(spark, [(int(i),) for i in doc_ids], "doc_id bigint")
-    t.commit(adds=retag(t.write_data(df), TLOG_TOMBS_TAG), op="append")
-
-
-def _without_deleted(spark, t, snap, df: DataFrame) -> DataFrame:
-    """Anti-join the snapshot's tombstones (broadcast — deletes are
-    batch-scale; they come from the reserved tag of the SAME snapshot,
-    so the filter sees exactly the version the caller planned against).
-    No-op when the layout has none, so delete-free layouts keep their
-    exact plan shape."""
-    tf = read_tags(spark, t, snap, [TLOG_TOMBS_TAG])
-    if tf is None:
-        return df
-    return df.join(
-        F.broadcast(tf.select("doc_id").distinct()), "doc_id", "left_anti"
+    snap = t.snapshot()
+    return tuple(
+        read_live(spark, t, snap, tags, TLOG_TOMBS_TAG, "doc_id")
+        for tags in (_postings_tags(snap, buckets), [TLOG_DOCLENS_TAG])
     )
 
 
 def read_postings(spark, path: str, buckets=None) -> DataFrame:
-    """The ONLY sanctioned way to read the postings — applies the
-    tombstone filter so no probe path can resurrect deleted documents
-    (the ANN tiers' read-through-the-filter doctrine). Reads one
-    SNAPSHOT (postings files = tags below the reserved range).
+    """The ONLY sanctioned way to read the postings: the live read of
+    one SNAPSHOT (postings files = tags below the reserved range, minus
+    the documents tombstoned in that snapshot), so no probe path can
+    resurrect a deleted document.
 
     ``buckets`` (optional, a probe's term-bucket list) prunes at the
     LOG level — only those buckets' files enter the scan, no directory
     listing, no footer reads for pruned buckets."""
     t = open_layout(path)
     snap = t.snapshot()
-    tags = (
-        sorted(buckets)
-        if buckets is not None
-        else list(range(int(snap.meta["n_buckets"])))
+    return read_live(
+        spark, t, snap, _postings_tags(snap, buckets), TLOG_TOMBS_TAG, "doc_id"
     )
-    return _without_deleted(spark, t, snap, read_tags(spark, t, snap, tags))
 
 
 def read_doclens(spark, path: str) -> DataFrame:
-    """Tombstone-aware reader for the doclens norms table: deleted
-    documents leave N and avgdl as if they were never indexed."""
+    """Live reader for the doclens norms table: deleted documents leave
+    N and avgdl as if they were never indexed."""
     t = open_layout(path)
-    snap = t.snapshot()
-    dl = read_tags(spark, t, snap, [TLOG_DOCLENS_TAG])
-    return _without_deleted(spark, t, snap, dl)
+    return read_live(
+        spark, t, t.snapshot(), [TLOG_DOCLENS_TAG], TLOG_TOMBS_TAG, "doc_id"
+    )
 
 
 def phrase_probe(
@@ -366,16 +370,16 @@ def bm25_probe(
     from cnc_visionsearch_spark.functions.vector import fixed_point_q
 
     buckets = sorted({term_bucket(t, n_buckets) for t in terms})
+    posts, dl = _postings_and_doclens(spark, path, buckets)
     posts = (
-        read_postings(spark, path, buckets=buckets)
-        .filter(F.col("bucket").isin(buckets))
+        posts.filter(F.col("bucket").isin(buckets))
         .filter(F.col("term").isin(terms))
         .select("term", "doc_id", F.col("tf").cast("double").alias("tf"))
     )
     dfreq = posts.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")
     )
-    dl = read_doclens(spark, path).select(
+    dl = dl.select(
         "doc_id", F.col("dl").cast("double").alias("dl")
     )
     stats = dl.agg(
@@ -434,16 +438,16 @@ def bm25_multi_probe(
 
     all_terms = sorted({t for _, ts in queries for t in ts})
     buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
+    posts, dl = _postings_and_doclens(spark, path, buckets)
     posts = (
-        read_postings(spark, path, buckets=buckets)
-        .filter(F.col("bucket").isin(buckets))
+        posts.filter(F.col("bucket").isin(buckets))
         .filter(F.col("term").isin(all_terms))
         .select("term", "doc_id", F.col("tf").cast("double").alias("tf"))
     )
     dfreq = posts.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")
     )
-    dl = read_doclens(spark, path).select(
+    dl = dl.select(
         "doc_id", F.col("dl").cast("double").alias("dl")
     )
     stats = dl.agg(
@@ -485,63 +489,35 @@ def bm25_multi_probe(
     )
 
 
-def inverted_vacuum(spark, path: str) -> None:
+def _row_families():
+    """The layout's two row families: postings (tagged by their
+    ``bucket`` column, every tag below the reserved range) and the
+    single-tag doclens table."""
+    return [
+        (lambda b: b < TLOG_DOCLENS_TAG, F.col("bucket")),
+        (lambda b: b == TLOG_DOCLENS_TAG, None),
+    ]
+
+
+def inverted_vacuum(spark, path: str) -> bool:
     """Apply accumulated tombstones physically — the text-index twin
-    of ann.ivf_vacuum — as ONE rewrite commit that (a) rewrites only
-    the postings buckets holding tombstoned docs (a document's terms
-    spread across buckets, so the touched set is wider than the vector
-    tiers' — the cost a vacuum SCHEDULE amortizes), (b) rewrites the
-    doclens norms table, (c) drops every tombstone file. Results are
-    unchanged by construction (the read_postings/read_doclens anti-join
-    already hid the rows); tombstone-free probe plans are restored, and
+    of ann.ivf_vacuum — as ONE rewrite commit
+    (:func:`~cnc_visionsearch_spark.sources.tlog.vacuum_tombstones`)
+    that rewrites only the postings buckets holding tombstoned docs (a
+    document's terms spread across buckets, so the touched set is wider
+    than the vector tiers' — the cost a vacuum SCHEDULE amortizes) and
+    the doclens norms table, and drops every tombstone file. Results
+    are unchanged by construction (the live read already hid the rows);
     untouched buckets keep their files.
 
-    Conflict domains = the touched buckets + the doclens and tombstone
-    tags: a racing append/delete raises :class:`TLogConflictError`
-    (wrap in ``run_transaction`` to retry against the new snapshot) —
-    every append extends doclens, whose rewrite this vacuum owns, so
-    the loser is always the vacuum, never the append. Readers see
-    either the whole vacuum or none of it: data files are immutable
-    and the commit is the atom."""
-    t = open_layout(path)
-    snap = t.snapshot()
-    tomb_files = snap.files_in([TLOG_TOMBS_TAG])
-    if not tomb_files:
-        return
-    n_buckets = int(snap.meta["n_buckets"])
-    tombs = read_tags(spark, t, snap, [TLOG_TOMBS_TAG]).select(
-        "doc_id"
-    ).distinct()
-    posts = read_tags(spark, t, snap, list(range(n_buckets)))
-    touched = sorted(
-        r[0]
-        for r in posts.join(F.broadcast(tombs), "doc_id")
-        .select("bucket")
-        .distinct()
-        .collect()
-    )  # bounded: <= n_buckets
-    adds = []
-    if touched:
-        kept = read_tags(spark, t, snap, touched).join(
-            F.broadcast(tombs), "doc_id", "left_anti"
-        )
-        adds += t.write_data(kept, bucket_expr=F.col("bucket"))
-    dl = read_tags(spark, t, snap, [TLOG_DOCLENS_TAG])
-    kept_dl = dl.join(F.broadcast(tombs), "doc_id", "left_anti")
-    adds += retag(t.write_data(kept_dl), TLOG_DOCLENS_TAG)
-    removes = (
-        snap.files_in(touched if touched else [])
-        + snap.files_in([TLOG_DOCLENS_TAG])
-        + tomb_files
-    )
-    # files_in() includes untagged files in every answer; this layout
-    # never writes untagged files, so the union above is exact
-    t.commit(
-        adds=adds,
-        removes=sorted(set(removes)),
-        read_version=snap.version,
-        op="rewrite",
-        domains=list(touched) + [TLOG_DOCLENS_TAG, TLOG_TOMBS_TAG],
+    A racing append into a touched bucket or the doclens table, or a
+    racing delete, raises :class:`TLogConflictError` (wrap in
+    ``run_transaction`` to retry against the new snapshot) — every
+    append extends doclens, whose rewrite this vacuum owns, so the
+    loser is always the vacuum, never the append. Returns whether it
+    committed."""
+    return vacuum_tombstones(
+        spark, open_layout(path), TLOG_TOMBS_TAG, "doc_id", _row_families()
     )
 
 
@@ -550,36 +526,7 @@ def inverted_compact(spark, path: str) -> None:
     holds more than one file into one file, plus the doclens table, as
     ONE rewrite commit (a racing append conflicts the compaction, never
     the reverse). No-op on a single-file-per-bucket layout."""
-    t = open_layout(path)
-    snap = t.snapshot()
-    n_buckets = int(snap.meta["n_buckets"])
-    by_tag: dict[int, list[str]] = {}
-    for p, b in snap.files:
-        by_tag.setdefault(b, []).append(p)
-    multi = sorted(
-        b for b, ps in by_tag.items() if b < n_buckets and len(ps) > 1
-    )
-    dl_multi = len(by_tag.get(TLOG_DOCLENS_TAG, [])) > 1
-    if not multi and not dl_multi:
-        return
-    adds, removes = [], []
-    if multi:
-        # write_data's repartition("_tb") already lands each bucket's
-        # rows in one task -> one file per bucket
-        kept = read_tags(spark, t, snap, multi)
-        adds += t.write_data(kept, bucket_expr=F.col("bucket"))
-        removes += snap.files_in(multi)
-    if dl_multi:
-        dl = read_tags(spark, t, snap, [TLOG_DOCLENS_TAG]).coalesce(1)
-        adds += retag(t.write_data(dl), TLOG_DOCLENS_TAG)
-        removes += snap.files_in([TLOG_DOCLENS_TAG])
-    t.commit(
-        adds=adds,
-        removes=sorted(set(removes)),
-        read_version=snap.version,
-        op="rewrite",
-        domains=list(multi) + ([TLOG_DOCLENS_TAG] if dl_multi else []),
-    )
+    compact_domains(spark, open_layout(path), _row_families())
 
 
 def maxscore_pruned_topk(
@@ -628,16 +575,16 @@ def maxscore_pruned_topk(
     from cnc_visionsearch_spark.functions.vector import fixed_point_q
 
     buckets = sorted({term_bucket(t, n_buckets) for t in terms})
+    posts, dl = _postings_and_doclens(spark, path, buckets)
     posts = (
-        read_postings(spark, path, buckets=buckets)
-        .filter(F.col("bucket").isin(buckets))
+        posts.filter(F.col("bucket").isin(buckets))
         .filter(F.col("term").isin(terms))
         .select("term", "doc_id", F.col("tf").cast("double").alias("tf"))
     )
     dfreq = posts.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")
     )
-    dl = read_doclens(spark, path).select(
+    dl = dl.select(
         "doc_id", F.col("dl").cast("double").alias("dl")
     )
     stats = dl.agg(

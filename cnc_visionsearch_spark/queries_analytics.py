@@ -2861,7 +2861,6 @@ ORDER BY layout
 )
 def forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.ann import (
-        _without_tombstones,
         ivf_probe,
         sharded_topk_persisted,
     )
@@ -2876,9 +2875,7 @@ def forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _norm_query_vec(spark, sf_dir, 21)
     rows = []
     # IVF: live census + full-coverage probe (top-1 past the self-match)
-    ivf_live = _without_tombstones(
-        spark, p_ivf, read_cells(spark, p_ivf), "vec_id"
-    ).count()
+    ivf_live = read_cells(spark, p_ivf).count()
     r = (
         ivf_probe(spark, p_ivf, q, k=2, nprobe=100)
         .filter(F.col("vec_id") != 21)
@@ -2887,9 +2884,7 @@ def forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows.append(("ivf", int(ivf_live), int(r["vec_id"]), float(r["distance"])))
     # sharded: same audit through the persisted-shard probe
-    sh_live = _without_tombstones(
-        spark, p_sh, read_shards(spark, p_sh), "vec_id"
-    ).count()
+    sh_live = read_shards(spark, p_sh).count()
     r = (
         sharded_topk_persisted(spark, p_sh, q, k=2)
         .filter(F.col("vec_id") != 21)

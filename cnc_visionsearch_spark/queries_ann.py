@@ -478,17 +478,12 @@ LIMIT 10
 def ann_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.ann import ivf_probe_cells
 
-    from cnc_visionsearch_spark.operators.ann import _without_tombstones
-
     path = ensure_ivf_built(spark, sf_dir, n_cells=8)
     q = _norm_query_vec(spark, sf_dir, 3)
     qcol = vec_lit(q)
     probed = ivf_probe_cells(spark, path, q, nprobe=4)
-    cells = _without_tombstones(
-        spark,
-        path,
-        read_cells(spark, path, probed).filter(F.col("cell_id").isin(probed)),
-        "vec_id",
+    cells = read_cells(spark, path, probed).filter(
+        F.col("cell_id").isin(probed)
     )
     staged = cells.select("vec_id", "nvec", int8_dequant("nvec").alias("rv"))
     cand = (
@@ -635,17 +630,15 @@ LIMIT 10
     "ann_pq_trained_topk (mean 1.0 at its default depth).",
 )
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.operators.ann import _without_tombstones, pq_codebook
+    from cnc_visionsearch_spark.operators.ann import pq_codebook
 
     # probe the PERSISTED code table (built once per corpus) — the scan
     # below touches m-byte codes, never raw vectors, until the re-score.
-    # Tombstone filter keeps deletes coherent across EVERY probe path of
-    # a layout (no-op plan change on delete-free layouts).
+    # The live read keeps deletes coherent across EVERY probe path of a
+    # layout (no plan change on delete-free layouts).
     path = ensure_pq_built(spark, sf_dir)
     cb = pq_codebook(read_codebook(spark, path), m=_PQ_M)
-    codes = _without_tombstones(
-        spark, path, read_pq_codes(spark, path), "vec_id"
-    )
+    codes = read_pq_codes(spark, path)
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     q = _norm_query_vec(spark, sf_dir, 7)
     qcol = vec_lit(q)
@@ -775,7 +768,6 @@ LIMIT 10
 )
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.ann import (
-        _without_tombstones,
         ivf_probe_cells,
         pq_codebook,
     )
@@ -784,23 +776,15 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _norm_query_vec(spark, sf_dir, 11)
     qcol = vec_lit(q)
     probed = ivf_probe_cells(spark, path, q, nprobe=4)
-    pruned = _without_tombstones(
-        spark,
-        path,
-        read_cells(spark, path, probed).filter(F.col("cell_id").isin(probed)),
-        "vec_id",
+    pruned = read_cells(spark, path, probed).filter(
+        F.col("cell_id").isin(probed)
     )
     cb = pq_codebook(read_codebook(spark, path), m=8)
     # the ADC scan reads the PERSISTED cell-partitioned code table with
     # the same partition filter — m bytes/vector, no raw vectors until
-    # the re-score (tombstone-filtered like every probe path)
-    codes = _without_tombstones(
-        spark,
-        path,
-        read_pq_codes(spark, path, probed).filter(
-            F.col("cell_id").isin(probed)
-        ),
-        "vec_id",
+    # the re-score (a live read like every probe path)
+    codes = read_pq_codes(spark, path, probed).filter(
+        F.col("cell_id").isin(probed)
     )
     w = len(q) // 8
     qd = cb.select(

@@ -203,13 +203,9 @@ LIMIT 10
     "per corpus version; the query plan is unchanged.",
 )
 def ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cnc_visionsearch_spark.operators.ann import _without_tombstones
-
     path = ensure_pq_trained_built(spark, sf_dir)
     cb = read_pq_trained_codebook(spark, path)
-    codes = _without_tombstones(
-        spark, path, read_pq_codes(spark, path, trained=True), "vec_id"
-    )
+    codes = read_pq_codes(spark, path, trained=True)
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     q = _norm_query_vec(spark, sf_dir, 11)
     qcol = vec_lit(q)
@@ -547,7 +543,6 @@ LIMIT 10
 def ann_ivf_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.ann import (
         DEFAULT_NPROBE,
-        _without_tombstones,
         ivf_probe_cells,
     )
 
@@ -556,13 +551,8 @@ def ann_ivf_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qcol = vec_lit(q)
     probed = ivf_probe_cells(spark, path, q, nprobe=DEFAULT_NPROBE)
     cb = read_pq_trained_codebook(spark, path)
-    codes = _without_tombstones(
-        spark,
-        path,
-        read_pq_codes(spark, path, probed, trained=True).filter(
-            F.col("cell_id").isin(probed)
-        ),
-        "vec_id",
+    codes = read_pq_codes(spark, path, probed, trained=True).filter(
+        F.col("cell_id").isin(probed)
     )
     w = _DIM // _M
     lut = cb.select(
@@ -578,11 +568,8 @@ def ann_ivf_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(fixed_point_q("qdist")).alias("adc"))
     )
     cand = est.orderBy(F.col("adc").asc(), F.col("vec_id").asc()).limit(_DEPTH)
-    pruned = _without_tombstones(
-        spark,
-        path,
-        read_cells(spark, path, probed).filter(F.col("cell_id").isin(probed)),
-        "vec_id",
+    pruned = read_cells(spark, path, probed).filter(
+        F.col("cell_id").isin(probed)
     )
     return (
         pruned.join(F.broadcast(cand.select("vec_id")), "vec_id")
@@ -644,13 +631,9 @@ SELECT qid, vec_id, distance FROM (
 def ann_pq_trained_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from cnc_visionsearch_spark.operators.ann import _without_tombstones
-
     path = ensure_pq_trained_built(spark, sf_dir)
     cb = read_pq_trained_codebook(spark, path)
-    codes = _without_tombstones(
-        spark, path, read_pq_codes(spark, path, trained=True), "vec_id"
-    )
+    codes = read_pq_codes(spark, path, trained=True)
     emb = with_normalized(load_table(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("qid"), F.col("nvec").alias("qv")

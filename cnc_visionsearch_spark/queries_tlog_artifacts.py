@@ -315,7 +315,6 @@ LIMIT 10
 )
 def tlog_ivf_pq_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cnc_visionsearch_spark.operators.ann import (
-        _without_tombstones,
         ivf_probe_cells,
         pq_codebook,
         read_cells,
@@ -328,20 +327,12 @@ def tlog_ivf_pq_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _norm_query_vec(spark, sf_dir, 11)
     qcol = vec_lit(q)
     probed = ivf_probe_cells(spark, path, q, nprobe=4)
-    pruned = _without_tombstones(
-        spark,
-        path,
-        read_cells(spark, path, probed).filter(F.col("cell_id").isin(probed)),
-        "vec_id",
+    pruned = read_cells(spark, path, probed).filter(
+        F.col("cell_id").isin(probed)
     )
     cb = pq_codebook(read_codebook(spark, path), m=_PQ_M)
-    codes = _without_tombstones(
-        spark,
-        path,
-        read_pq_codes(spark, path, probed).filter(
-            F.col("cell_id").isin(probed)
-        ),
-        "vec_id",
+    codes = read_pq_codes(spark, path, probed).filter(
+        F.col("cell_id").isin(probed)
     )
     w = len(q) // _PQ_M
     qd = cb.select(

@@ -134,17 +134,11 @@ def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     if fp is None:
         # remote/unstattable storage: assume a production layout
         return df
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    try:
-        max_split = int("".join(ch for ch in raw if ch.isdigit()) or "134217728")
-        if raw.lower().endswith(("k", "kb")):
-            max_split *= 1024
-        elif raw.lower().endswith(("m", "mb")):
-            max_split *= 1024 * 1024
-        elif raw.lower().endswith(("g", "gb")):
-            max_split *= 1024 * 1024 * 1024
-    except ValueError:
-        max_split = 134217728
+    # Spark's own parse of spark.sql.files.maxPartitionBytes (every
+    # byte-size suffix, the default when unset)
+    max_split = (
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
     splits = sum(max(1, math.ceil(size / max_split)) for _, size, _ in fp)
     if splits >= p:
         return df

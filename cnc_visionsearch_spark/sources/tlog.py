@@ -33,6 +33,18 @@ Object Stores", VLDB 2020):
   SUBSET of buckets still assigns globally dense ids without scanning
   resident state (the ``known_max`` seam in operators/ingest).
 
+Deletes in the index layouts follow ONE tombstone protocol, defined
+here and nowhere else (:func:`delete_ids`, :func:`read_live`,
+:func:`vacuum_tombstones`): a delete blind-appends ids under the
+tier's reserved tombstone tag, every reader anti-joins the tombstones
+of the snapshot its data files come from, and a vacuum rewrites the
+touched domains and retires the tombstones in one rewrite commit.
+A read takes ONE snapshot: data files and the tombstones that hide
+rows in them always come from the same version, so a vacuum that
+commits while a plan is in flight can neither resurrect a deleted row
+nor hide a live one. :func:`read_tags` is the raw view (tombstoned
+rows included) for maintenance and for tests that inspect them.
+
 Atomicity scope: ``os.link`` create-exclusive is a POSIX-filesystem
 property (local disk, NFSv4, HDFS-mounted); it is exercised ACROSS
 processes by tests/test_tlog_multiprocess.py (N processes hammering
@@ -56,8 +68,10 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from cnc_visionsearch_spark.session import local_frame
 
@@ -75,6 +89,9 @@ __all__ = [
     "retag",
     "read_tags",
     "compact_domains",
+    "delete_ids",
+    "read_live",
+    "vacuum_tombstones",
     "CHECKPOINT_EVERY",
 ]
 
@@ -125,32 +142,172 @@ def read_tags(
     return spark.read.parquet(*[os.path.join(t.root, p) for p in paths])
 
 
+def _tagged(snap: "Snapshot", tags) -> list[str]:
+    """Live paths tagged with exactly one of ``tags`` (no untagged
+    files: a rewrite removes only what it read)."""
+    ts = set(tags)
+    return [p for p, b in snap.files if b in ts]
+
+
+def _rewrite(
+    spark: SparkSession,
+    t: "TLog",
+    snap: "Snapshot",
+    plan,
+    keep=None,
+    schema=None,
+    retire=(),
+) -> None:
+    """ONE rewrite commit replacing the files of each ``(tags,
+    bucket_expr)`` in ``plan`` by their rows passed through ``keep``:
+    rows of a family with a bucket expression are re-partitioned by it,
+    a family without one (a reserved single-tag subtable) gets one file
+    per tag. ``retire`` lists tags whose files are dropped without a
+    rewrite. The commit declares every rewritten and retired tag."""
+    r = spark.read if schema is None else spark.read.schema(schema)
+
+    def read(tags):
+        df = r.parquet(*[os.path.join(t.root, p) for p in _tagged(snap, tags)])
+        return df if keep is None else keep(df)
+
+    adds: list[dict] = []
+    domains = sorted({*retire, *(b for tags, _e in plan for b in tags)})
+    for tags, bucket_expr in plan:
+        if not tags:
+            continue
+        if bucket_expr is None:
+            for tag in tags:
+                adds += retag(t.write_data(read([tag]).coalesce(1)), tag)
+        else:
+            adds += t.write_data(read(tags), bucket_expr=bucket_expr)
+    t.commit(
+        adds=adds,
+        removes=sorted(_tagged(snap, domains)),
+        read_version=snap.version,
+        op="rewrite",
+        domains=domains,
+    )
+
+
+def _families(snap: "Snapshot", families) -> list[tuple[list[int], object]]:
+    """``[(tag_pred, bucket_expr)]`` -> ``[(live tags, bucket_expr)]``."""
+    live = sorted({b for _p, b in snap.files if b is not None})
+    return [([b for b in live if pred(b)], expr) for pred, expr in families]
+
+
 def compact_domains(
-    spark: SparkSession, t: "TLog", tag_pred, bucket_expr, schema=None
+    spark: SparkSession, t: "TLog", families, schema=None
 ) -> list[int]:
-    """Rewrite every conflict domain (tag satisfying ``tag_pred``)
-    holding more than one live file into one file, as ONE rewrite
-    commit declaring the touched domains — the append-accretion bound
-    of every tier. Returns the compacted tags (empty: nothing to do).
-    Rows are unchanged, so probe results are too."""
+    """Rewrite every conflict domain holding more than one live file
+    into one file — the append-accretion bound of every tier.
+    ``families`` is ``[(tag_pred, bucket_expr)]``: the tags a family
+    owns and the column mapping each of its rows to its tag (None for a
+    reserved single-tag subtable). All families land as ONE rewrite
+    commit declaring the touched domains. Returns the compacted tags
+    (empty: nothing to do). Rows are unchanged, so probe results are
+    too."""
     from collections import Counter
 
     snap = t.snapshot()
-    cnt = Counter(b for _p, b in snap.files if b is not None and tag_pred(b))
-    touched = sorted(b for b, c in cnt.items() if c > 1)
-    if not touched:
-        return []
-    old = [p for p, b in snap.files if b in set(touched)]
-    r = spark.read if schema is None else spark.read.schema(schema)
-    df = r.parquet(*[os.path.join(t.root, p) for p in old])
-    t.commit(
-        adds=t.write_data(df, bucket_expr=bucket_expr),
-        removes=old,
-        read_version=snap.version,
-        op="rewrite",
-        domains=touched,
-    )
+    cnt = Counter(b for _p, b in snap.files)
+    plan = [
+        ([b for b in tags if cnt[b] > 1], expr)
+        for tags, expr in _families(snap, families)
+    ]
+    touched = sorted(b for tags, _e in plan for b in tags)
+    if touched:
+        _rewrite(spark, t, snap, plan, schema=schema)
     return touched
+
+
+# ---- the tombstone protocol -----------------------------------------------
+# Every tier deletes the same way: a delete is a blind append of ids
+# under the tier's reserved tombstone tag; a read anti-joins the
+# tombstones of the SAME snapshot its data files come from (one
+# snapshot per read, so a vacuum committing between planning and
+# execution can neither resurrect a row nor hide a live one); a vacuum
+# rewrites the domains holding tombstoned rows and retires the
+# tombstones in one rewrite commit. These three functions are the only
+# code that knows how deleted rows are hidden.
+
+
+def delete_ids(
+    spark: SparkSession, t: "TLog", tomb_tag: int, ids, id_col: str
+) -> None:
+    """Tombstone ``ids``: one blind append under ``tomb_tag`` —
+    O(batch), resident data files untouched, never blocked by a racing
+    rewrite (which conflicts on the tombstone domain instead)."""
+    df = local_frame(spark, [(int(i),) for i in ids], f"{id_col} bigint")
+    t.commit(adds=retag(t.write_data(df), tomb_tag), op="append")
+
+
+def read_live(
+    spark: SparkSession,
+    t: "TLog",
+    snap: "Snapshot",
+    tags,
+    tomb_tag: int,
+    id_col: str,
+    schema=None,
+) -> "DataFrame | None":
+    """:func:`read_tags` minus the rows whose ``id_col`` is tombstoned
+    in the same ``snap``. The tombstone set is batch-scale by contract
+    (a corpus-scale one means it is time to vacuum), so it broadcasts.
+    A snapshot without tombstones returns the :func:`read_tags` plan
+    unchanged."""
+    df = read_tags(spark, t, snap, tags, schema)
+    tombs = read_tags(spark, t, snap, [tomb_tag])
+    if df is None or tombs is None:
+        return df
+    return df.join(
+        F.broadcast(tombs.select(id_col).distinct()), id_col, "left_anti"
+    )
+
+
+def vacuum_tombstones(
+    spark: SparkSession, t: "TLog", tomb_tag: int, id_col: str, families
+) -> bool:
+    """Apply the tombstones of the latest snapshot physically.
+    ``families`` is :func:`compact_domains`' ``[(tag_pred,
+    bucket_expr)]``. One bounded collect finds the touched domains (the
+    tags holding a tombstoned row, over every family at once); ONE
+    rewrite commit replaces their files with the surviving rows and
+    drops the tombstone files, declaring the touched domains plus
+    ``tomb_tag`` — a racing append into a touched domain, or a racing
+    delete, conflicts and the vacuum recomputes (``run_transaction``);
+    untouched domains keep their files. Results are unchanged: the live
+    read already hid the rows. Returns whether it committed (False: no
+    tombstones)."""
+    snap = t.snapshot()
+    if not _tagged(snap, [tomb_tag]):
+        return False
+    tombs = F.broadcast(
+        read_tags(spark, t, snap, [tomb_tag]).select(id_col).distinct()
+    )
+    fams = [(tags, e) for tags, e in _families(snap, families) if tags]
+    # one (id, tag) projection per family — per tag for a single-tag
+    # subtable — so every family's touched tags come from one job
+    probes = [
+        read_tags(spark, t, snap, ts).select(
+            id_col, (F.lit(ts[0]) if e is None else e).cast("int").alias("_tag")
+        )
+        for tags, e in fams
+        for ts in ([[b] for b in tags] if e is None else [tags])
+    ]
+    touched: set[int] = set()
+    if probes:  # bounded collect: one row per touched domain
+        hits = reduce(DataFrame.unionByName, probes).join(tombs, id_col)
+        touched = {int(r[0]) for r in hits.select("_tag").distinct().collect()}
+    plan = [([b for b in tags if b in touched], e) for tags, e in fams]
+    _rewrite(
+        spark,
+        t,
+        snap,
+        plan,
+        keep=lambda df: df.join(tombs, id_col, "left_anti"),
+        retire=[tomb_tag],
+    )
+    return True
 
 
 class TLogConflictError(Exception):
@@ -563,8 +720,6 @@ class TLog:
             if schema is not None:
                 r = r.schema(schema)
             return r.parquet(*[os.path.join(self.root, p) for p in paths])
-
-        import pyspark.sql.functions as F
 
         old_rows = _read(removed)
         new_rows = _read(added)

@@ -7,7 +7,7 @@ from __future__ import annotations
 import hashlib
 import os
 
-from cnc_visionsearch_spark.sources.tlog import TLog
+from cnc_visionsearch_spark.sources.tlog import TLog, read_tags
 
 TAG_GAP = 10_000  # partition keys sit below this above their tag base
 
@@ -27,6 +27,16 @@ def live_md5s(path: str, part: str = "cell_id", base: int = 0) -> dict:
                         fh.read()
                     ).hexdigest()
     return out
+
+
+def resident_rows(spark, path: str, base: int = 0):
+    """Every resident row of the layout domains tagged ``base + key``
+    (key below TAG_GAP) — the raw view a vacuum rewrites, tombstoned
+    rows included (the tiers' readers hide them)."""
+    t = TLog(path)
+    snap = t.snapshot()
+    tags = {b for _p, b in snap.files if b is not None and base <= b < base + TAG_GAP}
+    return read_tags(spark, t, snap, tags)
 
 
 def has_files(path: str, tag: int) -> bool:

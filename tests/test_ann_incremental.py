@@ -34,7 +34,7 @@ from cnc_visionsearch_spark.operators.ann import (
 )
 from cnc_visionsearch_spark.operators.knn import knn_single, with_normalized
 from cnc_visionsearch_spark.sources.catalog import load_table
-from layout_files import has_files, live_md5s as _file_md5s
+from layout_files import has_files, live_md5s as _file_md5s, resident_rows
 
 SF = "/root/testdata/sf0.01"
 SPLIT = 300
@@ -181,7 +181,7 @@ def test_compact_appended_cells_preserves_probe_and_pruning(spark, emb, tmp_path
         for r in ivf_probe(spark, path, q, k=10, nprobe=4).collect()
     ]
     files_before = len(_file_md5s(path))
-    compact_domains(spark, TLog(path), lambda b: b < 8, F.col("cell_id"))
+    compact_domains(spark, TLog(path), [(lambda b: b < 8, F.col("cell_id"))])
     files_after = _file_md5s(path)
     assert len(files_after) < files_before
     # one file per cell -> a probe of cell c opens exactly one file
@@ -263,7 +263,7 @@ def test_ivf_delete_then_vacuum_lifecycle(spark, emb, tmp_path):
     # vacuum: tombstones gone, untouched cells byte-identical, results same
     deleted_cells = {
         r.cell_id
-        for r in read_cells(spark, path)
+        for r in resident_rows(spark, path)
         .filter(F.col("vec_id").isin([3, 17, 23]))
         .select("cell_id")
         .collect()
@@ -582,7 +582,6 @@ def test_forget_vectors_runbook_is_idempotent_and_composes(
     nothing further; vacuum afterwards makes removal physical."""
     from cnc_visionsearch_spark.maintenance import forget_vectors
     from cnc_visionsearch_spark.operators.ann import (
-        _without_tombstones,
         ivf_build,
         ivf_probe,
         ivf_vacuum,
@@ -607,17 +606,15 @@ def test_forget_vectors_runbook_is_idempotent_and_composes(
         got = {int(r["vec_id"]) for r in probe.collect()}
         assert not (got & set(victim))
     # idempotent retry: live census unchanged after a second run
-    n1 = _without_tombstones(
-        spark, p_ivf, read_cells(spark, p_ivf), "vec_id"
-    ).count()
+    n1 = read_cells(spark, p_ivf).count()
     forget_vectors(spark, victim, ivf_paths=(p_ivf,), shard_paths=(p_sh,))
-    n2 = _without_tombstones(
-        spark, p_ivf, read_cells(spark, p_ivf), "vec_id"
-    ).count()
+    n2 = read_cells(spark, p_ivf).count()
     assert n1 == n2 == 98
+    # the tombstoned rows are still resident until the vacuum
+    assert resident_rows(spark, p_ivf).count() == 100
     # physical removal rides the normal vacuum
     ivf_vacuum(spark, p_ivf)
-    assert read_cells(spark, p_ivf).count() == 98
+    assert resident_rows(spark, p_ivf).count() == 98
     assert not has_files(p_ivf, TLOG_IVF_TOMBS_TAG)
 
 

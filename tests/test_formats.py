@@ -152,6 +152,10 @@ def test_spread_scan_guard_and_pushdown(spark, tmp_path):
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
         assert spread_scan(big, "l_orderkey") is big
+        # a terabyte split size (Spark reads "1t" as 2^40 bytes) leaves
+        # the single-file table one split short of parallelism: spread
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1t")
+        assert spread_scan(li, "l_orderkey") is not li
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 

@@ -46,6 +46,7 @@ from cnc_visionsearch_spark.sources.tlog import (
     TLogConflictError,
     run_transaction,
 )
+from layout_files import resident_rows
 
 SF = "/root/testdata/sf0.001"
 
@@ -201,8 +202,9 @@ def test_ivf_racing_append_to_untouched_cells_serializes(
     ivf_delete(spark, path, [3])
     t = TLog(path)
     # the vacuum will touch exactly the deleted id's cell — race an
-    # append into a DIFFERENT cell (pick a resident row from one)
-    cells = read_cells(spark, path)
+    # append into a DIFFERENT cell (pick a resident row from one); the
+    # raw read still holds the tombstoned row
+    cells = resident_rows(spark, path)
     del_cell = cells.filter(F.col("vec_id") == 3).collect()[0]["cell_id"]
     other = cells.filter(F.col("cell_id") != del_cell).limit(1).collect()[0]
     racing_df = spark.createDataFrame(
