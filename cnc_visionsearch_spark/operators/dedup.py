@@ -33,6 +33,7 @@ import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType
 
 from cnc_visionsearch_spark.functions.text import (
     hex_to_long,
@@ -41,6 +42,7 @@ from cnc_visionsearch_spark.functions.text import (
 )
 from cnc_visionsearch_spark.functions.vector import dot
 from cnc_visionsearch_spark.operators.ann import hyperplane_signature
+from cnc_visionsearch_spark.session import local_frame
 
 __all__ = [
     "exact_dedup",
@@ -466,10 +468,14 @@ def minhash_lsh_pairs(
     # Without the barrier each broadcast consumer re-runs the whole
     # signature job; with it the (tiny, bounded) pair table computes
     # once — the same "persist the candidate table" step a production
-    # dedup pipeline runs between blocking and verification. Lazy
-    # (eager=False) so building/explaining the query stays job-free;
-    # the first action materializes, later consumers reuse, and the
-    # ContextCleaner unpersists the blocks when the plan is GC'd.
+    # dedup pipeline runs between blocking and verification. eager=False
+    # does NOT make construction job-free: with AQE on, the call
+    # itself runs the candidate plan's shuffle stages to plan the
+    # checkpoint RDD (3 jobs on the sf0.01 documents; with the
+    # verifier's barrier below, 6 before this function returns a
+    # DataFrame). Only the final checkpoint job waits for the first
+    # action; later consumers reuse it, and the ContextCleaner
+    # unpersists the blocks when the plan is GC'd.
     candidates = candidates.localCheckpoint(eager=False)
     verified = ngram_jaccard_pairs(
         df,
@@ -685,8 +691,10 @@ def ngram_jaccard_pairs(
     if candidates is not None:
         # The pruned shingle table feeds four consumers (both join
         # sides + both size lookups); checkpoint the small post-prune
-        # result so the explode runs once, not four times (lazy: no
-        # job until the query itself runs).
+        # result so the explode runs once, not four times. eager=False
+        # is not job-free: with AQE on, the call runs the pruned
+        # explode's shuffle stages at construction (3 jobs on the
+        # sf0.01 documents); only the checkpoint job itself waits.
         sh = sh.localCheckpoint(eager=False)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
@@ -736,44 +744,64 @@ def ngram_jaccard_pairs(
     )
 
 
-def neardup_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Connected components over near-dup pairs: the step that turns
-    pairwise similarity into dedup CLUSTERS (keep one doc per
-    component, drop the rest) — what a training-data pipeline actually
-    executes after LSH.
+# Edge sets of at most this many rows are labeled on the driver. The
+# bound caps the driver at about 32 MB, the default of
+# graph_ann.HNSW_UPPER_COLLECT_MAX_BYTES. Driver footprint measured with
+# tracemalloc (CPython 3.11, bigint ids, every edge bringing two new
+# nodes, the worst case): the collected Rows hold 328-344 bytes per
+# edge, and the peak over the collect, the union-find map and the
+# output rows is 732 bytes per edge at 20k edges and 753 at 100k. So
+# 40k edges peak near 30 MB; the output's Arrow buffers (17 bytes per
+# node) come on top.
+CC_COLLECT_MAX_EDGES = 40_000
 
-    Iterative min-label propagation: every node starts labeled with its
-    own id; each round takes the min of its own and its neighbors'
-    labels; at fixpoint the label is the component's minimum id. Each
-    round is one equi-join + groupBy (shuffles keyed on node id, ~|E|
-    rows), with ``localCheckpoint`` truncating the lineage so plans
-    stay flat. Rounds needed = graph diameter — near-dup components
-    are shallow (dup clusters, not social graphs), so this converges
-    in a handful of rounds; a 100 TB corpus with adversarial chain
-    shapes would swap in the large-star/small-star algorithm
-    (O(log n) rounds), same per-round plan shape.
 
-    Returns (doc_id, component_id, is_keeper): every node that appears
-    in a pair, its component's min id, and whether it is that min
-    (the deterministic keeper, matching exact_dedup's min-id rule).
-    """
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    # localCheckpoint: sym is re-consumed every round — without the
-    # cut, each round would re-execute the caller's whole pair
-    # pipeline (for the LSH path: shingle explode, banding self-join,
-    # jaccard verification) instead of reading materialized edges.
-    sym = (
-        edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint()
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """Both directions of every (src, dst) edge; its column type is the
+    output id type of either path."""
+    return edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
+
+
+def _components_on_driver(spark, rows: list, id_type) -> DataFrame:
+    """Union-find (path halving, min-id root) over collected edge rows.
+    A null endpoint yields one (null, null, null) row and leaves the
+    other endpoint to its own component, as the round path does."""
+    parent = {}
+    has_null = False
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        for n in (a, b):
+            if n is None:
+                has_null = True
+            else:
+                parent.setdefault(n, n)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    out = [(n, r, n == r) for n in parent for r in (find(n),)]
+    if has_null:
+        out.append((None, None, None))
+    t = id_type.simpleString()
+    return local_frame(
+        spark, out, f"doc_id {t}, component_id {t}, is_keeper boolean"
+    )
+
+
+def _components_by_rounds(edges: DataFrame, max_iters: int) -> DataFrame:
+    """Min-label propagation over materialized edges (the scale path)."""
+    # localCheckpoint: sym is re-consumed every round; the checkpoint
+    # keeps each round's plan flat instead of re-deriving the
+    # symmetric, distinct edge set from ``edges``.
+    sym = _symmetric(edges).distinct().localCheckpoint()
     labels = (
         sym.select(F.col("src").alias("node")).distinct().withColumn(
             "label", F.col("node")
@@ -785,6 +813,9 @@ def neardup_components(
             .groupBy("src")
             .agg(F.min("label").alias("nbr_min"))
         )
+        # a node's label changes exactly when a neighbor's label is
+        # lower, so the convergence count filters this round's own
+        # checkpoint instead of joining it with the previous labels
         new_labels = (
             labels.join(nbr, labels.node == nbr.src, "left")
             .select(
@@ -792,16 +823,12 @@ def neardup_components(
                 F.least(
                     F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
                 ).alias("label"),
+                (F.col("nbr_min") < F.col("label")).alias("changed"),
             )
             .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
+        changed = new_labels.filter(F.col("changed")).count()
+        labels = new_labels.select("node", "label")
         if changed == 0:
             break
     else:
@@ -814,6 +841,62 @@ def neardup_components(
         F.col("label").alias("component_id"),
         (F.col("node") == F.col("label")).alias("is_keeper"),
     )
+
+
+def neardup_components(
+    pairs: DataFrame,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+    max_iters: int = 25,
+) -> DataFrame:
+    """Connected components over near-dup pairs: the step that turns
+    pairwise similarity into dedup CLUSTERS (keep one doc per
+    component, drop the rest) — what a training-data pipeline actually
+    executes after LSH.
+
+    The edge set is materialized once (an eager ``localCheckpoint``, so
+    the caller's pair pipeline never runs twice), then one bounded
+    collect takes at most ``CC_COLLECT_MAX_EDGES + 1`` rows:
+
+    * At most ``CC_COLLECT_MAX_EDGES`` edges (every near-dup graph of
+      the fixtures and benchmarks) with integer or string ids:
+      union-find on the driver, returned as a local relation. Exact
+      for any diameter, so ``max_iters`` does not apply: a 30-edge
+      chain resolves here.
+    * More edges: iterative min-label propagation over the checkpointed
+      edges. Every node starts labeled with its own id; each round
+      takes the min of its own and its neighbors' labels; at fixpoint
+      the label is the component's minimum id. Each round is one
+      equi-join + groupBy (shuffles keyed on node id, ~|E| rows) and a
+      ``localCheckpoint``. Rounds needed = graph diameter — near-dup
+      components are shallow (dup clusters, not social graphs), so
+      this converges in a handful of rounds. More than ``max_iters``
+      rounds raises ``RuntimeError``: the graph then needs the
+      star-contraction variant, large-star/small-star (Kiveris et al.,
+      2014): each step re-links a node's neighbors to the smallest id
+      of its neighborhood, so the rounds grow with log² n instead of
+      the diameter, with the same per-round plan shape. It is not
+      implemented here.
+
+    Returns (doc_id, component_id, is_keeper) with the input's id type:
+    every node that appears in a pair, its component's min id, and
+    whether it is that min (the deterministic keeper, matching
+    exact_dedup's min-id rule). A pair with a null endpoint adds one
+    (null, null, null) row; its other endpoint keeps its own label
+    unless another pair connects it.
+    """
+    edges = pairs.select(
+        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+    ).localCheckpoint()
+    id_type = _symmetric(edges).schema["src"].dataType
+    # the driver orders ids as Python does, which is Spark's order for
+    # integers and binary-collated strings
+    if isinstance(id_type, IntegralType) or id_type == StringType():
+        # bounded by construction: at most CC_COLLECT_MAX_EDGES + 1 rows
+        rows = edges.limit(CC_COLLECT_MAX_EDGES + 1).collect()
+        if len(rows) <= CC_COLLECT_MAX_EDGES:
+            return _components_on_driver(edges.sparkSession, rows, id_type)
+    return _components_by_rounds(edges, max_iters)
 
 
 def embedding_lsh_bucketed_pairs(

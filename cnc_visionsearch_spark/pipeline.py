@@ -18,8 +18,10 @@ stage shrinks the next one's input):
                            downstream per-language jobs prune on)
 
 At 100 TB each stage is linear with doc_id-keyed shuffles only (the
-LSH stage's band shuffles are the documented scale path); nothing here
-collects to the driver. Determinism end to end: every keep/drop
+LSH stage's band shuffles are the documented scale path). The one
+driver collect is the near-dup edge set, bounded by
+``dedup.CC_COLLECT_MAX_EDGES`` rows; above it the components run as
+Spark rounds. Determinism end to end: every keep/drop
 decision is a pure function of the row (hashes, thresholds), so reruns
 and backfills produce byte-identical corpora.
 """
@@ -56,14 +58,17 @@ def build_training_corpus(
     ``out_path`` partitioned by lang; return the funnel report
     (stage, docs_in, docs_out, dropped) as a 5-row DataFrame.
 
-    Each stage's survivor set gets a lazy ``localCheckpoint`` barrier
-    once computed, so the per-stage counts and the final write read the
+    Each stage's survivor set gets a ``localCheckpoint(eager=False)``
+    barrier, so the per-stage counts and the final write read the
     materialized predecessor instead of replaying the whole upstream
     chain per action (without the barriers the funnel costs
-    O(stages^2) corpus scans). Broadcast hints appear ONLY on sides
-    bounded by construction (the benchmark gram set); dedup keeper /
-    drop sets are corpus-scale and stay AQE-sized, per the repo's
-    broadcast doctrine (SCALE.md).
+    O(stages^2) corpus scans). The barriers are not job-free: with AQE
+    on, the call itself runs the stage's shuffle stages (stage4's
+    decontamination joins: 6 jobs on the sf0.01 documents), and only
+    the checkpoint job waits for the stage's count. Broadcast hints
+    appear ONLY on sides bounded by construction (the benchmark gram
+    set); dedup keeper / drop sets are corpus-scale and stay
+    AQE-sized, per the repo's broadcast doctrine (SCALE.md).
     """
     docs = load_table(spark, sf_dir, "documents")
     n0 = docs.count()

@@ -114,11 +114,12 @@ def test_embedding_similar_pairs(spark):
     assert top_lsh.cosine > 0.999
 
 
-def test_neardup_components_chain_triangle(spark):
-    """Min-label propagation: a 4-chain and a triangle resolve to their
-    min ids; keepers are exactly the component minima."""
+def test_neardup_components_chain_triangle(spark, monkeypatch):
+    """A 4-chain and a triangle resolve to their min ids; keepers are
+    exactly the component minima."""
     import pytest
 
+    from cnc_visionsearch_spark.operators import dedup
     from cnc_visionsearch_spark.operators.dedup import neardup_components
 
     # chain 10-11-12-13, triangle 20-21-22, isolated pair 30-31
@@ -134,10 +135,43 @@ def test_neardup_components_chain_triangle(spark):
         30: 30, 31: 30,
     }
     assert sorted(d for d, (_, k) in out.items() if k) == [10, 20, 30]
-    # pathological diameter with too few rounds must raise, not silently
-    # return partial components
+    # the driver path is exact for any diameter: max_iters does not apply
+    one_round = {r.doc_id: r.component_id
+                 for r in neardup_components(pairs, max_iters=1).collect()}
+    assert one_round == {d: c for d, (c, _) in out.items()}
+    # on the round path, a pathological diameter with too few rounds
+    # must raise, not silently return partial components
+    monkeypatch.setattr(dedup, "CC_COLLECT_MAX_EDGES", 0)
     with pytest.raises(RuntimeError, match="converge"):
         neardup_components(pairs, max_iters=1)
+
+
+# jobs of one round-path neardup_components call (the driver collect
+# bound forced to 0) on a seeded 60-edge random graph over 60 ids; a
+# round loop that joined each round's labels with the previous round's
+# to count changes ran 100 here
+_CC_ROUNDS_JOB_BUDGET = 76
+
+
+def test_neardup_components_round_path_job_budget(
+    spark, count_jobs, monkeypatch
+):
+    import random
+
+    from cnc_visionsearch_spark.operators import dedup
+    from cnc_visionsearch_spark.session import local_frame
+
+    rng = random.Random(1)
+    edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(60)]
+    pairs = local_frame(spark, edges, "id_a bigint, id_b bigint")
+    driver = {tuple(r) for r in dedup.neardup_components(pairs).collect()}
+    monkeypatch.setattr(dedup, "CC_COLLECT_MAX_EDGES", 0)
+    rows = []
+    jobs = count_jobs(
+        lambda: rows.extend(dedup.neardup_components(pairs).collect())
+    )
+    assert {tuple(r) for r in rows} == driver
+    assert jobs <= _CC_ROUNDS_JOB_BUDGET, jobs
 
 
 def test_mllib_minhash_join_recall_vs_exact(spark):

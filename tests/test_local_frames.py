@@ -23,18 +23,6 @@ PKG = Path(__file__).resolve().parent.parent / "cnc_visionsearch_spark"
 SF_01 = "/root/testdata/sf0.01"
 
 
-def _jobs(spark, group: str, fn) -> int:
-    """Jobs ``fn`` submits, counted through a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_no_create_dataframe_outside_local_frame():
     """The package has one constructor for driver-built frames."""
     offenders = []
@@ -90,13 +78,13 @@ def test_round_trip_is_bit_exact(spark, rows):
         assert math.copysign(1.0, got.collect()[3]["c"]) == -1.0
 
 
-def test_local_frames_collect_without_a_job(spark):
+def test_local_frames_collect_without_a_job(spark, count_jobs):
     """A Python-list frame plans an RDD scan that runs one job per
     evaluation on Python workers; a local frame is a local relation."""
     filled = local_frame(spark, _ROWS, _DDL)
     empty = local_frame(spark, [], _DDL)
-    assert _jobs(spark, "local-frame-filled", filled.collect) == 0
-    assert _jobs(spark, "local-frame-empty", empty.collect) == 0
+    assert count_jobs(filled.collect) == 0
+    assert count_jobs(empty.collect) == 0
     assert "LocalTableScan" in filled._jdf.queryExecution().executedPlan().toString()
 
 
@@ -115,15 +103,11 @@ def test_local_frame_accepts_a_struct_type(spark):
 _RQ_BUILD_JOB_BUDGET = 34
 
 
-def test_rq_build_job_budget(spark, tmp_path):
+def test_rq_build_job_budget(spark, count_jobs, tmp_path):
     from cnc_visionsearch_spark.operators.rq import rq_build
 
     emb = with_normalized(load_table(spark, SF_01, "embeddings"))
     base = emb.filter(F.col("vec_id") < 400)
     path = str(tmp_path / "rq")
-    jobs = _jobs(
-        spark,
-        "rq-build-budget",
-        lambda: rq_build(spark, path, base, k1=8, k2=16, iters=2),
-    )
+    jobs = count_jobs(lambda: rq_build(spark, path, base, k1=8, k2=16, iters=2))
     assert jobs <= _RQ_BUILD_JOB_BUDGET, jobs

@@ -354,23 +354,16 @@ _SERVE_HNSW = dict(m=12, m_upper=8, level_mult=8, max_level=3)
 _HNSW_SEARCH_JOB_BUDGET = 6
 
 
-def test_hnsw_search_job_budget(spark, emb, tmp_path):
-    """Jobs per hnsw_search call at the serve geometry, counted through
-    a job group and statusTracker() — job counts do not depend on how
-    busy the machine is, so the budget is exact."""
+def test_hnsw_search_job_budget(spark, count_jobs, emb, tmp_path):
+    """Jobs per hnsw_search call at the serve geometry (see the
+    count_jobs fixture)."""
     from cnc_visionsearch_spark.operators.graph_ann import hnsw_build, hnsw_search
 
     path = str(tmp_path / "hnsw_serve")
     hnsw_build(emb, path, **_SERVE_HNSW)
-    sc = spark.sparkContext
     for qid in (3, 57, 111):
         q = [float(x) for x in emb.filter(F.col("vec_id") == qid).first()["nvec"]]
-        group = f"hnsw-budget-{qid}"
-        sc.setJobGroup(group, group)
-        try:
-            hnsw_search(spark, path, q, k=10, ef=24, hops=6, upper_hops=3)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        jobs = count_jobs(
+            lambda: hnsw_search(spark, path, q, k=10, ef=24, hops=6, upper_hops=3)
+        )
         assert jobs <= _HNSW_SEARCH_JOB_BUDGET, (qid, jobs)

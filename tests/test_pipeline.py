@@ -98,7 +98,13 @@ def test_pca_power_iter_unit_norm_and_determinism(spark):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-def test_build_training_corpus_end_to_end(spark, tmp_path):
+# jobs of one build_training_corpus call on the sf0.01 fixture: 36 with
+# the near-dup components labeled on the driver, 62 when they ran as
+# Spark min-label rounds; the bound fails the moment a change adds a job
+_CORPUS_BUILD_JOB_BUDGET = 36
+
+
+def test_build_training_corpus_end_to_end(spark, count_jobs, tmp_path):
     """The six-stage corpus build: funnel counts monotone, every stage
     drops something on the fixture, output partitioned by lang and
     byte-deterministic across reruns."""
@@ -107,7 +113,12 @@ def test_build_training_corpus_end_to_end(spark, tmp_path):
     from cnc_visionsearch_spark.pipeline import build_training_corpus
 
     out = str(tmp_path / "corpus")
-    funnel = {r.stage: r for r in build_training_corpus(spark, SF, out).collect()}
+    rows = []
+    jobs = count_jobs(
+        lambda: rows.extend(build_training_corpus(spark, SF, out).collect())
+    )
+    assert jobs <= _CORPUS_BUILD_JOB_BUDGET, jobs
+    funnel = {r.stage: r for r in rows}
     assert list(funnel) == [
         "1_exact_dedup",
         "2_neardup_dedup",

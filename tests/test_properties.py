@@ -220,6 +220,69 @@ def test_cc_incremental_merge_equals_from_scratch(spark, old_edges, new_edges):
     assert got == want
 
 
+# ------------------------- driver union-find == min-label rounds
+
+def _components(pairs, driver: bool, max_iters: int = 25):
+    """(dtypes, rows) of neardup_components on the driver path, or on
+    the round path (the reference) with the collect bound forced to 0."""
+    from unittest import mock
+
+    from cnc_visionsearch_spark.operators import dedup
+
+    bound = dedup.CC_COLLECT_MAX_EDGES if driver else 0
+    with mock.patch.object(dedup, "CC_COLLECT_MAX_EDGES", bound):
+        out = dedup.neardup_components(pairs, max_iters=max_iters)
+        return out.dtypes, sorted(map(tuple, out.collect()), key=repr)
+
+
+# duplicates, reversed edges and self-loops come from the small id
+# range; None is a null endpoint
+endpoint = st.one_of(st.none(), st.integers(min_value=0, max_value=11))
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    edges=st.lists(st.tuples(endpoint, endpoint), min_size=0, max_size=14),
+    id_type=st.sampled_from(["int", "bigint"]),
+)
+def test_neardup_components_driver_path_equals_rounds(spark, edges, id_type):
+    """The driver's union-find returns the round path's rows and schema
+    on any edge list: duplicate and reversed edges, self-loops, null
+    endpoints, int or bigint ids, no edges at all."""
+    from cnc_visionsearch_spark.session import local_frame
+
+    pairs = local_frame(spark, edges, f"id_a {id_type}, id_b {id_type}")
+    got = _components(pairs, driver=True)
+    assert got == _components(pairs, driver=False)
+    assert got[0] == [
+        ("doc_id", id_type), ("component_id", id_type), ("is_keeper", "boolean"),
+    ]
+
+
+def test_neardup_components_empty_and_long_chain(spark):
+    """No pairs: both paths return no rows with the id type. A chain
+    longer than max_iters: the driver resolves it, the rounds raise."""
+    from cnc_visionsearch_spark.session import local_frame
+
+    empty = local_frame(spark, [], "id_a int, id_b int")
+    assert _components(empty, driver=True) == _components(empty, driver=False)
+    assert _components(empty, driver=True) == (
+        [("doc_id", "int"), ("component_id", "int"), ("is_keeper", "boolean")],
+        [],
+    )
+    chain = local_frame(
+        spark, [(i + 1, i) for i in range(8)], "id_a bigint, id_b bigint"
+    )
+    _, rows = _components(chain, driver=True, max_iters=3)
+    assert rows == [(i, 0, i == 0) for i in range(9)]
+    with pytest.raises(RuntimeError, match="converge"):
+        _components(chain, driver=False, max_iters=3)
+
+
 @SLOW
 @given(
     docs=st.lists(
